@@ -127,9 +127,12 @@ def java_cmd(out, jar, work, main, args, jvm_extra):
     archive = out / "app.jsa"
     if not jvm_extra and archive.exists():
         jvm_extra = [f"-XX:SharedArchiveFile={archive}", "-Xlog:cds=off", "-Xlog:cds+dynamic=off"]
-    # a fixed, pre-touched heap: peak RSS then moves with off-heap memory
-    # (Arrow buffers, code, threads), not with when the collector grew the heap
-    return (["java", "-Xms2g", "-Xmx2g", "-XX:+AlwaysPreTouch", "-XX:+UseG1GC", "-XX:-UsePerfData"]
+    # a fixed heap and young generation, not pre-touched: heap pages are
+    # touched only as regions are first used, so peak RSS follows the heap
+    # the program fills (on top of the fixed young generation) as well as
+    # off-heap memory (Arrow buffers, code, threads), without the noise of
+    # the collector resizing the heap or the young generation
+    return (["java", "-Xms2g", "-Xmx2g", "-Xmn512m", "-XX:+UseG1GC", "-XX:-UsePerfData"]
             + jvm_extra + opens + [
         "-Dio.netty.tryReflectionSetAccessible=true",
         "-Dspark.ui.enabled=false",

@@ -137,9 +137,11 @@ object Checks {
   /** Expected pairs and components from a brute-force scan over the
     * hashes of every payload (within one media type, Hamming <= max).
     * The pair layer's output, recomputed from the input, must equal the
-    * brute-force pairs, and the flow's cluster table the components;
-    * every planted pair must be among the pairs. */
-  def media(spark: SparkSession, in: String, out: String, corpus: Gen.MediaCorpus): Seq[String] = {
+    * brute-force pairs (with `checkPairs`: the pair layer is a pure
+    * function of the input, so once per input), and the flow's cluster
+    * table the components; every planted pair must be among the pairs. */
+  def media(spark: SparkSession, in: String, out: String, corpus: Gen.MediaCorpus,
+            stats: Flows.Clusters, checkPairs: Boolean = true): Seq[String] = {
     import spark.implicits._
     val problems = Seq.newBuilder[String]
     val hashes = corpus.rows.map { case (id, t, p) => (id, t, Multimodal.phashOf(id, t, p)) }
@@ -167,21 +169,23 @@ object Checks {
     }
     val lost = corpus.planted.count { case (a, b) => !brute((math.min(a, b), math.max(a, b))) }
     if (lost > 0) problems += s"$lost planted pairs are more than ${Flows.MaxHamming} bits apart"
-    val hashDf = spark.read.parquet(in).select("doc_id", "media_type", "payload")
-      .as[graft.operators.MediaRecord]
-      .map(r => (r.doc_id, r.media_type, Multimodal.phashOf(r.doc_id, r.media_type, r.payload)))
-      .toDF("doc_id", "media_type", "phash")
-    val pairs = Multimodal.phashCandidates(hashDf, Flows.MaxHamming, keyCols = Seq("media_type"))
-      .select("doc_a", "doc_b", "hamming").collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
-    val over = pairs.count(_._3 > Flows.MaxHamming)
-    if (over > 0) problems += s"$over pairs exceed max-hamming ${Flows.MaxHamming}"
-    val pairSet = pairs.map(p => (p._1, p._2)).toSet
-    if (pairSet.size != pairs.length) problems += s"${pairs.length - pairSet.size} duplicate pairs"
-    val missing = brute.count(p => !pairSet(p))
-    val spurious = (pairSet -- brute).size
-    if (missing + spurious > 0)
-      problems += s"pair layer: $missing brute-force pairs missing, $spurious not within max-hamming"
+    if (checkPairs) {
+      val hashDf = spark.read.parquet(in).select("doc_id", "media_type", "payload")
+        .as[graft.operators.MediaRecord]
+        .map(r => (r.doc_id, r.media_type, Multimodal.phashOf(r.doc_id, r.media_type, r.payload)))
+        .toDF("doc_id", "media_type", "phash")
+      val pairs = Multimodal.phashCandidates(hashDf, Flows.MaxHamming, keyCols = Seq("media_type"))
+        .select("doc_a", "doc_b", "hamming").collect()
+        .map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
+      val over = pairs.count(_._3 > Flows.MaxHamming)
+      if (over > 0) problems += s"$over pairs exceed max-hamming ${Flows.MaxHamming}"
+      val pairSet = pairs.map(p => (p._1, p._2)).toSet
+      if (pairSet.size != pairs.length) problems += s"${pairs.length - pairSet.size} duplicate pairs"
+      val missing = brute.count(p => !pairSet(p))
+      val spurious = (pairSet -- brute).size
+      if (missing + spurious > 0)
+        problems += s"pair layer: $missing brute-force pairs missing, $spurious not within max-hamming"
+    }
     val want = hashes.map(_._1).map(id => id -> find(id)).toMap
     val size = want.values.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
     val got = spark.read.parquet(out)
@@ -193,6 +197,18 @@ object Checks {
     val missed = corpus.planted.count { case (a, b) =>
       got.get(a).map(_._1) != got.get(b).map(_._1) }
     if (missed > 0) problems += s"$missed planted pairs not in one cluster"
+    val wantStats = Flows.Clusters(want.size.toLong, size.size.toLong, size.size.toLong)
+    if (stats != wantStats) problems += s"stats line $stats, brute force $wantStats"
     problems.result()
+  }
+
+  // ---------------------------------------------------------- isolation
+
+  /** The isolation run of a flow wrote the same rows as the CLI. */
+  def sameRows(spark: SparkSession, cliOut: String, isolatedOut: String): Seq[String] = {
+    val a = spark.read.parquet(cliOut)
+    val b = spark.read.parquet(isolatedOut).select(a.columns.map(col): _*)
+    val n = a.exceptAll(b).count() + b.exceptAll(a).count()
+    if (n == 0) Nil else Seq(s"isolation run and CLI differ in $n rows of $cliOut")
   }
 }

@@ -1,5 +1,9 @@
 package graft.perfbench
 
+import java.io.{ByteArrayOutputStream, PrintStream}
+
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -7,31 +11,73 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Extract, MediaRecord, Multimodal, TextOps}
 
-/** The two cold batch flows, composed from the same operator calls, in
-  * the same order, as `Main pipeline --near-dup` and
-  * `Main phash --clusters`, with a span around each layer call. Traced
-  * runs also materialise the sub-layer results (shingles, minhash pairs,
-  * hashes, media pairs) so each sub-layer's time and counts stand alone;
-  * the tracing overhead includes that. */
+/** The two batch flows. Every end-to-end figure comes from the CLI verbs
+  * themselves, `graft.Main pipeline --near-dup` and
+  * `graft.Main phash --clusters`, run in this JVM through `Main.main`.
+  *
+  * Traced runs add an isolation run of each flow: the same operator calls
+  * in the same order, with a span around each sub-layer and each
+  * sub-layer's result materialised, so the shingle, minhash, hash and pair
+  * steps have times and counts of their own. That is not the plan the CLI
+  * runs (the CLI's lazy plan is charged to layers from its own jobs, see
+  * [[JobLayers]]); the benchmark checks that the isolation run writes the
+  * same rows as the CLI. */
 object Flows {
+  // the CLI defaults of both verbs
   val MinWords = 4
   val Threshold = 0.5
   val PrefixLen = 1
   val MaxHamming = 3
 
-  /** The flow's own stats line, plus the counts a traced run adds. */
+  /** Which layer a `pipeline` job belongs to: the dedup operator's own
+    * actions (connected components) are on its call stack; the two writes
+    * name their table; every other job continues the layer before it. */
+  val ReleaseLayers: Seq[(Regex, String)] = Seq(
+    """graft\.operators\.Dedup\$""".r -> "dedup",
+    """(?s)InsertIntoHadoopFsRelationCommand.{0,200}?Arguments: \S*/manifest\.parquet,""".r ->
+      "textops.manifest",
+    """(?s)InsertIntoHadoopFsRelationCommand.{0,200}?Arguments: \S*/released\.parquet,""".r ->
+      "textops.shard")
+
+  /** The numbers of `pipeline`'s stats line. Docs that survive extraction
+    * and exact dedup are the released ones plus the near duplicates. */
   final case class Release(docsIn: Long, refused: Long, encFlagged: Long,
                            qDropped: Long, exactDups: Long, nearDups: Long,
-                           kept: Long, released: Long, shards: Long,
-                           candidates: Long, useful: Long, ccIterations: Int)
+                           released: Long, shards: Long) {
+    def kept: Long = released + nearDups
+  }
 
-  final case class Clusters(docs: Long, clusters: Long, canonicals: Long,
-                            joinRows: Long, pairs: Long)
+  /** The numbers of `phash --clusters`'s stats line. */
+  final case class Clusters(docs: Long, clusters: Long, canonicals: Long)
 
-  /** Materialise `df` when traced, so the span around this call owns its
-    * work; otherwise leave it lazy, as the CLI does. */
-  private def stage(traced: Boolean, df: DataFrame): DataFrame =
-    if (traced) df.localCheckpoint(eager = true) else df
+  /** Run `graft.Main` with `args` as the CLI does, in this JVM and this
+    * session, and return the whole-number fields of the JSON stats line it
+    * prints last. */
+  def cli(args: String*): Map[String, Long] = {
+    val buf = new ByteArrayOutputStream()
+    val ps = new PrintStream(buf, true, "UTF-8")
+    Console.withOut(ps)(graft.Main.main(args.toArray))
+    ps.flush()
+    val line = buf.toString("UTF-8").linesIterator.map(_.trim).filter(_.startsWith("{"))
+      .toSeq.lastOption.getOrElse(sys.error(s"graft.Main ${args.head} printed no stats line"))
+    """"(\w+)":(-?\d+)[,}]""".r.findAllMatchIn(line)
+      .map(m => m.group(1) -> m.group(2).toLong).toMap
+  }
+
+  def release(in: String, out: String): Release = {
+    val s = cli("pipeline", "--in", in, "--out", out, "--near-dup")
+    Release(s("docs_in"), s("refused"), s("enc_flagged"), s("q_dropped"), s("exact_dups"),
+      s("near_dups"), s("released"), s("shards"))
+  }
+
+  def clusters(in: String, out: String): Clusters = {
+    val s = cli("phash", "--in", in, "--out", out, "--clusters")
+    Clusters(s("docs"), s("clusters"), s("canonicals"))
+  }
+
+  // ------------------------------------------------------ isolation runs
+
+  private def materialise(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
   /** Rows produced by the join operators of an executed plan. */
   def joinRows(df: DataFrame): Long = {
@@ -41,46 +87,32 @@ object Flows {
     }.sum
   }
 
-  def release(spark: SparkSession, in: String, out: String, tracer: Tracer): Release = {
-    val traced = tracer.enabled
+  /** The `pipeline --near-dup` operator calls with every sub-layer
+    * materialised under its own span; writes the same two tables as the
+    * CLI. Returns the sub-layer counts. */
+  def releaseIsolated(spark: SparkSession, in: String, out: String,
+                      tracer: Tracer): Map[String, Double] = {
     val raw = spark.read.parquet(in)
-    val (staged, stats) = tracer.span("extract") {
-      val staged = Extract.crawlPipelineStaged(raw, "html", MinWords)
-        .select("doc_id", "well_formed", "enc_ok", "q_keep", "is_dup", "kept", "repaired")
-        .persist()
-      val stats = staged.agg(
-        count(lit(1)).as("n_in"),
-        sum(when(!col("well_formed"), 1L).otherwise(0L)).as("refused"),
-        sum(when(col("well_formed") && !col("enc_ok"), 1L).otherwise(0L)).as("enc_flagged"),
-        sum(when(col("well_formed") && col("enc_ok") && !col("q_keep"), 1L)
-          .otherwise(0L)).as("q_dropped"),
-        sum(when(col("is_dup"), 1L).otherwise(0L)).as("exact_dups"),
-        sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept")).collect()(0)
-      (staged, stats)
+    val staged = tracer.span("extract") {
+      materialise(Extract.crawlPipelineStaged(raw, "html", MinWords)
+        .select("doc_id", "kept", "repaired"))
     }
     val keptDocs = staged.filter(col("kept"))
       .select(col("doc_id"), col("repaired").as("text"))
-    var candidates = 0L
-    var useful = 0L
-    val (released0, nNear, iters) = tracer.span("dedup") {
-      val sh = tracer.span("dedup.shingle")(stage(traced, Dedup.shingleRows(keptDocs)))
+    val (released0, candidates, useful, iters) = tracer.span("dedup") {
+      val sh = tracer.span("dedup.shingle")(materialise(Dedup.shingleRows(keptDocs)))
       val pairs = tracer.span("dedup.minhash") {
-        val p = stage(traced, Dedup.c2DedupMinhash(spark, in, shingleTable = Some(sh)))
-        if (traced) {
-          candidates = p.count()
-          useful = p.filter(col("jaccard") >= Threshold).count()
-        }
-        p
+        materialise(Dedup.c2DedupMinhash(spark, in, shingleTable = Some(sh)))
       }
       val edges = pairs.filter(col("jaccard") >= Threshold)
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
       val (labels, iters) = tracer.span("dedup.cc")(Dedup.connectedComponentsAlternating(edges))
       val dropIds = labels.filter(col("node") =!= col("cluster_id"))
         .select(col("node").as("doc_id"))
-      val kept2 = keptDocs.join(dropIds, Seq("doc_id"), "left_anti")
-      (kept2, keptDocs.count() - kept2.count(), iters)
+      (keptDocs.join(dropIds, Seq("doc_id"), "left_anti"), pairs.count(),
+        pairs.filter(col("jaccard") >= Threshold).count(), iters)
     }
-    val (nReleased, nShards) = tracer.span("textops") {
+    tracer.span("textops") {
       tracer.span("textops.shard") {
         TextOps.shuffleShard(released0, PrefixLen).select("doc_id", "text", "shard")
           .write.mode("overwrite").parquet(s"$out/released.parquet")
@@ -89,47 +121,41 @@ object Flows {
         val written = spark.read.parquet(s"$out/released.parquet")
         TextOps.shardManifestOn(written.select("doc_id", "text"), PrefixLen)
           .write.mode("overwrite").parquet(s"$out/manifest.parquet")
-        val nShards = spark.read.parquet(s"$out/manifest.parquet").count()
-        (written.count(), nShards)
       }
     }
-    staged.unpersist()
-    Release(stats.getAs[Long]("n_in"), stats.getAs[Long]("refused"),
-      stats.getAs[Long]("enc_flagged"), stats.getAs[Long]("q_dropped"),
-      stats.getAs[Long]("exact_dups"), nNear, stats.getAs[Long]("n_kept"), nReleased, nShards,
-      candidates, useful, iters)
+    Map("dedup.candidates" -> candidates.toDouble,
+      "dedup.useful_ratio" -> useful.toDouble / math.max(1L, candidates),
+      "dedup.cc_iterations" -> iters.toDouble)
   }
 
-  def clusters(spark: SparkSession, in: String, out: String, tracer: Tracer): Clusters = {
+  /** The `phash --clusters` operator calls with the hashes and the pairs
+    * materialised under their own spans; writes the same cluster table as
+    * the CLI. Returns the pair counts. */
+  def clustersIsolated(spark: SparkSession, in: String, out: String,
+                       tracer: Tracer): Map[String, Double] = {
     import spark.implicits._
-    val traced = tracer.enabled
     tracer.span("multimodal") {
       val media = spark.read.parquet(in)
       val hashes = tracer.span("multimodal.hash") {
-        stage(traced, media.select("doc_id", "media_type", "payload").as[MediaRecord]
+        materialise(media.select("doc_id", "media_type", "payload").as[MediaRecord]
           .mapPartitions(_.map(r => (r.doc_id, r.media_type,
             Multimodal.phashOf(r.doc_id, r.media_type, r.payload))))
           .toDF("doc_id", "media_type", "phash"))
       }
-      var joined = 0L
-      var pairs = 0L
-      val edges = tracer.span("multimodal.pairs") {
+      val (edges, joined, pairs) = tracer.span("multimodal.pairs") {
         val cand = Multimodal.phashCandidates(hashes, MaxHamming, keyCols = Seq("media_type"))
           .select(col("doc_a").as("u"), col("doc_b").as("v"))
-        val e = stage(traced, cand)
-        if (traced) { joined = joinRows(cand); pairs = e.count() }
-        e
+        val e = materialise(cand)
+        (e, joinRows(cand), e.count())
       }
       tracer.span("multimodal.clusters") {
         val labels = Dedup.connectedComponentsAlternating(edges)._1
         Multimodal.clusterSurface(hashes.select("doc_id", "media_type"), labels,
             carryCols = Seq("media_type"))
           .write.mode("overwrite").parquet(out)
-        val s = spark.read.parquet(out)
-          .agg(count(lit(1)), count_distinct(col("cluster_id")),
-            count(when(col("is_canonical"), lit(1)))).head()
-        Clusters(s.getLong(0), s.getLong(1), s.getLong(2), joined, pairs)
       }
+      Map("multimodal.candidates" -> joined.toDouble,
+        "multimodal.useful_ratio" -> pairs.toDouble / math.max(1L, joined))
     }
   }
 }

@@ -72,14 +72,19 @@ object Gen {
 
   // ----------------------------------------------------------- web corpus
 
-  /** Raw-HTML crawl corpus with planted structure: exact duplicates
-    * (same body, different boilerplate), near duplicates (about 4% of
-    * words replaced), malformed markup (unterminated script), bad
-    * encodings (U+FFFD, a BEL control, or mojibake) and low-quality
-    * repetitive pages. `kinds` counts each plant. */
+  /** Raw-HTML crawl corpus with planted structure, in the shares the
+    * repository's own corpus generator (`tools.GenData`, its `documents`
+    * and `raw_web` tables) plants: near duplicates 5% (an earlier page's
+    * text plus the word "dup"), exact duplicates 0.16% (1 in 625; same
+    * text, different boilerplate), malformed markup 1 in 13 (unterminated
+    * script), U+FFFD 1 in 11 and mojibake 1 in 7. `kinds` counts each
+    * plant. */
   final case class WebCorpus(docs: IndexedSeq[(Long, String)], kinds: Map[String, Int]) {
     def bytes: Long = docs.map(_._2.getBytes("UTF-8").length.toLong).sum
   }
+
+  val WebShares: Seq[(String, Double)] = Seq("exact_dup" -> 1.0 / 625, "near_dup" -> 0.05,
+    "malformed" -> 1.0 / 13, "fffd" -> 1.0 / 11, "mojibake" -> 1.0 / 7)
 
   private val Syllables = Array("ka", "lo", "mi", "tor", "sen", "va", "rin", "quo",
     "del", "fa", "nu", "pre", "sta", "gel", "bri", "ox", "mun", "tha", "ze", "cor")
@@ -111,13 +116,11 @@ object Gen {
     def para(): Array[String] = Array.fill(20 + r.nextInt(40))(vocab(zipf.next(r)))
     val bodies = scala.collection.mutable.ArrayBuffer[Array[Array[String]]]()
     val kinds = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
-    // exact shares, in seeded order after ten leading bases: the plant
+    // exact counts, in seeded order after ten leading bases: the plant
     // counts, and so the work, do not vary with the seed
     val plan = {
-      val shares = Seq("exact_dup" -> 8, "near_dup" -> 10, "malformed" -> 4,
-        "bad_encoding" -> 4, "low_quality" -> 3)
       val n = nDocs - 10
-      val planted = shares.flatMap { case (k, pct) => Seq.fill(n * pct / 100)(k) }
+      val planted = WebShares.flatMap { case (k, share) => Seq.fill(math.round(n * share).toInt)(k) }
       val all = (planted ++ Seq.fill(n - planted.size)("base")).toArray
       (all.indices.reverse).foreach { i =>
         val j = r.nextInt(i + 1)
@@ -132,18 +135,16 @@ object Gen {
       val body: Array[Array[String]] = kind match {
         case "exact_dup" => bodies(r.nextInt(bodies.size))
         case "near_dup" =>
-          bodies(r.nextInt(bodies.size)).map(_.map(w =>
-            if (r.nextInt(100) < 4) vocab(zipf.next(r)) else w))
-        case "low_quality" =>
-          val w = vocab(r.nextInt(vocab.length))
-          Array.fill(3)(Array.fill(30)(w))
+          val b = bodies(r.nextInt(bodies.size))
+          b.updated(b.length - 1, b.last :+ "dup")
         case _ => Array.fill(3 + r.nextInt(5))(para())
       }
       if (kind == "base") bodies += body
       val paras = body.map(_.mkString(" "))
-      val shown = if (kind != "bad_encoding") paras else {
-        val bad = Seq("\uFFFD", "\u0007", " \u00C3\u00A9")(r.nextInt(3))
-        paras.updated(0, paras(0) + bad)
+      val shown = kind match {
+        case "fffd" => paras.updated(0, paras(0) + "\uFFFD")
+        case "mojibake" => paras.updated(0, paras(0) + " \u00C3\u00A9")
+        case _ => paras
       }
       val script = if (kind == "malformed") "" else "</script>"
       val html =
@@ -159,17 +160,25 @@ object Gen {
 
   // ---------------------------------------------------------------- media
 
-  /** PGM images and WAV clips. Images hold a few large, equal-sized
-    * near-duplicate cliques: each member copies its clique's base raster, adds noise on
-    * pixels the 8x8 thumbnail never samples and flips 0-3 hash bits on
-    * purpose. Audio is diffuse, with every twentieth clip a copy of an
-    * earlier one. `planted`
-    * lists (base, member) pairs whose hashes are at most 3 bits apart by
-    * construction. */
+  /** PGM images and WAV clips, shaped after the per-modality figures the
+    * repository records for its media corpora (docs per distinct hash:
+    * about 50 on the cliquey image and audio corpora, about 1.2 on the
+    * diffuse video frames). Images form a few large near-duplicate
+    * cliques: each member copies its clique's base raster, adds noise on
+    * pixels the 8x8 thumbnail never samples, and every other member flips
+    * one hash bit on purpose, so a clique holds two distinct hashes.
+    * Audio is diffuse, with every sixth clip a copy of an earlier one.
+    * `planted` lists (base, member) pairs whose hashes are at most 3 bits
+    * apart by construction. */
   final case class MediaCorpus(rows: IndexedSeq[(Long, String, Array[Byte])],
                                planted: Seq[(Long, Long)],
                                cliqueMembers: Int, audioCopies: Int) {
     def bytes: Long = rows.map(_._3.length.toLong).sum
+    def docsPerHash(mediaType: String): Double = {
+      val hs = rows.filter(_._2 == mediaType)
+        .map(r => graft.operators.Multimodal.phashOf(r._1, r._2, r._3))
+      hs.size.toDouble / math.max(1, hs.distinct.size)
+    }
   }
 
   private def nn(i: Int, outN: Int, inN: Int): Int = (i.toLong * inN / outN).toInt
@@ -191,8 +200,7 @@ object Gen {
     bb.array()
   }
 
-  def media(seed: Long, nImages: Int, nAudio: Int, cliques: Int,
-            cliqueShare: Double): MediaCorpus = {
+  def media(seed: Long, nImages: Int, nAudio: Int, cliques: Int = 6): MediaCorpus = {
     val r = new SplittableRandom(seed)
     val rows = scala.collection.mutable.ArrayBuffer[(Long, String, Array[Byte])]()
     val planted = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
@@ -207,40 +215,33 @@ object Gen {
     }
     val sampledX = (0 until 8).map(nn(_, 8, bw)).toSet
     val sampledY = (0 until 8).map(nn(_, 8, bh)).toSet
-    val nMembers = math.max(0, (nImages * cliqueShare).toInt - cliques)
     var members = 0
     (cliques until nImages).foreach { i =>
-      if (i - cliques < nMembers) {
-        val (baseId, base) = bases((i - cliques) % bases.length)
-        val m = base.clone()
-        var p = 0
-        while (p < m.length) {
-          if (!(sampledX(p % bw) && sampledY(p / bw)))
-            m(p) = math.min(250, math.max(0, (m(p) & 0xFF) + r.nextInt(7) - 3)).toByte
-          p += 1
-        }
-        // flip k hash bits: thumbnail row y's last comparison (col 6 vs 7)
-        val k = r.nextInt(4)
-        (0 until 8).map(y => (r.nextInt(), y)).sortBy(_._1).take(k).foreach { case (_, y) =>
-            val row = nn(y, 8, bh) * bw
-            val a = m(row + nn(6, 8, bw)) & 0xFF
-            val b = m(row + nn(7, 8, bw)) & 0xFF
-            m(row + nn(7, 8, bw)) = (if (a < b) a else a + 1).toByte
-          }
-        rows += ((id, "image", pgm(bw, bh, m)))
-        planted += ((baseId, id))
-        members += 1
-      } else {
-        val w = 40 + r.nextInt(41)
-        val h = 32 + r.nextInt(33)
-        rows += ((id, "image", pgm(w, h, randRaster(w, h))))
+      val (baseId, base) = bases((i - cliques) % bases.length)
+      val m = base.clone()
+      var p = 0
+      while (p < m.length) {
+        if (!(sampledX(p % bw) && sampledY(p / bw)))
+          m(p) = math.min(250, math.max(0, (m(p) & 0xFF) + r.nextInt(7) - 3)).toByte
+        p += 1
       }
+      // every other member flips thumbnail row 0's last comparison
+      // (col 6 vs 7)
+      if ((i - cliques) / cliques % 2 == 1) {
+        val row = 0
+        val a = m(row + nn(6, 8, bw)) & 0xFF
+        val b = m(row + nn(7, 8, bw)) & 0xFF
+        m(row + nn(7, 8, bw)) = (if (a < b) a else a + 1).toByte
+      }
+      rows += ((id, "image", pgm(bw, bh, m)))
+      planted += ((baseId, id))
+      members += 1
       id += 1
     }
     val audio = scala.collection.mutable.ArrayBuffer[(Long, Array[Short])]()
     var copies = 0
     (0 until nAudio).foreach { j =>
-      if (j >= 20 && j % 20 == 0) {
+      if (j >= 6 && j % 6 == 0) {
         val (srcId, s) = audio(r.nextInt(audio.size))
         rows += ((id, "audio", wav(s)))
         planted += ((srcId, id))

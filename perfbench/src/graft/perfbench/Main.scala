@@ -7,6 +7,7 @@ import java.nio.file.{Files, StandardCopyOption}
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.apache.spark.sql.SparkSession
 
@@ -137,7 +138,7 @@ final class Workloads(spark: SparkSession, listener: LayerListener, o: Main.Opts
   private def scale(full: Int, smoke: Int): Int = if (o.smoke) smoke else full
 
   /** Session start + the median of three input generations + one warmup
-    * (the stream workloads warm up; the batch flows are measured cold). */
+    * (the streams and `media_dedup` warm up; `release_flow` runs JVM-cold). */
   private def setupS(generate: => Unit)(warmup: => Unit): Double = {
     val gen = (0 until 3).map(_ => timed(generate)._2)
     sessionS + Stats.median(gen) + timed(warmup)._2
@@ -187,17 +188,6 @@ final class Workloads(spark: SparkSession, listener: LayerListener, o: Main.Opts
       n -> ss.map(s => Tracer.selfNs(s, spans)).sum / 1e9 }
   }
 
-  /** Slowest task of a span's jobs, and its time over the median task
-    * time of all their tasks: a one-task stage among wide ones shows. */
-  private def taskFigures(run: String, span: String): (Double, Double) = {
-    listener.settle()
-    val ms = listener.groups
-      .filter(g => traced.groupRun.get(g) == run && traced.groupLayer.get(g) == span)
-      .flatMap(g => listener.ledger(g).taskMs.asScala).map(_.toDouble)
-    if (ms.isEmpty) (0.0, 0.0)
-    else (ms.max / 1e3, ms.max / math.max(1.0, Stats.median(ms)))
-  }
-
   /** Every per-layer metric, zero where this workload's layers did no
     * work, each the median over traced repetitions. */
   private def perLayer(reps: Seq[Map[String, Double]], overheadS: Double,
@@ -210,7 +200,8 @@ final class Workloads(spark: SparkSession, listener: LayerListener, o: Main.Opts
       "streaming.batches" -> "count", "streaming.batch_ms_p50" -> "ms",
       "streaming.batch_ms_p99" -> "ms", "streaming.overhead_ms_p50" -> "ms",
       "streaming.queue_wait_ms_p50" -> "ms", "gen.late_ms_p99" -> "ms",
-      "extract.s" -> "s", "extract.cpu_s" -> "s", "extract.kept_ratio" -> "ratio",
+      "extract.s" -> "s", "dedup.s" -> "s", "textops.s" -> "s", "multimodal.s" -> "s",
+      "extract.cpu_s" -> "s", "extract.kept_ratio" -> "ratio",
       "dedup.shingle_s" -> "s", "dedup.minhash_s" -> "s", "dedup.candidates" -> "count",
       "dedup.useful_ratio" -> "ratio", "dedup.cc_s" -> "s", "dedup.cc_iterations" -> "count",
       "textops.shard_s" -> "s", "textops.manifest_s" -> "s", "write_mb" -> "MB",
@@ -281,12 +272,13 @@ final class Workloads(spark: SparkSession, listener: LayerListener, o: Main.Opts
     } {
       // five full drains of a same-sized backlog of other events: per-drain
       // walls still fall from the second drain to the fourth while the JIT
-      // compiles the parse and serialize paths
+      // compiles the parse and serialize paths. Their output is discarded
+      // unchecked: it is not measured.
       val warm = new File(o.work, "warm-backlog")
-      val (wev, _) = Streams.writeBacklog(warm, o.seed + 1, files, perFile)
+      Streams.writeBacklog(warm, o.seed + 1, files, perFile)
       (0 until scale(5, 1)).foreach { i =>
         val (run, _, _) = Streams.drain(spark, warm, o.work, s"warm$i", plain, None)
-        checkStream(wev.map(_.canonical), run)
+        deleteTree(new File(run.out))
       }
       deleteTree(warm)
     }
@@ -410,74 +402,135 @@ final class Workloads(spark: SparkSession, listener: LayerListener, o: Main.Opts
 
   // ------------------------------------------------------------ batch
 
-  /** Shared driver of the cold flows. Repetition 0 is the cold run the
-    * end-to-end figures come from: first flow in the JVM, so it pays
-    * code generation and any memo builds, on a fresh copy of the input
-    * (no cache keyed on the input path or its files can carry over).
-    * Untraced, further warm repetitions fill the window and are reported
-    * as context only. Traced, repetition 0 is traced (the per-layer
-    * figures explain the cold run), then one untraced and one traced
-    * warm repetition give the tracing overhead. Every repetition's output
-    * is checked after it. */
-  private def coldFlow(base: File, bytes: Long, why: String, input: ListMap[String, Any],
-                       setup: Double)(flow: (String, String, Tracer) => Map[String, Double])
-                      (check: (String, String) => Seq[String]): Outcome = {
+  /** Shared driver of the batch flows. Every run reads a fresh copy of
+    * the input, so nothing keyed on the input path (memo tables) carries
+    * over: each run pays its own memo builds. Untraced, CLI runs fill the
+    * window (at least `minReps`) and the end-to-end figures are their
+    * medians.
+    * Traced, the first CLI run, in the same state as the first untraced
+    * one, has its jobs recorded and charged to layers ([[JobLayers]]);
+    * then a recorded run between two unrecorded ones gives the tracing
+    * overhead (recorded wall minus their mean, so a steady warming trend
+    * cancels); last, the isolation run gives the sub-layer figures and
+    * must write the same rows as the CLI. Every run's output is checked
+    * after it. */
+  private def batchFlow[A](base: File, bytes: Long, why: String, input: ListMap[String, Any],
+                           setup: Double, minReps: Int, first: String,
+                           rules: Seq[(Regex, String)], outputs: Seq[String])
+                          (flow: (String, String) => A)
+                          (check: (String, String, A) => (Seq[String], Map[String, Double]))
+                          (isolated: (String, String, Tracer) => Map[String, Double]): Outcome = {
     var timedS = 0.0
     var rep = 0
-    val walls = mutable.ArrayBuffer[(Boolean, Double)]()
-    var coldCpu = Double.NaN
+    val walls = mutable.ArrayBuffer[Double]()
+    val cpus = mutable.ArrayBuffer[Double]()
     var layers = Map.empty[String, Double]
+    var tracedWall = Double.NaN
     var failed = 0L
-    def more: Boolean = if (o.trace) rep < 3 else rep == 0 || timedS < o.seconds
+    val keep = new File(o.work, "out-traced")
+    def fail(what: String, ps: Seq[String]): Unit =
+      if (ps.nonEmpty) { failed += 1; problems ++= ps.map(p => s"$what: $p") }
+    def more: Boolean = if (o.trace) rep < 4 else rep < minReps || timedS < o.seconds
     while (more) {
       val in = new File(o.work, s"in-rep$rep")
       copyTree(base, in)
       val out = new File(o.work, s"out-rep$rep")
-      val tr = if (o.trace && rep != 1) traced else plain
-      val runId = s"rep$rep"
-      tr.beginRun(runId)
+      val record = o.trace && (rep == 0 || rep == 2)
       val m0 = (MemoClock.totalS, MemoClock.count)
-      val t0 = System.nanoTime()
-      val (res, c) = cpu(try Right(flow(in.getPath, out.getPath, tr)) catch {
-        case e: Exception => Left(e)
-      })
-      val wall = (System.nanoTime() - t0) / 1e9
+      if (record) { listener.settle(); listener.startRecording() }
+      val ((res, t0, t1, wall), c) = cpu {
+        val (t0, n0) = (System.currentTimeMillis(), System.nanoTime())
+        val r = try Right(flow(in.getPath, out.getPath)) catch { case e: Exception => Left(e) }
+        (r, t0, System.currentTimeMillis(), (System.nanoTime() - n0) / 1e9)
+      }
+      val jobs = if (record) listener.stopRecording() else Nil
       res match {
         case Left(e) =>
-          failed += 1
-          problems += s"rep $rep failed: $e"
+          fail(s"rep $rep", Seq(s"flow failed: $e"))
           timedS = o.seconds
-        case Right(figs) =>
+        case Right(a) =>
           timedS += wall
-          walls += ((tr.enabled, wall))
-          if (rep == 0) coldCpu = c
-          if (rep == 0 && tr.enabled) layers = figs ++ selfSeconds(runId).collect {
-            case (n, s) if n.contains('.') || n == "extract" =>
-              (if (n == "extract") "extract.s" else s"${n}_s") -> s
-          } ++ ledgerFigures(runId) ++ Map(
-            "memo.build_s" -> (MemoClock.totalS - m0._1),
-            "memo.builds" -> (MemoClock.count - m0._2).toDouble,
-            "write_mb" -> dirBytes(out) / 1e6,
-            "extract.cpu_s" -> listener.groups
-              .filter(g => traced.groupRun.get(g) == runId && traced.groupLayer.get(g) == "extract")
-              .map(g => listener.ledger(g).cpuNs.get()).sum / 1e9)
-          val ps = check(in.getPath, out.getPath)
-          if (ps.nonEmpty) { failed += 1; problems ++= ps.map(p => s"rep $rep: $p") }
+          val (ps, figs) = check(in.getPath, out.getPath, a)
+          fail(s"rep $rep", ps)
+          if (!record) { walls += wall; cpus += c }
+          else if (rep == 2) tracedWall = wall
+          else {
+            layers = figs ++ jobFigures(jobs, first, rules, t0, t1) ++ Map(
+              "memo.build_s" -> (MemoClock.totalS - m0._1),
+              "memo.builds" -> (MemoClock.count - m0._2).toDouble,
+              "write_mb" -> dirBytes(out) / 1e6)
+            copyTree(out, keep)
+          }
       }
       deleteTree(in); deleteTree(out)
       rep += 1
     }
     val rss = peakRssMb()
-    val cold = walls.headOption.map(_._2).getOrElse(Double.NaN)
-    val (tailPct, tailMs) = tail(Seq(cold * 1e3))
-    val warm = walls.drop(1)
-    val (ovS, ovPct) = overhead(warm.filterNot(_._1).map(_._2).toSeq, warm.filter(_._1).map(_._2).toSeq)
+    if (o.trace) {
+      val in = new File(o.work, "in-isolated")
+      copyTree(base, in)
+      val out = new File(o.work, "out-isolated")
+      traced.beginRun("isolated")
+      val figs = try Some(isolated(in.getPath, out.getPath, traced)) catch {
+        case e: Exception => fail("isolation run", Seq(e.toString)); None
+      }
+      figs.foreach { f =>
+        fail("isolation run", outputs.flatMap(sub =>
+          Checks.sameRows(spark, new File(keep, sub).getPath, new File(out, sub).getPath)))
+        layers = layers ++ f ++ selfSeconds("isolated").collect {
+          case (n, v) if IsolatedSubLayers.contains(n) => s"${n}_s" -> v
+        }
+      }
+      rep += 1
+      deleteTree(in); deleteTree(out); deleteTree(keep)
+    }
+    val wall = med(walls.toSeq)
+    val (ovS, ovPct) =
+      if (walls.isEmpty || tracedWall.isNaN) (0.0, 0.0)
+      else {
+        val base = walls.sum / walls.size
+        (tracedWall - base, 100.0 * (tracedWall - base) / base)
+      }
+    val (tailPct, tailMs) = tail(walls.map(_ * 1e3).toSeq)
     Outcome(
-      e2e(setup, bytes / 1e6 / cold, cold * 1e3, tailMs, cold, coldCpu, rss),
+      e2e(setup, bytes / 1e6 / wall, wall * 1e3, tailMs, wall, med(cpus.toSeq), rss),
       perLayer(Seq(layers), ovS, ovPct), rep.toLong, failed, problems.toSeq,
       ListMap("why" -> why, "input" -> input, "reps" -> rep,
-        "latency_samples" -> 1, "latency_tail_pct" -> tailPct,
-        "cold_wall_s" -> cold, "warm_walls_s" -> warm.map(_._2).toSeq))
+        "latency_samples" -> walls.size, "latency_tail_pct" -> tailPct,
+        "walls_s" -> walls.toSeq, "traced_wall_s" -> tracedWall))
+  }
+
+  /** Sub-layers only the isolation run can time: the CLI's lazy plan runs
+    * them inside one action. */
+  private val IsolatedSubLayers = Set("dedup.shingle", "dedup.minhash", "dedup.cc",
+    "multimodal.hash", "multimodal.pairs", "multimodal.clusters")
+
+  /** Layer figures of one recorded CLI run: time per layer and sub-layer
+    * ([[JobLayers.seconds]]), the ledger per layer, task CPU of extraction,
+    * and the slowest task of the flow over its median task. */
+  private def jobFigures(jobs: Seq[JobRec], first: String, rules: Seq[(Regex, String)],
+                         t0Ms: Long, t1Ms: Long): Map[String, Double] = {
+    val charged = JobLayers.assign(jobs, first, rules)
+    val secs = JobLayers.seconds(charged, t0Ms, t1Ms)
+    def top(l: String) = l.takeWhile(_ != '.')
+    val times = secs.groupBy(kv => top(kv._1)).map { case (l, m) => s"$l.s" -> m.values.sum } ++
+      secs.collect { case (k, v) if k.contains('.') => s"${k}_s" -> v }
+    val ledgers = charged.groupBy(j => top(j._2))
+      .map { case (l, js) => l -> js.map(j => listener.ledger(j._1.group)) }
+    val ledgerFigs = LedgerLayers.flatMap { layer =>
+      val ls = ledgers.getOrElse(layer, Nil)
+      Seq(s"$layer.tasks" -> ls.map(_.tasks.get()).sum.toDouble,
+        s"$layer.stages" -> ls.map(_.stages.size).sum.toDouble,
+        s"$layer.shuffle_mb" -> ls.map(_.shuffleWriteBytes.get()).sum / 1e6,
+        s"$layer.spill_mb" -> ls.map(_.spillBytes.get()).sum / 1e6,
+        s"$layer.gc_s" -> ls.map(_.gcMs.get()).sum / 1e3)
+    }
+    val taskMs = ledgers.getOrElse("multimodal", Nil).flatMap(_.taskMs.asScala).map(_.toDouble)
+    val taskFigs = if (taskMs.isEmpty) Map.empty[String, Double] else Map(
+      "multimodal.max_task_s" -> taskMs.max / 1e3,
+      "multimodal.task_skew" -> taskMs.max / math.max(1.0, Stats.median(taskMs)))
+    times ++ ledgerFigs ++ taskFigs ++ Map(
+      "extract.cpu_s" -> ledgers.getOrElse("extract", Nil).map(_.cpuNs.get()).sum / 1e9)
   }
 
   private def copyTree(from: File, to: File): Unit = {
@@ -497,49 +550,64 @@ final class Workloads(spark: SparkSession, listener: LayerListener, o: Main.Opts
     val nDocs = scale(600, 300)
     val base = new File(o.work, "web")
     var corpus: Gen.WebCorpus = null
+    // no warm-up: the measured run is the JVM's first, and pays Spark's
+    // code generation and the JIT (one run of the verb, cold or warm, is
+    // all the window affords)
     val setup = setupS {
       corpus = Gen.web(o.seed, nDocs)
       writeParquet(corpus.docs.toDF("doc_id", "html"), base)
     } {}
     val kinds = ListMap(corpus.kinds.toSeq.sortBy(_._1): _*)
-    coldFlow(base, corpus.bytes,
+    batchFlow(base, corpus.bytes,
       "extract, dedup, shuffle and parquet writes do the work; JSON, IPC and publish do none",
       ListMap("docs" -> nDocs, "bytes" -> corpus.bytes, "planted" -> kinds,
         "planted_share" -> ListMap(kinds.toSeq.map { case (k, v) => k -> v.toDouble / nDocs }: _*)),
-      setup) { (in, out, tr) =>
-      val r = Flows.release(spark, in, out, tr)
-      lastRelease = r
-      Map("extract.kept_ratio" -> r.kept.toDouble / math.max(1L, r.docsIn),
-        "dedup.candidates" -> r.candidates.toDouble,
-        "dedup.useful_ratio" -> r.useful.toDouble / math.max(1L, r.candidates),
-        "dedup.cc_iterations" -> r.ccIterations.toDouble)
-    } { (_, out) => Checks.release(spark, out, nDocs, lastRelease) }
+      setup, 1, "extract", Flows.ReleaseLayers, Seq("released.parquet", "manifest.parquet")) {
+      (in, out) => Flows.release(in, out)
+    } { (_, out, r) =>
+      (Checks.release(spark, out, nDocs, r),
+        Map("extract.kept_ratio" -> r.kept.toDouble / math.max(1L, r.docsIn)))
+    } { (in, out, tr) => Flows.releaseIsolated(spark, in, out, tr) }
   }
-  private var lastRelease: Flows.Release = _
 
   def mediaDedup(): Outcome = {
     import spark.implicits._
-    val nImages = scale(2400, 150)
-    val nAudio = scale(2400, 150)
+    val nImages = scale(600, 150)
+    val nAudio = scale(1200, 150)
     val base = new File(o.work, "media")
     var corpus: Gen.MediaCorpus = null
+    // warm-up: one run of the verb on a same-sized input of another seed,
+    // so the measured runs do not pay the JVM's and Spark's one-time
+    // compilation (a JVM-cold run of this flow spread up to 0.26 over ten
+    // seeds); then the median of at least two runs
     val setup = setupS {
-      corpus = Gen.media(o.seed, nImages, nAudio, cliques = 6, cliqueShare = 0.4)
+      corpus = Gen.media(o.seed, nImages, nAudio)
       writeParquet(corpus.rows.toDF("doc_id", "media_type", "payload"), base)
-    } {}
+    } {
+      val warm = new File(o.work, "warm")
+      val warmOut = new File(o.work, "warm-out")
+      val wc = Gen.media(o.seed + 1, nImages, nAudio)
+      writeParquet(wc.rows.toDF("doc_id", "media_type", "payload"), warm)
+      val c = Flows.clusters(warm.getPath, warmOut.getPath)
+      problems ++= Checks.media(spark, warm.getPath, warmOut.getPath, wc, c).map(p => s"warm-up: $p")
+      deleteTree(warm); deleteTree(warmOut)
+    }
     val c = corpus
-    coldFlow(base, c.bytes,
+    var pairsChecked = false
+    batchFlow(base, c.bytes,
       "the multimodal pair family, the heaviest module, with large cliques that skew one task",
       ListMap("images" -> nImages, "audio" -> nAudio, "bytes" -> c.bytes,
-        "clique_members" -> c.cliqueMembers, "clique_share" -> c.cliqueMembers.toDouble / nImages,
-        "audio_copies" -> c.audioCopies, "audio_copy_share" -> c.audioCopies.toDouble / nAudio,
+        "clique_members" -> c.cliqueMembers, "image_docs_per_hash" -> c.docsPerHash("image"),
+        "audio_copies" -> c.audioCopies, "audio_docs_per_hash" -> c.docsPerHash("audio"),
         "planted_pairs" -> c.planted.size),
-      setup) { (in, out, tr) =>
-      val r = Flows.clusters(spark, in, out, tr)
-      val (maxTask, skew) = if (tr.enabled) taskFigures(tr.currentRun, "multimodal.pairs") else (0.0, 0.0)
-      Map("multimodal.candidates" -> r.joinRows.toDouble,
-        "multimodal.useful_ratio" -> r.pairs.toDouble / math.max(1L, r.joinRows),
-        "multimodal.max_task_s" -> maxTask, "multimodal.task_skew" -> skew)
-    } { (in, out) => Checks.media(spark, in, out, c) }
+      setup, 2, "multimodal", Nil, Seq(".")) {
+      (in, out) => Flows.clusters(in, out)
+    } { (in, out, st) =>
+      val ps = Checks.media(spark, in, out, c, st, checkPairs = !pairsChecked)
+      pairsChecked = true
+      (ps, Map.empty[String, Double])
+    } {
+      (in, out, tr) => Flows.clustersIsolated(spark, in, out, tr)
+    }
   }
 }

@@ -36,6 +36,27 @@ object SelfTest {
     check("self time: leaf is its duration") { Tracer.selfNs(kids(2), p +: kids) == 10 }
     check("union length") { Stats.unionLength(Seq((0L, 5L), (3L, 8L), (10L, 12L))) == 10 }
 
+    // the jobs of an uninstrumented flow are charged to layers in job order
+    val jobs = Seq(JobRec(1, "job-1", "collect at Main.scala", 1000, 1100),
+      JobRec(2, "job-2", "count at graft.operators.Dedup$.cc", 1100, 1400),
+      JobRec(3, "job-3", "count at Main.scala", 1400, 1500),
+      JobRec(4, "job-4", "(9) Execute InsertIntoHadoopFsRelationCommand\nInput: []\n" +
+        "Arguments: file:/o/released.parquet, false, Parquet", 1500, 1800),
+      JobRec(5, "job-5", "(1) Scan parquet\nLocation: InMemoryFileIndex [file:/o/released.parquet]",
+        1800, 1850))
+    val charged = JobLayers.assign(jobs, "extract", Flows.ReleaseLayers)
+    check("job layers: a marked job sets the layer, unmarked ones continue it") {
+      charged.map(_._2) == Seq("extract", "dedup", "dedup", "textops.shard", "textops.shard")
+    }
+    check("job layers: seconds add up to the wall, planning gaps go to the next job") {
+      JobLayers.seconds(charged, 900, 1900) ==
+        Map("extract" -> 0.2, "dedup" -> 0.4, "textops.shard" -> 0.4)
+    }
+    check("job layers: overlapping jobs are not counted twice") {
+      JobLayers.seconds(Seq(JobRec(1, "a", "", 0, 500) -> "x", JobRec(2, "b", "", 100, 300) -> "y"),
+        0, 600) == Map("x" -> 0.3, "y" -> 0.3)
+    }
+
     // open-loop latency counts from when an event was due
     val due = Array(0L, 100000000L, 200000000L)
     val lat = Streams.openLoopLatencyMs(due, Map(0 -> 7L, 1 -> 7L, 2 -> 7L), Map(7L -> 300000000L))
@@ -68,12 +89,12 @@ object SelfTest {
     }
     check("generators are seeded") {
       Gen.web(3L, 50).docs == Gen.web(3L, 50).docs &&
-        Gen.media(3L, 40, 40, 2, 0.5).rows.map(r => (r._1, r._2, r._3.toSeq)) ==
-          Gen.media(3L, 40, 40, 2, 0.5).rows.map(r => (r._1, r._2, r._3.toSeq)) &&
+        Gen.media(3L, 40, 40, 2).rows.map(r => (r._1, r._2, r._3.toSeq)) ==
+          Gen.media(3L, 40, 40, 2).rows.map(r => (r._1, r._2, r._3.toSeq)) &&
         Gen.web(3L, 50).docs != Gen.web(4L, 50).docs
     }
     check("planted media pairs are within max-hamming by construction") {
-      val m = Gen.media(5L, 200, 100, 3, 0.5)
+      val m = Gen.media(5L, 200, 100, 3)
       val h = m.rows.map(r => r._1 -> graft.operators.Multimodal.phashOf(r._1, r._2, r._3)).toMap
       m.planted.nonEmpty && m.planted.forall { case (a, b) =>
         java.lang.Long.bitCount(h(a) ^ h(b)) <= Flows.MaxHamming }

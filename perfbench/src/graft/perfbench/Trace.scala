@@ -88,12 +88,25 @@ final class GroupLedger {
   val taskMs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
 }
 
+/** One Spark job of a recorded window: its ledger group, the call site
+  * and plan text of the action that ran it (the SQL execution's, and its
+  * root execution's, else the job's last stage's call site), and its
+  * start and end times in epoch milliseconds. */
+final case class JobRec(id: Int, group: String, text: String, startMs: Long, endMs: Long)
+
+/** Ledgers are keyed by the job group a job carries (a [[Tracer]] span's),
+  * else by the job itself (`job-<id>`), so jobs of an uninstrumented
+  * call, such as a CLI verb, can be charged to layers afterwards from
+  * their [[JobRec]]s. */
 final class LayerListener extends SparkListener {
   private val stageGroup = new ConcurrentHashMap[Int, String]()
   private val ledgers = new ConcurrentHashMap[String, GroupLedger]()
   private val events = new AtomicLong()
   private val jobsStarted = new AtomicLong()
   private val jobsEnded = new AtomicLong()
+  private val execText = new ConcurrentHashMap[Long, String]()
+  private val jobs = new ConcurrentHashMap[Int, JobRec]()
+  @volatile private var recording = false
   val allCpuNs = new AtomicLong()
 
   def ledger(group: String): GroupLedger =
@@ -101,16 +114,43 @@ final class LayerListener extends SparkListener {
 
   def groups: Seq[String] = ledgers.keySet.asScala.toSeq
 
+  /** Record [[JobRec]]s from now on, dropping earlier ones. */
+  def startRecording(): Unit = { jobs.clear(); execText.clear(); recording = true }
+
+  /** Stop recording; the jobs recorded since [[startRecording]], in id order. */
+  def stopRecording(): Seq[JobRec] = {
+    settle()
+    recording = false
+    jobs.values.asScala.toSeq.sortBy(_.id)
+  }
+
+  override def onOtherEvent(ev: SparkListenerEvent): Unit = ev match {
+    case e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart if recording =>
+      val root = e.rootExecutionId.flatMap(r => Option(execText.get(r))).getOrElse("")
+      execText.put(e.executionId, s"${e.details}\n${e.physicalPlanDescription}\n$root")
+      events.incrementAndGet()
+    case _ =>
+  }
+
   override def onJobStart(ev: SparkListenerJobStart): Unit = {
     jobsStarted.incrementAndGet()
     events.incrementAndGet()
-    Option(ev.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-      .foreach(g => ev.stageIds.foreach(sid => stageGroup.put(sid, g)))
+    val props = Option(ev.properties)
+    val g = props.flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      .getOrElse(s"job-${ev.jobId}")
+    ev.stageIds.foreach(sid => stageGroup.put(sid, g))
+    if (recording) {
+      val text = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .flatMap(id => Option(execText.get(id.toLong)))
+        .getOrElse(ev.stageInfos.sortBy(_.stageId).lastOption.map(_.details).getOrElse(""))
+      jobs.put(ev.jobId, JobRec(ev.jobId, g, text, ev.time, -1L))
+    }
   }
 
   override def onJobEnd(ev: SparkListenerJobEnd): Unit = {
     jobsEnded.incrementAndGet()
     events.incrementAndGet()
+    jobs.computeIfPresent(ev.jobId, (_, j) => j.copy(endMs = ev.time))
   }
 
   override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
@@ -148,5 +188,42 @@ final class LayerListener extends SparkListener {
       val now = events.get()
       if (now == last) quietMs += 20 else { last = now; quietMs = 0 }
     }
+  }
+}
+
+/** Charges the jobs of one uninstrumented flow (a CLI verb run as it
+  * ships, lazy plan and all) to layers, so that work a lazy plan runs
+  * again is charged where it runs. */
+object JobLayers {
+
+  /** Each job in id order gets the layer of the first rule whose pattern
+    * occurs in its call site or plan text; a job no rule marks keeps the
+    * layer of the job before it (`first` before any). */
+  def assign(jobs: Seq[JobRec], first: String,
+             rules: Seq[(scala.util.matching.Regex, String)]): Seq[(JobRec, String)] = {
+    var cur = first
+    jobs.sortBy(_.id).map { j =>
+      rules.find(_._1.findFirstIn(j.text).isDefined).foreach(r => cur = r._2)
+      j -> cur
+    }
+  }
+
+  /** Seconds per layer that add up to the flow's wall time: in order of
+    * job end, each job owns the time since the latest earlier job end
+    * (the flow start for the first), which covers its driver-side
+    * planning as well as its tasks; the time after the last job end goes
+    * to the last job's layer. */
+  def seconds(charged: Seq[(JobRec, String)], startMs: Long, endMs: Long): Map[String, Double] = {
+    val acc = mutable.LinkedHashMap[String, Long]()
+    var mark = startMs
+    var lastLayer: Option[String] = None
+    charged.sortBy(_._1.endMs).foreach { case (j, layer) =>
+      val end = math.min(math.max(j.endMs, mark), endMs)
+      acc(layer) = acc.getOrElse(layer, 0L) + (end - mark)
+      mark = end
+      lastLayer = Some(layer)
+    }
+    lastLayer.foreach(l => acc(l) = acc(l) + (endMs - mark))
+    acc.map { case (k, v) => k -> v / 1e3 }.toMap
   }
 }
