@@ -122,8 +122,8 @@ object Main {
   }
 }
 
-/** The four workloads. Each one: generate its input three times and warm
-  * up once (`setup_s` = session start + median generation + warmup), measure
+/** The four workloads. Each one: generate its input and warm up
+  * (`setup_s` = session start + generation + warmup), measure
   * repetitions until their timed walls sum to `--seconds`, check every
   * repetition's output after it, outside the timed window. */
 final class Workloads(spark: SparkSession, listener: LayerListener, o: Main.Opts,
@@ -137,12 +137,10 @@ final class Workloads(spark: SparkSession, listener: LayerListener, o: Main.Opts
   private val problems = mutable.ArrayBuffer[String]()
   private def scale(full: Int, smoke: Int): Int = if (o.smoke) smoke else full
 
-  /** Session start + the median of three input generations + one warmup
-    * (the streams and `media_dedup` warm up; `release_flow` runs JVM-cold). */
-  private def setupS(generate: => Unit)(warmup: => Unit): Double = {
-    val gen = (0 until 3).map(_ => timed(generate)._2)
-    sessionS + Stats.median(gen) + timed(warmup)._2
-  }
+  /** Session start + input generation + one warmup (the streams and
+    * `media_dedup` warm up; `release_flow` runs JVM-cold). */
+  private def setupS(generate: => Unit)(warmup: => Unit): Double =
+    sessionS + timed(generate)._2 + timed(warmup)._2
 
   /** Task CPU seconds of `body`, read after the listener bus settles. */
   private def cpu[A](body: => A): (A, Double) = {
@@ -270,13 +268,13 @@ final class Workloads(spark: SparkSession, listener: LayerListener, o: Main.Opts
       val (ev, b) = Streams.writeBacklog(backlog, o.seed, files, perFile)
       events = ev; bytes = b
     } {
-      // five full drains of a same-sized backlog of other events: per-drain
+      // four full drains of a same-sized backlog of other events: per-drain
       // walls still fall from the second drain to the fourth while the JIT
       // compiles the parse and serialize paths. Their output is discarded
       // unchecked: it is not measured.
       val warm = new File(o.work, "warm-backlog")
       Streams.writeBacklog(warm, o.seed + 1, files, perFile)
-      (0 until scale(5, 1)).foreach { i =>
+      (0 until scale(4, 1)).foreach { i =>
         val (run, _, _) = Streams.drain(spark, warm, o.work, s"warm$i", plain, None)
         deleteTree(new File(run.out))
       }
@@ -349,7 +347,7 @@ final class Workloads(spark: SparkSession, listener: LayerListener, o: Main.Opts
     val setup = setupS {
       events = Streams.batteryEvents(o.seed, nEvents)
     } {
-      val warm = Streams.batteryEvents(o.seed + 1, (rate * (if (o.smoke) 1.0 else 6.0)).toInt)
+      val warm = Streams.batteryEvents(o.seed + 1, (rate * (if (o.smoke) 1.0 else 4.0)).toInt)
       val (run, _) = Streams.paced(spark, warm, rate, triggerMs, 20, o.work, "warm",
         plain, None, None)
       checkStream(warm.map(_.canonical), run)
