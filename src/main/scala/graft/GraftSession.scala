@@ -88,10 +88,10 @@ object GraftSession {
       cleanupRegistered.forEach(p => deleteRecursive(new java.io.File(p)))))
     ()
   }
-  private def registerCleanup(f: java.io.File): Unit =
+  private[graft] def registerCleanup(f: java.io.File): Unit =
     if (cleanupRegistered.add(f.getAbsolutePath)) cleanupHook
 
-  private def deleteRecursive(f: java.io.File): Unit = {
+  private[graft] def deleteRecursive(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(deleteRecursive)
     f.delete()
   }

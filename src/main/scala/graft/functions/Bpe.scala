@@ -78,8 +78,6 @@ final class BpeApplier(merges: Seq[(String, String)],
     out
   }
 
-  def nMerges: Int = as.length
-
   def apply(s: UTF8String): ArrayData = {
     val str = s.toString
     if (str.indexOf(' ') >= 0)

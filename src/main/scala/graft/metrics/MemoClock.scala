@@ -2,23 +2,24 @@ package graft.metrics
 
 import java.util.concurrent.atomic.AtomicLong
 
-/** Cumulative per-JVM memo-build clock (r21, the r20 verdict's
-  * amortization-audit item): every per-dir scratch-artifact build —
-  * trainer vocabularies, shingle/phash/banded-pair index tables,
-  * wire-format corpora, model sketches — runs inside [[timed]], and the
-  * bench emits the accumulated seconds as `memo_build_s` in its JSON
-  * line. The suite's warmup + min-of-3 methodology pays each build once
-  * (in warmup) and excludes it from every timed sample; this counter
-  * makes that seam AUDITABLE instead of invisible: steady-state seconds
-  * and one-time build seconds ship side by side.
+/** Cumulative per-JVM memo-build clock: [[graft.Memo]] runs every build
+  * of a scratch table or in-driver artifact (trainer vocabularies,
+  * shingle/phash/banded-pair index tables, wire-format corpora, model
+  * sketches) inside [[timed]], and nothing else calls it. The bench emits
+  * the accumulated seconds as `memo_build_s` in its JSON line, and
+  * perfbench reports them per run as `memo.build_s` / `memo.builds`. The
+  * suite's warmup + min-of-3 methodology pays each build once (in
+  * warmup) and excludes it from every timed sample; this counter makes
+  * that seam AUDITABLE instead of invisible: steady-state seconds and
+  * one-time build seconds ship side by side.
   *
-  * Nested builds (one memo's build forcing another — e.g. the banded
-  * pair table forcing the shingle table) count once, at the OUTERMOST
+  * Nested builds (one memo's build looking up another — e.g. the
+  * incremental cluster table building the shingle table) count once, at the OUTERMOST
   * frame, so the total is wall seconds spent building, never
-  * double-booked. Thread-safe: concurrent distinct builds each add
-  * their own outermost span (the total is then "build-seconds", which
-  * can exceed wall on parallel warmups — the honest unit for an
-  * amortization audit). */
+  * double-booked. A build that throws still counts. Thread-safe:
+  * concurrent distinct builds each add their own outermost span (the
+  * total is then "build-seconds", which can exceed wall on parallel
+  * warmups — the honest unit for an amortization audit). */
 object MemoClock {
   private val totalNs = new AtomicLong(0L)
   private val builds = new AtomicLong(0L)

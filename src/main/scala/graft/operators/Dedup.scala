@@ -101,13 +101,9 @@ object Dedup {
     * executes once per consumer. At 100 TB this is exactly "persist the
     * shingle table", here in its single-node form; pipelines that manage
     * their own shingle store pass it to [[c2DedupMinhash]] directly. */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def shingleTablePath(spark: SparkSession, dir: String,
                                       n: Int = 3): String =
-    shingleCache.computeIfAbsent(s"$dir#$n", _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"shingles-$n-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("shingles", Seq(dir), n) { p =>
       // memo parts at n/4 (r20, guide §6 file sizing): the fanned build
       // parallelizes the shingling, but the consumers of THIS table are
       // join/aggregation-bound — each scan task carries ~70 ms of fixed
@@ -118,9 +114,8 @@ object Dedup {
       shingleRows(Tables.documentsFanned(spark, dir), n)
         .coalesce(math.max(8,
           spark.sessionState.conf.numShufflePartitions / 4))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** LSH banding planner — the (bands, rows) split of k minhashes that
     * minimizes expected candidate error at a target Jaccard threshold.
@@ -464,14 +459,9 @@ object Dedup {
     * maintains, so the gate row's per-run work is exactly the
     * incremental pass (the production shape: labels are an at-rest
     * table, only the crawl is processed per run). */
-  private val incrBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def incrBaseLabelsPath(spark: SparkSession, dir: String,
                                         threshold: Double = 0.5): String =
-    incrBaseCache.computeIfAbsent(s"$dir#$threshold", _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"incr-base-labels-$threshold-${graft.sources.JsonConvert.pathKey(dir)}")
-        .toString
+    graft.Memo.table("incr-base-labels", Seq(dir), threshold) { p =>
       val shEx = spark.read.parquet(shingleTablePath(spark, dir))
         .filter(col("doc_id") % 7 =!= 3)
       val pairs = c2DedupMinhash(spark, dir, shingleTable = Some(shEx))
@@ -479,9 +469,8 @@ object Dedup {
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
       connectedComponentsAlternating(pairs)._1
         .select(col("node"), col("cluster_id"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** c95 gate row (r16): [[incrementalClusters]] over c37's split —
     * existing corpus = doc_id % 7 ≠ 3 with its frozen label table;
@@ -497,14 +486,9 @@ object Dedup {
     * executes once per (dir, threshold) and the gate row reads its
     * at-rest result — the production shape, where maintenance runs once
     * per crawl and every downstream consumer reads the updated table. */
-  private val incrResultCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def incrClustersTablePath(spark: SparkSession, dir: String,
                                            threshold: Double = 0.5): String =
-    incrResultCache.computeIfAbsent(s"$dir#$threshold", _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"incr-clusters-$threshold-${graft.sources.JsonConvert.pathKey(dir)}")
-        .toString
+    graft.Memo.table("incr-clusters", Seq(dir), threshold) { p =>
       val docs = Tables.documents(spark, dir)
       val existing = docs.filter(col("doc_id") % 7 =!= 3)
         .select(col("doc_id"), col("text"))
@@ -518,9 +502,8 @@ object Dedup {
         .filter(col("doc_id") % 7 =!= 3)
       incrementalClusters(incoming, existing, lbl, threshold,
         existingShingles = Some(shEx))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   def c95IncrClusters(spark: SparkSession, dir: String,
                       threshold: Double = 0.5): DataFrame = {
@@ -822,21 +805,16 @@ object Dedup {
     * consumer re-runs the whole minhash→pairs→iterative-CC pipeline. The
     * single-node form of "persist the cluster table", exactly like
     * [[shingleTablePath]]. */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def clusterTablePath(spark: SparkSession, dir: String,
                                       threshold: Double = 0.5): String =
-    clusterCache.computeIfAbsent(s"$dir#$threshold", _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"clusters-$threshold-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("clusters", Seq(dir), threshold) { p =>
       val pairs = c2DedupMinhash(spark, dir)
         .filter(col("jaccard") >= threshold)
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
       connectedComponentsAlternating(pairs)._1
         .select(col("node"), col("cluster_id"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** c19: near-duplicate CLUSTERS — c2's MinHash/LSH pairs at
     * jaccard ≥ 0.5 (threshold applied to the 6-dp-rounded value, so both
@@ -1056,17 +1034,15 @@ object Dedup {
     * at runtime — r15). */
   // r20: max per-shingle df is a property of the at-rest shingle table
   // (the embeddingDim memo rule) — the eager groupBy+max job ran on
-  // every c83 execution; memoized per memo key, the require (same
-  // value, same refusal text) still evaluates per execution
-  private val maxDfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  // every c83 execution; memoized on the table at `memoPath`, the
+  // require (same value, same refusal text) still evaluates per execution
   private[graft] def requireTruthDfCap(sh: DataFrame,
                                        cap: Long = TruthDfCap,
-                                       memoKey: Option[String] = None): Unit = {
+                                       memoPath: Option[String] = None): Unit = {
     def compute(): Long = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
       .agg(max(col("df"))).head().getLong(0)
-    val maxDf: Long = memoKey match {
-      case Some(k) => maxDfCache.computeIfAbsent(k, _ => graft.metrics.MemoClock.timed(compute()))
+    val maxDf: Long = memoPath match {
+      case Some(p) => graft.Memo.value("max-df", Seq(p))(compute())
       case None    => compute()
     }
     require(maxDf <= cap,
@@ -1079,7 +1055,7 @@ object Dedup {
                        threshold: Double = 0.5): DataFrame = {
     val p = shingleTablePath(spark, dir)
     val sh = spark.read.parquet(p)
-    requireTruthDfCap(sh, memoKey = Some(p))
+    requireTruthDfCap(sh, memoPath = Some(p))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val truth = sh.select(col("doc_id").as("doc_a"), col("shingle"))
       .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
@@ -1266,24 +1242,15 @@ object Dedup {
     * feeds TWO consumers inside c62 (repeat count + hit side) and two
     * inside c63, and c62/c63 share a corpus in any Verify/Bench run —
     * materialized once per (dir, n), each consumer scans a small
-    * parquet. Like every memoized artifact here (shingleTablePath,
-    * clusterTablePath, c43's assignment), this assumes the corpus dir
-    * is IMMUTABLE for the JVM's lifetime: c63/c64 join this table
-    * against a live documents scan (as curate joins the cluster
-    * table), so mutating the dir mid-JVM would mix freshness — rewrite
-    * the corpus under a new dir, or use the generic
-    * [[dupSpans]]/[[scrubSpans]] entry points, which recompute live. */
+    * parquet. */
   private[graft] def posShingleTablePath(spark: SparkSession, dir: String,
                                          n: Int = 5): String =
-    shingleCache.computeIfAbsent(s"pos:$dir#$n", _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"posshingles-$n-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("posshingles", Seq(dir), n) { p =>
       positionalShingles(Tables.documentsFanned(spark, dir), n)
         .coalesce(math.max(8,
           spark.sessionState.conf.numShufflePartitions / 4))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** Gaps-and-islands merge of duplicated start positions into maximal
     * spans: starts whose [i, i+n-1] intervals overlap or touch (gap ≤ n)
@@ -1372,29 +1339,14 @@ object Dedup {
     * one level up): the c65 span subtree feeds c65's own gate output
     * AND c67's cut restriction — materialized once per
     * (dir, minSpan, strongN), each consumer scans a small parquet.
-    * Same immutable-dir assumption as every memoized scratch table;
     * [[dupSpansMin]]/[[scrubSpansMin]] are the live-recompute entry
     * points. */
-  private val spanTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def confirmedSpanTablePath(spark: SparkSession, dir: String,
                                             minSpan: Int = 20,
-                                            strongN: Int = 20): String = {
-    // resolve the positional-table memos BEFORE entering this memo's
-    // compute: a computeIfAbsent that re-enters the same map (even on
-    // another key) throws IllegalStateException("Recursive update") —
-    // hence also the dedicated map
-    posShingleTablePath(spark, dir, 5)
-    posShingleTablePath(spark, dir, strongN)
-    spanTableCache.computeIfAbsent(s"$dir#$minSpan#$strongN", _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"spanmin-$minSpan-$strongN-${graft.sources.JsonConvert.pathKey(dir)}")
-        .toString
-      c65Compute(spark, dir, minSpan, strongN)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-  }
+                                            strongN: Int = 20): String =
+    graft.Memo.table("spanmin", Seq(dir), minSpan, strongN) { p =>
+      c65Compute(spark, dir, minSpan, strongN).write.parquet(p)
+    }
 
   /** The generic thresholded span finder — the live-recompute twin of
     * [[c65SpanMinlen]] (`Main spans --min-span`). */
@@ -1505,16 +1457,9 @@ object Dedup {
     docSh.join(labels, "doc_id").select("sh", "cluster_id").distinct()
   }
 
-  private val spanClusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def spanClusterTablePath(spark: SparkSession, dir: String,
-                                          strongN: Int = 20): String = {
-    // pre-resolve the positional memo (the recursive-update rule)
-    posShingleTablePath(spark, dir, strongN)
-    spanClusterCache.computeIfAbsent(s"$dir#$strongN", _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"spanclusters-$strongN-${graft.sources.JsonConvert.pathKey(dir)}")
-        .toString
+                                          strongN: Int = 20): String =
+    graft.Memo.table("spanclusters", Seq(dir), strongN) { p =>
       val docSh = spark.read
         .parquet(posShingleTablePath(spark, dir, strongN))
         .select("sh", "doc_id").distinct()
@@ -1527,10 +1472,8 @@ object Dedup {
         .distinct()
       connectedComponentsAlternating(edges)._1
         .select(col("node"), col("cluster_id"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-  }
+        .write.parquet(p)
+    }
 
   /** c63: span scrub — the transform c62's report feeds: rewrite every
     * doc with its non-canonical duplicated runs CUT, keeping exactly one

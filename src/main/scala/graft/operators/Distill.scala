@@ -78,9 +78,6 @@ object Distill {
   /** c41's keep threshold — the frequency half of the teacher. */
   val TeacherMinMeanProb: Double = 0.033
 
-  private val treeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, QualityTree]()
-
   /** Per-doc integer features + the teacher label, built from the SAME
     * shared subtrees the teachers themselves use (qualityCounted /
     * freqScoredOn — thresholds and tokenization can't drift): len,
@@ -214,9 +211,7 @@ object Distill {
   /** Memoized per-corpus training run — the gate row and the oracle
     * renderer both read THIS artifact (trainBpe's memo rule). */
   def trainTree(spark: SparkSession, dir: String): QualityTree =
-    treeMemo.computeIfAbsent(dir,
-      _ => graft.metrics.MemoClock.timed(
-        trainTreeFrom(classifierFeatures(spark, dir))))
+    graft.Memo.value("quality-tree", Seq(dir))(trainTreeFrom(classifierFeatures(spark, dir)))
 
   /** The tree as ONE column expression over the feature columns — shared
     * verbatim by the batch gate row and d35's ingest scoring (the d29

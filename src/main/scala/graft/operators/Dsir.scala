@@ -116,13 +116,8 @@ object Dsir {
 
   /** Per-dir memo: gate row and oracle renderer must see the identical
     * artifact (trainBpe's memo rule). */
-  private val dsirMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
-
   def trainDsir(spark: SparkSession, dir: String): Seq[(String, Long)] =
-    dsirMemo.computeIfAbsent(dir,
-      _ => graft.metrics.MemoClock.timed(
-        trainDsirOn(graft.Tables.documents(spark, dir))))
+    graft.Memo.value("dsir", Seq(dir))(trainDsirOn(graft.Tables.documents(spark, dir)))
 
   /** The artifact as a plan-literal map and the per-WORD log-ratio
     * expression — the shared scoring subtree (d29's rule): both the

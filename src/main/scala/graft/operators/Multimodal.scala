@@ -460,10 +460,6 @@ object Multimodal {
     bos.toByteArray
   }
 
-  private[graft] def writePng(docId: Long,
-                              img: java.awt.image.BufferedImage): Array[Byte] =
-    writeImage(docId, img, "png")
-
   /** PGM → PNG transcode through the JDK's BUILT-IN codec
     * (javax.imageio, present in every JVM — no external library): the
     * parsed grayscale raster is re-encoded as a real zlib/DEFLATE-
@@ -1488,19 +1484,14 @@ object Multimodal {
     * at hash grain): c89's verified pair graph fed through the
     * alternating CC, materialized once to scratch — the at-rest
     * artifact c102 surfaces and c103's maintenance starts from. */
-  private val mediaLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def mediaLabelTablePath(spark: SparkSession,
                                          dir: String): String =
-    mediaLabelCache.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"media-labels-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("media-labels", Seq(dir)) { p =>
       val edges = c89PhashPairs(spark, dir)
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
       graft.operators.Dedup.connectedComponentsAlternating(edges)._1
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** c103 gate row: incremental MEDIA cluster maintenance — a crawl of
     * re-keyed byte-identical recrawls (every image with doc_id % 5 = 0,
@@ -1543,19 +1534,14 @@ object Multimodal {
 
   /** Per-JVM memoized FROZEN audio label table (mediaLabelTablePath's
     * twin for the 1-D modality). */
-  private val audioLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def audioLabelTablePath(spark: SparkSession,
                                          dir: String): String =
-    audioLabelCache.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"audio-labels-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("audio-labels", Seq(dir)) { p =>
       val edges = c93AudioPairs(spark, dir)
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
       graft.operators.Dedup.connectedComponentsAlternating(edges)._1
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** Per-JVM memoized MAINTAINED audio label table of the c113 crawl —
     * maintainedLabelTablePath's twin for the 1-D modality: the same
@@ -1564,13 +1550,9 @@ object Multimodal {
     * FROZEN c104 labels via the modality-generic
     * [[incrementalMediaClusters]] (its banding reads only (doc_id,
     * phash), and the audio hash is the same 56-bit/4-segment shape). */
-  private val maintainedAudioLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def maintainedAudioLabelTablePath(spark: SparkSession,
                                                    dir: String): String =
-    maintainedAudioLabelCache.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"audio-labels-incr-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("audio-labels-incr", Seq(dir)) { p =>
       val corpus = spark.read.parquet(audioHashTablePath(spark, dir))
         .select("doc_id", "phash")
       val crawl = corpus.filter(pmod(col("doc_id"), lit(5)) === 0)
@@ -1578,9 +1560,8 @@ object Multimodal {
           col("phash"))
       val frozen = spark.read.parquet(audioLabelTablePath(spark, dir))
       incrementalMediaClusters(crawl, corpus, frozen)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** c113 gate row (r18): incremental AUDIO cluster maintenance — the
     * missing cell of the 3-modality maintenance matrix (c103 proved
@@ -1611,32 +1592,23 @@ object Multimodal {
     * c95 memo rule: maintenance runs once per crawl; the gate row,
     * bench passes and specs all read the same updated table instead of
     * re-paying the banded join + CC per execution). */
-  private val maintainedLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def maintainedLabelTablePath(spark: SparkSession,
                                               dir: String): String =
-    maintainedLabelCache.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"media-labels-incr-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("media-labels-incr", Seq(dir)) { p =>
       val corpus = imagePhashFrames(spark, dir).select("doc_id", "phash")
       val crawl = corpus.filter(pmod(col("doc_id"), lit(5)) === 0)
         .select((col("doc_id") + lit(1000000000000L)).as("doc_id"), col("phash"))
       val frozen = spark.read.parquet(mediaLabelTablePath(spark, dir))
       incrementalMediaClusters(crawl, corpus, frozen)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** Per-JVM memoized at-rest phash index (the shingleTablePath rule):
     * the corpus hash table d43's streaming router equi-joins against —
     * at scale a parquet table bucketed by segment. */
-  private val phashCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def phashIndexTablePath(spark: SparkSession,
                                          dir: String): String =
-    phashCache.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"phash-index-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("phash-index", Seq(dir)) { p =>
       // r20: the gray thumbnail rides into the at-rest table so c89's
       // pair surface reads the memo instead of re-decoding per execution
       // (c88's own gate output shape is unchanged — the memo is a
@@ -1645,9 +1617,8 @@ object Multimodal {
         .select(col("doc_id") +: col("phash") +: col("gray") +:
           (0 until 4).map(j => phashSeg(col("phash"), j).as(s"seg$j")): _*)
         .orderBy("doc_id")
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** Frame-containment threshold for the VIDEO-level duplicate verdict
     * (c105): a pair is a duplicate when the matched-frame count covers
@@ -1668,13 +1639,9 @@ object Multimodal {
     * execution, while the at-rest table costs one scan; the (fa, docB)
     * surface is barely smaller than the (fa, fb) one on this corpus'
     * ~1.5-frames-per-matching-doc geometry.) */
-  private val videoPairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def videoPairTablePath(spark: SparkSession,
                                         dir: String): String =
-    videoPairCache.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"video-pairs-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("video-pairs", Seq(dir)) { p =>
       // r21 (§6 — partition by what readers filter on): the at-rest pair
       // table is written hive-partitioned by the cross-video flag. The
       // self-similar corpus geometry makes INTRA-video frame pairs the
@@ -1684,9 +1651,8 @@ object Multimodal {
       // drop most of them. All pairs stay at rest (the superset rule).
       c94VideoPairs(spark, dir)
         .withColumn("cross", col("doc_a") =!= col("doc_b"))
-        .write.partitionBy("cross").mode("overwrite").parquet(p)
-      p
-    })
+        .write.partitionBy("cross").parquet(p)
+    }
 
   /** c105 gate row (r17): the VIDEO-level near-dup decision surface —
     * the fold the r16 family stopped short of. c94 ENUMERATES verified
@@ -1737,19 +1703,14 @@ object Multimodal {
   /** Per-JVM memoized FROZEN video label table (mediaLabelTablePath's
     * twin at VIDEO grain): c105's thresholded duplicate edges fed
     * through the shared alternating CC. */
-  private val videoLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def videoLabelTablePath(spark: SparkSession,
                                          dir: String): String =
-    videoLabelCache.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"video-labels-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("video-labels", Seq(dir)) { p =>
       val edges = c105VideoPairs(spark, dir).filter(col("is_dup"))
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
       graft.operators.Dedup.connectedComponentsAlternating(edges)._1
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** c106 gate row (r17): VIDEO near-dup clusters — c102's decision
     * surface at VIDEO grain, which closes the media dedup family: now
@@ -1771,29 +1732,21 @@ object Multimodal {
     * modalities (phashIndexTablePath's rule — r17 review: c105/c108
     * were re-running the decode-heavy demux per consumer; the memo
     * pays it once per dir and every consumer reads the at-rest
-    * table). Keyed "<modality>#<dir>". */
-  private val modalHashCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * table). */
   private[graft] def audioHashTablePath(spark: SparkSession,
                                         dir: String): String =
-    modalHashCache.computeIfAbsent(s"audio#$dir", _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"audio-hash-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("audio-hash", Seq(dir)) { p =>
       // r20: the envelope rides into the at-rest table so c93's pair
       // surface reads the memo instead of re-decoding per execution
       // (hash consumers keep selecting (doc_id, phash))
       audioPhashFrames(spark, dir).select("doc_id", "phash", "env")
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
   private[graft] def videoFidTablePath(spark: SparkSession,
                                        dir: String): String =
-    modalHashCache.computeIfAbsent(s"video#$dir", _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"video-fid-${graft.sources.JsonConvert.pathKey(dir)}").toString
-      videoFidFrames(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    })
+    graft.Memo.table("video-fid", Seq(dir)) { p =>
+      videoFidFrames(spark, dir).write.parquet(p)
+    }
 
   /** Per-JVM memoized DISTINCT-HASH projection of a modality's at-rest
     * hash table (r21, the r20 verdict's pair-family stage-cut item):
@@ -1803,18 +1756,13 @@ object Multimodal {
     * it projects — at scale this is the hash index's bucket manifest,
     * maintained with the index itself. AQE sizes the part count (the
     * table is tiny relative to its source). */
-  private val uniqHashCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def uniqHashTablePath(spark: SparkSession, dir: String,
                                        modality: String,
                                        framesPath: String): String =
-    uniqHashCache.computeIfAbsent(s"$modality#$dir", _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"$modality-uniq-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table(s"$modality-uniq", Seq(dir)) { p =>
       spark.read.parquet(framesPath).select("phash").distinct()
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** Max hash rows the c108 exact truth side may cross-compare — the
     * c83 refusal at media grain: the brute is O(n²) in HASHES (8-byte
@@ -2442,13 +2390,9 @@ object Multimodal {
 
   /** Per-JVM memoized MAINTAINED video label table of the c109 crawl
     * (maintainedLabelTablePath's rule at video grain). */
-  private val videoMaintCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def maintainedVideoLabelTablePath(spark: SparkSession,
                                                    dir: String): String =
-    videoMaintCache.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"video-labels-incr-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("video-labels-incr", Seq(dir)) { p =>
       val corpus = spark.read.parquet(videoFidTablePath(spark, dir))
         .select("doc_id", "phash")
       // re-key at VIDEO grain: doc → doc + 10¹² ⇒ fid → fid + 8·10¹²
@@ -2458,9 +2402,8 @@ object Multimodal {
           col("phash"))
       val frozen = spark.read.parquet(videoLabelTablePath(spark, dir))
       incrementalVideoClusters(crawl, corpus, frozen)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** c109 gate row (r17): incremental VIDEO cluster maintenance — the
     * c103 equivalence check at the composed surface: a crawl of

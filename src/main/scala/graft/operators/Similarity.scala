@@ -216,16 +216,10 @@ object Similarity {
     * feeds BOTH assignment sides of an IVF search plus every training
     * round, and without the seam each consumer re-runs the corpus-wide
     * fixed-point aggregation. */
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def labelCodebookPath(spark: SparkSession, dir: String): String =
-    codebookCache.computeIfAbsent(dir, d => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"label-cb-${graft.sources.JsonConvert.pathKey(d)}").toString
-      labelCodebookOf(Tables.embeddings(spark, d))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+    graft.Memo.table("label-cb", Seq(dir)) { p =>
+      labelCodebookOf(Tables.embeddings(spark, dir)).write.parquet(p)
+    }
   // no broadcast hint here: the codebook is only ever consumed through
   // assignCells' single-row array fold, which broadcasts the folded row —
   // a hint on the agg INPUT would just be dropped (with a warning)
@@ -449,7 +443,7 @@ object Similarity {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
     val fixedPath = graft.GraftSession.scratchDir(
-      s"kmeans-fixed-$runId-${graft.sources.JsonConvert.pathKey(dir)}").toString
+      s"kmeans-fixed-$runId-${graft.Memo.pathKey(dir)}").toString
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), col("pos"),
@@ -461,7 +455,7 @@ object Similarity {
       val assigned = assignCells(e, cb, maxProbe = 1)
         .select(col("vec_id"), col("cell"))
       val cbPath = graft.GraftSession.scratchDir(
-        s"kmeans-cb-$runId-$r-${graft.sources.JsonConvert.pathKey(dir)}").toString
+        s"kmeans-cb-$runId-$r-${graft.Memo.pathKey(dir)}").toString
       fixed.join(assigned, "vec_id")
         .groupBy("cell", "pos")
         .agg(count(lit(1)).as("n"), sum(col("v4")).as("sum_v4"))
@@ -507,12 +501,10 @@ object Similarity {
     * the width is schema-class metadata, and the eager 1-row job ran
     * on EVERY execution of every PQ/whiten consumer (c36/c38/c79/c47 —
     * one serialized job of pure latency per run). */
-  private val dimCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private def embeddingDim(spark: SparkSession, dir: String): Int =
-    dimCache.computeIfAbsent(dir, d => graft.metrics.MemoClock.timed(
-      Tables.embeddings(spark, d).select(size(col("embedding")))
-        .head().getInt(0)))
+    graft.Memo.value("embedding-dim", Seq(dir)) {
+      Tables.embeddings(spark, dir).select(size(col("embedding"))).head().getInt(0)
+    }
 
   /** crossJoins `e` with one broadcast single-row fold PER SUBSPACE —
     * column `cb`j holds the codebook's j-th contiguous `subDim`-wide
@@ -842,20 +834,15 @@ object Similarity {
     * assignment frame on three plan branches (both sides of the intra-cell
     * self-join plus the verdict output); without the seam each branch
     * re-runs the corpus-wide assignment pass. */
-  private val assignedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def assignedTablePath(spark: SparkSession, dir: String): String =
-    assignedCache.computeIfAbsent(dir, d => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"cell-assign-${graft.sources.JsonConvert.pathKey(d)}").toString
+    graft.Memo.table("cell-assign", Seq(dir)) { p =>
       assignCells(
-        Tables.embeddingsFanned(spark, d)
+        Tables.embeddingsFanned(spark, dir)
           .select(col("vec_id"), toDouble(col("embedding")).as("v")),
-        labelCodebook(spark, d), maxProbe = 1)
+        labelCodebook(spark, dir), maxProbe = 1)
         .select(col("vec_id"), col("v"), col("cell"), col("ccos"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** c43: semantic dedup — the SemDeDup pipeline shape (Abbas et al. 2023,
     * arXiv:2303.09540): cluster the embedding space, then hunt
@@ -1251,12 +1238,6 @@ object Similarity {
     }
   }
 
-  /** Per-(dir, k, rounds) memo: the c54 query and its oracle rendering
-    * (which inlines the components as SQL literals) must train once per
-    * JVM and see identical directions. */
-  private val pcaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), Seq[IndexedSeq[Long]]]()
-
   /** c54's fixed parameterization: k components; driver iterations per
     * component (driver-side on the dim×dim Gram, so 512 rounds cost
     * microseconds and converge through the ~0.93 eigen-gap of a
@@ -1265,11 +1246,14 @@ object Similarity {
   val C54K = 2
   val C54Rounds = 512
 
+  /** Memoized per (dir, k, rounds): the c54 query and its oracle
+    * rendering (which inlines the components as SQL literals) must train
+    * once per JVM and see identical directions. */
   def pcaComponents(spark: SparkSession, dir: String, k: Int = C54K,
                     rounds: Int = C54Rounds): Seq[IndexedSeq[Long]] =
-    pcaMemo.computeIfAbsent((dir, k, rounds),
-      _ => graft.metrics.MemoClock.timed(
-        pcaComponentsOn(Tables.embeddings(spark, dir), k, rounds)))
+    graft.Memo.value("pca", Seq(dir), k, rounds) {
+      pcaComponentsOn(Tables.embeddings(spark, dir), k, rounds)
+    }
 
   /** c54: PCA projection — every embedding projected onto the k learned
     * principal directions (the dimensionality-reduction pass a training
@@ -1450,20 +1434,12 @@ object Similarity {
     * full find-candidates→verify subtree feeds BOTH c71 (the pair
     * report) and c72 (the recall eval) in any Verify/Bench run —
     * materialized once per (dir, threshold), each consumer scans a
-    * small parquet. Same immutable-dir-per-JVM assumption as every
-    * memoized artifact here. */
-  private val bandedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double), String]()
+    * small parquet. */
   private[graft] def bandedPairsTablePath(spark: SparkSession, dir: String,
                                           threshold: Double): String =
-    bandedCache.computeIfAbsent((dir, threshold), _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"banded-pairs-${graft.sources.JsonConvert.pathKey(dir)}" +
-          s"-t${(threshold * 1e6).toLong}").toString
-      bandedNearDupOn(Tables.embeddingsFanned(spark, dir), threshold)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+    graft.Memo.table("banded-pairs", Seq(dir), threshold) { p =>
+      bandedNearDupOn(Tables.embeddingsFanned(spark, dir), threshold).write.parquet(p)
+    }
 
   def c71NearDupBanded(spark: SparkSession, dir: String,
                        threshold: Double = 0.3): DataFrame =

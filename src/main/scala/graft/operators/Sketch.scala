@@ -206,20 +206,15 @@ object Sketch {
   // eager collect job on EVERY execution of c100, two serialized jobs of
   // pure latency per run. Memoized per dir like every other trained
   // artifact; recomputed per JVM, never persisted across invocations.
-  private val gridCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
-  private val candCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
   def c100CmsTopk(spark: SparkSession, dir: String,
                   topK: Int = CmsTopK): DataFrame = {
     val stream = tokenStream(spark, dir)
     // the grid folds OCCURRENCES (wcnt = 1 per row): identical counters
     // to the type-table fold, without the vocabulary-sized shuffle
-    val grid = gridCache.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed(
-      counterGrid(stream.select(col("w"), lit(1L).as("wcnt")))))
-    val cands = candCache.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed(
-      heavyCandidates(spark, dir)))
+    val grid = graft.Memo.value("cms-grid", Seq(dir)) {
+      counterGrid(stream.select(col("w"), lit(1L).as("wcnt")))
+    }
+    val cands = graft.Memo.value("cms-candidates", Seq(dir))(heavyCandidates(spark, dir))
     stream
       .filter(col("w").isin(cands: _*)) // row-local bounded-set probe
       .groupBy("w").agg(count(lit(1)).as("wcnt"))

@@ -601,22 +601,21 @@ object TextOps {
   /** c110's plan folded to the per-source (full epochs, 16-bit
     * fractional cutoff hex) pairs the doc-grain projection needs — a
     * bounded artifact (exact BigInt arithmetic driver-side). */
-  /** Memoized per dir (r20 — the trainBpe/bpeMemo rule: a bounded
+  /** Memoized per dir (r20 — the trainBpe memo rule: a bounded
     * artifact both the query and its oracle rendering must see
     * identically trains once per JVM): c111 and c116 each collected a
     * full c110 execution at plan-construction time, paying c110's whole
     * quality+fold subtree per run. */
-  private val recipePlanMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, String)]]()
   private[graft] def recipePlanOf(spark: SparkSession,
                                   dir: String): Seq[(String, Long, String)] =
-    recipePlanMemo.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed(
+    graft.Memo.value("recipe-plan", Seq(dir)) {
       c110DataRecipe(spark, dir).collect().map { r =>
         val tk = BigInt(r.getAs[Long]("tokens"))
         val pl = BigInt(r.getAs[Long]("planned_tokens"))
         (r.getString(0), (pl / tk).toLong,
           f"${((pl % tk) * 65536 / tk).toLong}%04x")
-      }.toSeq))
+      }.toSeq
+    }
 
   /** THE per-doc copy-count projection over an arbitrary (doc_id,
     * source, text) frame and a collected plan — row-local, the plan as
@@ -1218,20 +1217,15 @@ object TextOps {
     * corpus and every vocabulary job reads it. Values unchanged (the
     * oracle recomputes word counts independently in SQL, so any drift
     * hash-fails); build time rides MemoClock → memo_build_s. */
-  private val wordTypeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def wordTypeTablePath(spark: SparkSession, dir: String): String =
-    wordTypeMemo.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"wordtypes-${graft.sources.JsonConvert.pathKey(dir)}").toString
+    graft.Memo.table("wordtypes", Seq(dir)) { p =>
       // fanned build (the r20 opt-in list: merge-apply tokenization);
       // n/4 parts for the join/agg-bound consumers (shingleTablePath)
       wordTypeCounts(Tables.documentsFanned(spark, dir))
         .coalesce(math.max(8,
           spark.sessionState.conf.numShufflePartitions / 4))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** The (w, wcnt) word-type frame over an ARBITRARY (.., text) docs
     * frame — THE shared word-type convention (lowercased ASCII
@@ -1244,9 +1238,6 @@ object TextOps {
       .filter(length(col("w")) >= 1)
       .groupBy("w").agg(count(lit(1)).as("wcnt"))
 
-  private val alphabetMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
   /** The char-BPE training ALPHABET: every distinct character of the
     * word-type corpus — char-BPE's implicit base vocabulary (a single
     * char emits as itself whenever no merge covers it, so an emitted
@@ -1255,10 +1246,11 @@ object TextOps {
     * memoized per dir exactly like [[trainBpe]] — the c84 gate row and
     * its oracle renderer must see the identical set. */
   private[graft] def bpeAlphabet(spark: SparkSession, dir: String): Seq[String] =
-    alphabetMemo.computeIfAbsent(dir, _ => graft.metrics.MemoClock.timed(
+    graft.Memo.value("bpe-alphabet", Seq(dir)) {
       wordTypes(spark, dir)
         .select(explode(split(col("w"), "")).as("c")).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted))
+        .collect().map(_.getString(0)).toSeq.sorted
+    }
 
   /** Chars of a word column outside an alphabet — char-BPE's OOV token
     * count for the word (an uncovered char can join no merge, so it
@@ -1338,21 +1330,18 @@ object TextOps {
     } finally { base.unpersist(); () }
   }
 
-  /** Per-(dir, rounds) memo: the c52 query and its oracle rendering (which
-    * inlines the learned merges as SQL literals) must train exactly once
-    * per JVM and see the identical list. */
-  private val bpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(String, String)]]()
-
   /** c52's training depth: enough rounds that multi-char merges chain
     * (merged symbols re-merge) at every gate scale factor. */
   val C52Rounds = 8
 
+  /** Memoized per (dir, rounds): the c52 query and its oracle rendering
+    * (which inlines the learned merges as SQL literals) must train exactly
+    * once per JVM and see the identical list. */
   def trainBpe(spark: SparkSession, dir: String,
                rounds: Int = C52Rounds): Seq[(String, String)] =
-    bpeMemo.computeIfAbsent((dir, rounds),
-      _ => graft.metrics.MemoClock.timed(
-        trainBpeOn(wordTypes(spark, dir), rounds)))
+    graft.Memo.value("bpe", Seq(dir), rounds) {
+      trainBpeOn(wordTypes(spark, dir), rounds)
+    }
 
   /** c52: the learned tokenizer END-TO-END — train [[C52Rounds]] merges on
     * the corpus, apply them to the vocabulary, and emit the token
@@ -1461,17 +1450,14 @@ object TextOps {
     * space-fused merges too). */
   val C70Rounds = 8
 
-  private val byteBpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(String, String)]]()
-
   /** Byte-level merge list over the corpus at `dir` — memoized per
     * (dir, rounds) exactly like [[trainBpe]] (query and oracle renderer
     * must see the identical artifact). */
   def trainBpeBytes(spark: SparkSession, dir: String,
                     rounds: Int = C70Rounds): Seq[(String, String)] =
-    byteBpeMemo.computeIfAbsent((dir, rounds),
-      _ => graft.metrics.MemoClock.timed(
-        trainBpeOn(bytePretokenTypes(Tables.documents(spark, dir)), rounds)))
+    graft.Memo.value("byte-bpe", Seq(dir), rounds) {
+      trainBpeOn(bytePretokenTypes(Tables.documents(spark, dir)), rounds)
+    }
 
   /** c70: BYTE-LEVEL learned BPE end-to-end — train [[C70Rounds]] merges
     * over the byte-staged pretoken vocabulary, apply them through the
@@ -1526,8 +1512,8 @@ object TextOps {
   }
 
   /** Per-dir memoized TOKENIZED-CORPUS tables (r21, the r20 verdict's
-    * item 2 — the same per-dir immutable-corpus key as the trainer
-    * memos): each family's per-doc (doc_id, n_units, n_tokens) frame —
+    * item 2 — keyed per dir like the trainer memos): each family's
+    * per-doc (doc_id, n_units, n_tokens) frame —
     * exactly the gate row's own derivation (c66/c73/c78/c99 run LIVE as
     * gates; the memo build CALLS them, so the table can never drift
     * from what the gates verify) — materialized once per (JVM, dir).
@@ -1536,34 +1522,28 @@ object TextOps {
     * derived; a production eval pipeline lands the per-doc token-count
     * table once per (corpus, tokenizer) and reads it for every report.
     * Build time rides MemoClock → the bench's memo_build_s field. */
-  private val fertilityMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def fertilityTablePath(spark: SparkSession, dir: String,
                                         family: String): String =
-    fertilityMemo.computeIfAbsent(s"$family#$dir",
-      _ => graft.metrics.MemoClock.timed {
-        val p = graft.GraftSession.scratchDir(
-          s"fert-$family-${graft.sources.JsonConvert.pathKey(dir)}").toString
-        val base = family match {
-          case "bpe_char" => c66BpeFertility(spark, dir)
-            .select("doc_id", "n_words", "n_tokens")
-          case "bpe_byte" => c73ByteFertility(spark, dir)
-            .select("doc_id", "n_pretokens", "n_tokens")
-          case "unigram" => graft.operators.Unigram
-            .c78UnigramFertility(spark, dir)
-            .select("doc_id", "n_words", "n_tokens")
-          case "wordpiece" => graft.operators.Wordpiece
-            .c99WordpieceFertility(spark, dir)
-            .select("doc_id", "n_words", "n_tokens")
-          case other => sys.error(s"unknown tokenizer family: $other")
-        }
-        // shingleTablePath's part sizing (guide §6): consumers fold or
-        // join these narrow rows — n/4 parts cap the per-file reader tax
-        base.coalesce(math.max(8,
-            spark.sessionState.conf.numShufflePartitions / 4))
-          .write.mode("overwrite").parquet(p)
-        p
-      })
+    graft.Memo.table("fert", Seq(dir), family) { p =>
+      val base = family match {
+        case "bpe_char" => c66BpeFertility(spark, dir)
+          .select("doc_id", "n_words", "n_tokens")
+        case "bpe_byte" => c73ByteFertility(spark, dir)
+          .select("doc_id", "n_pretokens", "n_tokens")
+        case "unigram" => graft.operators.Unigram
+          .c78UnigramFertility(spark, dir)
+          .select("doc_id", "n_words", "n_tokens")
+        case "wordpiece" => graft.operators.Wordpiece
+          .c99WordpieceFertility(spark, dir)
+          .select("doc_id", "n_words", "n_tokens")
+        case other => sys.error(s"unknown tokenizer family: $other")
+      }
+      // shingleTablePath's part sizing (guide §6): consumers fold or
+      // join these narrow rows — n/4 parts cap the per-file reader tax
+      base.coalesce(math.max(8,
+          spark.sessionState.conf.numShufflePartitions / 4))
+        .write.parquet(p)
+    }
 
   /** c84: cross-tokenizer fertility report — the three production
     * trainers (char-BPE c52, byte-BPE c70, unigram-LM c75) compared on

@@ -176,13 +176,8 @@ object Unigram {
 
   /** Per-dir memo: gate row and oracle renderer must see the identical
     * artifact (trainBpe's memo rule). */
-  private val unigramMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
-
   def trainUnigram(spark: SparkSession, dir: String): Seq[(String, Long)] =
-    unigramMemo.computeIfAbsent(dir,
-      _ => graft.metrics.MemoClock.timed(
-        trainUnigramOn(TextOps.wordTypes(spark, dir))))
+    graft.Memo.value("unigram", Seq(dir))(trainUnigramOn(TextOps.wordTypes(spark, dir)))
 
   /** (doc_id, n_words, n_tokens, tokens) projection of a (doc_id, text)
     * frame under a trained artifact — THE tokenize derivation, shared by

@@ -222,13 +222,8 @@ object Wordpiece {
 
   /** Per-dir memo: gate rows and oracle renderer must see the identical
     * vocabulary (trainBpe's memo rule). */
-  private val wpMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
   def trainWordpiece(spark: SparkSession, dir: String): Seq[String] =
-    wpMemo.computeIfAbsent(dir,
-      _ => graft.metrics.MemoClock.timed(
-        trainWordpieceOn(TextOps.wordTypes(spark, dir))))
+    graft.Memo.value("wordpiece", Seq(dir))(trainWordpieceOn(TextOps.wordTypes(spark, dir)))
 
   /** (doc_id, n_words, n_tokens, tokens) projection of a (doc_id, text)
     * frame under a trained vocabulary — THE wordpiece tokenize

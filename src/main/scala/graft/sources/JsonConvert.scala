@@ -16,13 +16,6 @@ import graft.Tables
   */
 object JsonConvert {
 
-  /** Collision-resistant scratch-suffix for a data-dir path: first 8 hex
-    * chars of its MD5. (String.hashCode collisions between two dirs in one
-    * JVM would silently alias their memoized corpora.) */
-  private[graft] def pathKey(d: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-
   /** Preset schemas mirroring bolson's fixed-schema parsers. */
   object Schemas {
     /** battery_status: {"voltage": [u64, ...]} — reference:
@@ -176,20 +169,17 @@ object JsonConvert {
     * lines (voltage readings = per-order quantities in linenumber order)
     * materialized once — generating the wire-format input is harness work,
     * same rationale as [[tripJsonCorpusPath]]. */
-  private val batteryCorpus = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def batteryJsonCorpusPath(spark: SparkSession, dir: String): String =
-    batteryCorpus.computeIfAbsent(dir, d => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(s"a2-corpus-${pathKey(d)}").toString
-      Tables.lineitemFanned(spark, d)
+    graft.Memo.table("a2-corpus", Seq(dir)) { p =>
+      Tables.lineitemFanned(spark, dir)
         .groupBy(col("l_orderkey"))
         .agg(transform(
           array_sort(collect_list(struct(col("l_linenumber").as("ln"),
             col("l_quantity").cast("bigint").as("q")))),
           x => x.getField("q")).as("voltage"))
         .select(col("l_orderkey"), to_json(struct(col("voltage"))).as("json"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
 
   /** Deterministic trip_report ND-JSON lines from orders: (o_orderkey,
     * json). Assembled with codegen'd string concat rather than to_json:
@@ -241,14 +231,10 @@ object JsonConvert {
     * starts). The query under measurement becomes read → parse → reduce,
     * which is also the production shape (ND-JSON arrives from storage or
     * the wire; it is never re-generated per query). */
-  private val tripCorpus = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def tripJsonCorpusPath(spark: SparkSession, dir: String): String =
-    tripCorpus.computeIfAbsent(dir, d => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(s"a3-corpus-${pathKey(d)}").toString
-      tripJsonLines(Tables.ordersFanned(spark, d))
-        .select("json").write.mode("overwrite").text(p)
-      p
-    })
+    graft.Memo.table("a3-corpus", Seq(dir)) { p =>
+      tripJsonLines(Tables.ordersFanned(spark, dir)).select("json").write.text(p)
+    }
 
   /** a3: trip_report conversion round-trip over orders — the full 19-field
     * schema (fixed-length u64 lists, bools, utf8) generated

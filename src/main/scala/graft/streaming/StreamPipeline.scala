@@ -85,17 +85,11 @@ object StreamPipeline {
     * unit) — the wire-format input a8 streams from files, materialized once
     * per data dir exactly like the a2/a3 corpora (generating input is
     * harness work; production ND-JSON arrives from storage or the wire). */
-  private val eventsCorpus =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def eventsJsonCorpusPath(spark: SparkSession, dir: String): String =
-    eventsCorpus.computeIfAbsent(dir, d => graft.metrics.MemoClock.timed {
-      val p = graft.GraftSession.scratchDir(
-        s"a8-corpus-${JsonConvert.pathKey(d)}").toString
-      val ev = eventsProjection(spark, d)
-      ev.select(to_json(struct(ev.columns.map(col): _*)).as("json"))
-        .write.mode("overwrite").text(p)
-      p
-    })
+    graft.Memo.table("a8-corpus", Seq(dir)) { p =>
+      val ev = eventsProjection(spark, dir)
+      ev.select(to_json(struct(ev.columns.map(col): _*)).as("json")).write.text(p)
+    }
 
   private def eventsProjection(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir).select(
