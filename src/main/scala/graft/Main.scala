@@ -478,8 +478,7 @@ object Main {
       val grid = gf.collect()
         .map(r => s"${r.getAs[Number]("i").intValue()}:${r.getAs[String]("b")}" ->
           r.getAs[Number]("c").longValue()).toMap
-      graft.streaming.StreamOps.streamCmsEstimate(
-          docs.select("doc_id", "text"), grid)
+      Sketch.cmsEstimate(docs.select("doc_id", "text"), grid)
         .write.mode("overwrite").parquet(out)
       val stats = spark.read.parquet(out)
         .agg(count(lit(1)), coalesce(max(col("est_cnt")), lit(0L))).head()
@@ -814,18 +813,7 @@ object Main {
     // pretokens (c70's path) — tokens come out in the staged alphabet
     // and ByteBpeFunctions.byteUnstage(concat(tokens)) recovers the
     // input bytes exactly (CLI-spec-pinned round trip)
-    val ws =
-      if (bytes) transform(
-        graft.operators.TextOps.bytePretokensOf(col("text"), gpt2Pre),
-        p => graft.functions.ByteBpeFunctions.byteStage(p))
-      else filter(split(lower(col("text")), " "), w => length(w) >= 1)
-    docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), ws.as("ws"))
-      .select(col("doc_id"), size(col("ws")).cast("bigint").as("n_words"),
-        flatten(transform(col("ws"),
-          w => graft.functions.BpeFunctions.applyBpe(w, merges))).as("tokens"))
-      .select(col("doc_id"), col("n_words"),
-        size(col("tokens")).cast("bigint").as("n_tokens"), col("tokens"))
+    graft.operators.TextOps.bpeTokenizeDocs(docs, merges, bytes, gpt2Pre)
       .write.mode("overwrite").parquet(out)
     val written = spark.read.parquet(out)
     val stats = written.agg(count(lit(1)),
@@ -1187,7 +1175,7 @@ object Main {
         s""""max_hamming":$maxHamming,"out":${jsonStr(out)}}""")
     } else {
       hashes.select(col("doc_id") +: col("media_type") +: col("phash") +:
-          (0 until 4).map(j => Multimodal.phashSeg(col("phash"), j).as(s"seg$j")): _*)
+          Multimodal.phashSegCols(col("phash")): _*)
         .orderBy("doc_id")
         .write.mode("overwrite").parquet(out)
       val stats = spark.read.parquet(out)
@@ -1235,7 +1223,7 @@ object Main {
           Multimodal.phashOf(r.doc_id, r.media_type, r.payload))))
         .toDF("doc_id", "media_type", "phash")
       hashes.select(col("doc_id") +: col("media_type") +: col("phash") +:
-          (0 until 4).map(j => Multimodal.phashSeg(col("phash"), j).as(s"seg$j")): _*)
+          Multimodal.phashSegCols(col("phash")): _*)
         .write.mode("append").parquet(idx)
       val after = spark.read.parquet(idx).count()
       println(s"""{"added":${media.count()},"records":$after,""" +

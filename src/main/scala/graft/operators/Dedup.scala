@@ -587,6 +587,14 @@ object Dedup {
     votes.select(col("doc_id"), hash.as("simhash"))
   }
 
+  /** The recall guard of every 4-segment banding (simhash and phash
+    * pairs, the streaming phash probes): pigeonhole guarantees a pair at
+    * hamming <= 3 shares an intact segment; a larger radius would miss
+    * pairs silently, so it is refused. */
+  private[graft] def requireFourBandRecall(maxHamming: Int): Unit =
+    require(maxHamming >= 0 && maxHamming <= 3,
+      s"4-segment banding finds all pairs only for hamming <= 3, got $maxHamming")
+
   /** SimHash near-dup pairs for a (doc_id, text) frame: segment-banded
     * candidates, exact hamming via bit_count(xor) — used by the spec.
     *
@@ -597,8 +605,7 @@ object Dedup {
     * segment count to maxHamming + 1 (same join shape), not just the
     * threshold — the CLI rejects H ≥ 4 for exactly this reason. */
   private[graft] def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4-segment banding finds all pairs only for hamming <= 3, got $maxHamming")
+    requireFourBandRecall(maxHamming)
     val seg = simhashOf(docs).select(col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(j =>
         shiftright(col("simhash"), j * 16).bitwiseAND(0xFFFFL)): _*)))

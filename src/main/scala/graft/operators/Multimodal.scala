@@ -915,6 +915,30 @@ object Multimodal {
                               j: Int): org.apache.spark.sql.Column =
     shiftright(h, j * 14).bitwiseAND(0x3FFFL)
 
+  /** The 4 band segments of a phash column, in band order. */
+  private[graft] def phashSegs(h: Column): Seq[Column] =
+    (0 until 4).map(j => phashSeg(h, j))
+
+  /** [[phashSegs]] as the seg0..seg3 columns of the hash tables (c88/c90,
+    * the memo index, `Main phash`). */
+  private[graft] def phashSegCols(h: Column): Seq[Column] =
+    phashSegs(h).zipWithIndex.map { case (s, j) => s.as(s"seg$j") }
+
+  /** One (pos, col) row per band of a phash column — the band keys every
+    * banded phash join equi-joins on, once renamed (seg_idx, seg). */
+  private[graft] def phashBands(h: Column): Column =
+    posexplode(array(phashSegs(h): _*))
+
+  /** Canonical-band emission: a pair colliding at band `seg_idx` passes
+    * only if no earlier band of (ha, hb) matched, so a pair colliding in
+    * k bands is emitted once — a codegen'd filter, never a distinct
+    * shuffle. `seg` splits a hash into `bands` segments (default: the 4
+    * phash bands). */
+  private[graft] def noEarlierBand(ha: Column, hb: Column, bands: Int = 4,
+                                   seg: (Column, Int) => Column = phashSeg): Column =
+    (0 until bands - 1).map(k =>
+      (col("seg_idx") <= lit(k)) || (seg(ha, k) =!= seg(hb, k))).reduce(_ && _)
+
   /** Per-image (doc_id, phash, gray) frames: the REAL decode → resample
     * → hash pass (the oracle recomputes every bit closed-form from the
     * generation formula, so one mis-parsed header byte or a sampler
@@ -941,7 +965,7 @@ object Multimodal {
   def c88ImagePhash(spark: SparkSession, dir: String): DataFrame =
     imagePhashFrames(spark, dir)
       .select(col("doc_id") +: col("phash") +:
-        (0 until 4).map(j => phashSeg(col("phash"), j).as(s"seg$j")): _*)
+        phashSegCols(col("phash")): _*)
       .orderBy("doc_id")
 
   /** Perceptual near-dup pairs: banded Hamming equi-join (candidates =
@@ -985,17 +1009,12 @@ object Multimodal {
     * matched" is a codegen'd filter, never a distinct shuffle. */
   private[graft] def phashHashPairs(uniq: DataFrame, maxHamming: Int,
                                     keyCols: Seq[String] = Nil): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4-segment banding finds all pairs only for hamming <= 3, got $maxHamming")
+    graft.operators.Dedup.requireFourBandRecall(maxHamming)
     val n = uniq.sparkSession.sessionState.conf.numShufflePartitions
-    val seg = uniq.select(Seq(col("phash"),
-        posexplode(array((0 until 4).map(j => phashSeg(col("phash"), j)): _*))) ++
+    val seg = uniq.select(Seq(col("phash"), phashBands(col("phash"))) ++
         keyCols.map(col): _*)
       .withColumnRenamed("pos", "seg_idx").withColumnRenamed("col", "seg")
     val keys = Seq("seg_idx", "seg") ++ keyCols
-    val noEarlierBand = (0 until 3).map(k =>
-      (col("seg_idx") <= lit(k)) ||
-        (phashSeg(col("ha"), k) =!= phashSeg(col("hb"), k))).reduce(_ && _)
     // r21 (§2.4): the explicit-N fan-out (join-output explosion is
     // invisible to AQE's input-byte heuristics — the r16 lesson) rides
     // the PROBE side only. The build side broadcasts at eval scale, and
@@ -1007,7 +1026,7 @@ object Multimodal {
       .select((Seq(col("phash").as("ha")) ++ keys.map(col)): _*)
       .join(seg.select((Seq(col("phash").as("hb")) ++ keys.map(col)): _*), keys)
       .filter(col("ha") <= col("hb"))
-      .filter(noEarlierBand)
+      .filter(noEarlierBand(col("ha"), col("hb")))
       .select(keyCols.map(col) ++ Seq(col("ha"), col("hb"),
         bit_count(col("ha").bitwiseXOR(col("hb"))).cast("bigint").as("hamming")): _*)
       .filter(col("hamming") <= maxHamming)
@@ -1057,13 +1076,10 @@ object Multimodal {
                                          unionUniq: DataFrame,
                                          maxHamming: Int,
                                          keyCols: Seq[String] = Nil): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4-segment banding finds all pairs only for hamming <= 3, got $maxHamming")
+    graft.operators.Dedup.requireFourBandRecall(maxHamming)
     val n = newUniq.sparkSession.sessionState.conf.numShufflePartitions
     def segOf(uniq: DataFrame): DataFrame = uniq
-      .select(Seq(col("phash"),
-        posexplode(array((0 until 4).map(j => phashSeg(col("phash"), j)): _*))) ++
-        keyCols.map(col): _*)
+      .select(Seq(col("phash"), phashBands(col("phash"))) ++ keyCols.map(col): _*)
       .withColumnRenamed("pos", "seg_idx").withColumnRenamed("col", "seg")
     val keys = Seq("seg_idx", "seg") ++ keyCols
     val left = segOf(newUniq)
@@ -1072,11 +1088,8 @@ object Multimodal {
     val right = segOf(unionUniq)
       .select(Seq(col("phash").as("hb")) ++ keys.map(col): _*)
       .repartition(n, keys.map(col): _*)
-    val noEarlierBand = (0 until 3).map(k =>
-      (col("seg_idx") <= lit(k)) ||
-        (phashSeg(col("ha"), k) =!= phashSeg(col("hb"), k))).reduce(_ && _)
     left.join(right, keys)
-      .filter(noEarlierBand)
+      .filter(noEarlierBand(col("ha"), col("hb")))
       .select(keyCols.map(col) ++ Seq(col("ha"), col("hb"),
         bit_count(col("ha").bitwiseXOR(col("hb"))).cast("bigint").as("hamming")): _*)
       .filter(col("hamming") <= maxHamming)
@@ -1299,7 +1312,7 @@ object Multimodal {
       .mapPartitions(_.map(id => (id, audioPhashOf(id, wavPayload(id)))))
       .toDF("doc_id", "phash")
       .select(col("doc_id") +: col("phash") +:
-        (0 until 4).map(j => phashSeg(col("phash"), j).as(s"seg$j")): _*)
+        phashSegCols(col("phash")): _*)
       .orderBy("doc_id")
   }
 
@@ -1615,7 +1628,7 @@ object Multimodal {
       // superset; hash consumers keep selecting their columns by name)
       imagePhashFrames(spark, dir)
         .select(col("doc_id") +: col("phash") +: col("gray") +:
-          (0 until 4).map(j => phashSeg(col("phash"), j).as(s"seg$j")): _*)
+          phashSegCols(col("phash")): _*)
         .orderBy("doc_id")
         .write.parquet(p)
     }
@@ -1799,9 +1812,6 @@ object Multimodal {
         keyCols.map(col): _*)
       .withColumnRenamed("pos", "seg_idx").withColumnRenamed("col", "seg")
     val keys = Seq("seg_idx", "seg") ++ keyCols
-    val noEarlierBand = (0 until 6).map(k =>
-      (col("seg_idx") <= lit(k)) ||
-        (seg8(col("ha"), k) =!= seg8(col("hb"), k))).reduce(_ && _)
     // probe-side-only fan-out — [[phashHashPairs]]'s r21 rule
     seg.repartition(n, keys.map(col): _*)
       .select(Seq(col("phash").as("ha"), col("cnt").as("ca")) ++
@@ -1809,7 +1819,7 @@ object Multimodal {
       .join(seg.select(Seq(col("phash").as("hb"), col("cnt").as("cb")) ++
         keys.map(col): _*), keys)
       .filter(col("ha") <= col("hb"))
-      .filter(noEarlierBand)
+      .filter(noEarlierBand(col("ha"), col("hb"), 7, seg8))
       .filter(bit_count(col("ha").bitwiseXOR(col("hb"))) <= maxHamming)
       .select(keyCols.map(col) ++
         Seq(col("ha"), col("hb"), col("ca"), col("cb")): _*)
@@ -2111,12 +2121,9 @@ object Multimodal {
       .select(col("phash").as(as),
         posexplode(array((0 until 7).map(j => segT(col("phash"), j)): _*)))
       .withColumnRenamed("pos", "seg_idx").withColumnRenamed("col", "seg")
-    val noEarlierT = (0 until 6).map(k =>
-      (col("seg_idx") <= lit(k)) ||
-        (segT(col("pa"), k) =!= segT(col("pb"), k))).reduce(_ && _)
     val hpT = segsOf(cg, "pb").repartition(nPart, col("seg_idx"), col("seg"))
       .join(segsOf(sg, "pa"), Seq("seg_idx", "seg"))
-      .filter(noEarlierT)
+      .filter(noEarlierBand(col("pa"), col("pb"), 7, segT))
       .filter(bit_count(col("pa").bitwiseXOR(col("pb"))) <= maxHamming)
       .select("pa", "pb")
     // spread the attach expansions when the corpus is cliquey —

@@ -230,9 +230,9 @@ object Similarity {
     * codebook is folded to a single array-of-(cell, centroid) row, cross
     * joined (broadcast, no exchange) onto the vector table, and the
     * argmax/top-nprobe is the native codegen'd
-    * [[graft.functions.NearestCells]] loop per row — the batch twin of
-    * d9's codegen'd struct-argmax
-    * ([[graft.streaming.StreamOps.streamAssignCells]]). No shuffle: the
+    * [[graft.functions.NearestCells]] loop per row — the same expression
+    * d9 ([[graft.streaming.StreamOps.streamAssignCells]]) runs over a
+    * plan-literal codebook. No shuffle: the
     * previous formulation ranked with a `row_number` window partitioned on
     * vec_id, an n×k exchange that at 100 TB inflates the corpus k-fold
     * through the wire for a value each row can compute locally.
@@ -240,8 +240,7 @@ object Similarity {
     * nearly equidistant, a last-ulp disagreement between engines must not
     * flip the argmax — and ties break deterministically on LOWEST cell
     * (NearestCells' comparator: Double.compare on the rounded score, then
-    * cell ascending; exactly the window's `ORDER BY ccos DESC, cell ASC`
-    * and d9's −cell struct ordering).
+    * cell ascending; exactly the window's `ORDER BY ccos DESC, cell ASC`).
     * Emits `maxProbe` rows per vector: (vec_id, v, cell, ccos, arn). */
   private[graft] def assignCells(e: DataFrame, centroids: DataFrame,
                                  maxProbe: Int = Int.MaxValue): DataFrame = {
@@ -1055,11 +1054,15 @@ object Similarity {
     * what a training loader or the moments monitor re-assembles.
     * Degenerate dims (σ=0) would emit ±Inf/NaN — absent here; a
     * production caller clamps σ with a floor. */
-  /** The whitening formula, shared by batch c47 and streaming d16 (the
-    * twins-share-their-core rule): one change to the rounding scale or
-    * a future σ floor lands on both sides at once. */
-  private[graft] def zColumn(x: Column, mean: Column, sd: Column): Column =
-    round((x - mean) / sd, 6)
+  /** The whitening projection, shared by batch c47 and streaming d16:
+    * each vector `v` zipped with the per-dim (mean, sd) structs `ms`,
+    * emitted in the long form (vec_id, pos, z_r). One change to the
+    * rounding scale or a future σ floor lands on both sides at once. */
+  private[graft] def whitenLong(frame: DataFrame, v: Column, ms: Column): DataFrame =
+    frame
+      .select(col("vec_id"), posexplode(zip_with(v, ms,
+        (x, s) => round((x - s.getField("mean")) / s.getField("sd"), 6))))
+      .select(col("vec_id"), col("pos"), col("col").as("z_r"))
 
   /** Whitening over an ARBITRARY (vec_id, embedding) frame — the
     * library/CLI entry c47 wraps (no total ordering: that is gate
@@ -1074,13 +1077,9 @@ object Similarity {
     val stats = broadcast(m.agg(
       sort_array(collect_list(struct(col("pos"), col("mean"), col("sd"))))
         .as("ms")))
-    embs
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .crossJoin(stats)
-      .select(col("vec_id"), posexplode(
-        zip_with(col("v"), col("ms"),
-          (x, s) => zColumn(x, s.getField("mean"), s.getField("sd")))))
-      .select(col("vec_id"), col("pos"), col("col").as("z_r"))
+    whitenLong(embs
+        .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+        .crossJoin(stats), col("v"), col("ms"))
   }
 
   def c47Whiten(spark: SparkSession, dir: String): DataFrame =

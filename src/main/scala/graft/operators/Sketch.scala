@@ -185,6 +185,19 @@ object Sketch {
     least(reads: _*)
   }
 
+  /** (doc_id, token, est_cnt) per distinct token per doc of a (doc_id,
+    * text) frame, read off a frozen counter grid through [[estimateOf]]:
+    * `sketch --estimate` over a parquet corpus, and d48 on a streaming
+    * frame (a replayed corpus doc reads the identical estimates the batch
+    * top-k was cut from). Row-local, zero state, no exchange. */
+  def cmsEstimate(docs: DataFrame, grid: Map[String, Long]): DataFrame =
+    docs
+      .filter(col("text").isNotNull)
+      .select(col("doc_id"),
+        explode(array_distinct(TextOps.tokenWords(col("text")))).as("token"))
+      .select(col("doc_id"), col("token"),
+        estimateOf(col("token"), grid).as("est_cnt"))
+
   /** The corpus dir's counter grid — the at-rest sketch artifact d48's
     * ingest twin probes. */
   def cmsGrid(spark: SparkSession, dir: String): Map[String, Long] =

@@ -858,6 +858,39 @@ object TextOps {
       .withColumn("keep",
         col("rule_len") && col("rule_ttr") && col("rule_top_share"))
 
+  /** The row-local (n_words, n_types, max_tc) counts of a (doc_id, text)
+    * frame: c35's two groupBy passes collapsed onto the SORTED token
+    * array of one row, so the same counts run on a streaming frame. Type
+    * boundaries are the positions where a token differs from its
+    * predecessor; per-type counts are the gaps between boundaries (run
+    * lengths). The sorted array stays in the frame — d35 folds sum_ctf
+    * over it (sums are order-independent). d12 is
+    * `qualityVerdicts(rowLocalQualityCounts(docs).drop("sorted"))`. */
+  private[graft] def rowLocalQualityCounts(docs: DataFrame): DataFrame =
+    docs
+      // batch c35 tokenizes via explode, which emits ZERO rows for a
+      // null text — drop nulls here too or they'd surface as all-null
+      // verdict rows and break the row-for-row parity
+      .filter(col("text").isNotNull)
+      .select(col("doc_id"), sort_array(words(lower(col("text")))).as("sorted"))
+      // run starts: position 0 plus every position whose token differs
+      // from its predecessor (1-based element_at over the 0-based index)
+      .select(col("doc_id"), col("sorted"),
+        filter(sequence(lit(0), size(col("sorted")) - 1),
+          i => (i === lit(0)) ||
+            (element_at(col("sorted"), i + 1) =!= element_at(col("sorted"), i)))
+          .as("starts"))
+      .select(col("doc_id"), col("sorted"),
+        size(col("sorted")).cast("bigint").as("n_words"),
+        size(col("starts")).cast("bigint").as("n_types"),
+        // run lengths = next start (or n) minus this start; the max is
+        // c35's max term count
+        array_max(zip_with(
+          col("starts"),
+          concat(slice(col("starts"), lit(2), size(col("starts"))),
+            array(size(col("sorted")))),
+          (a, b) => b - a)).cast("bigint").as("max_tc"))
+
   /** c17: stratified deterministic sampling — per-stratum (language) rates
     * applied via a content-hash bucket, the scale-safe sampler: a pure
     * function of the text (stable under re-partitioning, re-runs, and
@@ -1343,6 +1376,42 @@ object TextOps {
       trainBpeOn(wordTypes(spark, dir), rounds)
     }
 
+  /** (doc_id, n_words, n_tokens, tokens) of a (doc_id, text) frame: each
+    * row's word array `ws` segmented word by word through `seg` — the
+    * tokenize projection the BPE, unigram and wordpiece paths share.
+    * Row-local with the artifact as plan literals, so the same plan serves
+    * a batch and a streaming frame. Null texts drop. */
+  private[graft] def tokenizeDocsWith(docs: DataFrame, ws: Column,
+                                      seg: Column => Column): DataFrame =
+    docs
+      .filter(col("text").isNotNull)
+      .select(col("doc_id"), ws.as("ws"))
+      .select(col("doc_id"), size(col("ws")).cast("bigint").as("n_words"),
+        flatten(transform(col("ws"), seg)).as("tokens"))
+      .select(col("doc_id"), col("n_words"),
+        size(col("tokens")).cast("bigint").as("n_tokens"), col("tokens"))
+
+  /** Non-empty lowercased words — the word stream of every word-level
+    * tokenizer. */
+  private[graft] def tokenWords(text: Column): Column =
+    filter(words(lower(text)), w => length(w) >= 1)
+
+  /** BPE tokenization of a (doc_id, text) frame under a merge artifact
+    * through the native [[graft.functions.ApplyBpe]] — `Main tokenize`'s
+    * derivation, and on a streaming frame the BPE ingest path. Word-level
+    * by default; `bytes` applies a byte-level artifact to byte-STAGED
+    * pretokens (c70's path, `gpt2Pre` picks the exact GPT-2 pretokenizer),
+    * and then n_words counts pretokens. */
+  private[graft] def bpeTokenizeDocs(docs: DataFrame, merges: Seq[(String, String)],
+                                     bytes: Boolean = false,
+                                     gpt2Pre: Boolean = false): DataFrame = {
+    val ws =
+      if (bytes) transform(bytePretokensOf(col("text"), gpt2Pre),
+        p => graft.functions.ByteBpeFunctions.byteStage(p))
+      else tokenWords(col("text"))
+    tokenizeDocsWith(docs, ws, w => graft.functions.BpeFunctions.applyBpe(w, merges))
+  }
+
   /** c52: the learned tokenizer END-TO-END — train [[C52Rounds]] merges on
     * the corpus, apply them to the vocabulary, and emit the token
     * frequency table (the artifact a tokenizer ships). The oracle re-runs
@@ -1384,7 +1453,7 @@ object TextOps {
     * trainer drift hash-fails here too. */
   def c66BpeFertility(spark: SparkSession, dir: String): DataFrame = {
     val merges = trainBpe(spark, dir)
-    val ws = filter(words(lower(col("text"))), w => length(w) >= 1)
+    val ws = tokenWords(col("text"))
     Tables.documentsFanned(spark, dir)
       .filter(col("text").isNotNull)
       .select(col("doc_id"), ws.as("ws"))

@@ -190,16 +190,9 @@ object Unigram {
     * shape as the BPE apply path, keeping downstream stages
     * tokenizer-agnostic. Docs whose words all filter away (empty text)
     * emit n_words = 0 with an empty token array. */
-  def tokenizeDocs(docs: DataFrame, artifact: Seq[(String, Long)]): DataFrame = {
-    val ws = filter(TextOps.words(lower(col("text"))), w => length(w) >= 1)
-    docs
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), ws.as("ws"))
-      .select(col("doc_id"), size(col("ws")).cast("bigint").as("n_words"),
-        flatten(transform(col("ws"), w => segment(w, artifact))).as("tokens"))
-      .select(col("doc_id"), col("n_words"),
-        size(col("tokens")).cast("bigint").as("n_tokens"), col("tokens"))
-  }
+  def tokenizeDocs(docs: DataFrame, artifact: Seq[(String, Long)]): DataFrame =
+    TextOps.tokenizeDocsWith(docs, TextOps.tokenWords(col("text")),
+      w => segment(w, artifact))
 
   /** c78: unigram fertility — tokens-per-word per doc under the trained
     * unigram artifact, closing c75's evaluation loop the way c66 closed
@@ -232,9 +225,7 @@ object Unigram {
       .select(col("w"), size(segment(col("w"), art)).cast("bigint").as("np"))
     val dw = graft.Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
-      .select(col("doc_id"), explode(
-        filter(graft.operators.TextOps.words(lower(col("text"))),
-          w => length(w) >= 1)).as("w"))
+      .select(col("doc_id"), explode(TextOps.tokenWords(col("text"))).as("w"))
     dw.join(broadcast(types), "w")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"), sum(col("np")).as("n_tokens"))

@@ -231,16 +231,9 @@ object Wordpiece {
     * tokenize --wordpiece`, the gate rows' building blocks, and d47's
     * streaming twin. Same output shape as the BPE/unigram paths —
     * downstream stages stay tokenizer-agnostic. */
-  def tokenizeDocs(docs: DataFrame, vocab: Seq[String]): DataFrame = {
-    val ws = filter(TextOps.words(lower(col("text"))), w => length(w) >= 1)
-    docs
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), ws.as("ws"))
-      .select(col("doc_id"), size(col("ws")).cast("bigint").as("n_words"),
-        flatten(transform(col("ws"), w => segment(w, vocab))).as("tokens"))
-      .select(col("doc_id"), col("n_words"),
-        size(col("tokens")).cast("bigint").as("n_tokens"), col("tokens"))
-  }
+  def tokenizeDocs(docs: DataFrame, vocab: Seq[String]): DataFrame =
+    TextOps.tokenizeDocsWith(docs, TextOps.tokenWords(col("text")),
+      w => segment(w, vocab))
 
   /** c98 gate row: train the vocabulary, greedy-segment every word TYPE
     * (vocabulary-side — the corpus was scanned once by the word count),
@@ -271,9 +264,7 @@ object Wordpiece {
         size(segment(col("w"), vocab)).cast("bigint").as("np"))
     val dw = graft.Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
-      .select(col("doc_id"), explode(
-        filter(TextOps.words(lower(col("text"))),
-          w => length(w) >= 1)).as("w"))
+      .select(col("doc_id"), explode(TextOps.tokenWords(col("text"))).as("w"))
     dw.join(broadcast(types), "w")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"), sum(col("np")).as("n_tokens"))

@@ -4,13 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming analytics operators (SURVEY §2 d2, d3).
-  *
-  * d2 is the watermark-windowed aggregate (batch twin: b10); d3 is
-  * stateful sessionization via flatMapGroupsWithState (batch twin: c13).
-  * Both are verified by MemoryStream specs; the batch twins carry the
-  * DuckDB oracle for the same logic.
-  */
 /** One input event for sessionization (top-level: state-store encoders
   * codegen against these classes). */
 case class SessionEvent(user_id: Long, ts_us: Long)
@@ -124,6 +117,15 @@ class TwsSessionProcessor(gapMicros: Long)
   }
 }
 
+/** Streaming operators (SURVEY §2 d-rows): the stateful ones (watermark
+  * windows, sessionization, stream-stream and as-of joins, running
+  * aggregates, the near-dup and packing state) and the stream-static
+  * serving joins against at-rest artifacts. A stateless d-row is its batch
+  * operator's core run on a streaming frame and has no entry here — e.g.
+  * d12 is `TextOps.qualityVerdicts(TextOps.rowLocalQualityCounts(docs)
+  * .drop("sorted"))`, d37 is `Dsir.weightsOf(Dsir.scoreDocs(docs, art))`.
+  * The MemoryStream specs pin every d-row against its batch twin, whose
+  * DuckDB oracle carries the same logic. */
 object StreamOps {
 
   /** d2: tumbling event-time window with late-data watermark. In append
@@ -338,20 +340,13 @@ object StreamOps {
                       totalTokens: Long,
                       minMeanProb: Double = 0.033): DataFrame = {
     require(totalTokens >= 1, s"totalTokens must be >= 1, got $totalTokens")
-    // an empty map() literal types as MAP<STRING,STRING>, which breaks the
-    // bigint element_at/coalesce below with an analysis error far from the
-    // caller — and an empty vocabulary artifact is a caller bug anyway
-    require(vocab.nonEmpty, "vocab artifact must contain at least one term")
-    val ctfMap = map(vocab.flatMap { case (t, c) => Seq(lit(t), lit(c)) }: _*)
     docs
       .filter(col("text").isNotNull) // c41's explode drops null text too
       .select(col("doc_id"),
         graft.operators.TextOps.words(lower(col("text"))).as("toks"))
       .select(col("doc_id"),
         size(col("toks")).cast("bigint").as("n_tokens"),
-        aggregate(
-          transform(col("toks"), t => coalesce(element_at(ctfMap, t), lit(0L))),
-          lit(0L), (acc, x) => acc + x).as("sum_ctf"))
+        sumCtf(col("toks"), vocab).as("sum_ctf"))
       // the batch render's exact-integer form (freqScoredOn, r19) with
       // the plan-literal total inlined — twins cannot drift on a ULP
       .withColumn("__den", col("n_tokens").cast("decimal(38,0)") *
@@ -363,54 +358,18 @@ object StreamOps {
       .withColumn("keep", col("mean_prob_r") >= minMeanProb)
   }
 
-  /** d12: streaming quality filter — the ZERO-STATE twin of c35's Gopher
-    * rule battery for filtering docs at ingest time. c35's batch shape is
-    * two groupBy passes because batch tokens arrive as exploded rows; a
-    * stream row carries its whole document, so the same three counts
-    * (n_words, n_types, max token count) are row-local array math over
-    * the SORTED token array: type boundaries are the positions where a
-    * token differs from its predecessor, and per-type counts are the
-    * gaps between consecutive boundaries (run lengths). That trades
-    * c35's map-side-combinable shuffle for O(n log n) interpreted HOF
-    * work per row — right for a doc-at-a-time stream, wrong for a
-    * 100 TB batch scan, which is why both forms exist. The verdict logic
-    * itself is [[graft.operators.TextOps.qualityVerdicts]], shared with
-    * c35 so thresholds can't drift; a parity spec pins stream ≡ batch
-    * row-for-row. Stateless: no watermark, no aggregation state, any
-    * stream length. */
-  def streamQuality(docs: DataFrame): DataFrame =
-    graft.operators.TextOps.qualityVerdicts(
-      rowLocalQualityCounts(docs).drop("sorted"))
-
-  /** The row-local (n_words, n_types, max_tc) counts d12 and d35 share:
-    * c35's two groupBy passes collapsed onto the SORTED token array of a
-    * single stream row. The sorted array itself stays in the frame —
-    * d35 folds sum_ctf over it (sums are order-independent). */
-  private[graft] def rowLocalQualityCounts(docs: DataFrame): DataFrame =
-    docs
-      // batch c35 tokenizes via explode, which emits ZERO rows for a
-      // null text — drop nulls here too or they'd surface as all-null
-      // verdict rows and break the row-for-row parity
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"),
-        sort_array(graft.operators.TextOps.words(lower(col("text")))).as("sorted"))
-      // run starts: position 0 plus every position whose token differs
-      // from its predecessor (1-based element_at over the 0-based index)
-      .select(col("doc_id"), col("sorted"),
-        filter(sequence(lit(0), size(col("sorted")) - 1),
-          i => (i === lit(0)) ||
-            (element_at(col("sorted"), i + 1) =!= element_at(col("sorted"), i)))
-          .as("starts"))
-      .select(col("doc_id"), col("sorted"),
-        size(col("sorted")).cast("bigint").as("n_words"),
-        size(col("starts")).cast("bigint").as("n_types"),
-        // run lengths = next start (or n) minus this start; the max is
-        // c35's max term count
-        array_max(zip_with(
-          col("starts"),
-          concat(slice(col("starts"), lit(2), size(col("starts"))),
-            array(size(col("sorted")))),
-          (a, b) => b - a)).cast("bigint").as("max_tc"))
+  /** The bounded-vocabulary sum_ctf fold d13 and d35 share: each token's
+    * corpus frequency read off the plan-literal vocabulary map (OOV
+    * terms read 0), summed. */
+  private def sumCtf(toks: Column, vocab: Seq[(String, Long)]): Column = {
+    // an empty map() literal types as MAP<STRING,STRING>, which breaks the
+    // bigint element_at/coalesce below with an analysis error far from the
+    // caller — and an empty vocabulary artifact is a caller bug anyway
+    require(vocab.nonEmpty, "vocab artifact must contain at least one term")
+    val ctfMap = map(vocab.flatMap { case (t, c) => Seq(lit(t), lit(c)) }: _*)
+    aggregate(transform(toks, t => coalesce(element_at(ctfMap, t), lit(0L))),
+      lit(0L), (acc, x) => acc + x)
+  }
 
   /** d35: streaming distilled quality classification — c74's trained
     * depth-2 tree applied at INGEST time, the serving twin distillation
@@ -424,8 +383,8 @@ object StreamOps {
     * [[graft.operators.Distill.featureProjection]], the SAME integer
     * feature projection (d29 shared-subtree rule twice over: neither
     * thresholds nor feature arithmetic can drift). Features are
-    * row-local — d12's sorted-array counts give len/ttr/top, d13's
-    * map-lookup fold gives sum_ctf — so the operator is stateless: no
+    * row-local — [[graft.operators.TextOps.rowLocalQualityCounts]] gives
+    * len/ttr/top, [[sumCtf]] gives sum_ctf — so the operator is stateless: no
     * watermark, no aggregation, any stream length. OOV terms contribute
     * 0 to sum_ctf (d13's documented bounded-artifact trade; with the
     * full corpus vocabulary the parity spec pins stream ≡ batch c74
@@ -436,9 +395,7 @@ object StreamOps {
                     totalTokens: Long,
                     tree: graft.operators.Distill.QualityTree): DataFrame = {
     require(totalTokens >= 1, s"totalTokens must be >= 1, got $totalTokens")
-    require(vocab.nonEmpty, "vocab artifact must contain at least one term")
-    val ctfMap = map(vocab.flatMap { case (t, c) => Seq(lit(t), lit(c)) }: _*)
-    rowLocalQualityCounts(docs)
+    graft.operators.TextOps.rowLocalQualityCounts(docs)
       // Divide-by-zero contract: featureProjection divides by n_words,
       // so a zero-token doc would yield NULL features (or kill the
       // stream under ANSI) and an arbitrary tree verdict for a doc the
@@ -453,33 +410,11 @@ object StreamOps {
         // freqScoredOn's n_tokens counts the same exploded token stream
         // qualityCounted sums — for one row they are the same number
         col("n_words").as("n_tokens"),
-        aggregate(
-          transform(col("sorted"), t => coalesce(element_at(ctfMap, t), lit(0L))),
-          lit(0L), (acc, x) => acc + x).as("sum_ctf"),
+        sumCtf(col("sorted"), vocab).as("sum_ctf"),
         lit(totalTokens).as("total_tokens"))
       .select(col("doc_id") +: graft.operators.Distill.featureProjection: _*)
       .withColumn("pred", graft.operators.Distill.treeVerdict(tree))
   }
-
-  /** d37: streaming DSIR selection — c80's APPLY phase at ingest:
-    * arriving docs score their target-likeness under the STATIC trained
-    * (bucket → lr_fx) artifact (`trainDsir` builds it at rest over the
-    * raw/target corpora; a stream cannot re-count either distribution —
-    * d13's bounded-artifact argument) and carry the same exact BIGINT
-    * `sum_lr`, 6-dp `avg_lr_r`, and integer-sign `keep` verdict as the
-    * batch gate row. The body IS [[graft.operators.Dsir.scoreDocs]] +
-    * [[graft.operators.Dsir.weightsOf]] — the same expression subtrees
-    * the c80 gate row projects through (d29's shared-subtree rule:
-    * batch and ingest selection cannot drift). Row-local md5-bucket
-    * fold with the artifact as plan literals, zero state, no watermark;
-    * buckets unseen at train time contribute the neutral 0 by the same
-    * coalesce both paths share, so NEW documents (the entire point of
-    * ingest) score without retraining. Zero-token docs are dropped on
-    * both paths (c66's row-set rule). */
-  def streamDsir(docs: DataFrame,
-                 artifact: Seq[(String, Long)]): DataFrame =
-    graft.operators.Dsir.weightsOf(
-      graft.operators.Dsir.scoreDocs(docs, artifact))
 
   /** d11: streaming ingest routing — classify an arriving doc stream
     * against a STATIC existing corpus (the zero-state streaming twin of
@@ -590,38 +525,28 @@ object StreamOps {
     * batch twin: the assignment inside c18/c31). The codebook is a
     * BOUNDED MODEL ARTIFACT (k rows — the caller collects it once, e.g.
     * `trainCodebook(...).collect()`, exactly as a real system ships a
-    * trained codebook to ingest nodes) and is inlined as plan literals:
-    * a stream cannot run the batch argmax's per-vector window, so the
-    * argmax becomes a codegen'd array_max over k (cosine, cell) structs —
-    * one pass, stateless, no watermark. Tie-break matches batch exactly:
-    * 6-dp-rounded score, LOWEST cell wins (negated cell in the struct so
-    * array_max's lexicographic order prefers it). */
+    * trained codebook to ingest nodes) and is inlined as a plan literal;
+    * the argmax is [[nearestCells]] — one pass, stateless, no
+    * watermark. */
   def streamAssignCells(vecs: DataFrame,
                         codebook: Seq[(Long, Array[Double])]): DataFrame = {
-    val v = col("embedding").cast("array<double>")
-    val best = bestCell(v, codebook)
-    vecs.select(col("vec_id"),
-      (-best.getField("negcell")).as("cell"),
+    val best = element_at(nearestCells(col("embedding"), codebook, 1), 1)
+    vecs.select(col("vec_id"), best.getField("cell").as("cell"),
       best.getField("ccos").as("cell_cos"))
   }
 
-  /** d15: streaming embedding moments — running per-dimension
-    * fixed-point sums over a vector stream (the streaming twin of c45,
-    * and like d10 a COMPLETE-mode surface: the result set is
-    * embedding-width-sized — one row per dimension, not per vector — so
-    * the running aggregate re-emits the full dim table each trigger,
-    * exactly how a live embedding-drift monitor consumes it). State is
-    * O(dim): five integers per dimension, nothing corpus-sized. All
-    * aggregation stays on c45's exact fixed-point integers — the
-    * derived doubles (mean/var) belong downstream of the sink, computed
-    * from the same exact integers c45 uses, so batch and stream can
-    * never drift — enforced structurally: this IS c45's aggregation
-    * core ([[graft.operators.Similarity.fixedPointMoments]]), shared
-    * the way d12 shares c35's qualityVerdicts. The square sums run in
-    * DECIMAL(38,0) there — this monitor's state only ever grows, and
-    * an int64 square sum would wrap silently near 5.7×10⁹ vectors. */
-  def streamEmbedMoments(vecs: DataFrame): DataFrame =
-    graft.operators.Similarity.fixedPointMoments(vecs)
+  /** The top-`nprobe` (cell, ccos) structs of a vector column against a
+    * codebook artifact shipped as a plan literal: the native
+    * [[graft.functions.NearestCells]] expression batch
+    * [[graft.operators.Similarity.assignCells]] runs, so stream and batch
+    * share the 6-dp rounding and the LOWEST-cell tie-break. Shared by d9,
+    * d14 and d39. */
+  private def nearestCells(v: Column, codebook: Seq[(Long, Array[Double])],
+                           nprobe: Int): Column = {
+    require(codebook.nonEmpty, "codebook must be non-empty")
+    graft.functions.VectorFunctions.nearestCells(v,
+      typedLit(codebook.map { case (cell, cv) => (cell, cv.toSeq) }), nprobe)
+  }
 
   /** d18: streaming release audit — c49's snapshot classification at
     * ingest time: every arriving (doc_id, text) classifies against the
@@ -685,92 +610,6 @@ object StreamOps {
       .toDF("doc_id", "width", "height", "n_units", "n_bands", "lossy_ok")
   }
 
-  /** d30: streaming FULL tokenization — `Main tokenize`'s serving twin:
-    * where d21 emits counts (the monitoring shape), d30 emits the token
-    * payload itself — (doc_id, n_words, n_tokens, tokens) — exactly the
-    * at-rest CLI's schema, so an ingest pipeline can write
-    * training-ready tokenized shards straight from the stream. Same
-    * static merge artifact, same native ApplyBpe row-local apply, zero
-    * state; parity spec pins stream ≡ the batch CLI derivation
-    * row-for-row including the arrays. */
-  def streamTokenize(docs: DataFrame,
-                     merges: Seq[(String, String)]): DataFrame = {
-    val ws = filter(graft.operators.TextOps.words(lower(col("text"))),
-      w => length(w) >= 1)
-    docs
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), ws.as("ws"))
-      .select(col("doc_id"), size(col("ws")).cast("bigint").as("n_words"),
-        flatten(transform(col("ws"),
-          w => graft.functions.BpeFunctions.applyBpe(w, merges))).as("tokens"))
-      .select(col("doc_id"), col("n_words"),
-        size(col("tokens")).cast("bigint").as("n_tokens"), col("tokens"))
-  }
-
-  /** d36: streaming UNIGRAM tokenization — c75's APPLY phase at ingest
-    * and d30's unigram sibling (the tokenizer family's third serving
-    * twin next to d21/d30 char-BPE and d31 byte-BPE): each arriving doc
-    * segments by maximum-likelihood Viterbi under the STATIC trained
-    * (piece, score) artifact, shipped as plan literals (d13's rule — a
-    * stream cannot re-train the tokenizer; `Main unigram-train` builds
-    * the artifact at rest). The body IS
-    * [[graft.operators.Unigram.tokenizeDocs]] — the same expression
-    * subtree `Main tokenize --unigram` and the c78 gate row project
-    * through (d29's shared-subtree rule: batch and stream tokenization
-    * cannot drift), and it emits the same (doc_id, n_words, n_tokens,
-    * tokens) schema as the BPE twins, so downstream packing/counting
-    * stages stay tokenizer-agnostic. Row-local (Viterbi window bounded
-    * by MaxPieceLen), zero state, no watermark, any stream length; docs
-    * with corpus-unseen characters tokenize via the UNK single-char
-    * fallback instead of erroring — the parity spec pins stream ≡ batch
-    * row-for-row including those. */
-  def streamUnigramTokenize(docs: DataFrame,
-                            artifact: Seq[(String, Long)]): DataFrame =
-    graft.operators.Unigram.tokenizeDocs(docs, artifact)
-
-  /** d47: streaming WORDPIECE tokenization — c98's APPLY phase at
-    * ingest, the tokenizer family's FOURTH serving twin (next to
-    * d21/d30 char-BPE, d31 byte-BPE, d36 unigram): each arriving doc
-    * segments by greedy longest-match-first against the STATIC trained
-    * vocabulary, shipped as plan literals (d13's rule — a stream cannot
-    * re-train; `Main wordpiece-train` builds the artifact at rest). The
-    * body IS [[graft.operators.Wordpiece.tokenizeDocs]] — the same
-    * expression subtree `Main tokenize --wordpiece` and the gate rows
-    * project through (d29's shared-subtree rule: batch and stream
-    * tokenization cannot drift), emitting the family's common (doc_id,
-    * n_words, n_tokens, tokens) schema. Row-local (greedy window
-    * bounded by MaxPieceLen), zero state, no watermark; a word with no
-    * matchable prefix emits the single [UNK] token instead of erroring
-    * — the parity spec pins stream ≡ batch row-for-row including
-    * those. */
-  def streamWordpieceTokenize(docs: DataFrame,
-                              vocab: Seq[String]): DataFrame =
-    graft.operators.Wordpiece.tokenizeDocs(docs, vocab)
-
-  /** d48: streaming CMS frequency estimation at ingest — c100's serving
-    * twin: each arriving doc's distinct tokens read their corpus
-    * frequency estimate off the FROZEN counter grid (the at-rest sketch
-    * c100's pass 1 folds), answering "is this token a corpus heavy
-    * hitter" per arrival without touching the corpus. Zero state, no
-    * watermark: the grid ships as plan literals (d13's bounded-artifact
-    * rule — d·w longs), the estimate is the SAME
-    * [[graft.operators.Sketch.estimateOf]] min-of-d-lookups expression
-    * the batch row reads (d29's shared-subtree rule), so a replayed
-    * corpus doc reads the identical estimates the batch top-k was cut
-    * from (parity spec). Emits (doc_id, token, est_cnt) per distinct
-    * token per doc. */
-  def streamCmsEstimate(docs: DataFrame,
-                        grid: Map[String, Long]): DataFrame = {
-    val ws = filter(graft.operators.TextOps.words(lower(col("text"))),
-      w => length(w) >= 1)
-    docs
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"),
-        explode(array_distinct(ws)).as("token"))
-      .select(col("doc_id"), col("token"),
-        graft.operators.Sketch.estimateOf(col("token"), grid).as("est_cnt"))
-  }
-
   /** d33: streaming vector-index ADD — `Main index --add`'s serving
     * twin, closing the incremental-index loop (batch `--add` backfills,
     * this ingests live): each arriving vector assigns to its nearest
@@ -832,64 +671,6 @@ object StreamOps {
       .select(col("vec_id"), col("neighbor_id"), col("band"), col("cosine_r"))
   }
 
-  /** d31: streaming BYTE-LEVEL tokenization — c70's serving twin
-    * (`tokenize --bytes` at ingest): each arriving doc pre-tokenizes
-    * with the parity-safe leading-space pattern
-    * ([[graft.operators.TextOps.bytePretokens]]), stages through the
-    * GPT-2 byte alphabet ([[graft.functions.ByteStage]]) and tokenizes
-    * through the native fused [[graft.functions.ApplyBpe]] against a
-    * STATIC byte-level merge artifact (d21's plan-literal rule) — so the
-    * ingest path accepts ANY byte sequence (case, emoji, control bytes),
-    * not just space-split ASCII words, and
-    * `byteUnstage(concat(tokens))` recovers each arrival byte-for-byte.
-    * Zero state, no watermark; emits (doc_id, n_pretokens, n_tokens,
-    * tokens) — training-ready tokenized shards straight from the
-    * stream. */
-  def streamTokenizeBytes(docs: DataFrame,
-                          merges: Seq[(String, String)]): DataFrame = {
-    val ts = transform(
-      graft.operators.TextOps.bytePretokens(col("text")),
-      p => graft.functions.BpeFunctions.applyBpe(
-        graft.functions.ByteBpeFunctions.byteStage(p), merges))
-    docs
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), ts.as("ts"))
-      .select(col("doc_id"),
-        size(col("ts")).cast("bigint").as("n_pretokens"),
-        flatten(col("ts")).as("tokens"))
-      .select(col("doc_id"), col("n_pretokens"),
-        size(col("tokens")).cast("bigint").as("n_tokens"), col("tokens"))
-  }
-
-  /** d21: streaming BPE tokenization — c52's APPLY phase at ingest,
-    * against a STATIC learned-merge artifact (the d13/d16 argument: a
-    * stream cannot re-train the tokenizer per row, so the bounded merge
-    * list — trainBpe's output — ships as plan literals, exactly how a
-    * serving system ships its tokenizer file; the batch side trains it
-    * at rest). Each arriving doc tokenizes row-locally through the
-    * native fused [[graft.functions.ApplyBpe]] (r11 — one plan node at
-    * any merge count) → token counts. Zero state, no watermark, any
-    * stream length. Emits (doc_id, n_words, n_tokens); a parity spec
-    * pins stream ≡ batch under the same artifact, and token semantics
-    * are pinned by BpeExprSpec's parity/adversarial suite on the shared
-    * ApplyBpe engine. */
-  def streamBpeTokenize(docs: DataFrame,
-                        merges: Seq[(String, String)]): DataFrame = {
-    val ws = filter(graft.operators.TextOps.words(lower(col("text"))),
-      w => length(w) >= 1)
-    docs
-      // batch wordTypes drops null texts via explode; a null here would
-      // otherwise surface as an all-null fact row (every sibling twin
-      // filters the same way)
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), ws.as("ws"))
-      .select(col("doc_id"), size(col("ws")).cast("bigint").as("n_words"),
-        transform(col("ws"),
-          w => graft.functions.BpeFunctions.applyBpe(w, merges)).as("ts"))
-      .select(col("doc_id"), col("n_words"),
-        size(flatten(col("ts"))).cast("bigint").as("n_tokens"))
-  }
-
   /** d16: streaming whitening — c47 at ingest time, against a STATIC
     * moments artifact (d13's argument: a stream cannot re-aggregate the
     * corpus per row, so the per-dim (mean, σ) table — dim-sized,
@@ -909,38 +690,17 @@ object StreamOps {
     require(sorted.map(_._1) == (0 until sorted.length),
       s"moments artifact must cover contiguous dims 0..${sorted.length - 1}")
     val ms = typedLit(sorted.map { case (_, m, s) => (m, s) })
-    vecs.select(col("vec_id"),
-      posexplode(zip_with(col("embedding").cast("array<double>"), ms,
-        (x, s) => graft.operators.Similarity.zColumn(
-          x, s.getField("_1"), s.getField("_2")))))
-      .select(col("vec_id"), col("pos"), col("col").as("z_r"))
-  }
-
-  /** The d9 argmax as a reusable column: array_max over k
-    * (6-dp-rounded cosine, −cell) structs — row-local, codegen-friendly,
-    * tie-break identical to the batch NearestCells comparator (rounded
-    * score desc, LOWEST cell wins). Shared by d9 and d14. */
-  private def bestCell(v: Column,
-                       codebook: Seq[(Long, Array[Double])]): Column = {
-    require(codebook.nonEmpty, "codebook must be non-empty")
-    val scored = codebook.sortBy(_._1).map { case (cell, cv) =>
-      struct(
-        round(graft.functions.VectorFunctions.cosine(v, typedLit(cv.toSeq)), 6)
-          .as("ccos"),
-        lit(-cell).as("negcell"))
-    }
-    array_max(array(scored: _*))
+      .cast("array<struct<mean:double,sd:double>>")
+    graft.operators.Similarity.whitenLong(vecs,
+      col("embedding").cast("array<double>"), ms)
   }
 
   /** d39: streaming ANN query scoring — the QUERY half of the vector
     * index's serving story at ingest (the index half is d33's
     * incremental add): arriving query vectors probe the at-rest IVF-PQ
     * index and emit one ADC-scored hit row per candidate in their
-    * probed cells. Cell probing is ROW-LOCAL (d9/d14's bestCell
-    * argument taken to top-nprobe: the bounded codebook ships as plan
-    * literals; the scored-struct array sorts and slices per row — ties
-    * break exactly like batch assignCells, rounded cosine desc then
-    * LOWEST cell); candidates arrive by ONE stream-static equi-join on
+    * probed cells. Cell probing is ROW-LOCAL ([[nearestCells]] taken to
+    * top-nprobe); candidates arrive by ONE stream-static equi-join on
     * the cell id against the MATERIALIZED
     * [[graft.operators.Similarity.reconstructCandidates]] frame
     * (d11/d25's rule — at scale bucketed by cell), so each query
@@ -954,46 +714,20 @@ object StreamOps {
                      codebook: Seq[(Long, Array[Double])],
                      nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    require(codebook.nonEmpty, "codebook must be non-empty")
     require(Seq("cell", "neighbor_id", "rv").forall(candidates.columns.contains),
       "candidates must be a reconstructCandidates frame " +
         s"(cell, neighbor_id, rv), found " +
         candidates.columns.mkString("(", ", ", ")"))
-    val v = col("embedding").cast("array<double>")
-    val scored = codebook.sortBy(_._1).map { case (cell, cv) =>
-      struct(
-        round(graft.functions.VectorFunctions.cosine(v, typedLit(cv.toSeq)), 6)
-          .as("ccos"),
-        lit(-cell).as("negcell"))
-    }
-    val probes = slice(reverse(array_sort(array(scored: _*))), 1, nprobe)
     queries
-      .select(col("vec_id").as("query_id"), v.as("qv"),
-        explode(probes).as("p"))
-      .select(col("query_id"), col("qv"),
-        (-col("p.negcell")).cast("bigint").as("cell"))
+      .select(col("vec_id").as("query_id"),
+        col("embedding").cast("array<double>").as("qv"),
+        explode(nearestCells(col("embedding"), codebook, nprobe)).as("p"))
+      .select(col("query_id"), col("qv"), col("p.cell").as("cell"))
       .join(candidates.withColumn("cell", col("cell").cast("bigint")), "cell")
       .select(col("query_id"), col("cell"), col("neighbor_id"),
         round(graft.operators.Similarity.cosine(col("qv"), col("rv")), 6)
           .as("adc_r"))
   }
-
-  /** d42: streaming media card — c87 as the LIVE decoder dashboard: an
-    * arriving media stream decodes at ingest (the SAME MediaRecord →
-    * MediaFeatures map c12/c87 project through — d29's rule; a
-    * mis-parsed byte moves v_sum on the dashboard the moment it
-    * arrives) and folds into the running per-modality card. The result
-    * set is modality-sized (3 rows — BOUNDED), so the running aggregate
-    * re-emits the full card per trigger: d10's COMPLETE-mode argument,
-    * the live view a media-ingest operator watches. State is O(1) per
-    * modality (sums/min/max/count); no watermark (the card is
-    * cumulative by definition). Parity spec pins the drained card ≡
-    * batch c87 row-for-row and the mid-stream card ≡ a batch fold of
-    * the arrived prefix. */
-  def streamMediaCard(
-      media: Dataset[graft.operators.MediaRecord]): DataFrame =
-    graft.operators.Multimodal.cardFold(
-      graft.operators.Multimodal.decodeDs(media))
 
   /** d43 (r15): streaming perceptual-hash routing — c88's serving twin,
     * the ingest-side image near-dup check: each arriving image record
@@ -1011,30 +745,47 @@ object StreamOps {
     * state, no watermark. */
   def streamPhashRoute(media: Dataset[graft.operators.MediaRecord],
                        index: DataFrame, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4-segment banding finds all pairs only for hamming <= 3, got $maxHamming")
     require(Seq("doc_id", "phash").forall(index.columns.contains),
       "index must be a c88 phash frame (doc_id, phash), found " +
         index.columns.mkString("(", ", ", ")"))
+    phashBandProbe(phashArrivals(media), corpusPhashes(index), maxHamming)
+      .select(col("doc_id"), col("seg_idx"), col("corpus_doc"), col("hamming"))
+  }
+
+  /** (doc_id, phash) of each arriving media record, hashed row-locally
+    * through the batch gates' [[graft.operators.Multimodal.phashOf]]
+    * dispatch. */
+  private def phashArrivals(media: Dataset[graft.operators.MediaRecord]): DataFrame = {
     import media.sparkSession.implicits._
-    def segs(h: Column): Column =
-      array((0 until 4).map(j =>
-        graft.operators.Multimodal.phashSeg(h, j)): _*)
-    val arrivals = media
+    media
       .mapPartitions(_.map(r => (r.doc_id,
         graft.operators.Multimodal.phashOf(r.doc_id, r.media_type, r.payload))))
       .toDF("doc_id", "phash")
-      .select(col("doc_id"), col("phash"), posexplode(segs(col("phash"))))
-      .toDF("doc_id", "phash", "seg_idx", "seg")
-    val idx = index
-      .select(col("doc_id").as("corpus_doc"), col("phash").as("cph"),
-        posexplode(segs(col("phash"))))
-      .toDF("corpus_doc", "cph", "seg_idx", "seg")
-    arrivals.join(idx, Seq("seg_idx", "seg"))
+  }
+
+  /** A (doc_id, phash) corpus index as the (corpus_doc, cph, extra…)
+    * probe side. */
+  private def corpusPhashes(index: DataFrame, extra: Column*): DataFrame =
+    index.select(Seq(col("doc_id").as("corpus_doc"), col("phash").as("cph")) ++
+      extra: _*)
+
+  /** The stream-static band probe d43, d44 and d49 share: arrivals
+    * (doc_id, phash, …) and a corpus index (corpus_doc, cph, …) each
+    * explode into their 4 (seg_idx, seg) Hamming bands
+    * ([[graft.operators.Multimodal.phashBands]]) and equi-join on them —
+    * at scale the index is bucketed by segment, so an arrival touches 4
+    * buckets, never the corpus. Self hits drop; the rows keep every input
+    * column plus seg_idx and the exact `hamming`, at most maxHamming. A
+    * pair colliding in k bands arrives k times. */
+  private def phashBandProbe(arrivals: DataFrame, index: DataFrame,
+                             maxHamming: Int): DataFrame = {
+    graft.operators.Dedup.requireFourBandRecall(maxHamming)
+    def banded(df: DataFrame, h: String): DataFrame = df.select(col("*"),
+      graft.operators.Multimodal.phashBands(col(h)).as(Seq("seg_idx", "seg")))
+    banded(arrivals, "phash").join(banded(index, "cph"), Seq("seg_idx", "seg"))
       .filter(col("doc_id") =!= col("corpus_doc"))
-      .select(col("doc_id"), col("seg_idx"), col("corpus_doc"),
-        bit_count(col("phash").bitwiseXOR(col("cph"))).cast("bigint")
-          .as("hamming"))
+      .withColumn("hamming",
+        bit_count(col("phash").bitwiseXOR(col("cph"))).cast("bigint"))
       .filter(col("hamming") <= maxHamming)
   }
 
@@ -1054,15 +805,10 @@ object StreamOps {
   def streamVideoPhashRoute(media: Dataset[graft.operators.MediaRecord],
                             frameIndex: DataFrame,
                             maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4-segment banding finds all pairs only for hamming <= 3, got $maxHamming")
     require(Seq("doc_id", "frame_idx", "phash").forall(frameIndex.columns.contains),
       "frameIndex must be a c91 frame table (doc_id, frame_idx, phash), found " +
         frameIndex.columns.mkString("(", ", ", ")"))
     import media.sparkSession.implicits._
-    def segs(h: Column): Column =
-      array((0 until 4).map(j =>
-        graft.operators.Multimodal.phashSeg(h, j)): _*)
     val arrivals = media
       .mapPartitions(_.flatMap { r =>
         require(r.media_type == "video",
@@ -1071,27 +817,16 @@ object StreamOps {
           .map { case (f, ph) => (r.doc_id, f, ph) }
       })
       .toDF("doc_id", "frame_idx", "phash")
-      .select(col("doc_id"), col("frame_idx"), col("phash"),
-        posexplode(segs(col("phash"))))
-      .toDF("doc_id", "frame_idx", "phash", "seg_idx", "seg")
-    val idx = frameIndex
-      .select(col("doc_id").as("corpus_doc"),
-        col("frame_idx").as("corpus_frame"), col("phash").as("cph"),
-        posexplode(segs(col("phash"))))
-      .toDF("corpus_doc", "corpus_frame", "cph", "seg_idx", "seg")
-    arrivals.join(idx, Seq("seg_idx", "seg"))
-      .filter(col("doc_id") =!= col("corpus_doc"))
+    phashBandProbe(arrivals,
+        corpusPhashes(frameIndex, col("frame_idx").as("corpus_frame")), maxHamming)
       .select(col("doc_id"), col("frame_idx"), col("seg_idx"),
-        col("corpus_doc"), col("corpus_frame"),
-        bit_count(col("phash").bitwiseXOR(col("cph"))).cast("bigint")
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+        col("corpus_doc"), col("corpus_frame"), col("hamming"))
   }
 
   /** d14: streaming semantic-dedup routing — classify an arriving
     * embedding stream against a STATIC corpus: the embedding twin of
     * d11's text ingest routing, and c43's serving shape. The vector's
-    * cell is the [[bestCell]] struct-argmax over the BOUNDED codebook
+    * cell is the [[nearestCells]] argmax over the BOUNDED codebook
     * artifact (d9's argument: ship the trained codebook to ingest nodes
     * as plan literals), and the duplicate hunt is a stream-static
     * equi-join ON THE CELL ID against c43's memoized assignment table —
@@ -1110,12 +845,10 @@ object StreamOps {
   def streamSemanticRoute(vecs: DataFrame, corpus: DataFrame,
                           codebook: Seq[(Long, Array[Double])],
                           threshold: Double = 0.35): DataFrame = {
-    val v = col("embedding").cast("array<double>")
-    val best = bestCell(v, codebook)
+    val best = element_at(nearestCells(col("embedding"), codebook, 1), 1)
     vecs
-      .select(col("vec_id"), v.as("v"),
-        (-best.getField("negcell")).as("cell"),
-        best.getField("ccos").as("cent_r"))
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
+        best.getField("cell").as("cell"), best.getField("ccos").as("cent_r"))
       .join(corpus.select(col("vec_id").as("ex_id"), col("v").as("ev"),
         col("cell")), "cell")
       .filter(col("vec_id") =!= col("ex_id"))
@@ -1405,17 +1138,6 @@ object StreamOps {
         stats.dfs.map { case (term, _) => col(s"s_$term") }.reduceLeft(_ + _))
   }
 
-  /** d23: streaming winnowing fingerprints — c57 at ingest. The batch
-    * selector is already one row-local projection (zero exchanges), so
-    * the twin IS the batch core verbatim ([[graft.operators.TextOps
-    * .winnowGrams]]/[[graft.operators.TextOps.winnowSelect]] — twins-
-    * share-core): each arriving document emits its n-gram/window counts
-    * and fingerprint-set digest with zero state and no watermark. This
-    * is the front door of the fingerprint index a dedup service keys on:
-    * downstream, (fp, doc_id) pairs equi-join against the at-rest index. */
-  def streamWinnow(docs: DataFrame): DataFrame =
-    graft.operators.TextOps.winnowProjection(docs)
-
   /** d24: streaming LM transition scoring — c56's bigram model served at
     * the edge through a STREAM-STATIC broadcast equi-join. The model
     * (a vocab²-bounded (a, b, c_pair, c_prefix) frame, trained at rest
@@ -1624,41 +1346,17 @@ object StreamOps {
   def streamMediaClusterAssign(media: Dataset[graft.operators.MediaRecord],
                                index: DataFrame, labels: DataFrame,
                                maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4-segment banding finds all pairs only for hamming <= 3, got $maxHamming")
     require(Seq("doc_id", "phash").forall(index.columns.contains),
       "index must be a c88 phash frame (doc_id, phash), found " +
         index.columns.mkString("(", ", ", ")"))
     require(Seq("node", "cluster_id").forall(labels.columns.contains),
       "labels must be a (node, cluster_id) table, found " +
         labels.columns.mkString("(", ", ", ")"))
-    import media.sparkSession.implicits._
-    def segs(h: Column): Column =
-      array((0 until 4).map(j =>
-        graft.operators.Multimodal.phashSeg(h, j)): _*)
-    val arrivals = media
-      .mapPartitions(_.map(r => (r.doc_id,
-        graft.operators.Multimodal.phashOf(r.doc_id, r.media_type, r.payload))))
-      .toDF("doc_id", "phash")
-      .select(col("doc_id"), col("phash"), posexplode(segs(col("phash"))))
-      .toDF("doc_id", "phash", "seg_idx", "seg")
-    val idx = index
-      .select(col("doc_id").as("corpus_doc"), col("phash").as("cph"),
-        posexplode(segs(col("phash"))))
-      .toDF("corpus_doc", "cph", "seg_idx", "seg")
-    val noEarlierBand = (0 until 3).map(k =>
-      (col("seg_idx") <= lit(k)) ||
-        (graft.operators.Multimodal.phashSeg(col("phash"), k) =!=
-          graft.operators.Multimodal.phashSeg(col("cph"), k))).reduce(_ && _)
-    arrivals.join(idx, Seq("seg_idx", "seg"))
-      .filter(col("doc_id") =!= col("corpus_doc"))
-      .filter(noEarlierBand)
-      .filter(bit_count(col("phash").bitwiseXOR(col("cph"))) <= maxHamming)
+    phashBandProbe(phashArrivals(media), corpusPhashes(index), maxHamming)
+      .filter(graft.operators.Multimodal.noEarlierBand(col("phash"), col("cph")))
       .join(labels.select(col("node").as("corpus_doc"),
         col("cluster_id").as("lbl")), Seq("corpus_doc"), "left")
-      .select(col("doc_id"), col("corpus_doc"),
-        bit_count(col("phash").bitwiseXOR(col("cph"))).cast("bigint")
-          .as("hamming"),
+      .select(col("doc_id"), col("corpus_doc"), col("hamming"),
         least(coalesce(col("lbl"), col("corpus_doc")), col("corpus_doc"))
           .as("cluster_id"))
   }
@@ -1782,20 +1480,6 @@ object StreamOps {
           s" % ${TextOps.DigestMod}L as bigint)").as("digest2"))
   }
 
-  /** d51: streaming RECIPE ROUTING at ingest — c111's serving twin
-    * (r17): each arriving (doc_id, source, text) reads its source's
-    * full-epoch count and fractional-epoch membership off the c110
-    * plan — the per-arrival mix decision (how many copies of this doc
-    * the run should read), via THE SAME
-    * [[graft.operators.TextOps.recipeCopies]] projection the batch
-    * row executes (d29's shared-subtree rule). Zero state, no
-    * watermark, no join — the plan is a bounded plan-literal map
-    * (d13); an arrival from a source outside the plan reads NULL (new
-    * material — re-planning is c110's batch job, d26's rule). */
-  def streamRecipeRoute(docs: DataFrame,
-                        plan: Seq[(String, Long, String)]): DataFrame =
-    graft.operators.TextOps.recipeCopies(docs, plan)
-
   /** d29: streaming CLUSTER ROUTING at ingest — c69's serving twin and
     * d14's lexical analogue: each arriving doc is routed to the
     * existing substring-duplication group(s) it belongs to, by probing
@@ -1819,10 +1503,11 @@ object StreamOps {
   /** d28: streaming eval-ONBOARDING contamination probe — c68's serving
     * twin: benchmark sets evolve, and each arriving eval item must be
     * checked against the (at-rest) training corpus BEFORE it is trusted.
-    * The arrival's distinct n-shingles compute row-locally (HOF
-    * transform + array_distinct — the shingleRows formulation, no
-    * per-doc state) and probe the corpus shingle index
-    * ([[graft.operators.Dedup.shingleRows]] materialized as parquet —
+    * The arrival's distinct n-shingles compute row-locally
+    * ([[graft.operators.Dedup.shingles]], whose size guard keeps the
+    * expression total for a sub-n row; no per-doc state) and probe the
+    * corpus shingle index ([[graft.operators.Dedup.shingleRows]]
+    * materialized as parquet —
     * corpus-sized, so d11/d25's table rule, at scale bucketed by
     * shingle), emitting one (doc_id, n_shingles, shingle, c_doc) row
     * per leaked (shingle, corpus-doc) pair. Stateless; the fold into
@@ -1830,46 +1515,11 @@ object StreamOps {
     * ([[graft.operators.TextOps.contamReportOfHits]]) is a batch pass
     * downstream (d26's rule) — clean items produce NO stream rows, so
     * the fold's total side comes from the arrival log, not the hits. */
-  /** d55: streaming WET extraction at ingest — c117's serving twin
-    * (r19): raw markup arrives (the crawl firehose is exactly where
-    * extraction runs in production) and each row extracts through THE
-    * SAME [[graft.operators.Extract.htmlExtractOn]] chain the batch
-    * gate row runs (d29's shared-subtree rule — density floor, refusal
-    * truncation and entity tables cannot drift). Row-local regex math
-    * only: zero state, no watermark, no join, any stream length; a
-    * malformed arrival flags `well_formed = false` with its
-    * script/style payload truncated, never leaked downstream. */
-  def streamExtract(docs: DataFrame, markupCol: String = "html",
-                    minWords: Int = 4): DataFrame =
-    graft.operators.Extract.htmlExtractOn(docs, markupCol, minWords)
-
-  /** d56: streaming encoding-validity flagging at ingest — c118's
-    * serving twin (r19), the stage that runs immediately after d55 in a
-    * real crawl pipeline: each arriving doc gets its replacement-char /
-    * control-char / mojibake counts, verdict and mechanically-safe
-    * repair via THE SAME [[graft.operators.Extract.encodingFlagOn]]
-    * chain as the batch gate row. Stateless row-local counting — no
-    * watermark, no state, any stream length. */
-  def streamEncodingFlag(docs: DataFrame, textCol: String = "text"): DataFrame =
-    graft.operators.Extract.encodingFlagOn(docs, textCol)
-
   def streamContamProbe(docs: DataFrame, corpusIndex: DataFrame,
                         n: Int = 8): DataFrame = {
     require(n >= 1, s"shingle width must be >= 1, got $n")
-    // TOTAL expression (c57's sub-k guard rule): Spark's sequence(0, x)
-    // DESCENDS for x < 0, feeding slice a zero start — and the streaming
-    // planner evaluated this projection for a sub-n row despite the
-    // size filter below it (batch never did). The CASE makes the
-    // expression well-defined for every row, filter or no filter.
-    val shs = when(size(col("t")) >= n,
-      array_distinct(transform(
-        sequence(lit(0), size(col("t")) - n),
-        i => array_join(slice(col("t"), i + 1, lit(n)), " "))))
-      .otherwise(array().cast("array<string>"))
     docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
-      .filter(size(col("t")) >= n)
-      .select(col("doc_id"), shs.as("shs"))
+      .select(col("doc_id"), graft.operators.Dedup.shingles(col("text"), n).as("shs"))
       .select(col("doc_id"),
         size(col("shs")).cast("bigint").as("n_shingles"),
         explode(col("shs")).as("shingle"))

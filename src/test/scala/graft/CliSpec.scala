@@ -1278,7 +1278,7 @@ class CliSpec extends SparkSpec {
       "--in", s"$sfDir/documents.parquet", "--out", s"$tmp/est"))
     val got = spark.read.parquet(s"$tmp/est").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
-    val want = graft.streaming.StreamOps.streamCmsEstimate(
+    val want = Sketch.cmsEstimate(
         Tables.documents(spark, sfDir).select("doc_id", "text"), grid)
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Distill
@@ -143,7 +142,6 @@ class DistillSpec extends SparkSpec {
 
   test("d35 stream verdicts equal batch c74 row-for-row") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // a restricted corpus keeps the full-vocabulary artifact small;
     // 9003/9004 pin the empty/whitespace-only edge: split(" ") never
     // yields an empty array (split("", " ") is [""]), so batch c74
@@ -166,32 +164,23 @@ class DistillSpec extends SparkSpec {
       .groupBy("term").agg(count(lit(1)).as("ctf"))
       .as[(String, Long)].collect().toSeq
     val total = vocabRows.map(_._2).sum
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamDistill(
-        stream.toDF().toDF("doc_id", "text"), vocabRows, total, tree)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d35_sink").start()
-    try {
-      val edge = Seq(
-        (9001L, "zzqx zzqx zzqxy unseen terms only pad pad pad pad pad"),
-        (9002L, null.asInstanceOf[String]))
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b ++ edge); q.processAllAvailable()
-      val streamed = spark.table("d35_sink").collect()
-        .map(r => r.getLong(0) -> r.toSeq).toMap
-      assert(!streamed.contains(9002L), "null text must not emit a row")
-      assert(streamed.contains(9003L) && streamed.contains(9004L),
-        "empty/whitespace docs tokenize to [\"\"]-style arrays and must " +
-          "be scored, same as batch")
-      assert(streamed.keySet - 9001L == batch.keySet)
-      batch.foreach { case (id, row) =>
-        assert(streamed(id) == row, s"doc $id stream vs batch c74")
-      }
-      // all-OOV doc: freq_ppb exactly 0, and the tree still rules on it
-      val oov = streamed(9001L)
-      assert(oov(4) == 0L && oov(5).isInstanceOf[Boolean])
-    } finally q.stop()
+    val edge = Seq(
+      (9001L, "zzqx zzqx zzqxy unseen terms only pad pad pad pad pad"),
+      (9002L, null.asInstanceOf[String]))
+    val streamed = drainStream(docs ++ edge) { s =>
+      StreamOps.streamDistill(s.toDF("doc_id", "text"), vocabRows, total, tree)
+    }.collect().map(r => r.getLong(0) -> r.toSeq).toMap
+    assert(!streamed.contains(9002L), "null text must not emit a row")
+    assert(streamed.contains(9003L) && streamed.contains(9004L),
+      "empty/whitespace docs tokenize to [\"\"]-style arrays and must " +
+        "be scored, same as batch")
+    assert(streamed.keySet - 9001L == batch.keySet)
+    batch.foreach { case (id, row) =>
+      assert(streamed(id) == row, s"doc $id stream vs batch c74")
+    }
+    // all-OOV doc: freq_ppb exactly 0, and the tree still rules on it
+    val oov = streamed(9001L)
+    assert(oov(4) == 0L && oov(5).isInstanceOf[Boolean])
     feats.unpersist()
     ()
   }

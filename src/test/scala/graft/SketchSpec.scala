@@ -205,8 +205,6 @@ class SketchSpec extends SparkSpec {
 
   test("d48 streaming CMS estimates equal the batch grid on replay") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val grid = Sketch.cmsGrid(spark, sfDir)
     val corpus = Tables.documents(spark, sfDir).select("doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
@@ -215,19 +213,14 @@ class SketchSpec extends SparkSpec {
       t.toLowerCase.split(" ").filter(_.nonEmpty).distinct
         .map(w => (id, w, refEstimate(w, grid)))
     }.sorted
-    val stream = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.streamCmsEstimate(
-        stream.toDS().toDF("doc_id", "text"), grid)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d48_sink").start()
-    try {
-      stream.addData(corpus ++ edge); q.processAllAvailable()
-      val got = spark.table("d48_sink").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
-      assert(got == want, "stream estimates must equal the batch sketch")
-      assert(!got.exists(_._1 >= 9301L),
-        "null/empty docs must not emit rows")
-    } finally q.stop()
+    val sink = drainStream(corpus ++ edge) { s =>
+      Sketch.cmsEstimate(s.toDF("doc_id", "text"), grid)
+    }
+    val got = sink.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
+    assert(got == want, "stream estimates must equal the batch sketch")
+    assert(!got.exists(_._1 >= 9301L),
+      "null/empty docs must not emit rows")
     ()
   }
 }

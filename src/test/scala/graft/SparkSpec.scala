@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,10 +30,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .mkString("\n")
   }
 
+  /** The stream-vs-batch harness: feeds `rows` into a MemoryStream in two
+    * halves (two micro-batches, so cross-batch state is exercised),
+    * applies `op` to the stream, drains it into a memory sink in output
+    * `mode`, and returns the sink's rows as a local frame. The query is
+    * stopped even when a batch fails. */
+  def drainStream[T: Encoder](rows: Seq[T], mode: String = "append")(
+      op: Dataset[T] => Dataset[_]): DataFrame = {
+    val stream = MemoryStream[T](implicitly[Encoder[T]], spark.sqlContext)
+    val name = s"drain_${SparkSpec.sinks.incrementAndGet()}"
+    val q = op(stream.toDS()).writeStream.outputMode(mode).format("memory")
+      .queryName(name).start()
+    try {
+      val (a, b) = rows.splitAt(rows.length / 2)
+      stream.addData(a); q.processAllAvailable()
+      stream.addData(b); q.processAllAvailable()
+      val sink = spark.table(name)
+      spark.createDataFrame(java.util.Arrays.asList(sink.collect(): _*), sink.schema)
+    } finally q.stop()
+  }
+
   override def afterAll(): Unit = super.afterAll()
 }
 
 object SparkSpec {
+  private val sinks = new java.util.concurrent.atomic.AtomicLong(0L)
+
   lazy val session: SparkSession = {
     val s = GraftSession.builder(master = "local[4]", shufflePartitions = 4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -5,9 +5,14 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.operators.{Dsir, TextOps}
 import graft.streaming.{AsofEvent, Session, SessionEvent, StreamOps, StreamPipeline}
 
-/** Structured Streaming specs (SURVEY §2 a8, d1-d3). */
+/** Structured Streaming specs (SURVEY §2 a8 and the d-rows). A d-row spec
+  * drains its operator — a StreamOps operator, or for a stateless d-row
+  * the batch core itself — through [[SparkSpec.drainStream]] and compares
+  * the sink with the batch twin; specs that assert mid-stream state or
+  * need watermark-advancing flush batches keep their own query loop. */
 class StreamingSpec extends SparkSpec {
 
   private def ts(minute: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 00:$minute%02d:00")
@@ -191,23 +196,15 @@ class StreamingSpec extends SparkSpec {
 
   test("d5: stream dedup suppresses within-watermark duplicates across micro-batches") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val stream = MemoryStream[(Long, Timestamp)]
-    val deduped = StreamOps.streamDedup(
-      stream.toDF().toDF("event_id", "ts"), idCols = Seq("event_id"))
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("d5_sink").start()
-    try {
-      stream.addData(Seq((1L, ts(0)), (2L, ts(1)), (1L, ts(2))))
-      q.processAllAvailable()
-      // same ids again in a later micro-batch, still inside the watermark
-      stream.addData(Seq((1L, ts(3)), (2L, ts(4)), (3L, ts(5))))
-      q.processAllAvailable()
-      val ids = spark.table("d5_sink").select("event_id")
-        .collect().map(_.getLong(0)).sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L),
-        s"each id must appear exactly once, got ${ids.toSeq}")
-    } finally q.stop()
+    // second half: the same ids again in a later micro-batch, still
+    // inside the watermark
+    val sink = drainStream(Seq((1L, ts(0)), (2L, ts(1)), (1L, ts(2)),
+        (1L, ts(3)), (2L, ts(4)), (3L, ts(5)))) { s =>
+      StreamOps.streamDedup(s.toDF("event_id", "ts"), idCols = Seq("event_id"))
+    }
+    val ids = sink.select("event_id").collect().map(_.getLong(0)).sorted
+    assert(ids.toSeq == Seq(1L, 2L, 3L),
+      s"each id must appear exactly once, got ${ids.toSeq}")
   }
 
   test("d6: streaming near-dup flags an identical later doc, in and across batches") {
@@ -298,96 +295,78 @@ class StreamingSpec extends SparkSpec {
 
   test("d7 streaming packing equals c23 batch packing row-for-row") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .as[(Long, String)].collect().toSeq
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamSeqPack(stream.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("append").format("memory").queryName("d7_sink").start()
-    try {
-      // split mid-shard: cross-batch state must carry the running count
-      val (a, b) = docs.sortBy(_._1).splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d7_sink")
-        .select("doc_id", "shard", "n_tokens", "cum_tokens", "pack_id")
-      val batch = graft.operators.TextOps.c23SeqPack(spark, sfDir)
-        .select("doc_id", "shard", "n_tokens", "cum_tokens", "pack_id")
-      assert(streamed.count() == docs.length)
-      assert(streamed.exceptAll(batch).count() == 0 &&
-        batch.exceptAll(streamed).count() == 0,
-        "streaming packs must equal batch packs exactly")
-    } finally q.stop()
+    // split mid-shard: cross-batch state must carry the running count
+    val sink = drainStream(docs.sortBy(_._1)) { s =>
+      StreamOps.streamSeqPack(s.toDF("doc_id", "text"))
+    }
+    val streamed = sink
+      .select("doc_id", "shard", "n_tokens", "cum_tokens", "pack_id")
+    val batch = graft.operators.TextOps.c23SeqPack(spark, sfDir)
+      .select("doc_id", "shard", "n_tokens", "cum_tokens", "pack_id")
+    assert(streamed.count() == docs.length)
+    assert(streamed.exceptAll(batch).count() == 0 &&
+      batch.exceptAll(streamed).count() == 0,
+      "streaming packs must equal batch packs exactly")
   }
 
   test("d10 streaming vocabulary equals batch term counts; top-k view matches c34") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .as[(Long, String)].collect().toSeq
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamVocab(stream.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("complete").format("memory").queryName("d10_sink").start()
-    try {
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d10_sink").as[(String, Long)].collect().toMap
-      val batch = Tables.documents(spark, sfDir)
-        .select(explode(split(lower(col("text")), " ")).as("term"))
-        .groupBy("term").count().as[(String, Long)].collect().toMap
-      assert(streamed == batch, "running counts must equal the batch aggregation")
-      val topk = streamed.toSeq.sortBy { case (t, n) => (-n, t) }.take(100)
-      val c34 = graft.operators.TextOps.c34VocabTopk(spark, sfDir).collect()
-        .map(r => (r.getAs[String]("term"), r.getAs[Long]("tf"))).toSeq
-      assert(topk == c34, "top-k view on the sink must equal c34's cut")
-    } finally q.stop()
+    val sink = drainStream(docs, "complete") { s =>
+      StreamOps.streamVocab(s.toDF("doc_id", "text"))
+    }
+    val streamed = sink.as[(String, Long)].collect().toMap
+    val batch = Tables.documents(spark, sfDir)
+      .select(explode(split(lower(col("text")), " ")).as("term"))
+      .groupBy("term").count().as[(String, Long)].collect().toMap
+    assert(streamed == batch, "running counts must equal the batch aggregation")
+    val topk = streamed.toSeq.sortBy { case (t, n) => (-n, t) }.take(100)
+    val c34 = graft.operators.TextOps.c34VocabTopk(spark, sfDir).collect()
+      .map(r => (r.getAs[String]("term"), r.getAs[Long]("tf"))).toSeq
+    assert(topk == c34, "top-k view on the sink must equal c34's cut")
   }
 
   test("d12 streaming quality verdicts equal c35 batch row-for-row") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .as[(Long, String)].collect().toSeq ++
       Seq((9001L, "a  b"), (9002L, "solo"), (9003L, "MiXeD CaSe MiXeD"),
         (9004L, null)) // edge shapes; null text drops in BOTH forms
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamQuality(stream.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("append").format("memory").queryName("d12_sink").start()
-    try {
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val cols = Seq("doc_id", "n_words", "n_types", "max_tc",
-        "ttr", "top_share", "rule_len", "rule_ttr", "rule_top_share", "keep")
-      val streamed = spark.table("d12_sink")
-        .select(cols.map(col): _*).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      // batch twin over the same doc set (corpus + edge docs)
-      val tc = docs.toDF("doc_id", "text")
-        .select(col("doc_id"),
-          explode(split(lower(col("text")), " ")).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("c"))
-      val batch = graft.operators.TextOps.qualityVerdicts(
-        tc.groupBy("doc_id")
-          .agg(sum(col("c")).as("n_words"), count(lit(1)).as("n_types"),
-            max(col("c")).as("max_tc")))
-        .select(cols.map(col): _*).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      assert(streamed.keySet == batch.keySet)
-      assert(!streamed.contains(9004L), "null text must not emit a verdict row")
-      streamed.foreach { case (id, row) =>
-        assert(row == batch(id), s"doc $id stream vs batch verdict")
-      }
-      // the stream must see both verdicts on this corpus
-      assert(streamed.values.exists(_.last == true))
-      assert(streamed.values.exists(_.last == false))
-    } finally q.stop()
+    val sink = drainStream(docs) { s =>
+      TextOps.qualityVerdicts(
+        TextOps.rowLocalQualityCounts(s.toDF("doc_id", "text")).drop("sorted"))
+    }
+    val cols = Seq("doc_id", "n_words", "n_types", "max_tc",
+      "ttr", "top_share", "rule_len", "rule_ttr", "rule_top_share", "keep")
+    val streamed = sink
+      .select(cols.map(col): _*).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    // batch twin over the same doc set (corpus + edge docs)
+    val tc = docs.toDF("doc_id", "text")
+      .select(col("doc_id"),
+        explode(split(lower(col("text")), " ")).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("c"))
+    val batch = graft.operators.TextOps.qualityVerdicts(
+      tc.groupBy("doc_id")
+        .agg(sum(col("c")).as("n_words"), count(lit(1)).as("n_types"),
+          max(col("c")).as("max_tc")))
+      .select(cols.map(col): _*).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    assert(streamed.keySet == batch.keySet)
+    assert(!streamed.contains(9004L), "null text must not emit a verdict row")
+    streamed.foreach { case (id, row) =>
+      assert(row == batch(id), s"doc $id stream vs batch verdict")
+    }
+    // the stream must see both verdicts on this corpus
+    assert(streamed.values.exists(_.last == true))
+    assert(streamed.values.exists(_.last == false))
   }
 
   test("d13 streaming freq score equals the batch twin under the same vocab artifact") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.TextOps
     // the shipped artifact: c34's top-k vocabulary cut + the corpus total
     val vocab = TextOps.c34VocabTopk(spark, sfDir, k = 100).collect()
@@ -399,45 +378,38 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq ++
       Seq((9001L, "zzzzz qqqqq xxxxx"), // pure OOV: scores exactly 0
         (9002L, null)) // null text drops in both forms
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamFreqScore(
-        stream.toDF().toDF("doc_id", "text"), vocab, total)
-      .writeStream.outputMode("append").format("memory").queryName("d13_sink").start()
-    try {
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d13_sink").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      // batch twin: c41's shape restricted to the SAME bounded artifact
-      val vdf = broadcast(vocab.toDF("term", "ctf"))
-      val batch = docs.toDF("doc_id", "text")
-        .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
-        .join(vdf, Seq("term"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(coalesce(col("ctf"), lit(0L))).as("sum_ctf"))
-        .withColumn("mean_prob_r",
-          round(col("sum_ctf").cast("double") / col("n_tokens") / lit(total), 6))
-        .withColumn("keep", col("mean_prob_r") >= 0.033)
-        .collect().map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      assert(streamed.keySet == batch.keySet)
-      assert(!streamed.contains(9002L), "null text must not emit a score row")
-      streamed.foreach { case (id, row) =>
-        assert(row == batch(id), s"doc $id stream vs batch score")
-      }
-      val oov = streamed(9001L)
-      assert(oov(2) == 0L && oov(3) == 0.0 && oov(4) == false,
-        s"pure-OOV doc must score exactly 0: $oov")
-      // the bounded artifact must still discriminate on this corpus
-      assert(streamed.values.exists(_.last == true))
-      assert(streamed.values.exists(_.last == false))
-    } finally q.stop()
+    val sink = drainStream(docs) { s =>
+      StreamOps.streamFreqScore(s.toDF("doc_id", "text"), vocab, total)
+    }
+    val streamed = sink.collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    // batch twin: c41's shape restricted to the SAME bounded artifact
+    val vdf = broadcast(vocab.toDF("term", "ctf"))
+    val batch = docs.toDF("doc_id", "text")
+      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
+      .join(vdf, Seq("term"), "left")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_tokens"),
+        sum(coalesce(col("ctf"), lit(0L))).as("sum_ctf"))
+      .withColumn("mean_prob_r",
+        round(col("sum_ctf").cast("double") / col("n_tokens") / lit(total), 6))
+      .withColumn("keep", col("mean_prob_r") >= 0.033)
+      .collect().map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    assert(streamed.keySet == batch.keySet)
+    assert(!streamed.contains(9002L), "null text must not emit a score row")
+    streamed.foreach { case (id, row) =>
+      assert(row == batch(id), s"doc $id stream vs batch score")
+    }
+    val oov = streamed(9001L)
+    assert(oov(2) == 0L && oov(3) == 0.0 && oov(4) == false,
+      s"pure-OOV doc must score exactly 0: $oov")
+    // the bounded artifact must still discriminate on this corpus
+    assert(streamed.values.exists(_.last == true))
+    assert(streamed.values.exists(_.last == false))
   }
 
   test("d37 streaming DSIR selection equals batch c80 row-for-row; unseen buckets score neutral 0") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.Dsir
     val art = Dsir.trainDsir(spark, sfDir)
     val corpus = Tables.documents(spark, sfDir).select("doc_id", "text")
@@ -445,44 +417,38 @@ class StreamingSpec extends SparkSpec {
     val docs = corpus ++ Seq(
       (9001L, "zzzzz qqqqq zzzzz"), // words unseen at train time
       (9002L, null.asInstanceOf[String])) // null text drops on both paths
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamDsir(stream.toDF().toDF("doc_id", "text"), art)
-      .writeStream.outputMode("append").format("memory").queryName("d37_sink").start()
-    try {
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d37_sink").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      // batch twin: c80's own weights projection over the same frame —
-      // the SAME subtree by construction, executed in batch mode
-      val batch = Dsir.weightsOf(Dsir.scoreDocs(
-          docs.toDF("doc_id", "text"), art)).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      assert(streamed.keySet == batch.keySet)
-      assert(!streamed.contains(9002L), "null text must not emit a row")
-      streamed.foreach { case (id, row) =>
-        assert(row == batch(id), s"doc $id stream vs batch weight")
-      }
-      // the gate row itself agrees on the corpus slice (same artifact
-      // via the per-dir memo)
-      val gate = Dsir.c80DsirWeights(spark, sfDir).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      corpus.map(_._1).filter(streamed.contains).foreach { id =>
-        assert(streamed(id) == gate(id), s"doc $id stream vs c80 gate row")
-      }
-      // every word of 9001 hashes to a bucket outside the artifact:
-      // the shared coalesce scores it exactly 0 (the documented
-      // neutral fallback that lets one artifact serve new data)
-      val unseen = streamed(9001L)
-      assert(unseen(2) == 0L && unseen(3) == 0.0 && unseen(4) == false,
-        s"unseen-bucket doc must score exactly 0: $unseen")
-    } finally q.stop()
+    val sink = drainStream(docs) { s =>
+      Dsir.weightsOf(Dsir.scoreDocs(s.toDF("doc_id", "text"), art))
+    }
+    val streamed = sink.collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    // batch twin: c80's own weights projection over the same frame —
+    // the SAME subtree by construction, executed in batch mode
+    val batch = Dsir.weightsOf(Dsir.scoreDocs(
+        docs.toDF("doc_id", "text"), art)).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    assert(streamed.keySet == batch.keySet)
+    assert(!streamed.contains(9002L), "null text must not emit a row")
+    streamed.foreach { case (id, row) =>
+      assert(row == batch(id), s"doc $id stream vs batch weight")
+    }
+    // the gate row itself agrees on the corpus slice (same artifact
+    // via the per-dir memo)
+    val gate = Dsir.c80DsirWeights(spark, sfDir).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    corpus.map(_._1).filter(streamed.contains).foreach { id =>
+      assert(streamed(id) == gate(id), s"doc $id stream vs c80 gate row")
+    }
+    // every word of 9001 hashes to a bucket outside the artifact:
+    // the shared coalesce scores it exactly 0 (the documented
+    // neutral fallback that lets one artifact serve new data)
+    val unseen = streamed(9001L)
+    assert(unseen(2) == 0L && unseen(3) == 0.0 && unseen(4) == false,
+      s"unseen-bucket doc must score exactly 0: $unseen")
   }
 
   test("d38 streaming containment hits fold to batch c81 over the straddling pairs") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.Dedup
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .as[(Long, String)].collect().toSeq
@@ -495,61 +461,54 @@ class StreamingSpec extends SparkSpec {
       (900001L, "pad1 pad2 pad3 pad4 pad5 " + quoted + " pad6 pad7"),
       (900002L, null.asInstanceOf[String]))
     val statics = StreamOps.containStatics(existing.toDF("doc_id", "text"))
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamContainment(
-        stream.toDF().toDF("doc_id", "text"), statics)
-      .writeStream.outputMode("append").format("memory").queryName("d38_sink").start()
-    try {
-      val (a, b) = incoming.splitAt(incoming.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      // fold: hit rows are per colliding fingerprint; every duplicate
-      // carries identical verified ratios, so the fold is a pure distinct
-      val streamed = spark.table("d38_sink")
-        .drop("fp").distinct().collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("ex_id")) ->
-          ((r.getAs[Long]("n_common"), r.getAs[Long]("n_in"),
-            r.getAs[Long]("ex_ns"), r.getAs[Double]("cont_in_r"),
-            r.getAs[Double]("cont_ex_r"), r.getAs[Boolean]("contained"))))
-        .toMap
-      // batch reference: c81's core over the UNION corpus, restricted to
-      // the straddling (incoming × existing) pairs, reoriented to
-      // (arrival, corpus) direction
-      val union = (existing ++ incoming).toDF("doc_id", "text")
-      val exIds = existing.map(_._1).toSet
-      val inIds = incoming.map(_._1).toSet
-      val batch = Dedup.containmentOn(union, Dedup.shingleRows(union))
-        .collect().flatMap { r =>
-          val (da, db) = (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))
-          val v = (r.getAs[Long]("n_common"), r.getAs[Long]("na"),
-            r.getAs[Long]("nb"), r.getAs[Double]("cont_a_in_b_r"),
-            r.getAs[Double]("cont_b_in_a_r"), r.getAs[Boolean]("contained"))
-          if (inIds(da) && exIds(db))
-            Some((da, db) -> v)
-          else if (inIds(db) && exIds(da))
-            Some((db, da) -> ((v._1, v._3, v._2, v._5, v._4, v._6)))
-          else None
-        }.toMap
-      assert(streamed.keySet == batch.keySet,
-        s"straddling candidate sets differ: stream-only=${streamed.keySet -- batch.keySet}, batch-only=${batch.keySet -- streamed.keySet}")
-      streamed.foreach { case (k, v) =>
-        assert(v == batch(k), s"pair $k stream vs batch containment")
-      }
-      assert(!streamed.keys.exists(_._1 == 900002L), "null text must not emit")
-      // the constructed doc-in-doc arrival must hit its quoted source
-      // with full corpus-side containment (every shingle of the quoted
-      // doc appears in the arrival — plus the boundary shingles)
-      val hit = streamed.collectFirst {
-        case ((900001L, ex), v) if ex == existing.head._1 => v }
-      assert(hit.nonEmpty, "doc-in-doc arrival must collide with its source")
-      assert(hit.get._5 == 1.0 && hit.get._6,
-        s"quoted source must be fully contained: ${hit.get}")
-    } finally q.stop()
+    val sink = drainStream(incoming) { s =>
+      StreamOps.streamContainment(s.toDF("doc_id", "text"), statics)
+    }
+    // fold: hit rows are per colliding fingerprint; every duplicate
+    // carries identical verified ratios, so the fold is a pure distinct
+    val streamed = sink
+      .drop("fp").distinct().collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("ex_id")) ->
+        ((r.getAs[Long]("n_common"), r.getAs[Long]("n_in"),
+          r.getAs[Long]("ex_ns"), r.getAs[Double]("cont_in_r"),
+          r.getAs[Double]("cont_ex_r"), r.getAs[Boolean]("contained"))))
+      .toMap
+    // batch reference: c81's core over the UNION corpus, restricted to
+    // the straddling (incoming × existing) pairs, reoriented to
+    // (arrival, corpus) direction
+    val union = (existing ++ incoming).toDF("doc_id", "text")
+    val exIds = existing.map(_._1).toSet
+    val inIds = incoming.map(_._1).toSet
+    val batch = Dedup.containmentOn(union, Dedup.shingleRows(union))
+      .collect().flatMap { r =>
+        val (da, db) = (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))
+        val v = (r.getAs[Long]("n_common"), r.getAs[Long]("na"),
+          r.getAs[Long]("nb"), r.getAs[Double]("cont_a_in_b_r"),
+          r.getAs[Double]("cont_b_in_a_r"), r.getAs[Boolean]("contained"))
+        if (inIds(da) && exIds(db))
+          Some((da, db) -> v)
+        else if (inIds(db) && exIds(da))
+          Some((db, da) -> ((v._1, v._3, v._2, v._5, v._4, v._6)))
+        else None
+      }.toMap
+    assert(streamed.keySet == batch.keySet,
+      s"straddling candidate sets differ: stream-only=${streamed.keySet -- batch.keySet}, batch-only=${batch.keySet -- streamed.keySet}")
+    streamed.foreach { case (k, v) =>
+      assert(v == batch(k), s"pair $k stream vs batch containment")
+    }
+    assert(!streamed.keys.exists(_._1 == 900002L), "null text must not emit")
+    // the constructed doc-in-doc arrival must hit its quoted source
+    // with full corpus-side containment (every shingle of the quoted
+    // doc appears in the arrival — plus the boundary shingles)
+    val hit = streamed.collectFirst {
+      case ((900001L, ex), v) if ex == existing.head._1 => v }
+    assert(hit.nonEmpty, "doc-in-doc arrival must collide with its source")
+    assert(hit.get._5 == 1.0 && hit.get._6,
+      s"quoted source must be fully contained: ${hit.get}")
   }
 
   test("d39 streaming ANN query hits fold to the batch index serve") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.Similarity
     val embs = Tables.embeddings(spark, sfDir)
     val candRows = embs.filter(col("vec_id") >= 5)
@@ -569,47 +528,41 @@ class StreamingSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect().toSeq
     val nprobe = 2
-    val stream = MemoryStream[(Long, Array[Float])]
-    val q = StreamOps.streamAnnScore(
-        stream.toDF().toDF("vec_id", "embedding"), candStatic, cbSeq, nprobe)
-      .writeStream.outputMode("append").format("memory").queryName("d39_sink").start()
-    try {
-      val (a, b) = queries.splitAt(2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val hits = spark.table("d39_sink").collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cell"),
-          r.getAs[Long]("neighbor_id"), r.getAs[Double]("adc_r")))
-      // the batch serve from the SAME artifacts
-      val want = Similarity.queryVectorIndex(
-          embs.filter(col("vec_id") < 5), cb, codes, k = 5, nprobe = nprobe)
-        .collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rnk"),
-          r.getAs[Long]("neighbor_id"), r.getAs[Double]("adc_r")))
-      // 1. every batch result row exists among the hits with the same score
-      val hitSet = hits.map(h => (h._1, h._3) -> h._4).toMap
-      want.foreach { case (qid, _, nid, adc) =>
-        assert(hitSet.get((qid, nid)).contains(adc),
-          s"batch row ($qid, $nid, $adc) missing from stream hits")
-      }
-      // 2. the downstream top-k fold reproduces the batch ranking
-      val folded = hits.groupBy(_._1).flatMap { case (qid, hs) =>
-        hs.toSeq.sortBy(h => (-h._4, h._3)).take(5).zipWithIndex
-          .map { case (h, i) => (qid, i + 1L, h._3, h._4) }
-      }.toSet
-      assert(folded == want.toSet,
-        s"fold diverges: fold-only=${folded -- want.toSet}, batch-only=${want.toSet -- folded}")
-      // 3. hit volume = the probed cells' candidate counts (cell-sized
-      // emission, never the corpus)
-      val cellSizes = candStatic.groupBy("cell").count().collect()
-        .map(r => r.getAs[Number]("cell").longValue() -> r.getAs[Long]("count")).toMap
-      hits.groupBy(_._1).foreach { case (qid, hs) =>
-        val probed = hs.map(_._2).distinct
-        assert(probed.length <= nprobe, s"query $qid probed ${probed.length} cells")
-        assert(hs.length == probed.map(cellSizes).sum,
-          s"query $qid hit volume != probed cell sizes")
-      }
-    } finally q.stop()
+    val sink = drainStream(queries) { s =>
+      StreamOps.streamAnnScore(s.toDF("vec_id", "embedding"), candStatic, cbSeq, nprobe)
+    }
+    val hits = sink.collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cell"),
+        r.getAs[Long]("neighbor_id"), r.getAs[Double]("adc_r")))
+    // the batch serve from the SAME artifacts
+    val want = Similarity.queryVectorIndex(
+        embs.filter(col("vec_id") < 5), cb, codes, k = 5, nprobe = nprobe)
+      .collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rnk"),
+        r.getAs[Long]("neighbor_id"), r.getAs[Double]("adc_r")))
+    // 1. every batch result row exists among the hits with the same score
+    val hitSet = hits.map(h => (h._1, h._3) -> h._4).toMap
+    want.foreach { case (qid, _, nid, adc) =>
+      assert(hitSet.get((qid, nid)).contains(adc),
+        s"batch row ($qid, $nid, $adc) missing from stream hits")
+    }
+    // 2. the downstream top-k fold reproduces the batch ranking
+    val folded = hits.groupBy(_._1).flatMap { case (qid, hs) =>
+      hs.toSeq.sortBy(h => (-h._4, h._3)).take(5).zipWithIndex
+        .map { case (h, i) => (qid, i + 1L, h._3, h._4) }
+    }.toSet
+    assert(folded == want.toSet,
+      s"fold diverges: fold-only=${folded -- want.toSet}, batch-only=${want.toSet -- folded}")
+    // 3. hit volume = the probed cells' candidate counts (cell-sized
+    // emission, never the corpus)
+    val cellSizes = candStatic.groupBy("cell").count().collect()
+      .map(r => r.getAs[Number]("cell").longValue() -> r.getAs[Long]("count")).toMap
+    hits.groupBy(_._1).foreach { case (qid, hs) =>
+      val probed = hs.map(_._2).distinct
+      assert(probed.length <= nprobe, s"query $qid probed ${probed.length} cells")
+      assert(hs.length == probed.map(cellSizes).sum,
+        s"query $qid hit volume != probed cell sizes")
+    }
   }
 
   test("d40 streaming as-of seals on the watermark and equals batch b14 on the full replay") {
@@ -761,7 +714,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.{MediaRecord, Multimodal}
     val records = Multimodal.mediaTable(spark, sfDir).collect().toSeq
     val stream = MemoryStream[MediaRecord]
-    val q = StreamOps.streamMediaCard(stream.toDS())
+    val q = Multimodal.cardFold(Multimodal.decodeDs(stream.toDS()))
       .writeStream.outputMode("complete").format("memory")
       .queryName("d42_sink").start()
     def card(): Map[String, Seq[Any]] =
@@ -785,7 +738,6 @@ class StreamingSpec extends SparkSpec {
 
   test("d43 streaming phash routing folds to the corpus-index hamming matches") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.{MediaRecord, Multimodal}
     // the at-rest index: the batch c88 frame, materialized once
     val index = spark.read.parquet(Multimodal.phashIndexTablePath(spark, sfDir))
@@ -799,36 +751,31 @@ class StreamingSpec extends SparkSpec {
         Multimodal.pgmPayload(id))) ++
       baseIds.map(id => MediaRecord(id + 6000000L, "png",
         Multimodal.pngTranscode(id, Multimodal.pgmPayload(id))))
-    val stream = MemoryStream[MediaRecord]
-    val q = StreamOps.streamPhashRoute(stream.toDS(), index)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d43_sink").start()
-    try {
-      stream.addData(arrivals); q.processAllAvailable()
-      // fold the raw per-segment hits (d26's rule) and compare to the
-      // driver-side brute hamming scan of the whole index
-      val got = spark.table("d43_sink").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("corpus_doc"),
-          r.getAs[Long]("hamming"))).toSet
-      val want = (for {
-        a <- arrivals
-        ph = Multimodal.phashOf(a.doc_id, a.media_type, a.payload)
-        (cd, cph) <- corpus
-        ham = java.lang.Long.bitCount(ph ^ cph).toLong if ham <= 3
-      } yield (a.doc_id, cd, ham)).toSet
-      assert(got == want, s"stream-only=${got -- want}, brute-only=${want -- got}")
-      // every arrival's own corpus twin is found at hamming 0
-      baseIds.foreach { id =>
-        assert(got.contains((id + 5000000L, id, 0L)), s"PGM twin of $id missed")
-        assert(got.contains((id + 6000000L, id, 0L)), s"PNG twin of $id missed")
-      }
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamPhashRoute(s, index)
+    }
+    // fold the raw per-segment hits (d26's rule) and compare to the
+    // driver-side brute hamming scan of the whole index
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("corpus_doc"),
+        r.getAs[Long]("hamming"))).toSet
+    val want = (for {
+      a <- arrivals
+      ph = Multimodal.phashOf(a.doc_id, a.media_type, a.payload)
+      (cd, cph) <- corpus
+      ham = java.lang.Long.bitCount(ph ^ cph).toLong if ham <= 3
+    } yield (a.doc_id, cd, ham)).toSet
+    assert(got == want, s"stream-only=${got -- want}, brute-only=${want -- got}")
+    // every arrival's own corpus twin is found at hamming 0
+    baseIds.foreach { id =>
+      assert(got.contains((id + 5000000L, id, 0L)), s"PGM twin of $id missed")
+      assert(got.contains((id + 6000000L, id, 0L)), s"PNG twin of $id missed")
+    }
   }
 
   test("d49 streaming media cluster inheritance: arrivals inherit their " +
       "near-dups' frozen clusters, once per pair") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.{MediaRecord, Multimodal}
     val index = spark.read.parquet(Multimodal.phashIndexTablePath(spark, sfDir))
     val labels = spark.read.parquet(Multimodal.mediaLabelTablePath(spark, sfDir))
@@ -841,43 +788,38 @@ class StreamingSpec extends SparkSpec {
     val baseIds = Seq(0L, 3L, 12L, 33L)
     val arrivals = baseIds.map(id =>
       MediaRecord(id + 5000000L, "image", Multimodal.pgmPayload(id)))
-    val stream = MemoryStream[MediaRecord]
-    val q = StreamOps.streamMediaClusterAssign(stream.toDS(), index, labels)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d49_sink").start()
-    try {
-      stream.addData(arrivals); q.processAllAvailable()
-      val got = spark.table("d49_sink").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("corpus_doc"),
-          r.getAs[Long]("hamming"), r.getAs[Long]("cluster_id"))).toSeq
-      // EXACTLY once per (arrival, near-dup) pair — the canonical-band
-      // emission is the stateless dedup
-      assert(got.size == got.distinct.size, "duplicate pair rows")
-      val want = (for {
-        a <- arrivals
-        ph = Multimodal.phashOf(a.doc_id, a.media_type, a.payload)
-        (cd, cph) <- corpus
-        ham = java.lang.Long.bitCount(ph ^ cph).toLong if ham <= 3
-      } yield (a.doc_id, cd, ham,
-        math.min(lbl.getOrElse(cd, cd), cd))).toSet
-      assert(got.toSet == want,
-        s"stream-only=${(got.toSet -- want).take(4)}, " +
-          s"brute-only=${(want -- got.toSet).take(4)}")
-      // each replayed corpus image inherits ITS OWN c102 cluster:
-      // the min inherited label across its hits equals the gate row's
-      baseIds.foreach { id =>
-        val inherited = got.filter(_._1 == id + 5000000L).map(_._4)
-        assert(inherited.nonEmpty && inherited.min == c102(id),
-          s"arrival of $id inherited ${inherited.sorted.take(3)}, " +
-            s"c102 says ${c102(id)}")
-      }
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamMediaClusterAssign(s, index, labels)
+    }
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("corpus_doc"),
+        r.getAs[Long]("hamming"), r.getAs[Long]("cluster_id"))).toSeq
+    // EXACTLY once per (arrival, near-dup) pair — the canonical-band
+    // emission is the stateless dedup
+    assert(got.size == got.distinct.size, "duplicate pair rows")
+    val want = (for {
+      a <- arrivals
+      ph = Multimodal.phashOf(a.doc_id, a.media_type, a.payload)
+      (cd, cph) <- corpus
+      ham = java.lang.Long.bitCount(ph ^ cph).toLong if ham <= 3
+    } yield (a.doc_id, cd, ham,
+      math.min(lbl.getOrElse(cd, cd), cd))).toSet
+    assert(got.toSet == want,
+      s"stream-only=${(got.toSet -- want).take(4)}, " +
+        s"brute-only=${(want -- got.toSet).take(4)}")
+    // each replayed corpus image inherits ITS OWN c102 cluster:
+    // the min inherited label across its hits equals the gate row's
+    baseIds.foreach { id =>
+      val inherited = got.filter(_._1 == id + 5000000L).map(_._4)
+      assert(inherited.nonEmpty && inherited.min == c102(id),
+        s"arrival of $id inherited ${inherited.sorted.take(3)}, " +
+          s"c102 says ${c102(id)}")
+    }
     ()
   }
 
   test("d51 streaming recipe routing equals the batch c111 rows; unknown source reads null") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.TextOps
     val plan = TextOps.recipePlanOf(spark, sfDir)
     val c111 = TextOps.c111RecipeSample(spark, sfDir).collect()
@@ -888,29 +830,23 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id", "source", "text").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     val arrivals = docs :+ ((99999999L, "src-not-in-plan", "some fresh text"))
-    val stream = MemoryStream[(Long, String, String)]
-    val q = StreamOps.streamRecipeRoute(
-        stream.toDS().toDF("doc_id", "source", "text"), plan)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d51_sink").start()
-    try {
-      stream.addData(arrivals); q.processAllAvailable()
-      val got = spark.table("d51_sink").collect()
-        .map(r => r.getLong(0) ->
-          Option(r.get(2)).map(_.asInstanceOf[Long])).toMap
-      replayIds.foreach(id =>
-        assert(got(id).contains(c111(id)),
-          s"arrival $id read ${got(id)}, c111 says ${c111(id)}"))
-      assert(got(99999999L).isEmpty,
-        "a source outside the plan must read null (new material)")
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      TextOps.recipeCopies(s.toDF("doc_id", "source", "text"), plan)
+    }
+    val got = sink.collect()
+      .map(r => r.getLong(0) ->
+        Option(r.get(2)).map(_.asInstanceOf[Long])).toMap
+    replayIds.foreach(id =>
+      assert(got(id).contains(c111(id)),
+        s"arrival $id read ${got(id)}, c111 says ${c111(id)}"))
+    assert(got(99999999L).isEmpty,
+      "a source outside the plan must read null (new material)")
     ()
   }
 
   test("d50 streaming joint verdict: replays inherit BOTH frozen clusters; " +
       "fresh material reads null") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.{Dedup, JointRecord, Multimodal}
     val docs = Tables.documents(spark, sfDir)
     val textIdx = Dedup.textClusterIndexOf(
@@ -933,46 +869,41 @@ class StreamingSpec extends SparkSpec {
         Multimodal.pgmPayload(id))) :+
       JointRecord(99999999L, "zqxv unseen gibberish wopr", "image",
         Multimodal.pgmPayload(freshPayloadId))
-    val stream = MemoryStream[JointRecord]
-    val q = StreamOps.streamJointVerdict(stream.toDS(), textIdx, mediaIdx)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d50_sink").start()
-    try {
-      stream.addData(arrivals); q.processAllAvailable()
-      val got = spark.table("d50_sink").collect()
-        .map(r => r.getLong(0) -> (Option(r.get(1)).map(_.asInstanceOf[Long]),
-          Option(r.get(2)).map(_.asInstanceOf[Long]),
-          r.getBoolean(3), r.getBoolean(4), r.getBoolean(5))).toMap
-      assert(got.size == arrivals.size, "one verdict row per arrival")
-      // every replay inherits EXACTLY its c107 cluster pair — the
-      // serving twin and the gate row answer with one voice
-      baseIds.foreach { id =>
-        val (tc, mc) = c107(id)
-        val v = got(id + 7000000L)
-        assert(v == ((Some(tc), Some(mc), true, true, true)),
-          s"replay of $id read $v, c107 says ($tc, $mc)")
-      }
-      // the fresh arrival: unseen text reads null / false; the media
-      // verdict equals a driver probe of the same index (no assumption
-      // about hash collisions — the index decides)
-      val freshHash = Multimodal.phashOf(99999999L, "image",
-        Multimodal.pgmPayload(freshPayloadId))
-      val idxMap = mediaIdx.collect()
-        .map(r => r.getAs[Long]("phash") -> r.getAs[Long]("cluster_id")).toMap
-      val wantMc = idxMap.get(freshHash)
-      val fresh = got(99999999L)
-      assert(fresh._1.isEmpty && !fresh._3, s"fresh text must read null: $fresh")
-      assert(fresh._2 == wantMc && fresh._4 == wantMc.isDefined &&
-        fresh._5 == (wantMc.isDefined || false),
-        s"fresh media verdict $fresh vs index probe $wantMc")
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamJointVerdict(s, textIdx, mediaIdx)
+    }
+    val got = sink.collect()
+      .map(r => r.getLong(0) -> (Option(r.get(1)).map(_.asInstanceOf[Long]),
+        Option(r.get(2)).map(_.asInstanceOf[Long]),
+        r.getBoolean(3), r.getBoolean(4), r.getBoolean(5))).toMap
+    assert(got.size == arrivals.size, "one verdict row per arrival")
+    // every replay inherits EXACTLY its c107 cluster pair — the
+    // serving twin and the gate row answer with one voice
+    baseIds.foreach { id =>
+      val (tc, mc) = c107(id)
+      val v = got(id + 7000000L)
+      assert(v == ((Some(tc), Some(mc), true, true, true)),
+        s"replay of $id read $v, c107 says ($tc, $mc)")
+    }
+    // the fresh arrival: unseen text reads null / false; the media
+    // verdict equals a driver probe of the same index (no assumption
+    // about hash collisions — the index decides)
+    val freshHash = Multimodal.phashOf(99999999L, "image",
+      Multimodal.pgmPayload(freshPayloadId))
+    val idxMap = mediaIdx.collect()
+      .map(r => r.getAs[Long]("phash") -> r.getAs[Long]("cluster_id")).toMap
+    val wantMc = idxMap.get(freshHash)
+    val fresh = got(99999999L)
+    assert(fresh._1.isEmpty && !fresh._3, s"fresh text must read null: $fresh")
+    assert(fresh._2 == wantMc && fresh._4 == wantMc.isDefined &&
+      fresh._5 == (wantMc.isDefined || false),
+      s"fresh media verdict $fresh vs index probe $wantMc")
     ()
   }
 
   test("d53 streaming AUDIO cluster inheritance: the d49 machinery over the " +
       "audio index inherits c104's frozen clusters") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.{MediaRecord, Multimodal}
     val index = spark.read.parquet(Multimodal.audioHashTablePath(spark, sfDir))
     val labels = spark.read.parquet(Multimodal.audioLabelTablePath(spark, sfDir))
@@ -985,80 +916,66 @@ class StreamingSpec extends SparkSpec {
     val baseIds = Seq(1L, 4L, 13L, 34L) // audio docs: doc_id % 3 = 1
     val arrivals = baseIds.map(id =>
       MediaRecord(id + 5000000L, "audio", Multimodal.wavPayload(id)))
-    val stream = MemoryStream[MediaRecord]
-    val q = StreamOps.streamMediaClusterAssign(stream.toDS(), index, labels)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d53_sink").start()
-    try {
-      stream.addData(arrivals); q.processAllAvailable()
-      val got = spark.table("d53_sink").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("corpus_doc"),
-          r.getAs[Long]("hamming"), r.getAs[Long]("cluster_id"))).toSeq
-      assert(got.size == got.distinct.size, "duplicate pair rows")
-      val want = (for {
-        a <- arrivals
-        ph = Multimodal.phashOf(a.doc_id, a.media_type, a.payload)
-        (cd, cph) <- corpus
-        ham = java.lang.Long.bitCount(ph ^ cph).toLong if ham <= 3
-      } yield (a.doc_id, cd, ham,
-        math.min(lbl.getOrElse(cd, cd), cd))).toSet
-      assert(got.toSet == want,
-        s"stream-only=${(got.toSet -- want).take(4)}, " +
-          s"brute-only=${(want -- got.toSet).take(4)}")
-      // each replayed corpus audio inherits ITS OWN c104 cluster
-      baseIds.foreach { id =>
-        val inherited = got.filter(_._1 == id + 5000000L).map(_._4)
-        assert(inherited.nonEmpty && inherited.min == c104(id),
-          s"arrival of $id inherited ${inherited.sorted.take(3)}, " +
-            s"c104 says ${c104(id)}")
-      }
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamMediaClusterAssign(s, index, labels)
+    }
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("corpus_doc"),
+        r.getAs[Long]("hamming"), r.getAs[Long]("cluster_id"))).toSeq
+    assert(got.size == got.distinct.size, "duplicate pair rows")
+    val want = (for {
+      a <- arrivals
+      ph = Multimodal.phashOf(a.doc_id, a.media_type, a.payload)
+      (cd, cph) <- corpus
+      ham = java.lang.Long.bitCount(ph ^ cph).toLong if ham <= 3
+    } yield (a.doc_id, cd, ham,
+      math.min(lbl.getOrElse(cd, cd), cd))).toSet
+    assert(got.toSet == want,
+      s"stream-only=${(got.toSet -- want).take(4)}, " +
+        s"brute-only=${(want -- got.toSet).take(4)}")
+    // each replayed corpus audio inherits ITS OWN c104 cluster
+    baseIds.foreach { id =>
+      val inherited = got.filter(_._1 == id + 5000000L).map(_._4)
+      assert(inherited.nonEmpty && inherited.min == c104(id),
+        s"arrival of $id inherited ${inherited.sorted.take(3)}, " +
+          s"c104 says ${c104(id)}")
+    }
     ()
   }
 
   test("d54 streaming shard-digest contributions: any-partitioned replay " +
       "folds to EXACTLY the batch c112 manifest") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.TextOps
     val docs = Tables.documents(spark, sfDir)
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamShardDigest(
-        stream.toDS().toDF("doc_id", "text"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d54_sink").start()
-    try {
-      // replay the corpus in three microbatches, shuffled — the fold
-      // must not care about arrival order or batch boundaries
-      val shuffled = docs.sortBy(d => d._1 * 2654435761L % 1000)
-      shuffled.grouped(math.max(1, shuffled.length / 3)).foreach { b =>
-        stream.addData(b.toIndexedSeq); q.processAllAvailable()
-      }
-      val M = BigInt("2305843009213693951")
-      val folded = spark.table("d54_sink").collect()
-        .map(r => (r.getAs[String]("shard"), r.getAs[Long]("n_tokens"),
-          r.getAs[Long]("digest1"), r.getAs[Long]("digest2")))
-        .groupBy(_._1).view.mapValues { rows =>
-          (rows.size.toLong, rows.map(_._2).sum,
-            (rows.map(r => BigInt(r._3)).sum % M).toLong,
-            (rows.map(r => BigInt(r._4)).sum % M).toLong)
-        }.toMap
-      val want = TextOps.c112ShardManifest(spark, sfDir).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4))).toMap
-      assert(folded == want,
-        s"fold-only=${(folded.toSet -- want.toSet).take(3)}, " +
-          s"gate-only=${(want.toSet -- folded.toSet).take(3)}")
-    } finally q.stop()
-    ()
+    // replay the corpus shuffled — the fold must not care about arrival
+    // order or batch boundaries
+    val shuffled = docs.sortBy(d => d._1 * 2654435761L % 1000).toSeq
+    val sink = drainStream(shuffled) { s =>
+      StreamOps.streamShardDigest(s.toDF("doc_id", "text"))
+    }
+    val M = BigInt("2305843009213693951")
+    val folded = sink.collect()
+      .map(r => (r.getAs[String]("shard"), r.getAs[Long]("n_tokens"),
+        r.getAs[Long]("digest1"), r.getAs[Long]("digest2")))
+      .groupBy(_._1).view.mapValues { rows =>
+        (rows.size.toLong, rows.map(_._2).sum,
+          (rows.map(r => BigInt(r._3)).sum % M).toLong,
+          (rows.map(r => BigInt(r._4)).sum % M).toLong)
+      }.toMap
+    val want = TextOps.c112ShardManifest(spark, sfDir).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4))).toMap
+    assert(folded == want,
+      s"fold-only=${(folded.toSet -- want.toSet).take(3)}, " +
+        s"gate-only=${(want.toSet -- folded.toSet).take(3)}")
   }
 
   test("d52 streaming video cluster inheritance: replays inherit EXACTLY the " +
       "frozen c106 label; fresh material reads null") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.{MediaRecord, Multimodal}
     val index = Multimodal.videoClusterIndexOf(
       spark.read.parquet(Multimodal.videoFidTablePath(spark, sfDir)),
@@ -1072,41 +989,32 @@ class StreamingSpec extends SparkSpec {
     val arrivals = baseIds.map(id =>
       MediaRecord(id + 7000000L, "video", Multimodal.y4mPayload(id))) :+
       MediaRecord(99999999L, "video", Multimodal.y4mPayload(7777777L))
-    val stream = MemoryStream[MediaRecord]
-    val q = StreamOps.streamVideoClusterInherit(stream.toDS(), index)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d52_sink").start()
-    try {
-      stream.addData(arrivals); q.processAllAvailable()
-      val got = spark.table("d52_sink").collect()
-        .map(r => r.getLong(0) -> (Option(r.get(1)).map(_.asInstanceOf[Long]),
-          r.getBoolean(2))).toMap
-      assert(got.size == arrivals.size, "one verdict row per arrival")
-      // every replay inherits EXACTLY its source's c106 cluster — the
-      // serving twin and the gate row answer with one voice
-      baseIds.foreach { id =>
-        assert(got(id + 7000000L) == ((Some(c106(id)), true)),
-          s"replay of $id read ${got(id + 7000000L)}, c106 says ${c106(id)}")
+    val got = drainStream(arrivals) { s =>
+      StreamOps.streamVideoClusterInherit(s, index)
+    }.collect()
+      .map(r => r.getLong(0) -> (Option(r.get(1)).map(_.asInstanceOf[Long]),
+        r.getBoolean(2))).toMap
+    assert(got.size == arrivals.size, "one verdict row per arrival")
+    // every replay inherits EXACTLY its source's c106 cluster — the
+    // serving twin and the gate row answer with one voice
+    baseIds.foreach { id =>
+      assert(got(id + 7000000L) == ((Some(c106(id)), true)),
+        s"replay of $id read ${got(id + 7000000L)}, c106 says ${c106(id)}")
+    }
+    assert(got(99999999L) == ((None, false)),
+      s"fresh material must read null: ${got(99999999L)}")
+    // a non-video arrival refuses loudly (the d44 dispatch rule)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drainStream(Seq(MediaRecord(1L, "image", Multimodal.pgmPayload(0L)))) { s =>
+        StreamOps.streamVideoClusterInherit(s, index)
       }
-      assert(got(99999999L) == ((None, false)),
-        s"fresh material must read null: ${got(99999999L)}")
-      // a non-video arrival refuses loudly (the d44 dispatch rule)
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        val s2 = MemoryStream[MediaRecord]
-        val q2 = StreamOps.streamVideoClusterInherit(s2.toDS(), index)
-          .writeStream.outputMode("append").format("memory")
-          .queryName("d52_bad").start()
-        try { s2.addData(MediaRecord(1L, "image", Multimodal.pgmPayload(0L)))
-          q2.processAllAvailable() } finally q2.stop()
-      }
-      assert(e.getMessage != null)
-    } finally q.stop()
+    }
+    assert(e.getMessage != null)
     ()
   }
 
   test("d43 routes AUDIO arrivals against an audio phash index through the same dispatch") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.{MediaRecord, Multimodal}
     // the audio index: the batch c90 frame (same (doc_id, phash) shape —
     // the router is modality-agnostic once the hash dispatch agrees)
@@ -1116,30 +1024,25 @@ class StreamingSpec extends SparkSpec {
     val baseIds = Seq(1L, 4L, 13L, 34L) // audio docs (doc_id % 3 == 1)
     val arrivals = baseIds.map(id =>
       MediaRecord(id + 7000000L, "audio", Multimodal.wavPayload(id)))
-    val stream = MemoryStream[MediaRecord]
-    val q = StreamOps.streamPhashRoute(stream.toDS(), index)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d43_audio_sink").start()
-    try {
-      stream.addData(arrivals); q.processAllAvailable()
-      val got = spark.table("d43_audio_sink").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("corpus_doc"),
-          r.getAs[Long]("hamming"))).toSet
-      val want = (for {
-        a <- arrivals
-        ph = Multimodal.audioPhashOf(a.doc_id, a.payload)
-        (cd, cph) <- corpus
-        ham = java.lang.Long.bitCount(ph ^ cph).toLong if ham <= 3
-      } yield (a.doc_id, cd, ham)).toSet
-      assert(got == want, s"stream-only=${got -- want}, brute-only=${want -- got}")
-      baseIds.foreach(id => assert(got.contains((id + 7000000L, id, 0L)),
-        s"audio twin of $id missed"))
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamPhashRoute(s, index)
+    }
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("corpus_doc"),
+        r.getAs[Long]("hamming"))).toSet
+    val want = (for {
+      a <- arrivals
+      ph = Multimodal.audioPhashOf(a.doc_id, a.payload)
+      (cd, cph) <- corpus
+      ham = java.lang.Long.bitCount(ph ^ cph).toLong if ham <= 3
+    } yield (a.doc_id, cd, ham)).toSet
+    assert(got == want, s"stream-only=${got -- want}, brute-only=${want -- got}")
+    baseIds.foreach(id => assert(got.contains((id + 7000000L, id, 0L)),
+      s"audio twin of $id missed"))
   }
 
   test("d44 routes video arrivals frame-by-frame against the c91 frame index") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.{MediaRecord, Multimodal}
     val index = Multimodal.c91VideoPhash(spark, sfDir)
     val corpus = index.collect()
@@ -1148,45 +1051,40 @@ class StreamingSpec extends SparkSpec {
     val baseIds = Seq(2L, 5L, 14L, 35L) // video docs (doc_id % 3 == 2)
     val arrivals = baseIds.map(id =>
       MediaRecord(id + 8000000L, "video", Multimodal.y4mPayload(id)))
-    val stream = MemoryStream[MediaRecord]
-    val q = StreamOps.streamVideoPhashRoute(stream.toDS(), index)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d44_sink").start()
-    try {
-      stream.addData(arrivals); q.processAllAvailable()
-      val got = spark.table("d44_sink").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("frame_idx"),
-          r.getAs[Long]("corpus_doc"), r.getAs[Long]("corpus_frame"),
-          r.getAs[Long]("hamming"))).toSet
-      val want = (for {
-        a <- arrivals
-        (f, ph) <- Multimodal.videoFramePhashes(a.doc_id, a.payload)
-        (cd, cf, cph) <- corpus
-        ham = java.lang.Long.bitCount(ph ^ cph).toLong if ham <= 3
-      } yield (a.doc_id, f, cd, cf, ham)).toSet
-      assert(got == want, s"stream-only=${(got -- want).take(5)}, " +
-        s"brute-only=${(want -- got).take(5)}")
-      // every arrival's own corpus twin collides frame-for-frame at 0
-      baseIds.foreach { id =>
-        val nFrames = 3 + id % 6
-        (0L until nFrames).foreach(f =>
-          assert(got.contains((id + 8000000L, f, id, f, 0L)),
-            s"frame twin ($id, $f) missed"))
-      }
-      // non-video arrivals refuse loudly (the dispatch contract)
-      val e = intercept[Exception] {
-        StreamOps.streamVideoPhashRoute(
-          spark.createDataset(Seq(MediaRecord(1L, "image",
-            Multimodal.pgmPayload(1L)))).as[MediaRecord], index)
-          .collect()
-      }
-      assert(e.getMessage != null)
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamVideoPhashRoute(s, index)
+    }
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("frame_idx"),
+        r.getAs[Long]("corpus_doc"), r.getAs[Long]("corpus_frame"),
+        r.getAs[Long]("hamming"))).toSet
+    val want = (for {
+      a <- arrivals
+      (f, ph) <- Multimodal.videoFramePhashes(a.doc_id, a.payload)
+      (cd, cf, cph) <- corpus
+      ham = java.lang.Long.bitCount(ph ^ cph).toLong if ham <= 3
+    } yield (a.doc_id, f, cd, cf, ham)).toSet
+    assert(got == want, s"stream-only=${(got -- want).take(5)}, " +
+      s"brute-only=${(want -- got).take(5)}")
+    // every arrival's own corpus twin collides frame-for-frame at 0
+    baseIds.foreach { id =>
+      val nFrames = 3 + id % 6
+      (0L until nFrames).foreach(f =>
+        assert(got.contains((id + 8000000L, f, id, f, 0L)),
+          s"frame twin ($id, $f) missed"))
+    }
+    // non-video arrivals refuse loudly (the dispatch contract)
+    val e = intercept[Exception] {
+      StreamOps.streamVideoPhashRoute(
+        spark.createDataset(Seq(MediaRecord(1L, "image",
+          Multimodal.pgmPayload(1L)))).as[MediaRecord], index)
+        .collect()
+    }
+    assert(e.getMessage != null)
   }
 
   test("d11 streaming ingest hits fold to c37's exact statuses and dup_of") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .as[(Long, String)].collect().toSeq
     // c37's split: existing %7!=3; incoming = %7==3 plus the rekeyed recrawls
@@ -1197,17 +1095,12 @@ class StreamingSpec extends SparkSpec {
     val existing = existingRows.toDF("doc_id", "text")
     // statics built once and persisted — the contract callers follow so
     // the corpus subtree isn't re-executed per micro-batch
-    val statics = graft.streaming.StreamOps.ingestStatics(existing)
+    val statics = StreamOps.ingestStatics(existing)
     statics.exact.persist(); statics.bands.persist()
-    val stream = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.streamIngest(
-      stream.toDF().toDF("doc_id", "text"), statics)
-      .writeStream.outputMode("append").format("memory").queryName("d11_sink").start()
     try {
-      val (a, b) = incoming.splitAt(incoming.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val hits = spark.table("d11_sink").collect()
+      val hits = drainStream(incoming) { s =>
+        StreamOps.streamIngest(s.toDF("doc_id", "text"), statics)
+      }.collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("kind"), r.getAs[Long]("ex_id")))
       val byDoc = hits.groupBy(_._1)
       val statuses = incoming.map { case (id, _) =>
@@ -1228,14 +1121,12 @@ class StreamingSpec extends SparkSpec {
       assert(statuses == batch,
         "streaming hit fold must equal c37's statuses and dup_of exactly")
     } finally {
-      q.stop()
       statics.exact.unpersist(); statics.bands.unpersist()
     }
   }
 
   test("d8 streaming decontamination hits aggregate to c24's batch n_shared") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val sh8 = spark.read.parquet(
       graft.operators.Dedup.shingleTablePath(spark, sfDir, n = 8))
     val evalShingles = sh8.filter(col("doc_id") % 50 === 0)
@@ -1245,129 +1136,99 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
       .filter(col("doc_id") % 50 =!= 0)
       .select("doc_id", "text").as[(Long, String)].collect().toSeq
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamDecontam(
-      stream.toDF().toDF("doc_id", "text"), evalShingles, bytes)
-      .writeStream.outputMode("append").format("memory").queryName("d8_sink").start()
-    try {
-      // two batches: the operator is stateless, so the split is arbitrary
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d8_sink")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
-      val batch = graft.operators.TextOps.c24Decontam(spark, sfDir)
-        .filter(col("contaminated")).select("doc_id", "n_shared")
-      assert(batch.count() > 0, "corpus must contain contaminated docs")
-      assert(streamed.exceptAll(batch).count() == 0 &&
-        batch.exceptAll(streamed).count() == 0,
-        "streaming hit counts must equal batch n_shared for contaminated docs")
-    } finally q.stop()
+    // two batches: the operator is stateless, so the split is arbitrary
+    val sink = drainStream(docs) { s =>
+      StreamOps.streamDecontam(s.toDF("doc_id", "text"), evalShingles, bytes)
+    }
+    val streamed = sink
+      .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
+    val batch = graft.operators.TextOps.c24Decontam(spark, sfDir)
+      .filter(col("contaminated")).select("doc_id", "n_shared")
+    assert(batch.count() > 0, "corpus must contain contaminated docs")
+    assert(streamed.exceptAll(batch).count() == 0 &&
+      batch.exceptAll(streamed).count() == 0,
+      "streaming hit counts must equal batch n_shared for contaminated docs")
   }
 
   test("d9 streaming cell assignment equals the batch argmax, ties included") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val cb = graft.operators.Similarity.labelCodebook(spark, sfDir).collect()
       .map(r => (r.getInt(0).toLong, r.getSeq[Double](1).toArray)).toSeq
     val vecs = Tables.embeddings(spark, sfDir)
       .select("vec_id", "embedding")
       .as[(Long, Seq[Float])].collect().toSeq
-    val stream = MemoryStream[(Long, Seq[Float])]
-    val q = StreamOps.streamAssignCells(
-      stream.toDF().toDF("vec_id", "embedding"), cb)
-      .writeStream.outputMode("append").format("memory").queryName("d9_sink").start()
-    try {
-      val (a, b) = vecs.splitAt(vecs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d9_sink").select("vec_id", "cell")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val e = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val batch = graft.operators.Similarity
-        .assignCells(e, graft.operators.Similarity.labelCodebook(spark, sfDir))
-        .filter(col("arn") === 1)
-        .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("cell").toLong).toMap
-      assert(streamed.size == vecs.size)
-      assert(streamed == batch, "stream routing must equal the batch argmax")
-    } finally q.stop()
+    val sink = drainStream(vecs) { s =>
+      StreamOps.streamAssignCells(s.toDF("vec_id", "embedding"), cb)
+    }
+    val streamed = sink.select("vec_id", "cell")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val e = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val batch = graft.operators.Similarity
+      .assignCells(e, graft.operators.Similarity.labelCodebook(spark, sfDir))
+      .filter(col("arn") === 1)
+      .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("cell").toLong).toMap
+    assert(streamed.size == vecs.size)
+    assert(streamed == batch, "stream routing must equal the batch argmax")
   }
 
   test("d15 streaming embedding moments equal c45's exact integer sums after the last trigger") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val vecs = Tables.embeddings(spark, sfDir)
       .select("vec_id", "embedding")
       .as[(Long, Seq[Float])].collect().toSeq
-    val stream = MemoryStream[(Long, Seq[Float])]
-    val q = StreamOps.streamEmbedMoments(
-      stream.toDF().toDF("vec_id", "embedding"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("d15_sink").start()
-    try {
-      val (a, b) = vecs.splitAt(vecs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d15_sink").collect()
-        .map(r => r.getAs[Int]("pos") ->
-          ((r.getAs[Long]("n"), r.getAs[Long]("sum_v4"),
-            r.getAs[java.math.BigDecimal]("sum_sq4").longValueExact(),
-            r.getAs[Long]("min_v4"), r.getAs[Long]("max_v4")))).toMap
-      val batch = graft.operators.Similarity.c45EmbedMoments(spark, sfDir)
-        .collect()
-        .map(r => r.getAs[Int]("pos") ->
-          ((r.getAs[Long]("n"), r.getAs[Long]("sum_v4"),
-            r.getAs[String]("sum_sq4").toLong,
-            r.getAs[Long]("min_v4"), r.getAs[Long]("max_v4")))).toMap
-      assert(streamed.size == batch.size)
-      assert(streamed == batch,
-        "running integer moments must equal the batch aggregation exactly")
-    } finally q.stop()
+    val sink = drainStream(vecs, "complete") { s =>
+      graft.operators.Similarity.fixedPointMoments(s.toDF("vec_id", "embedding"))
+    }
+    val streamed = sink.collect()
+      .map(r => r.getAs[Int]("pos") ->
+        ((r.getAs[Long]("n"), r.getAs[Long]("sum_v4"),
+          r.getAs[java.math.BigDecimal]("sum_sq4").longValueExact(),
+          r.getAs[Long]("min_v4"), r.getAs[Long]("max_v4")))).toMap
+    val batch = graft.operators.Similarity.c45EmbedMoments(spark, sfDir)
+      .collect()
+      .map(r => r.getAs[Int]("pos") ->
+        ((r.getAs[Long]("n"), r.getAs[Long]("sum_v4"),
+          r.getAs[String]("sum_sq4").toLong,
+          r.getAs[Long]("min_v4"), r.getAs[Long]("max_v4")))).toMap
+    assert(streamed.size == batch.size)
+    assert(streamed == batch,
+      "running integer moments must equal the batch aggregation exactly")
   }
 
   test("d17 streaming pair counts equal c44's weighted totals; top-k cut matches") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .as[(Long, String)].collect().toSeq
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamPairCounts(
-      stream.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("d17_sink").start()
-    try {
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d17_sink").collect()
-        .map(r => (r.getAs[String]("a"), r.getAs[String]("b")) ->
-          r.getAs[Long]("cnt")).toMap
-      // occurrence-direct counting ≡ the batch distinct-word weighting:
-      // brute-force totals from raw text
-      val pc = scala.collection.mutable.Map.empty[(String, String), Long]
-      docs.foreach { case (_, t) =>
-        t.toLowerCase.split(" ", -1).foreach { w =>
-          (0 until w.length - 1).foreach { i =>
-            val k = (w.substring(i, i + 1), w.substring(i + 1, i + 2))
-            pc(k) = pc.getOrElse(k, 0L) + 1L
-          }
+    val sink = drainStream(docs, "complete") { s =>
+      StreamOps.streamPairCounts(s.toDF("doc_id", "text"))
+    }
+    val streamed = sink.collect()
+      .map(r => (r.getAs[String]("a"), r.getAs[String]("b")) ->
+        r.getAs[Long]("cnt")).toMap
+    // occurrence-direct counting ≡ the batch distinct-word weighting:
+    // brute-force totals from raw text
+    val pc = scala.collection.mutable.Map.empty[(String, String), Long]
+    docs.foreach { case (_, t) =>
+      t.toLowerCase.split(" ", -1).foreach { w =>
+        (0 until w.length - 1).foreach { i =>
+          val k = (w.substring(i, i + 1), w.substring(i + 1, i + 2))
+          pc(k) = pc.getOrElse(k, 0L) + 1L
         }
       }
-      assert(streamed == pc.toMap,
-        "streaming occurrence counts must equal the weighted batch totals")
-      // and the batch top-k cut derives from this sink
-      val cut = streamed.toSeq.sortBy { case ((x, y), n) => (-n, x, y) }.take(50)
-      val batch = graft.operators.TextOps.c44BpePairs(spark, sfDir).collect()
-        .map(r => ((r.getAs[String]("a"), r.getAs[String]("b")),
-          r.getAs[Long]("cnt"))).toSeq
-      assert(cut == batch, "top-50 over the sink must equal c44's cut")
-    } finally q.stop()
+    }
+    assert(streamed == pc.toMap,
+      "streaming occurrence counts must equal the weighted batch totals")
+    // and the batch top-k cut derives from this sink
+    val cut = streamed.toSeq.sortBy { case ((x, y), n) => (-n, x, y) }.take(50)
+    val batch = graft.operators.TextOps.c44BpePairs(spark, sfDir).collect()
+      .map(r => ((r.getAs[String]("a"), r.getAs[String]("b")),
+        r.getAs[Long]("cnt"))).toSeq
+    assert(cut == batch, "top-50 over the sink must equal c44's cut")
   }
 
   test("d18 streaming release audit equals batch c49 on the non-removed statuses") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // the same derived old snapshot c49's harness builds, materialized
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val oldDir = java.nio.file.Files
@@ -1380,31 +1241,23 @@ class StreamingSpec extends SparkSpec {
         .select((-col("doc_id") - 1).as("doc_id"), col("text")))
       .write.mode("overwrite").parquet(oldDir)
     val newDocs = docs.as[(Long, String)].collect().toSeq
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamReleaseAudit(
-      stream.toDF().toDF("doc_id", "text"), spark.read.parquet(oldDir))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d18_sink").start()
-    try {
-      val (a, b) = newDocs.splitAt(newDocs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d18_sink").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("status")).toMap
-      val batch = graft.operators.TextOps.c49SnapshotDiff(spark, sfDir)
-        .collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("status"))
-        .filter(_._2 != "removed").toMap // absence cannot arrive on a stream
-      assert(streamed.size == batch.size)
-      assert(streamed == batch,
-        "stream classification must equal batch c49 minus removed")
-      assert(Set("added", "changed", "unchanged").subsetOf(streamed.values.toSet))
-    } finally q.stop()
+    val sink = drainStream(newDocs) { s =>
+      StreamOps.streamReleaseAudit(s.toDF("doc_id", "text"), spark.read.parquet(oldDir))
+    }
+    val streamed = sink.collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("status")).toMap
+    val batch = graft.operators.TextOps.c49SnapshotDiff(spark, sfDir)
+      .collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("status"))
+      .filter(_._2 != "removed").toMap // absence cannot arrive on a stream
+    assert(streamed.size == batch.size)
+    assert(streamed == batch,
+      "stream classification must equal batch c49 minus removed")
+    assert(Set("added", "changed", "unchanged").subsetOf(streamed.values.toSet))
   }
 
   test("d16 streaming whitening equals batch c47 under the same moments artifact") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // the shipped artifact: full-precision (mean, sd) from the exact
     // integer sums — NOT the 6-dp-rounded card values
     val moments = graft.operators.Similarity
@@ -1420,29 +1273,21 @@ class StreamingSpec extends SparkSpec {
     val vecs = Tables.embeddings(spark, sfDir)
       .select("vec_id", "embedding")
       .as[(Long, Seq[Float])].collect().toSeq
-    val stream = MemoryStream[(Long, Seq[Float])]
-    val q = StreamOps.streamWhiten(
-      stream.toDF().toDF("vec_id", "embedding"), moments)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d16_sink").start()
-    try {
-      val (a, b) = vecs.splitAt(vecs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d16_sink").collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("pos")) ->
-          r.getAs[Double]("z_r")).toMap
-      val batch = graft.operators.Similarity.c47Whiten(spark, sfDir).collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("pos")) ->
-          r.getAs[Double]("z_r")).toMap
-      assert(streamed.size == batch.size)
-      assert(streamed == batch, "stream whitening must equal batch c47")
-    } finally q.stop()
+    val sink = drainStream(vecs) { s =>
+      StreamOps.streamWhiten(s.toDF("vec_id", "embedding"), moments)
+    }
+    val streamed = sink.collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("pos")) ->
+        r.getAs[Double]("z_r")).toMap
+    val batch = graft.operators.Similarity.c47Whiten(spark, sfDir).collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("pos")) ->
+        r.getAs[Double]("z_r")).toMap
+    assert(streamed.size == batch.size)
+    assert(streamed == batch, "stream whitening must equal batch c47")
   }
 
   test("d14 streaming semantic routing: hits re-derive brute-force; no self-match on re-ingest") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.functions.NearestCells.round6
     val cb = graft.operators.Similarity.labelCodebook(spark, sfDir).collect()
       .map(r => (r.getInt(0).toLong, r.getSeq[Double](1).toArray)).toSeq
@@ -1461,46 +1306,40 @@ class StreamingSpec extends SparkSpec {
     // not match itself) plus 50 byte-identical copies under fresh ids
     // (must hit their originals at cosine 1.0)
     val streamRows = vecs ++ vecs.take(50).map { case (id, e) => (id + 100000L, e) }
-    val stream = MemoryStream[(Long, Seq[Float])]
-    val q = StreamOps.streamSemanticRoute(
-      stream.toDF().toDF("vec_id", "embedding"), corpus, cb)
-      .writeStream.outputMode("append").format("memory").queryName("d14_sink").start()
-    try {
-      val (a, b) = streamRows.splitAt(streamRows.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val hits = spark.table("d14_sink").collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("ex_id")) ->
-          ((r.getAs[Long]("cell"), r.getAs[Double]("cent_r"),
-            r.getAs[Double]("cosine_r")))).toMap
-      def cos(x: Array[Double], y: Array[Double]): Double = {
-        var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-        while (i < x.length) {
-          dot += x(i) * y(i); nx += x(i) * x(i); ny += y(i) * y(i); i += 1
+    val sink = drainStream(streamRows) { s =>
+      StreamOps.streamSemanticRoute(s.toDF("vec_id", "embedding"), corpus, cb)
+    }
+    val hits = sink.collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("ex_id")) ->
+        ((r.getAs[Long]("cell"), r.getAs[Double]("cent_r"),
+          r.getAs[Double]("cosine_r")))).toMap
+    def cos(x: Array[Double], y: Array[Double]): Double = {
+      var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
+      while (i < x.length) {
+        dot += x(i) * y(i); nx += x(i) * x(i); ny += y(i) * y(i); i += 1
+      }
+      dot / (math.sqrt(nx) * math.sqrt(ny))
+    }
+    // brute-force: stream-side argmax over the artifact, then score
+    // against the static cell's members only
+    val expected = streamRows.flatMap { case (id, emb) =>
+      val v = emb.map(_.toDouble).toArray
+      val (score, cell) = cb.map { case (c, cv) => (round6(cos(v, cv)), c) }
+        .minBy { case (s, c) => (-s, c) }
+      members.filter { case (exId, _, exCell) => exCell == cell && exId != id }
+        .flatMap { case (exId, ev, _) =>
+          val cr = round6(cos(v, ev))
+          if (cr >= 0.35) Some((id, exId) -> ((cell, score, cr))) else None
         }
-        dot / (math.sqrt(nx) * math.sqrt(ny))
-      }
-      // brute-force: stream-side argmax over the artifact, then score
-      // against the static cell's members only
-      val expected = streamRows.flatMap { case (id, emb) =>
-        val v = emb.map(_.toDouble).toArray
-        val (score, cell) = cb.map { case (c, cv) => (round6(cos(v, cv)), c) }
-          .minBy { case (s, c) => (-s, c) }
-        members.filter { case (exId, _, exCell) => exCell == cell && exId != id }
-          .flatMap { case (exId, ev, _) =>
-            val cr = round6(cos(v, ev))
-            if (cr >= 0.35) Some((id, exId) -> ((cell, score, cr))) else None
-          }
-      }.toMap
-      assert(hits == expected, "stream hits must equal the brute-force derivation")
-      // the fresh copies must rediscover their originals at cosine 1.0
-      vecs.take(50).foreach { case (id, _) =>
-        assert(hits.get((id + 100000L, id)).exists(_._3 == 1.0),
-          s"copy of vec $id must hit its original at 1.0")
-      }
-      // and nothing ever matches itself
-      assert(hits.keys.forall { case (a2, b2) => a2 != b2 })
-    } finally q.stop()
+    }.toMap
+    assert(hits == expected, "stream hits must equal the brute-force derivation")
+    // the fresh copies must rediscover their originals at cosine 1.0
+    vecs.take(50).foreach { case (id, _) =>
+      assert(hits.get((id + 100000L, id)).exists(_._3 == 1.0),
+        s"copy of vec $id must hit its original at 1.0")
+    }
+    // and nothing ever matches itself
+    assert(hits.keys.forall { case (a2, b2) => a2 != b2 })
   }
 
   test("d3 streaming sessions agree with c13 batch sessionization") {
@@ -1594,7 +1433,6 @@ class StreamingSpec extends SparkSpec {
 
   test("d20 streaming JPEG codec equals batch c53 row-for-row") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val M = graft.operators.Multimodal
     // c53's subset (doc_id % 3 == 1) as arriving image records, plus
     // audio/video rows that must be dropped BEFORE the codec loop
@@ -1604,29 +1442,22 @@ class StreamingSpec extends SparkSpec {
       graft.operators.MediaRecord(id, "image", M.pgmPayload(id))) ++
       Seq(graft.operators.MediaRecord(2L, "audio", M.wavPayload(2L)),
         graft.operators.MediaRecord(5L, "video", M.y4mPayload(5L)))
-    val stream = MemoryStream[graft.operators.MediaRecord]
-    val q = StreamOps.streamJpegCodec(stream.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d20_sink").start()
-    try {
-      val (a, b) = media.splitAt(media.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d20_sink").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      val batch = M.c53ImageCodec(spark, sfDir)
-        .collect().map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      assert(streamed.keySet == batch.keySet,
-        "stream must emit exactly the image-typed doc ids")
-      streamed.foreach { case (id, row) =>
-        assert(row == batch(id), s"doc $id stream vs batch jpeg stats")
-      }
-    } finally q.stop()
+    val sink = drainStream(media) { s =>
+      StreamOps.streamJpegCodec(s)
+    }
+    val streamed = sink.collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    val batch = M.c53ImageCodec(spark, sfDir)
+      .collect().map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    assert(streamed.keySet == batch.keySet,
+      "stream must emit exactly the image-typed doc ids")
+    streamed.foreach { case (id, row) =>
+      assert(row == batch(id), s"doc $id stream vs batch jpeg stats")
+    }
   }
 
   test("d21 streaming BPE tokenize equals driver-side apply of the same artifact") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val merges = graft.operators.TextOps.trainBpe(spark, sfDir)
     assert(merges.nonEmpty)
     def bruteMergePass(syms: Vector[String], m: (String, String)): Vector[String] = {
@@ -1647,55 +1478,40 @@ class StreamingSpec extends SparkSpec {
         merges.foldLeft(w.map(_.toString).toVector)(bruteMergePass).length).sum
       id -> Seq(ws.length.toLong, nTok.toLong)
     }.toMap
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamBpeTokenize(
-        stream.toDS().toDF("doc_id", "text"), merges)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d21_sink").start()
-    try {
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d21_sink").collect()
-        .map(r => r.getAs[Long]("doc_id") ->
-          Seq(r.getAs[Long]("n_words"), r.getAs[Long]("n_tokens"))).toMap
-      assert(streamed.keySet == expected.keySet)
-      streamed.foreach { case (id, row) =>
-        assert(row == expected(id), s"doc $id stream vs brute-force tokenize")
-      }
-    } finally q.stop()
+    val sink = drainStream(docs) { s =>
+      TextOps.bpeTokenizeDocs(s.toDF("doc_id", "text"), merges).drop("tokens")
+    }
+    val streamed = sink.collect()
+      .map(r => r.getAs[Long]("doc_id") ->
+        Seq(r.getAs[Long]("n_words"), r.getAs[Long]("n_tokens"))).toMap
+    assert(streamed.keySet == expected.keySet)
+    streamed.foreach { case (id, row) =>
+      assert(row == expected(id), s"doc $id stream vs brute-force tokenize")
+    }
   }
 
   test("d19 streaming image codec equals batch c51 row-for-row") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // the full mixed-modality media table: audio/video rows must be
     // dropped BEFORE the codec loop, image rows must round-trip
     val media = graft.operators.Multimodal.mediaTable(spark, sfDir)
       .collect().toSeq
-    val stream = MemoryStream[graft.operators.MediaRecord]
-    val q = StreamOps.streamImageCodec(stream.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d19_sink").start()
-    try {
-      val (a, b) = media.splitAt(media.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d19_sink").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      val batch = graft.operators.Multimodal.c51ImageCodec(spark, sfDir)
-        .collect().map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      assert(streamed.keySet == batch.keySet,
-        "stream must emit exactly the image-typed doc ids")
-      streamed.foreach { case (id, row) =>
-        assert(row == batch(id), s"doc $id stream vs batch codec stats")
-      }
-    } finally q.stop()
+    val sink = drainStream(media) { s =>
+      StreamOps.streamImageCodec(s)
+    }
+    val streamed = sink.collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    val batch = graft.operators.Multimodal.c51ImageCodec(spark, sfDir)
+      .collect().map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    assert(streamed.keySet == batch.keySet,
+      "stream must emit exactly the image-typed doc ids")
+    streamed.foreach { case (id, row) =>
+      assert(row == batch(id), s"doc $id stream vs batch codec stats")
+    }
   }
 
   test("d22 streaming BM25 scores match batch c55 under the same stats artifact") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.TextOps
     // the artifact: c55's corpus statistics, trained at rest
     val docsDf = Tables.documents(spark, sfDir)
@@ -1710,62 +1526,48 @@ class StreamingSpec extends SparkSpec {
     val docs = docsDf.select("doc_id", "text").as[(Long, String)].collect().toSeq ++
       Seq((9001L, "no match terms here at all"), // all-zero tf: score exactly 0
         (9002L, null)) // null text drops in both forms
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamBm25(stream.toDF().toDF("doc_id", "text"), stats)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d22_sink").start()
-    try {
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d22_sink").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      assert(!streamed.contains(9002L), "null text must not emit a score row")
-      assert(streamed(9001L).last == 0.0, "all-OOV doc scores exactly 0")
-      // batch c55's top-20 rows must appear in the stream output with
-      // IDENTICAL columns (same arithmetic, same rounding, same sum order)
-      val batch = TextOps.c55Bm25(spark, sfDir).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      assert(batch.nonEmpty)
-      batch.foreach { case (id, row) =>
-        assert(streamed(id) == row, s"doc $id stream vs batch BM25 columns")
-      }
-      // and every streamed corpus doc is present exactly once
-      assert(streamed.size == docs.length - 1)
-    } finally q.stop()
+    val sink = drainStream(docs) { s =>
+      StreamOps.streamBm25(s.toDF("doc_id", "text"), stats)
+    }
+    val streamed = sink.collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    assert(!streamed.contains(9002L), "null text must not emit a score row")
+    assert(streamed(9001L).last == 0.0, "all-OOV doc scores exactly 0")
+    // batch c55's top-20 rows must appear in the stream output with
+    // IDENTICAL columns (same arithmetic, same rounding, same sum order)
+    val batch = TextOps.c55Bm25(spark, sfDir).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    assert(batch.nonEmpty)
+    batch.foreach { case (id, row) =>
+      assert(streamed(id) == row, s"doc $id stream vs batch BM25 columns")
+    }
+    // and every streamed corpus doc is present exactly once
+    assert(streamed.size == docs.length - 1)
   }
 
   test("d23 streaming winnowing equals batch c57 row-for-row") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .as[(Long, String)].collect().toSeq :+ ((9001L, "too short"))
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamWinnow(stream.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d23_sink").start()
-    try {
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val streamed = spark.table("d23_sink").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      val batch = graft.operators.TextOps.c57Winnow(spark, sfDir).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      assert(streamed.keySet == batch.keySet + 9001L)
-      batch.foreach { case (id, row) =>
-        assert(streamed(id) == row, s"doc $id stream vs batch winnow")
-      }
-      // the sub-k doc degrades to the empty fingerprint set, never an error
-      val short = streamed(9001L)
-      assert(short(1) == 2L && short(2) == 0L && short(4) == 0L,
-        s"sub-k doc must yield zero grams and fingerprints: $short")
-    } finally q.stop()
+    val sink = drainStream(docs) { s =>
+      TextOps.winnowProjection(s.toDF("doc_id", "text"))
+    }
+    val streamed = sink.collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    val batch = graft.operators.TextOps.c57Winnow(spark, sfDir).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    assert(streamed.keySet == batch.keySet + 9001L)
+    batch.foreach { case (id, row) =>
+      assert(streamed(id) == row, s"doc $id stream vs batch winnow")
+    }
+    // the sub-k doc degrades to the empty fingerprint set, never an error
+    val short = streamed(9001L)
+    assert(short(1) == 2L && short(2) == 0L && short(4) == 0L,
+      s"sub-k doc must yield zero grams and fingerprints: $short")
   }
 
   test("d24 streaming LM transitions equal the batch pairs-model join") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.TextOps
     val docsDf = Tables.documents(spark, sfDir).select("doc_id", "text")
     val model = TextOps.lmModel(TextOps.docPairs(docsDf)).cache()
@@ -1773,34 +1575,26 @@ class StreamingSpec extends SparkSpec {
       val docs = docsDf.as[(Long, String)].collect().toSeq ++
         Seq((9001L, "zzz qqq"), // out-of-model pair: dropped by the inner join
           (9002L, null))
-      val stream = MemoryStream[(Long, String)]
-      val q = StreamOps.streamLmTransitions(
-          stream.toDF().toDF("doc_id", "text"), model)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("d24_sink").start()
-      try {
-        val (a, b) = docs.splitAt(docs.length / 2)
-        stream.addData(a); q.processAllAvailable()
-        stream.addData(b); q.processAllAvailable()
-        val streamed = spark.table("d24_sink").collect()
-          .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("a"),
-            r.getAs[String]("b"), r.getAs[Long]("ppb"))).sorted.toSeq
-        val batch = TextOps.docPairs(docsDf).join(broadcast(model), Seq("a", "b"))
-          .withColumn("ppb", expr("(c_pair * 1000000000L) div c_prefix"))
-          .select("doc_id", "a", "b", "ppb").collect()
-          .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("a"),
-            r.getAs[String]("b"), r.getAs[Long]("ppb"))).sorted.toSeq
-        assert(streamed == batch,
-          "stream transition multiset must equal the batch join exactly")
-        assert(!streamed.exists(_._1 == 9001L), "out-of-model pairs drop")
-        assert(!streamed.exists(_._1 == 9002L), "null text drops")
-      } finally q.stop()
+      val sink = drainStream(docs) { s =>
+        StreamOps.streamLmTransitions(s.toDF("doc_id", "text"), model)
+      }
+      val streamed = sink.collect()
+        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("a"),
+          r.getAs[String]("b"), r.getAs[Long]("ppb"))).sorted.toSeq
+      val batch = TextOps.docPairs(docsDf).join(broadcast(model), Seq("a", "b"))
+        .withColumn("ppb", expr("(c_pair * 1000000000L) div c_prefix"))
+        .select("doc_id", "a", "b", "ppb").collect()
+        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("a"),
+          r.getAs[String]("b"), r.getAs[Long]("ppb"))).sorted.toSeq
+      assert(streamed == batch,
+        "stream transition multiset must equal the batch join exactly")
+      assert(!streamed.exists(_._1 == 9001L), "out-of-model pairs drop")
+      assert(!streamed.exists(_._1 == 9002L), "null text drops")
     } finally { model.unpersist(); () }
   }
 
   test("d25 streaming fingerprint match finds planted near-dups against the at-rest index") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.TextOps
     val corpus = Tables.documents(spark, sfDir).select("doc_id", "text")
     // the at-rest index, materialized (d11's rule: the static subtree
@@ -1817,40 +1611,34 @@ class StreamingSpec extends SparkSpec {
       (80001L, "totally new prefix " + base0), // shares doc 0's runs
       (80002L, (0 until 40).map(i => s"fresh$i").mkString(" ")),
       (80003L, null.asInstanceOf[String]))
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamWinnowMatch(
-        stream.toDF().toDF("doc_id", "text"), index)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d25_sink").start()
-    try {
-      stream.addData(arrivals); q.processAllAvailable()
-      val got = spark.table("d25_sink").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("matched_doc"),
-          r.getAs[String]("fp")))
-      assert(got.exists(m => m._1 == 80001L && m._2 == 0L),
-        "planted near-dup must match its source through the index")
-      assert(!got.exists(_._1 == 80002L), "disjoint-vocab doc must not match")
-      assert(!got.exists(_._1 == 80003L), "null text drops")
-      // every reported match is REAL: the fp is in both docs' selected sets
-      val batchIdx = index.collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("fp"))).toSet
-      val arrivalFps = TextOps.winnowIndex(
-          arrivals.toDF("doc_id", "text")).collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("fp"))).toSet
-      got.foreach { case (id, m, fp) =>
-        assert(arrivalFps((id, fp)) && batchIdx((m, fp)),
-          s"match ($id, $m, $fp) not grounded in both fingerprint sets")
-      }
-      // and the match set is exactly the batch join's prediction
-      val expected = arrivalFps.flatMap { case (id, fp) =>
-        batchIdx.collect { case (m, f) if f == fp && m != id => (id, m, fp) } }
-      assert(got.toSet == expected)
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamWinnowMatch(s.toDF("doc_id", "text"), index)
+    }
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("matched_doc"),
+        r.getAs[String]("fp")))
+    assert(got.exists(m => m._1 == 80001L && m._2 == 0L),
+      "planted near-dup must match its source through the index")
+    assert(!got.exists(_._1 == 80002L), "disjoint-vocab doc must not match")
+    assert(!got.exists(_._1 == 80003L), "null text drops")
+    // every reported match is REAL: the fp is in both docs' selected sets
+    val batchIdx = index.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("fp"))).toSet
+    val arrivalFps = TextOps.winnowIndex(
+        arrivals.toDF("doc_id", "text")).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("fp"))).toSet
+    got.foreach { case (id, m, fp) =>
+      assert(arrivalFps((id, fp)) && batchIdx((m, fp)),
+        s"match ($id, $m, $fp) not grounded in both fingerprint sets")
+    }
+    // and the match set is exactly the batch join's prediction
+    val expected = arrivalFps.flatMap { case (id, fp) =>
+      batchIdx.collect { case (m, f) if f == fp && m != id => (id, m, fp) } }
+    assert(got.toSet == expected)
   }
 
   test("d26 streaming dup-start hits equal the batch probe; islands merge to c62 spans") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.Dedup
     val corpus = Tables.documents(spark, sfDir).select("doc_id", "text")
     // the at-rest index, materialized (d11's rule)
@@ -1868,45 +1656,37 @@ class StreamingSpec extends SparkSpec {
       (90002L, (0 until 40).map(i => s"new$i").mkString(" ")),
       (90003L, s"$selfRun filler $selfRun"),
       (90004L, null.asInstanceOf[String]))
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamDupStarts(
-        stream.toDF().toDF("doc_id", "text"), index)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d26_sink").start()
-    try {
-      val (a, b) = arrivals.splitAt(2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val got = spark.table("d26_sink").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("i"))).toSet
-      // exactly the batch probe of the same arrivals against the index
-      val batch = Dedup.positionalShingles(
-          arrivals.toDF("doc_id", "text"), 5)
-        .join(index, "sh").select("doc_id", "i").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("i"))).toSet
-      assert(got == batch, "stream hit set must equal the batch probe")
-      assert(got.exists(_._1 == 90001L), "planted corpus run must hit")
-      assert(!got.exists(_._1 == 90002L), "disjoint vocab must not hit")
-      assert(!got.exists(_._1 == 90003L),
-        "self-repeating arrival is new data at the at-rest semantic")
-      assert(!got.exists(_._1 == 90004L), "null text drops")
-      // the downstream fold is exactly c62's island merge: one maximal
-      // span covering doc 0's embedded text, starting at token 2
-      val spans = Dedup.mergeStartIslands(
-          spark.table("d26_sink").select("doc_id", "i"), 5)
-        .filter(col("doc_id") === 90001L).collect()
-      val len0 = base0.split(" ").length
-      assert(spans.length == 1 &&
-        spans.head.getAs[Long]("span_start") == 2L &&
-        spans.head.getAs[Long]("span_end") == (2L + len0 - 1) &&
-        spans.head.getAs[Long]("span_tokens") == len0.toLong,
-        s"hits must merge to the single embedded-run span, got ${spans.toSeq}")
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamDupStarts(s.toDF("doc_id", "text"), index)
+    }
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("i"))).toSet
+    // exactly the batch probe of the same arrivals against the index
+    val batch = Dedup.positionalShingles(
+        arrivals.toDF("doc_id", "text"), 5)
+      .join(index, "sh").select("doc_id", "i").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("i"))).toSet
+    assert(got == batch, "stream hit set must equal the batch probe")
+    assert(got.exists(_._1 == 90001L), "planted corpus run must hit")
+    assert(!got.exists(_._1 == 90002L), "disjoint vocab must not hit")
+    assert(!got.exists(_._1 == 90003L),
+      "self-repeating arrival is new data at the at-rest semantic")
+    assert(!got.exists(_._1 == 90004L), "null text drops")
+    // the downstream fold is exactly c62's island merge: one maximal
+    // span covering doc 0's embedded text, starting at token 2
+    val spans = Dedup.mergeStartIslands(
+        sink.select("doc_id", "i"), 5)
+      .filter(col("doc_id") === 90001L).collect()
+    val len0 = base0.split(" ").length
+    assert(spans.length == 1 &&
+      spans.head.getAs[Long]("span_start") == 2L &&
+      spans.head.getAs[Long]("span_end") == (2L + len0 - 1) &&
+      spans.head.getAs[Long]("span_tokens") == len0.toLong,
+      s"hits must merge to the single embedded-run span, got ${spans.toSeq}")
   }
 
   test("d27 streaming span hits: tagged probes equal batch; fold confirms runs, kills mirages") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.Dedup
     val corpus = Tables.documents(spark, sfDir).select("doc_id", "text")
     val idx5Dir = java.nio.file.Files
@@ -1933,51 +1713,44 @@ class StreamingSpec extends SparkSpec {
       (80001L, s"fresh0 fresh1 ${longToks.mkString(" ")}"),
       (80002L, mirage),
       (80003L, (0 until 30).map(i => s"zzz$i").mkString(" ")))
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamSpanHits(
-        stream.toDF().toDF("doc_id", "text"), idx5, idx20)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d27_sink").start()
-    try {
-      stream.addData(arrivals.take(1)); q.processAllAvailable()
-      stream.addData(arrivals.drop(1)); q.processAllAvailable()
-      val got = spark.table("d27_sink").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("i"),
-          r.getAs[Boolean]("strong"))).toSet
-      // tagged hit set ≡ the two batch probes of the same arrivals
-      val arrDf = arrivals.toDF("doc_id", "text")
-      def batchProbe(idx: org.apache.spark.sql.DataFrame, w: Int, s: Boolean) =
-        Dedup.positionalShingles(arrDf, w).join(idx, "sh")
-          .select("doc_id", "i").collect()
-          .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("i"), s)).toSet
-      assert(got == batchProbe(idx5, 5, s = false) ++ batchProbe(idx20, 20, s = true),
-        "stream hit set must equal the batch probes")
-      // the downstream fold: embedded run survives confirmation with the
-      // exact evidence count, the stitched mirage dies, noise never hits
-      val folded = Dedup.spansMinOfHits(spark.table("d27_sink")).collect()
-      val lenL = longToks.length.toLong
-      assert(folded.exists(r => r.getAs[Long]("doc_id") == 80001L &&
-        r.getAs[Long]("span_start") == 2L &&
-        r.getAs[Long]("span_tokens") >= lenL &&
-        r.getAs[Long]("n_exact") >= lenL - 19L),
-        s"embedded run must confirm, got ${folded.toSeq}")
-      assert(!folded.exists(_.getAs[Long]("doc_id") == 80002L),
-        "stitched mirage candidate must be killed by 20-gram confirmation")
-      // ...and it WAS a candidate (the kill is the threshold working,
-      // not the mirage failing to chain)
-      val mirageCand = Dedup.mergeStartIslands(
-          spark.table("d27_sink").filter(!col("strong"))
-            .filter(col("doc_id") === 80002L).select("doc_id", "i"), 5)
-        .filter(col("span_tokens") >= 20)
-      assert(mirageCand.count() >= 1,
-        "mirage must chain into a >= 20-token candidate island")
-      assert(!got.exists(_._1 == 80003L), "disjoint vocab must not hit")
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamSpanHits(s.toDF("doc_id", "text"), idx5, idx20)
+    }
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("i"),
+        r.getAs[Boolean]("strong"))).toSet
+    // tagged hit set ≡ the two batch probes of the same arrivals
+    val arrDf = arrivals.toDF("doc_id", "text")
+    def batchProbe(idx: org.apache.spark.sql.DataFrame, w: Int, s: Boolean) =
+      Dedup.positionalShingles(arrDf, w).join(idx, "sh")
+        .select("doc_id", "i").collect()
+        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("i"), s)).toSet
+    assert(got == batchProbe(idx5, 5, s = false) ++ batchProbe(idx20, 20, s = true),
+      "stream hit set must equal the batch probes")
+    // the downstream fold: embedded run survives confirmation with the
+    // exact evidence count, the stitched mirage dies, noise never hits
+    val folded = Dedup.spansMinOfHits(sink).collect()
+    val lenL = longToks.length.toLong
+    assert(folded.exists(r => r.getAs[Long]("doc_id") == 80001L &&
+      r.getAs[Long]("span_start") == 2L &&
+      r.getAs[Long]("span_tokens") >= lenL &&
+      r.getAs[Long]("n_exact") >= lenL - 19L),
+      s"embedded run must confirm, got ${folded.toSeq}")
+    assert(!folded.exists(_.getAs[Long]("doc_id") == 80002L),
+      "stitched mirage candidate must be killed by 20-gram confirmation")
+    // ...and it WAS a candidate (the kill is the threshold working,
+    // not the mirage failing to chain)
+    val mirageCand = Dedup.mergeStartIslands(
+        sink.filter(!col("strong"))
+          .filter(col("doc_id") === 80002L).select("doc_id", "i"), 5)
+      .filter(col("span_tokens") >= 20)
+    assert(mirageCand.count() >= 1,
+      "mirage must chain into a >= 20-token candidate island")
+    assert(!got.exists(_._1 == 80003L), "disjoint vocab must not hit")
   }
 
   test("d28 streaming contamination probe: hits equal batch; fold equals c68") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.{Dedup, TextOps}
     // the at-rest corpus shingle index = the training side of c68's split
     val corpus = Tables.documents(spark, sfDir)
@@ -1995,49 +1768,40 @@ class StreamingSpec extends SparkSpec {
       (70001L, (0 until 40).map(i => s"probe$i").mkString(" ")),
       (70002L, "too short for one shingle"),
       (70003L, null.asInstanceOf[String]))
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamContamProbe(
-        stream.toDF().toDF("doc_id", "text"), index)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d28_sink").start()
-    try {
-      val (a, b) = arrivals.splitAt(arrivals.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val sink = spark.table("d28_sink")
-      val got = sink.collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("shingle"),
-          r.getAs[Long]("c_doc"))).toSet
-      // hit set ≡ the batch probe of the same arrivals
-      val arrDf = arrivals.toDF("doc_id", "text")
-      val batch = Dedup.shingleRows(arrDf.filter(col("text").isNotNull), 8)
-        .join(index.select(col("shingle"), col("doc_id").as("c_doc")), "shingle")
-        .collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("shingle"),
-          r.getAs[Long]("c_doc"))).toSet
-      assert(got == batch, "stream hit set must equal the batch probe")
-      assert(!got.exists(t => t._1 >= 70001L), "clean/short/null never hit")
-      // the downstream fold over (arrival totals, stream hits) is
-      // row-for-row c68 on the gate's eval items
-      val totals = Dedup.shingleRows(arrDf.filter(col("text").isNotNull), 8)
-        .groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-      val folded = TextOps.contamReportOfHits(totals,
-        sink.select("doc_id", "shingle", "c_doc"))
-      val evalIds = evalDocs.map(_._1).toSet
-      val gotRep = folded.filter(col("doc_id").isin(evalIds.toSeq: _*))
-        .collect().map(_.toSeq)
-      val want = TextOps.c68ContamReport(spark, sfDir).collect().map(_.toSeq)
-      assert(gotRep.toSeq == want.toSeq,
-        "fold over stream hits must equal the c68 gate report")
-      // the clean arrival folds to an explicit zero row, not an absence
-      val clean = folded.filter(col("doc_id") === 70001L).collect()
-      assert(clean.length == 1 && clean.head.getAs[Long]("n_hit_docs") == 0L)
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamContamProbe(s.toDF("doc_id", "text"), index)
+    }
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("shingle"),
+        r.getAs[Long]("c_doc"))).toSet
+    // hit set ≡ the batch probe of the same arrivals
+    val arrDf = arrivals.toDF("doc_id", "text")
+    val batch = Dedup.shingleRows(arrDf.filter(col("text").isNotNull), 8)
+      .join(index.select(col("shingle"), col("doc_id").as("c_doc")), "shingle")
+      .collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("shingle"),
+        r.getAs[Long]("c_doc"))).toSet
+    assert(got == batch, "stream hit set must equal the batch probe")
+    assert(!got.exists(t => t._1 >= 70001L), "clean/short/null never hit")
+    // the downstream fold over (arrival totals, stream hits) is
+    // row-for-row c68 on the gate's eval items
+    val totals = Dedup.shingleRows(arrDf.filter(col("text").isNotNull), 8)
+      .groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
+    val folded = TextOps.contamReportOfHits(totals,
+      sink.select("doc_id", "shingle", "c_doc"))
+    val evalIds = evalDocs.map(_._1).toSet
+    val gotRep = folded.filter(col("doc_id").isin(evalIds.toSeq: _*))
+      .collect().map(_.toSeq)
+    val want = TextOps.c68ContamReport(spark, sfDir).collect().map(_.toSeq)
+    assert(gotRep.toSeq == want.toSeq,
+      "fold over stream hits must equal the c68 gate report")
+    // the clean arrival folds to an explicit zero row, not an absence
+    val clean = folded.filter(col("doc_id") === 70001L).collect()
+    assert(clean.length == 1 && clean.head.getAs[Long]("n_hit_docs") == 0L)
   }
 
   test("d30 streaming full tokenization equals the at-rest CLI derivation per doc") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val merges = graft.operators.TextOps.trainBpe(spark, sfDir)
     // the batch twin IS the `Main tokenize` expression shape, derived
     // here through the REPLACE-CHAIN reference formulation so stream
@@ -2054,28 +1818,20 @@ class StreamingSpec extends SparkSpec {
         r.getSeq[String](2).length.toLong, r.getSeq[String](2).toVector))
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamTokenize(
-        stream.toDS().toDF("doc_id", "text"), merges)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d30_sink").start()
-    try {
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val got = spark.table("d30_sink").orderBy("doc_id").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_words"),
-          r.getAs[Long]("n_tokens"), r.getSeq[String](3).toVector))
-      assert(got.toSeq == want.toSeq,
-        "streamed token payloads must equal the at-rest derivation")
-      assert(got.exists(_._4.exists(_.length > 1)),
-        "the learned merges must fuse tokens in the stream too")
-    } finally q.stop()
+    val sink = drainStream(docs) { s =>
+      TextOps.bpeTokenizeDocs(s.toDF("doc_id", "text"), merges)
+    }
+    val got = sink.orderBy("doc_id").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_words"),
+        r.getAs[Long]("n_tokens"), r.getSeq[String](3).toVector))
+    assert(got.toSeq == want.toSeq,
+      "streamed token payloads must equal the at-rest derivation")
+    assert(got.exists(_._4.exists(_.length > 1)),
+      "the learned merges must fuse tokens in the stream too")
   }
 
   test("d29 streaming cluster routing: arrivals route to their c69 group") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.Dedup
     val routing = Dedup.spanClusterRoutingOf(spark, sfDir)
     // invariant the route relies on: sharing a shingle implies sharing a
@@ -2099,36 +1855,29 @@ class StreamingSpec extends SparkSpec {
       (60002L, (0 until 40).map(i => s"route$i").mkString(" ")),
       (60003L, "short"),
       (60004L, null.asInstanceOf[String]))
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamClusterRoute(
-        stream.toDF().toDF("doc_id", "text"), index)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d29_sink").start()
-    try {
-      stream.addData(arrivals.take(2)); q.processAllAvailable()
-      stream.addData(arrivals.drop(2)); q.processAllAvailable()
-      val got = spark.table("d29_sink").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("sh"),
-          r.getAs[Long]("cluster_id"))).toSet
-      // hit set ≡ the batch probe of the same arrivals
-      val batch = Dedup.positionalShingles(
-          arrivals.toDF("doc_id", "text"), 20)
-        .join(index, "sh")
-        .select("doc_id", "sh", "cluster_id").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("sh"),
-          r.getAs[Long]("cluster_id"))).toSet
-      assert(got == batch, "stream hit set must equal the batch probe")
-      val routed = got.filter(_._1 == 60001L).map(_._3)
-      assert(routed == Set(srcCluster),
-        s"embedded arrival must route to cluster $srcCluster, got $routed")
-      assert(!got.exists(t => t._1 >= 60002L),
-        "disjoint/short/null arrivals route nowhere")
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamClusterRoute(s.toDF("doc_id", "text"), index)
+    }
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("sh"),
+        r.getAs[Long]("cluster_id"))).toSet
+    // hit set ≡ the batch probe of the same arrivals
+    val batch = Dedup.positionalShingles(
+        arrivals.toDF("doc_id", "text"), 20)
+      .join(index, "sh")
+      .select("doc_id", "sh", "cluster_id").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("sh"),
+        r.getAs[Long]("cluster_id"))).toSet
+    assert(got == batch, "stream hit set must equal the batch probe")
+    val routed = got.filter(_._1 == 60001L).map(_._3)
+    assert(routed == Set(srcCluster),
+      s"embedded arrival must route to cluster $srcCluster, got $routed")
+    assert(!got.exists(t => t._1 >= 60002L),
+      "disjoint/short/null arrivals route nowhere")
   }
 
   test("d45 streaming soft-dedup weights: replays inherit 1/|cluster|, unseen docs weight 1.0") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.Dedup
     val idxDir = java.nio.file.Files
       .createTempDirectory("graft-d45-idx-").toString
@@ -2147,31 +1896,24 @@ class StreamingSpec extends SparkSpec {
       (70001L, srcText),                                  // replay → 1/|cluster|
       (70002L, "genuinely new material never seen before"), // unseen → 1.0
       (70003L, null.asInstanceOf[String]))                // null → filtered
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamSoftWeight(
-        stream.toDF().toDF("doc_id", "text"), index)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d45_sink").start()
-    try {
-      stream.addData(arrivals.take(1)); q.processAllAvailable()
-      stream.addData(arrivals.drop(1)); q.processAllAvailable()
-      val got = spark.table("d45_sink").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("weight_r"))).toMap
-      assert(got == Map(70001L -> srcW, 70002L -> 1.0),
-        s"expected replay at $srcW and unseen at 1.0, got $got")
-      // full-replay parity: the stream result ≡ the batch probe of the
-      // same arrivals through the same expression
-      val batch = StreamOps.streamSoftWeight(
-          arrivals.toDF("doc_id", "text"), index)
-        .collect().map(r => (r.getAs[Long]("doc_id"),
-          r.getAs[Double]("weight_r"))).toMap
-      assert(got == batch, "stream must equal the batch probe")
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamSoftWeight(s.toDF("doc_id", "text"), index)
+    }
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("weight_r"))).toMap
+    assert(got == Map(70001L -> srcW, 70002L -> 1.0),
+      s"expected replay at $srcW and unseen at 1.0, got $got")
+    // full-replay parity: the stream result ≡ the batch probe of the
+    // same arrivals through the same expression
+    val batch = StreamOps.streamSoftWeight(
+        arrivals.toDF("doc_id", "text"), index)
+      .collect().map(r => (r.getAs[Long]("doc_id"),
+        r.getAs[Double]("weight_r"))).toMap
+    assert(got == batch, "stream must equal the batch probe")
   }
 
   test("d46 streaming domain curation: row-local extraction + blocklist verdict, stream ≡ batch") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.Curation
     val arrivals = Seq(
       (80001L, "https://www.src3.example.com/en/article-1?ref=0"), // blocked
@@ -2181,47 +1923,40 @@ class StreamingSpec extends SparkSpec {
       (80005L, "https://src7.example.com"),          // path-less, blocked host
       (80006L, "HTTPS://WWW.Src13.example.com?q=1"), // shouty scheme/www, blocked
       (80007L, "not a url at all"))                  // garbage → '' pseudo-domain
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamOps.streamDomainFilter(
-        stream.toDF().toDF("doc_id", "url"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d46_sink").start()
-    try {
-      stream.addData(arrivals.take(2)); q.processAllAvailable()
-      stream.addData(arrivals.drop(2)); q.processAllAvailable()
-      val got = spark.table("d46_sink").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("domain"),
-          r.getAs[Boolean]("is_blocked"))).toSet
-      assert(got == Set(
-        (80001L, "src3.example.com", true),
-        (80002L, "src4.example.com", false),
-        (80003L, "news.example.org", false),
-        // a path-less or case-shifted URL must NOT escape the blocklist
-        (80005L, "src7.example.com", true),
-        (80006L, "src13.example.com", true),
-        (80007L, "", false)),
-        s"extraction/verdict diverged: $got")
-      // full-replay parity through the same expressions
-      val batch = StreamOps.streamDomainFilter(arrivals.toDF("doc_id", "url"))
-        .collect().map(r => (r.getAs[Long]("doc_id"),
-          r.getAs[String]("domain"), r.getAs[Boolean]("is_blocked"))).toSet
-      assert(got == batch, "stream must equal the batch extraction")
-      // the shared-subtree rule holds literally: the arrival-side domain
-      // equals the batch provenance derivation on the gate corpus
-      val prov = Curation.provenance(spark, sfDir)
-        .select("doc_id", "url").limit(3).collect()
-      prov.foreach { r =>
-        val b = StreamOps.streamDomainFilter(
-          Seq((r.getAs[Long]("doc_id"), r.getAs[String]("url")))
-            .toDF("doc_id", "url")).head()
-        assert(b.getAs[String]("domain").endsWith(".example.com"))
-      }
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      StreamOps.streamDomainFilter(s.toDF("doc_id", "url"))
+    }
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("domain"),
+        r.getAs[Boolean]("is_blocked"))).toSet
+    assert(got == Set(
+      (80001L, "src3.example.com", true),
+      (80002L, "src4.example.com", false),
+      (80003L, "news.example.org", false),
+      // a path-less or case-shifted URL must NOT escape the blocklist
+      (80005L, "src7.example.com", true),
+      (80006L, "src13.example.com", true),
+      (80007L, "", false)),
+      s"extraction/verdict diverged: $got")
+    // full-replay parity through the same expressions
+    val batch = StreamOps.streamDomainFilter(arrivals.toDF("doc_id", "url"))
+      .collect().map(r => (r.getAs[Long]("doc_id"),
+        r.getAs[String]("domain"), r.getAs[Boolean]("is_blocked"))).toSet
+    assert(got == batch, "stream must equal the batch extraction")
+    // the shared-subtree rule holds literally: the arrival-side domain
+    // equals the batch provenance derivation on the gate corpus
+    val prov = Curation.provenance(spark, sfDir)
+      .select("doc_id", "url").limit(3).collect()
+    prov.foreach { r =>
+      val b = StreamOps.streamDomainFilter(
+        Seq((r.getAs[Long]("doc_id"), r.getAs[String]("url")))
+          .toDF("doc_id", "url")).head()
+      assert(b.getAs[String]("domain").endsWith(".example.com"))
+    }
   }
 
   test("d31 streaming byte-level tokenize: stream ≡ batch, any byte sequence round-trips") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.functions.{ByteBpeAlphabet, ByteBpeFunctions}
     import graft.operators.TextOps
     val merges = TextOps.trainBpeBytes(spark, sfDir)
@@ -2235,45 +1970,38 @@ class StreamingSpec extends SparkSpec {
       70003L -> "double  space survives staged",
       70004L -> null.asInstanceOf[String])
     val arrivals = corpus ++ exotic
-    val batch = graft.streaming.StreamOps.streamTokenizeBytes(
-        arrivals.toDF("doc_id", "text"), merges)
+    val batch = TextOps.bpeTokenizeDocs(
+        arrivals.toDF("doc_id", "text"), merges, bytes = true)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getSeq[String](3).toVector))
-    val stream = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.streamTokenizeBytes(
-        stream.toDS().toDF("doc_id", "text"), merges)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d31_sink").start()
-    try {
-      val (a, b) = arrivals.splitAt(arrivals.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val got = spark.table("d31_sink").orderBy("doc_id").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_pretokens"),
-          r.getAs[Long]("n_tokens"), r.getSeq[String](3).toVector))
-      assert(got.toSeq == batch.toSeq,
-        "streamed byte-level tokens must equal the batch derivation")
-      assert(got.exists(_._4.exists(_.length > 1)),
-        "the byte-level merges must fuse tokens in the stream too")
-      // every single-spaced arrival round-trips byte-for-byte through
-      // unstage(concat(tokens)) — the byte-level fidelity contract
-      val byId = arrivals.toMap
-      got.filter(t => byId(t._1) != null && !byId(t._1).contains("  "))
-        .foreach { t =>
-          val detok = ByteBpeAlphabet.unstage(
-            org.apache.spark.unsafe.types.UTF8String.fromString(
-              t._4.mkString)).toString
-          assert(detok == byId(t._1),
-            s"doc ${t._1} failed the streamed detokenize round trip")
-        }
-      assert(!got.exists(_._1 == 70004L), "null text emits no row")
-    } finally q.stop()
+    val sink = drainStream(arrivals) { s =>
+      TextOps.bpeTokenizeDocs(s.toDF("doc_id", "text"), merges, bytes = true)
+        .withColumnRenamed("n_words", "n_pretokens")
+    }
+    val got = sink.orderBy("doc_id").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_pretokens"),
+        r.getAs[Long]("n_tokens"), r.getSeq[String](3).toVector))
+    assert(got.toSeq == batch.toSeq,
+      "streamed byte-level tokens must equal the batch derivation")
+    assert(got.exists(_._4.exists(_.length > 1)),
+      "the byte-level merges must fuse tokens in the stream too")
+    // every single-spaced arrival round-trips byte-for-byte through
+    // unstage(concat(tokens)) — the byte-level fidelity contract
+    val byId = arrivals.toMap
+    got.filter(t => byId(t._1) != null && !byId(t._1).contains("  "))
+      .foreach { t =>
+        val detok = ByteBpeAlphabet.unstage(
+          org.apache.spark.unsafe.types.UTF8String.fromString(
+            t._4.mkString)).toString
+        assert(detok == byId(t._1),
+          s"doc ${t._1} failed the streamed detokenize round trip")
+      }
+    assert(!got.exists(_._1 == 70004L), "null text emits no row")
   }
 
   test("d32 streaming banded near-dup: stream ≡ batch probe; self route at cosine 1") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.Similarity
     val threshold = 0.3
     val corpus = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
@@ -2287,43 +2015,35 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val arrivals = src.map { case (id, e) => (id + 800000000L, e) } :+
       ((899999999L, null.asInstanceOf[Array[Float]]))
-    val stream = MemoryStream[(Long, Array[Float])]
-    val q = graft.streaming.StreamOps.streamNearDupBanded(
-        stream.toDS().toDF("vec_id", "embedding"), index, threshold)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d32_sink").start()
-    try {
-      val (a, b) = arrivals.splitAt(arrivals.length / 2)
-      stream.addData(a.toSeq); q.processAllAvailable()
-      stream.addData(b.toSeq); q.processAllAvailable()
-      val got = spark.table("d32_sink").collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("neighbor_id"),
-          r.getAs[Int]("band"), r.getAs[Double]("cosine_r"))).toSet
-      // batch probe of the same arrivals through the same operator
-      val batch = graft.streaming.StreamOps.streamNearDupBanded(
-          arrivals.toSeq.toDF("vec_id", "embedding"), index, threshold)
-        .collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("neighbor_id"),
-          r.getAs[Int]("band"), r.getAs[Double]("cosine_r"))).toSet
-      assert(got == batch, "stream hit set must equal the batch probe")
-      // every re-id'd arrival collides with its identical at-rest source
-      // in EVERY band (same vector ⇒ same sign pattern) at cosine 1.0
-      src.foreach { case (id, _) =>
-        val self = got.filter(t => t._1 == id + 800000000L && t._2 == id)
-        assert(self.size == Similarity.C71Bands,
-          s"arrival ${id + 800000000L} must hit source $id in all bands, " +
-            s"got ${self.size}")
-        assert(self.forall(_._4 == 1.0), s"self-hit cosine must round to 1.0")
-      }
-      assert(!got.exists(_._1 == 899999999L), "null embedding emits no row")
-      // and the distinct fold's pairs all verify >= threshold
-      assert(got.forall(_._4 >= threshold))
-    } finally q.stop()
+    val sink = drainStream(arrivals.toSeq) { s =>
+      StreamOps.streamNearDupBanded(s.toDF("vec_id", "embedding"), index, threshold)
+    }
+    val got = sink.collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("neighbor_id"),
+        r.getAs[Int]("band"), r.getAs[Double]("cosine_r"))).toSet
+    // batch probe of the same arrivals through the same operator
+    val batch = StreamOps.streamNearDupBanded(
+        arrivals.toSeq.toDF("vec_id", "embedding"), index, threshold)
+      .collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("neighbor_id"),
+        r.getAs[Int]("band"), r.getAs[Double]("cosine_r"))).toSet
+    assert(got == batch, "stream hit set must equal the batch probe")
+    // every re-id'd arrival collides with its identical at-rest source
+    // in EVERY band (same vector ⇒ same sign pattern) at cosine 1.0
+    src.foreach { case (id, _) =>
+      val self = got.filter(t => t._1 == id + 800000000L && t._2 == id)
+      assert(self.size == Similarity.C71Bands,
+        s"arrival ${id + 800000000L} must hit source $id in all bands, " +
+          s"got ${self.size}")
+      assert(self.forall(_._4 == 1.0), s"self-hit cosine must round to 1.0")
+    }
+    assert(!got.exists(_._1 == 899999999L), "null embedding emits no row")
+    // and the distinct fold's pairs all verify >= threshold
+    assert(got.forall(_._4 >= threshold))
   }
 
   test("d33 streaming index add: stream-quantized codes ≡ the batch --add derivation") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.Similarity
     val m = 4
     val cb = Similarity.labelCodebook(spark, sfDir)
@@ -2338,33 +2058,25 @@ class StreamingSpec extends SparkSpec {
       .orderBy("vec_id").collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"),
         r.getSeq[Long](2).toVector))
-    val stream = MemoryStream[(Long, Array[Float])]
-    val q = graft.streaming.StreamOps.streamIndexAdd(
-        stream.toDS().toDF("vec_id", "embedding"), cb, m)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d33_sink").start()
-    try {
-      val (a, b) = arrivals.splitAt(arrivals.length / 2)
-      stream.addData(a.toSeq); q.processAllAvailable()
-      stream.addData(b.toSeq); q.processAllAvailable()
-      val got = spark.table("d33_sink").orderBy("vec_id").collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"),
-          r.getSeq[Long](2).toVector))
-      assert(got.toSeq == want.toSeq,
-        "stream-quantized codes must equal the batch --add derivation")
-      assert(got.length == 40, "the null-embedding arrival must emit no row")
-      // the output carries NO raw floats — it is the at-rest codes schema
-      val schema = spark.table("d33_sink").schema
-      assert(!schema.exists(f =>
-        f.dataType.simpleString.contains("double") ||
-          f.dataType.simpleString.contains("float")),
-        s"stream add leaked floats: $schema")
-    } finally q.stop()
+    val sink = drainStream(arrivals.toSeq) { s =>
+      StreamOps.streamIndexAdd(s.toDF("vec_id", "embedding"), cb, m)
+    }
+    val got = sink.orderBy("vec_id").collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"),
+        r.getSeq[Long](2).toVector))
+    assert(got.toSeq == want.toSeq,
+      "stream-quantized codes must equal the batch --add derivation")
+    assert(got.length == 40, "the null-embedding arrival must emit no row")
+    // the output carries NO raw floats — it is the at-rest codes schema
+    val schema = sink.schema
+    assert(!schema.exists(f =>
+      f.dataType.simpleString.contains("double") ||
+        f.dataType.simpleString.contains("float")),
+      s"stream add leaked floats: $schema")
   }
 
   test("d55 streaming WET extraction equals batch c117 row-for-row, refusals included") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.Extract
     // the arrival payload: the same synthesized markup the batch gate
     // row extracts (malformed %13 docs included), plus a hand-built
@@ -2374,61 +2086,90 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq ++
       Seq((900001L, "<p>live four word line</p><script>var leak = 1;"),
         (900002L, null))
-    val stream = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.streamExtract(
-        stream.toDF().toDF("doc_id", "html"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d55_sink").start()
-    try {
-      val (a, b) = markup.splitAt(markup.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val cols = Seq("doc_id", "well_formed", "n_lines", "extracted")
-      val streamed = spark.table("d55_sink").select(cols.map(col): _*)
-        .collect().map(r => r.getLong(0) -> r.toSeq).toMap
-      val batch = Extract.c117HtmlExtract(spark, sfDir)
-        .select(cols.map(col): _*)
-        .collect().map(r => r.getLong(0) -> r.toSeq).toMap
-      assert(streamed.size == markup.size - 1, "null markup must emit no row")
-      assert(!streamed.contains(900002L))
-      batch.foreach { case (id, row) =>
-        assert(streamed(id) == row, s"doc $id stream vs batch extraction")
-      }
-      // the live malformed arrival refuses and never leaks the script
-      val live = streamed(900001L)
-      assert(live(1) == false && live(3) == "live four word line")
-    } finally q.stop()
+    val sink = drainStream(markup) { s =>
+      Extract.htmlExtractOn(s.toDF("doc_id", "html"), "html", 4)
+    }
+    val cols = Seq("doc_id", "well_formed", "n_lines", "extracted")
+    val streamed = sink.select(cols.map(col): _*)
+      .collect().map(r => r.getLong(0) -> r.toSeq).toMap
+    val batch = Extract.c117HtmlExtract(spark, sfDir)
+      .select(cols.map(col): _*)
+      .collect().map(r => r.getLong(0) -> r.toSeq).toMap
+    assert(streamed.size == markup.size - 1, "null markup must emit no row")
+    assert(!streamed.contains(900002L))
+    batch.foreach { case (id, row) =>
+      assert(streamed(id) == row, s"doc $id stream vs batch extraction")
+    }
+    // the live malformed arrival refuses and never leaks the script
+    val live = streamed(900001L)
+    assert(live(1) == false && live(3) == "live four word line")
   }
 
   test("d56 streaming encoding flags equal batch c118 row-for-row") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.Extract
     val corrupted = Tables.documents(spark, sfDir)
       .select(col("doc_id"), Extract.gateCorruption.as("text"))
       .as[(Long, String)].collect().toSeq ++
       Seq((900001L, "live � arrival"), (900002L, null))
-    val stream = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.streamEncodingFlag(
-        stream.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d56_sink").start()
-    try {
-      val (a, b) = corrupted.splitAt(corrupted.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val cols = Seq("doc_id", "n_fffd", "n_ctrl", "n_moji", "ok", "repaired")
-      val streamed = spark.table("d56_sink").select(cols.map(col): _*)
-        .collect().map(r => r.getLong(0) -> r.toSeq).toMap
-      val batch = Extract.c118EncodingFlag(spark, sfDir)
-        .select(cols.map(col): _*)
-        .collect().map(r => r.getLong(0) -> r.toSeq).toMap
-      assert(streamed.size == corrupted.size - 1, "null text must emit no row")
-      batch.foreach { case (id, row) =>
-        assert(streamed(id) == row, s"doc $id stream vs batch flags")
-      }
-      assert(streamed(900001L)(1) == 1L &&
-        streamed(900001L)(5) == "live  arrival")
-    } finally q.stop()
+    val sink = drainStream(corrupted) { s =>
+      Extract.encodingFlagOn(s.toDF("doc_id", "text"), "text")
+    }
+    val cols = Seq("doc_id", "n_fffd", "n_ctrl", "n_moji", "ok", "repaired")
+    val streamed = sink.select(cols.map(col): _*)
+      .collect().map(r => r.getLong(0) -> r.toSeq).toMap
+    val batch = Extract.c118EncodingFlag(spark, sfDir)
+      .select(cols.map(col): _*)
+      .collect().map(r => r.getLong(0) -> r.toSeq).toMap
+    assert(streamed.size == corrupted.size - 1, "null text must emit no row")
+    batch.foreach { case (id, row) =>
+      assert(streamed(id) == row, s"doc $id stream vs batch flags")
+    }
+    assert(streamed(900001L)(1) == 1L &&
+      streamed(900001L)(5) == "live  arrival")
+  }
+
+  test("source audit: batch code never calls StreamOps; no StreamOps def is an alias of an operator core") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the project root: $root")
+    def code(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
+      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val operatorFiles = Files.list(root.resolve("operators")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val callers = (operatorFiles :+ root.resolve("Main.scala"))
+      .filter(p => code(p).contains("StreamOps"))
+    assert(callers.isEmpty, s"batch code calls the stream layer: ${callers.mkString(", ")}")
+    // the alias shape: a def whose whole body is one call into an
+    // operator object — graft.operators.X.f(...), or X.f(...) for an
+    // object X defined under operators/
+    val objects = operatorFiles.flatMap(p =>
+      "(?m)^object (\\w+)".r.findAllMatchIn(code(p)).map(_.group(1))).toSet
+    val src = code(root.resolve("streaming/StreamOps.scala"))
+    val member = "(?m)^  (?:override |private(?:\\[\\w+\\])? )?(?:def|case class|final case class|val) ".r
+    val starts = member.findAllMatchIn(src).map(_.start).toSeq :+ src.lastIndexOf('}')
+    val aliases = starts.sliding(2).collect { case Seq(a, b) => src.substring(a, b) }
+      .filter(_.trim.matches("(?s)(private(\\[\\w+\\])? )?def .*"))
+      .flatMap { m =>
+        val name = "def (\\w+)".r.findFirstMatchIn(m).get.group(1)
+        // body: after the signature's `=` (first `) ... =` or `: T =`)
+        val eq = "(?s)\\)\\s*(?::[^=]*)?=\\s".r.findFirstMatchIn(m).map(_.end)
+        eq.map(m.substring).map { b0 =>
+          val b = b0.trim.stripPrefix("{").stripSuffix("}").trim
+            .linesIterator.filterNot(_.trim.startsWith("import ")).mkString("\n").trim
+          val head = "^(graft\\.operators\\.)?(\\w+)\\.\\w+\\(".r.findFirstMatchIn(b)
+          val single = head.exists { h =>
+            var depth = 1; var i = h.end
+            while (depth > 0 && i < b.length) {
+              if (b(i) == '(') depth += 1 else if (b(i) == ')') depth -= 1
+              i += 1
+            }
+            (h.group(1) != null || objects(h.group(2))) && b.substring(i).trim.isEmpty
+          }
+          if (single) Some(name) else None
+        }.getOrElse(None)
+      }.toSeq
+    assert(aliases.isEmpty, s"StreamOps defs that only alias an operator core: ${aliases.mkString(", ")}")
   }
 }

@@ -167,8 +167,6 @@ class UnigramSpec extends SparkSpec {
   test("d36 streaming unigram tokenize equals the driver derivation, " +
       "incl. UNK fallback docs") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val art = Unigram.trainUnigram(spark, sfDir)
     val scores = art.toMap
     // a char the corpus never saw, surviving lower(): exercises the UNK
@@ -188,29 +186,22 @@ class UnigramSpec extends SparkSpec {
       val toks = ws.flatMap(w => refViterbi(w, scores))
       (id, ws.size.toLong, toks.size.toLong, toks.toVector)
     }.sortBy(_._1)
-    val stream = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.streamUnigramTokenize(
-        stream.toDS().toDF("doc_id", "text"), art)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d36_sink").start()
-    try {
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val got = spark.table("d36_sink").orderBy("doc_id").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_words"),
-          r.getAs[Long]("n_tokens"), r.getSeq[String](3).toVector))
-      assert(got.toSeq == want,
-        "streamed unigram token payloads must equal the driver derivation")
-      val unkRow = got.find(_._1 == 9101L).get
-      assert(unkRow._4.contains(unkChar.toString.toLowerCase),
-        s"the unseen char must surface as an UNK single: ${unkRow._4}")
-      assert(unkRow._4.mkString("") == wsMap(9101L).mkString(""),
-        "UNK docs must still tile losslessly")
-      assert(!got.exists(_._1 == 9102L), "null text must not emit a row")
-      assert(got.find(_._1 == 9103L).exists(r => r._2 == 0L && r._4.isEmpty),
-        "empty text emits the documented n_words = 0 row")
-    } finally q.stop()
+    val sink = drainStream(docs) { s =>
+      Unigram.tokenizeDocs(s.toDF("doc_id", "text"), art)
+    }
+    val got = sink.orderBy("doc_id").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_words"),
+        r.getAs[Long]("n_tokens"), r.getSeq[String](3).toVector))
+    assert(got.toSeq == want,
+      "streamed unigram token payloads must equal the driver derivation")
+    val unkRow = got.find(_._1 == 9101L).get
+    assert(unkRow._4.contains(unkChar.toString.toLowerCase),
+      s"the unseen char must surface as an UNK single: ${unkRow._4}")
+    assert(unkRow._4.mkString("") == wsMap(9101L).mkString(""),
+      "UNK docs must still tile losslessly")
+    assert(!got.exists(_._1 == 9102L), "null text must not emit a row")
+    assert(got.find(_._1 == 9103L).exists(r => r._2 == 0L && r._4.isEmpty),
+      "empty text emits the documented n_words = 0 row")
     ()
   }
 

@@ -208,8 +208,6 @@ class WordpieceSpec extends SparkSpec {
   test("d47 streaming wordpiece tokenize equals the driver derivation, " +
       "incl. whole-word UNK docs") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val vocab = Wordpiece.trainWordpiece(spark, sfDir)
     val vs = vocab.toSet
     val unkChar = "éß€#".find(c => !vs.contains(c.toString)).get
@@ -227,27 +225,20 @@ class WordpieceSpec extends SparkSpec {
       val toks = ws.flatMap(w => refGreedy(w, vs))
       (id, ws.size.toLong, toks.size.toLong, toks.toVector)
     }.sortBy(_._1)
-    val stream = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.streamWordpieceTokenize(
-        stream.toDS().toDF("doc_id", "text"), vocab)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("d47_sink").start()
-    try {
-      val (a, b) = docs.splitAt(docs.length / 2)
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(b); q.processAllAvailable()
-      val got = spark.table("d47_sink").orderBy("doc_id").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_words"),
-          r.getAs[Long]("n_tokens"), r.getSeq[String](3).toVector))
-      assert(got.toSeq == want,
-        "streamed wordpiece token payloads must equal the driver derivation")
-      val unkRow = got.find(_._1 == 9201L).get
-      assert(unkRow._4.contains(Wordpiece.Unk),
-        s"the unseen-char word must surface as [UNK]: ${unkRow._4}")
-      assert(!got.exists(_._1 == 9202L), "null text must not emit a row")
-      assert(got.find(_._1 == 9203L).exists(r => r._2 == 0L && r._4.isEmpty),
-        "empty text emits the documented n_words = 0 row")
-    } finally q.stop()
+    val sink = drainStream(docs) { s =>
+      Wordpiece.tokenizeDocs(s.toDF("doc_id", "text"), vocab)
+    }
+    val got = sink.orderBy("doc_id").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_words"),
+        r.getAs[Long]("n_tokens"), r.getSeq[String](3).toVector))
+    assert(got.toSeq == want,
+      "streamed wordpiece token payloads must equal the driver derivation")
+    val unkRow = got.find(_._1 == 9201L).get
+    assert(unkRow._4.contains(Wordpiece.Unk),
+      s"the unseen-char word must surface as [UNK]: ${unkRow._4}")
+    assert(!got.exists(_._1 == 9202L), "null text must not emit a row")
+    assert(got.find(_._1 == 9203L).exists(r => r._2 == 0L && r._4.isEmpty),
+      "empty text emits the documented n_words = 0 row")
     ()
   }
 
