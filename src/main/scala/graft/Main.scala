@@ -1109,9 +1109,10 @@ object Main {
     * banded near-dup candidates (doc_a, doc_b, hamming ≤ H) instead,
     * banded PER MODALITY — an image gradient hash and an audio
     * envelope hash must never pair; `--clusters` writes the c102
-    * DECISION surface instead (per-modality connected components over
-    * the banded pairs: doc_id, media_type, cluster_id, cluster_size,
-    * is_canonical — min-id survivorship). One JSON stats line.
+    * DECISION surface instead (per-modality connected components of the
+    * banded pair graph, clustered over distinct hashes: doc_id,
+    * media_type, cluster_id, cluster_size, is_canonical — min-id
+    * survivorship). One JSON stats line.
     *
     * Lifecycle (r16 — the hash table is the at-rest index d43/d44
     * route against, so it needs the same add/erase story the vector
@@ -1145,20 +1146,22 @@ object Main {
       .toDF("doc_id", "media_type", "phash")
     if (args.contains("--clusters")) {
       // the c102 decision surface over ANY media parquet: per-modality
-      // banded pairs (an image hash never pairs an audio hash) → the
-      // shared CC machinery → (doc_id, media_type, cluster_id,
+      // components (an image hash never pairs an audio hash) clustered at
+      // distinct-hash grain → (doc_id, media_type, cluster_id,
       // cluster_size, is_canonical), min-id survivorship
       require(!pairs, "--pairs and --clusters are mutually exclusive outputs")
-      val edges = Multimodal.phashCandidates(hashes, maxHamming,
+      // the hashes feed the rep groups, the doc attach and the surface:
+      // persisted for the verb, so the payload decode runs once
+      val hs = hashes.persist()
+      try {
+        val labels = Multimodal.phashClusterLabels(hs, maxHamming,
           keyCols = Seq("media_type"))
-        .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      val labels = graft.operators.Dedup
-        .connectedComponentsAlternating(edges)._1
-      // the SAME decision-surface derivation the c102/c103 gate rows
-      // run (one survivorship semantics — media_type carried through)
-      Multimodal.clusterSurface(hashes.select("doc_id", "media_type"),
-          labels, carryCols = Seq("media_type"))
-        .write.mode("overwrite").parquet(out)
+        // the SAME decision-surface derivation the c102/c103 gate rows
+        // run (one survivorship semantics — media_type carried through)
+        Multimodal.clusterSurface(hs.select("doc_id", "media_type"),
+            labels, carryCols = Seq("media_type"))
+          .write.mode("overwrite").parquet(out)
+      } finally { hs.unpersist(); () }
       val stats = spark.read.parquet(out)
         .agg(count(lit(1)), count_distinct(col("cluster_id")),
           count(when(col("is_canonical"), lit(1)))).head()

@@ -621,91 +621,12 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Connected components over an undirected edge list by iterative
-    * min-label propagation — the last mile of near-dup dedup: LSH emits
-    * PAIRS, but dropping duplicates needs CLUSTERS (one canonical doc per
-    * component). Each iteration is two narrow shuffles (neighbor-min
-    * groupBy + label join) moving O(edges) rows of two bigints; the
-    * iteration count is the component diameter, and near-dup components
-    * are band-bucket cliques of diameter ~1-2, so 2-3 iterations converge.
-    * `maxIter` bounds adversarial chains (exceeding it now THROWS rather
-    * than returning under-merged labels); high-diameter graphs use the
-    * implemented large-star/small-star alternation
-    * ([[connectedComponentsAlternating]], O(log n) rounds, same contract,
-    * parity-spec'd). Labels persist per iteration
-    * (lineage stays flat) and the superseded generation unpersists; the
-    * per-iteration convergence count is an aggregate over O(nodes) rows —
-    * the only driver-visible values are that single count per iteration.
-    *
-    * Input columns `u`, `v`; output (node, cluster_id = min node id
-    * reachable). */
-  private[graft] def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    // every iteration joins the edge list, so persist it — otherwise the
-    // upstream pair-generation subtree (for c19: the whole MinHash/LSH
-    // pipeline) re-executes once per iteration (measured 4.2s → 1.2s for
-    // c19 at sf0.1)
-    val und = edges.select(col("u"), col("v"))
-      .union(edges.select(col("v").as("u"), col("u").as("v")))
-      .persist()
-    var labels = und.select(col("u").as("node")).distinct()
-      .withColumn("lbl", col("node")).persist()
-    var cached = labels // the persisted frame backing `labels`
-    // unpersist in finally: the non-convergence throw below invites the
-    // caller to retry with the alternation — leaking the O(edges) cached
-    // blocks on exactly that path would re-open the r5 cache leak
-    try {
-    var iter = 0
-    var done = labels.isEmpty
-    while (!done && iter < maxIter) {
-      val nbrMin = und.join(labels.select(col("node").as("v"), col("lbl")), "v")
-        .groupBy("u").agg(min("lbl").as("nbr_lbl"))
-      // carry old and new labels in ONE persisted frame: the convergence
-      // count then filters it directly instead of re-joining next⋈labels
-      // (one fewer shuffle join per iteration)
-      val step = labels
-        .join(nbrMin.select(col("u").as("node"), col("nbr_lbl")), Seq("node"), "left")
-        .select(col("node"), col("lbl").as("old_lbl"),
-          least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"))
-        .persist()
-      // a throw from the materializing count would otherwise leak the
-      // just-persisted generation: the finally below only covers `cached`,
-      // which still points at the PREVIOUS one
-      val changed =
-        try step.filter(col("lbl") < col("old_lbl")).count()
-        catch { case t: Throwable => step.unpersist(); throw t }
-      cached.unpersist()
-      cached = step
-      labels = rebase(step.select(col("node"), col("lbl")))
-      done = changed == 0
-      iter += 1
-    }
-    // loud failure beats silently returning partially-propagated labels:
-    // an unconverged result would under-merge clusters and KEEP duplicate
-    // documents downstream (dedupDocuments has no oracle to catch it).
-    // High-diameter graphs belong on connectedComponentsAlternating.
-    if (!done)
-      throw new IllegalStateException(
-        s"connectedComponents: not converged after $maxIter iterations " +
-          "(component diameter exceeds maxIter); use " +
-          "connectedComponentsAlternating for high-diameter graphs")
-    // checkpoint the result OUT of the cache: returning a frame backed by
-    // the persisted blocks would leak one cached DataFrame per call for
-    // the JVM lifetime (ADVICE r5) — a parquet round-trip of (bigint,
-    // bigint) rows severs all lineage so every generation unpersists now
-    checkpointLabels(
-      labels.select(col("node"), col("lbl").as("cluster_id")))
-    } finally {
-      cached.unpersist()
-      und.unpersist()
-    }
-  }
-
   /** Rebase a frame's lineage on its (materialized) cached blocks: an
     * InternalRow round-trip through internalCreateDataFrame gives the
     * next iteration a constant-depth LogicalRDD base. Building iteration
     * N+1's plan on iteration N's nests the logical plan linearly — by
     * ~iteration 15 the tree is deep enough that Spark's own plan
-    * stringification overflows the stack. Shared by both CC loops. */
+    * stringification overflows the stack. */
   private def rebase(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftbridge.ColumnBridge
       .internalCreateDataFrame(df.sparkSession, df.queryExecution.toRdd, df.schema)
@@ -731,27 +652,34 @@ object Dedup {
 
   /** Connected components by the large-star/small-star alternation
     * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * the high-diameter-safe twin of [[connectedComponents]]: min-label
-    * propagation needs DIAMETER iterations (a 10k-node chain of near-dups
-    * would need 10k rounds), the alternation converges in O(log n) rounds
-    * on any graph. Per round it costs ~3× the shuffles of a min-label
-    * iteration (two star joins + dedup + convergence anti-join, all on
-    * (bigint, bigint) rows), so near-dup CLIQUES (diameter 2-3) stay on
-    * min-label and arbitrary/adversarial graphs come here — same contract,
-    * same output (parity-spec'd).
+    * the last mile of near-dup dedup: LSH emits PAIRS, but dropping
+    * duplicates needs CLUSTERS (one canonical doc per component).
+    * Min-label propagation needs DIAMETER iterations (a 10k-node chain of
+    * near-dups would need 10k rounds); the alternation converges in
+    * O(log n) rounds on any graph.
     *
-    * Each round normalizes edges hi→lo, then:
-    *  - LARGE-STAR: every node links its strictly-larger neighbors to the
-    *    minimum of its neighborhood (incl. itself) — halves long chains;
-    *  - SMALL-STAR: every node links itself and its smaller neighbors to
-    *    their minimum — forms stars.
-    * The fixed point is a star per component centered at its minimum node;
-    * the edge list IS then the (node, cluster_id) mapping. Lineage is
-    * rebased per round and the superseded generation unpersisted, exactly
-    * like the min-label loop.
+    * Each round starts from the deduped hi→lo edge set and runs three
+    * shuffles, all on (bigint, bigint) rows or one neighbour list per node:
+    *  - LARGE-STAR: one groupBy collects every node's neighbours N(u) over
+    *    the symmetrized edges, and each neighbour larger than u links to
+    *    min({u} ∪ N(u)) — halves long chains;
+    *  - SMALL-STAR: one groupBy collects the SET of each large-star
+    *    node's (all smaller) neighbours (the set is large-star's dedup),
+    *    and the node and its neighbours link to their minimum — forms
+    *    stars;
+    *  - one distinct makes the next round's edge set.
+    * Both stars explode the collected array and filter in Column code (no
+    * higher-order lambda), so the steps stay codegen'd. The convergence
+    * check (equal counts + empty anti-join against the previous set) is
+    * on top. The fixed point is a star per component centered at its
+    * minimum node; the edge list IS then the (node, cluster_id) mapping.
+    * Lineage is rebased per round and the superseded generation
+    * unpersisted; exceeding `maxIter` THROWS rather than returning
+    * under-merged labels (they would KEEP duplicate documents downstream).
     *
-    * Returns (labels, rounds) — rounds is asserted O(log n) by the
-    * adversarial chain spec. */
+    * Input columns `u`, `v`; returns ((node, cluster_id = min node id
+    * reachable), rounds) — only nodes that appear in an edge are labelled.
+    * Rounds are asserted O(log n) by the adversarial chain spec. */
   private[graft] def connectedComponentsAlternating(
       edges: DataFrame, maxIter: Int = 40): (DataFrame, Int) = {
     var e = edges.filter(col("u") =!= col("v"))
@@ -763,20 +691,22 @@ object Dedup {
     var iter = 0
     var converged = eCount == 0L
     while (!converged && iter < maxIter) {
-      // LARGE-STAR over the symmetrized neighborhood
-      val und = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = und.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val ls = und.join(mins, "u").filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      // SMALL-STAR on the (already hi→lo) large-star output
-      val mins2 = ls.groupBy("u").agg(min("v").as("m"))
-      val ss = ls.join(mins2, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(mins2.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
+      // LARGE-STAR over the symmetrized neighborhood: every neighbour w > u
+      // links to m(u) = min({u} ∪ N(u)) (w > u >= m(u), so never a loop)
+      val ls = e.union(e.select(col("v").as("u"), col("u").as("v")))
+        .groupBy("u").agg(collect_list("v").as("nb"))
+        .select(col("u"), least(col("u"), array_min(col("nb"))).as("m"),
+          explode(col("nb")).as("w"))
+        .filter(col("w") > col("u"))
+        .select(col("w").as("u"), col("m").as("v"))
+      // SMALL-STAR on the (already hi→lo) large-star output: u and every
+      // neighbour in N(u) (all smaller than u) link to min(N(u))
+      val ss = ls.groupBy("u").agg(collect_set("v").as("nb"))
+        .select(array_min(col("nb")).as("m"),
+          explode(concat(array(col("u")), col("nb"))).as("x"))
+        .filter(col("x") =!= col("m"))
+        .select(col("x").as("u"), col("m").as("v"))
+        .distinct()
       val next = rebase(ss).persist()
       // a throw from the materializing count/anti-join would otherwise
       // leak the just-persisted generation: the finally below only covers
@@ -806,7 +736,7 @@ object Dedup {
   /** Per-JVM memoized cluster-label table, keyed by (dir, threshold):
     * c2's verified pairs at jaccard ≥ threshold fed through
     * [[connectedComponentsAlternating]] (O(log n) rounds on any diameter;
-    * labels = component minimum, parity-spec'd identical to min-label),
+    * labels = component minimum),
     * materialized once to scratch parquet — the cluster assignment feeds
     * c19, c30 AND dedupDocuments' minhash mode; without the seam each
     * consumer re-runs the whole minhash→pairs→iterative-CC pipeline. The
@@ -825,7 +755,8 @@ object Dedup {
 
   /** c19: near-duplicate CLUSTERS — c2's MinHash/LSH pairs at
     * jaccard ≥ 0.5 (threshold applied to the 6-dp-rounded value, so both
-    * engines agree on membership) fed through [[connectedComponents]];
+    * engines agree on membership) fed through
+    * [[connectedComponentsAlternating]];
     * every document gets a cluster_id (its own id when it has no
     * near-dups) and `is_canonical` marks the one row per cluster a dedup
     * pipeline keeps. Labels come from the memoized [[clusterTablePath]]

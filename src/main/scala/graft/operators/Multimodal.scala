@@ -1056,6 +1056,44 @@ object Multimodal {
         greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("hamming"))
   }
 
+  /** Connected components of the phash near-dup graph at DISTINCT-HASH
+    * grain: the (node, cluster_id) label table that
+    * `connectedComponentsAlternating(phashCandidates(hashes, maxHamming,
+    * keyCols))` returns, row for row, without forming doc pairs.
+    *
+    * Docs sharing a (keyCols…, phash) group are always connected
+    * (hamming 0 ≤ maxHamming), so each group is one node named by its
+    * smallest doc id (`rep`) — a component's minimum rep is then its
+    * minimum doc id, the doc-grain label. CC runs over the rep graph of
+    * [[phashHashPairs]]' distinct-hash pairs (self-pairs dropped), and the
+    * docs attach once: cluster_id = the rep's label, or the rep itself for
+    * a group with no neighbouring hash. Docs whose component holds a
+    * single doc are absent, as in the doc-grain table (its CC labels only
+    * nodes that appear in an edge). A clique of k docs over one hash costs
+    * one node here where the doc graph held k(k-1)/2 edges; keyCols are
+    * part of the group, so hashes of different media types never meet. */
+  private[graft] def phashClusterLabels(hashes: DataFrame, maxHamming: Int,
+                                        keyCols: Seq[String] = Nil): DataFrame = {
+    val gcols = keyCols :+ "phash"
+    val rep = hashes.groupBy(gcols.map(col): _*)
+      .agg(min("doc_id").as("rep"), count(lit(1)).as("docs"))
+    def repOf(h: String, node: String): DataFrame =
+      rep.select(keyCols.map(col) ++ Seq(col("phash").as(h), col("rep").as(node)): _*)
+    val edges = phashHashPairs(rep.select(gcols.map(col): _*), maxHamming, keyCols)
+      .filter(col("ha") =!= col("hb"))
+      .join(repOf("ha", "u"), keyCols :+ "ha")
+      .join(repOf("hb", "v"), keyCols :+ "hb")
+      .select("u", "v")
+    val labels = graft.operators.Dedup.connectedComponentsAlternating(edges)._1
+      .withColumnRenamed("node", "rep")
+    hashes.select((gcols :+ "doc_id").map(col): _*)
+      .join(rep, gcols)
+      .join(labels, Seq("rep"), "left")
+      .filter(col("docs") >= 2 || col("cluster_id").isNotNull)
+      .select(col("doc_id").as("node"),
+        coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
+  }
+
   /** New-touching banded candidates at hash grain (r16, c103): the
     * LEFT side is the crawl only, the RIGHT side is crawl ∪ corpus —
     * so corpus×corpus pairs are never formed (the maintenance cost
@@ -1449,23 +1487,25 @@ object Multimodal {
   /** c102: media near-dup CLUSTERS — the pair surfaces (c89/c93/c94)
     * ENUMERATE near-dups, but a dedup policy needs to DECIDE: one
     * canonical per component, the rest droppable — exactly the step
-    * c19/c82 supply for text. Edges are c89's complete banded image
-    * pairs at hamming ≤ 3; components come from the SAME memoized
-    * large-star/small-star machinery the text clusters run
+    * c19/c82 supply for text. The graph is c89's: image docs linked at
+    * hamming ≤ 3. Components come from the memoized
+    * [[phashClusterLabels]] table — the SAME large-star/small-star
+    * machinery the text clusters run
     * (Dedup.connectedComponentsAlternating — O(log n) rounds on any
-    * diameter, labels = component minima); every image doc appears
+    * diameter, labels = component minima), run over the distinct hashes
+    * with the docs attached once; every image doc appears
     * (singletons as their own cluster); survivorship is MIN-DOC-ID
     * (images carry no c41 quality score — the deterministic id rule,
     * where c82 uses quality argmax for text). is_canonical ⇔ doc_id =
     * cluster_id because labels are component minima by construction.
     *
-    * Scale shape: the pair graph is O(n·bands) by banding, each CC
-    * round shuffles O(edges) (bigint, bigint) rows, the label join and
-    * size count are O(images). The oracle re-derives the components by
-    * transitive closure over the SAME banded-candidate SQL (c19's reach
-    * CTE pattern), so clustering drift hash-fails. Audio/video-frame
-    * cluster tables are the same composition over c93/c94's edges
-    * (documented, not separate gate rows — one composition, one proof). */
+    * Scale shape: the hash-pair graph is O(distinct hashes·bands) by
+    * banding, each CC round shuffles O(hash edges) (bigint, bigint) rows,
+    * the doc attach, label join and size count are O(images). The oracle
+    * re-derives the components by transitive closure over the doc-grain
+    * banded-candidate SQL (c19's reach CTE pattern), so clustering drift
+    * hash-fails. The audio cluster table (c104) is the same composition
+    * over the audio hashes. */
   def c102MediaClusters(spark: SparkSession, dir: String): DataFrame = {
     val labels = spark.read.parquet(mediaLabelTablePath(spark, dir))
     val imgs = Tables.documents(spark, dir).select(col("doc_id"))
@@ -1494,15 +1534,16 @@ object Multimodal {
   }
 
   /** Per-JVM memoized FROZEN media label table (clusterTablePath's rule
-    * at hash grain): c89's verified pair graph fed through the
-    * alternating CC, materialized once to scratch — the at-rest
-    * artifact c102 surfaces and c103's maintenance starts from. */
+    * at hash grain): [[phashClusterLabels]] over the memoized image hash
+    * index at c89's hamming ≤ 3 — the same components as c89's pair
+    * graph, clustered over distinct hashes — materialized once to
+    * scratch: the at-rest artifact c102 surfaces and c103's maintenance
+    * starts from. */
   private[graft] def mediaLabelTablePath(spark: SparkSession,
                                          dir: String): String =
     graft.Memo.table("media-labels", Seq(dir)) { p =>
-      val edges = c89PhashPairs(spark, dir)
-        .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      graft.operators.Dedup.connectedComponentsAlternating(edges)._1
+      phashClusterLabels(spark.read.parquet(phashIndexTablePath(spark, dir))
+          .select("doc_id", "phash"), maxHamming = 3)
         .write.parquet(p)
     }
 
@@ -1528,7 +1569,8 @@ object Multimodal {
   /** c104: AUDIO near-dup clusters — c102's decision surface for the
     * 1-D modality (the r15 precedent: once the image pair surface was
     * oracled, the audio one followed — same rule for the cluster
-    * surface): CC over c93's verified banded pairs through the shared
+    * surface): the components of c93's banded pair graph, clustered at
+    * distinct-hash grain by [[phashClusterLabels]] through the shared
     * star machinery, min-id survivorship, every audio doc present.
     * Because the synthetic audio corpus is ramp-shaped its pair graph
     * is near-complete and the surface collapses toward one giant
@@ -1546,13 +1588,13 @@ object Multimodal {
   }
 
   /** Per-JVM memoized FROZEN audio label table (mediaLabelTablePath's
-    * twin for the 1-D modality). */
+    * twin for the 1-D modality: [[phashClusterLabels]] over the memoized
+    * audio hash table, the components of c93's pair graph). */
   private[graft] def audioLabelTablePath(spark: SparkSession,
                                          dir: String): String =
     graft.Memo.table("audio-labels", Seq(dir)) { p =>
-      val edges = c93AudioPairs(spark, dir)
-        .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      graft.operators.Dedup.connectedComponentsAlternating(edges)._1
+      phashClusterLabels(spark.read.parquet(audioHashTablePath(spark, dir))
+          .select("doc_id", "phash"), maxHamming = 3)
         .write.parquet(p)
     }
 

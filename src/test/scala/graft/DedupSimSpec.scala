@@ -1926,8 +1926,7 @@ class DedupSimSpec extends SparkSpec {
     // path 1-2-3 (diameter 2, needs >1 iteration), pair 10-11, singleton 99
     // absent (nodes not in edges don't appear in the output)
     val edges = Seq((2L, 1L), (2L, 3L), (10L, 11L)).toDF("u", "v")
-    val got = Dedup.connectedComponents(edges).collect()
-      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("cluster_id")).toMap
+    val got = MinLabelCC(edges)
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
@@ -1941,6 +1940,7 @@ class DedupSimSpec extends SparkSpec {
     val (labels, rounds) = Dedup.connectedComponentsAlternating(edges)
     info(s"chain of $n nodes converged in $rounds rounds")
     assert(rounds <= 25, s"expected O(log n) rounds, got $rounds")
+    assert(rounds == 15, s"expected 15 rounds on this chain, got $rounds")
     val got = labels.collect()
     assert(got.length == n)
     assert(got.forall(_.getAs[Long]("cluster_id") == 0L),
@@ -1951,8 +1951,7 @@ class DedupSimSpec extends SparkSpec {
     val pairs = Dedup.c2DedupMinhash(spark, sfDir)
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val minLabel = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("cluster_id")).toMap
+    val minLabel = MinLabelCC(pairs)
     val (alt, rounds) = Dedup.connectedComponentsAlternating(pairs)
     val altMap = alt.collect()
       .map(r => r.getAs[Long]("node") -> r.getAs[Long]("cluster_id")).toMap
@@ -1961,14 +1960,58 @@ class DedupSimSpec extends SparkSpec {
     assert(altMap == minLabel, "the two algorithms must agree exactly")
   }
 
-  test("min-label CC throws (not silent partial labels) when maxIter is exceeded") {
+  test("alternating CC throws (not silent partial labels) when maxIter is exceeded") {
     import spark.implicits._
-    // diameter-4 path but maxIter=2: propagation cannot finish
+    // a path is no star, so round 1 rewrites it and convergence needs a
+    // second, unchanged round
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("u", "v")
     val ex = intercept[IllegalStateException] {
-      Dedup.connectedComponents(edges, maxIter = 2).collect()
+      Dedup.connectedComponentsAlternating(edges, maxIter = 1)._1.collect()
     }
     assert(ex.getMessage.contains("not converged"))
+  }
+
+  /** Node → minimum node of its component, by a local union-find over the
+    * edges that are not self-loops (a node seen only in a self-loop is in
+    * no edge after the loop filter, so it gets no label). */
+  private def unionFindLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val links = edges.filter { case (a, b) => a != b }
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    links.foreach { case (a, b) => parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b) }
+    def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
+    links.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  test("alternating CC equals a union-find on a star, a clique, " +
+    "duplicate and reversed edges, self-loops and no edges") {
+    import spark.implicits._
+    val star = ((1L to 6L) ++ (8L to 20L)).map(l => (7L, l))
+    val clique = {
+      val ids = Seq(40L, 31L, 57L, 33L, 90L, 35L, 36L, 72L, 38L)
+      for (a <- ids; b <- ids if a < b) yield (a, b)
+    }
+    val path = Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (11L, 10L))
+    val dupReversed = path ++ path ++ path.map(_.swap) ++ path.map(_.swap)
+    val selfLoops = path ++ Seq((3L, 3L), (5L, 5L), (50L, 50L), (11L, 11L))
+    val graphs = Seq("star" -> star, "clique" -> clique,
+      "two cliques and a path" -> (clique ++ clique.map { case (a, b) =>
+        (a + 1000L, b + 1000L) } ++ path),
+      "duplicate and reversed edges" -> dupReversed,
+      "self-loops" -> selfLoops, "no edges" -> Seq.empty[(Long, Long)])
+    graphs.foreach { case (name, es) =>
+      val (labels, rounds) = Dedup.connectedComponentsAlternating(es.toDF("u", "v"))
+      val got = labels.as[(Long, Long)].collect().toMap
+      val want = unionFindLabels(es)
+      info(s"$name: ${want.size} nodes, $rounds rounds")
+      assert(got == want, s"$name: alternating CC diverges from the union-find")
+      assert(labels.count() == got.size, s"$name: one label row per node")
+      if (name == "self-loops")
+        assert(!got.contains(50L), "a node seen only in a self-loop gets no label")
+    }
   }
 
   test("c26 passage dedup: counts reconcile, untouched docs reconstruct to their own text") {

@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.Multimodal
+import graft.operators.{Dedup, Multimodal}
 
 /** `spreadAttach` is a plan choice priced from the data (docs per distinct
   * hash), so each bucket count must give the same candidate rows: the
-  * spread only moves a clique's doc expansion across partition keys. */
+  * spread only moves a clique's doc expansion across partition keys.
+  * `phashClusterLabels` clusters at distinct-hash grain, so on the same
+  * frames it must give the doc-grain components row for row. */
 class SpreadAttachSpec extends SparkSpec {
   import spark.implicits._
 
@@ -76,5 +78,50 @@ class SpreadAttachSpec extends SparkSpec {
       if (name != "empty") assert(want.nonEmpty, s"$name must have pairs")
       cached.unpersist()
     }
+  }
+
+  /** The doc-grain label table: connected components over every doc pair. */
+  private def docGrainLabels(hashes: DataFrame,
+                             keyCols: Seq[String] = Nil): Seq[(Long, Long)] =
+    Dedup.connectedComponentsAlternating(
+      Multimodal.phashCandidates(hashes, maxHamming = 3, keyCols = keyCols)
+        .select($"doc_a".as("u"), $"doc_b".as("v")))._1
+      .as[(Long, Long)].collect().toSeq.sorted
+
+  private def hashGrainLabels(hashes: DataFrame,
+                              keyCols: Seq[String] = Nil): Seq[(Long, Long)] =
+    Multimodal.phashClusterLabels(hashes, maxHamming = 3, keyCols = keyCols)
+      .as[(Long, Long)].collect().toSeq.sorted
+
+  test("phashClusterLabels equals doc-grain CC over phashCandidates on " +
+    "cliquey, diffuse, empty and mega-clique hashes; singletons absent") {
+    val frames = Seq("cliquey" -> cliquey, "diffuse" -> diffuse,
+      "empty" -> empty, "mega-clique" -> megaClique)
+    frames.foreach { case (name, hashes) =>
+      val cached = hashes.cache()
+      val want = docGrainLabels(cached)
+      val got = hashGrainLabels(cached)
+      assert(got == want, s"$name: hash grain gives ${got.size} labels, doc " +
+        s"grain ${want.size}; missing ${want.diff(got).take(3)}, extra " +
+        s"${got.diff(want).take(3)}")
+      // a doc in no brute-force pair is a singleton and has no label
+      val paired = brute(cached).flatMap { case (a, b, _) => Seq(a, b) }.toSet
+      assert(got.map(_._1).toSet == paired, s"$name: labelled docs are the paired docs")
+      if (name == "diffuse")
+        assert(cached.count() > paired.size, "diffuse must have singleton docs")
+      cached.unpersist()
+    }
+  }
+
+  test("phashClusterLabels keeps an image and an audio doc with the same " +
+    "phash in separate components") {
+    val h = hash56()
+    val near = flip(h, 1)
+    val media = Seq((0L, "image", h), (1L, "audio", h), (2L, "image", h),
+      (3L, "audio", near), (4L, "image", near), (5L, "audio", flip(h, 9)))
+      .toDF("doc_id", "media_type", "phash")
+    val got = hashGrainLabels(media, Seq("media_type"))
+    assert(got == Seq(0L -> 0L, 1L -> 1L, 2L -> 0L, 3L -> 1L, 4L -> 0L))
+    assert(got == docGrainLabels(media, Seq("media_type")))
   }
 }
