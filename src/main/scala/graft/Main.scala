@@ -168,7 +168,22 @@ object Main {
     * OUT/manifest.parquet (c112 digests, verifiable by
     * `Main shard --verify`) and prints one JSON stats line with each
     * stage's exit counts — the per-stage attrition a release owner
-    * reads first. */
+    * reads first.
+    *
+    * Every intermediate with more than one consumer exists once:
+    *  - the c119 verdict table, cached for the run (the stats fold, the
+    *    survivors' shingles and the released rows read it);
+    *  - the survivors' shingle table, hash-partitioned on doc_id at the
+    *    session shuffle width before shingling (explicit N: AQE would
+    *    coalesce the small, CPU-bound signature aggregate to one task)
+    *    and cached inside c2 for the signature pass and both verify
+    *    sides; c2 materialises its pairs and drops that cache itself;
+    *  - the cluster labels, checkpointed by connected components: the
+    *    drop set and the `near_dups` count read them;
+    *  - the written manifest: one aggregate over it gives `released`
+    *    and `shards`.
+    * The verdict cache is dropped in `finally`, so a failed run leaves no
+    * cached blocks behind in a long-lived JVM. */
   private def pipelineCmd(args: Array[String]): Unit = {
     import graft.operators.{Dedup, Extract, TextOps}
     val in = opt(args, "--in").getOrElse(sys.error("--in required"))
@@ -187,49 +202,50 @@ object Main {
       .select("doc_id", "well_formed", "enc_ok", "q_keep", "is_dup", "kept",
         "repaired")
       .persist()
-    val stats = staged.agg(
-      count(lit(1)).as("n_in"),
-      sum(when(!col("well_formed"), 1L).otherwise(0L)).as("refused"),
-      sum(when(col("well_formed") && !col("enc_ok"), 1L).otherwise(0L))
-        .as("enc_flagged"),
-      sum(when(col("well_formed") && col("enc_ok") && !col("q_keep"), 1L)
-        .otherwise(0L)).as("q_dropped"),
-      sum(when(col("is_dup"), 1L).otherwise(0L)).as("exact_dups"),
-      sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept")).collect()(0)
-    val keptDocs = staged.filter(col("kept"))
-      .select(col("doc_id"), col("repaired").as("text"))
-    // near-dup stage: c2's banded minhash pairs over the survivors'
-    // OWN shingle table (never the corpus-dir memoized one — the
-    // released text differs from the raw corpus), c19's CC labels,
-    // min-id canonical keeps
-    val (released0, nNear) =
-      if (!nearDup) (keptDocs, 0L)
-      else {
-        val sh = Dedup.shingleRows(keptDocs)
-        val edges = Dedup.c2DedupMinhash(spark, in, shingleTable = Some(sh))
-          .filter(col("jaccard") >= threshold)
-          .select(col("doc_a").as("u"), col("doc_b").as("v"))
-        val dropIds = Dedup.connectedComponentsAlternating(edges)._1
-          .filter(col("node") =!= col("cluster_id"))
-          .select(col("node").as("doc_id"))
-        val kept2 = keptDocs.join(dropIds, Seq("doc_id"), "left_anti")
-        (kept2, keptDocs.count() - kept2.count())
-      }
-    val released = TextOps.shuffleShard(released0, prefixLen)
-      .select("doc_id", "text", "shard")
-    released.write.mode("overwrite").parquet(s"$out/released.parquet")
-    val written = spark.read.parquet(s"$out/released.parquet")
-    TextOps.shardManifestOn(written.select("doc_id", "text"), prefixLen)
-      .write.mode("overwrite").parquet(s"$out/manifest.parquet")
-    val nShards = spark.read.parquet(s"$out/manifest.parquet").count()
-    staged.unpersist()
-    println(s"""{"docs_in":${stats.getAs[Long]("n_in")},""" +
-      s""""refused":${stats.getAs[Long]("refused")},""" +
-      s""""enc_flagged":${stats.getAs[Long]("enc_flagged")},""" +
-      s""""q_dropped":${stats.getAs[Long]("q_dropped")},""" +
-      s""""exact_dups":${stats.getAs[Long]("exact_dups")},""" +
-      s""""near_dups":$nNear,"released":${written.count()},""" +
-      s""""shards":$nShards,"out":${jsonStr(out)}}""")
+    try {
+      val stats = staged.agg(
+        count(lit(1)).as("n_in"),
+        sum(when(!col("well_formed"), 1L).otherwise(0L)).as("refused"),
+        sum(when(col("well_formed") && !col("enc_ok"), 1L).otherwise(0L))
+          .as("enc_flagged"),
+        sum(when(col("well_formed") && col("enc_ok") && !col("q_keep"), 1L)
+          .otherwise(0L)).as("q_dropped"),
+        sum(when(col("is_dup"), 1L).otherwise(0L)).as("exact_dups")).head()
+      val keptDocs = staged.filter(col("kept"))
+        .select(col("doc_id"), col("repaired").as("text"))
+      // near-dup stage: c2's banded minhash pairs over the survivors'
+      // OWN shingle table (never the corpus-dir memoized one — the
+      // released text differs from the raw corpus), c19's CC labels,
+      // min-id canonical keeps
+      val (released0, nNear) =
+        if (!nearDup) (keptDocs, 0L)
+        else {
+          val sh = Dedup.shingleRows(keptDocs.repartition(
+            spark.sessionState.conf.numShufflePartitions, col("doc_id")))
+          val edges = Dedup.c2DedupMinhash(spark, in, shingleTable = Some(sh))
+            .filter(col("jaccard") >= threshold)
+            .select(col("doc_a").as("u"), col("doc_b").as("v"))
+          val dropIds = Dedup.connectedComponentsAlternating(edges)._1
+            .filter(col("node") =!= col("cluster_id"))
+            .select(col("node").as("doc_id"))
+          (keptDocs.join(dropIds, Seq("doc_id"), "left_anti"), dropIds.count())
+        }
+      TextOps.shuffleShard(released0, prefixLen)
+        .select("doc_id", "text", "shard")
+        .write.mode("overwrite").parquet(s"$out/released.parquet")
+      val written = spark.read.parquet(s"$out/released.parquet")
+      TextOps.shardManifestOn(written.select("doc_id", "text"), prefixLen)
+        .write.mode("overwrite").parquet(s"$out/manifest.parquet")
+      val shipped = spark.read.parquet(s"$out/manifest.parquet")
+        .agg(coalesce(sum(col("n_docs")), lit(0L)), count(lit(1))).head()
+      println(s"""{"docs_in":${stats.getAs[Long]("n_in")},""" +
+        s""""refused":${stats.getAs[Long]("refused")},""" +
+        s""""enc_flagged":${stats.getAs[Long]("enc_flagged")},""" +
+        s""""q_dropped":${stats.getAs[Long]("q_dropped")},""" +
+        s""""exact_dups":${stats.getAs[Long]("exact_dups")},""" +
+        s""""near_dups":$nNear,"released":${shipped.getLong(0)},""" +
+        s""""shards":${shipped.getLong(1)},"out":${jsonStr(out)}}""")
+    } finally { staged.unpersist(); () }
   }
 
   /** `graft.Main domains --in PARQUET --out OUT [--cap K]

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 
@@ -95,12 +96,12 @@ object Dedup {
   }
 
   /** Per-JVM memoized shingle table: [[shingleRows]] materialized once per
-    * data dir to scratch parquet and read back. The shingle subtree feeds
-    * three consumers in c2 (minhash agg + both verify-join sides) and two
-    * in c4 — without this seam the scan+split+explode+distinct subtree
-    * executes once per consumer. At 100 TB this is exactly "persist the
-    * shingle table", here in its single-node form; pipelines that manage
-    * their own shingle store pass it to [[c2DedupMinhash]] directly. */
+    * data dir to scratch parquet and read back. Every shingle-set query
+    * on a dir (c2, c4, c37, ...) reads it — without this seam the
+    * scan+split+explode+distinct subtree executes once per query. At
+    * 100 TB this is exactly "persist the shingle table", here in its
+    * single-node form; pipelines that manage their own shingle store pass
+    * it to [[c2DedupMinhash]] directly. */
   private[graft] def shingleTablePath(spark: SparkSession, dir: String,
                                       n: Int = 3): String =
     graft.Memo.table("shingles", Seq(dir), n) { p =>
@@ -169,59 +170,80 @@ object Dedup {
     sh.groupBy("doc_id").agg(cols.head, cols.tail: _*)
   }
 
-  /** LSH band keys (doc_id, band, key) from a [[minhashAgg]] frame:
-    * `bands` buckets of k/bands consecutive minhashes each. */
+  /** LSH band keys (doc_id, ns, band, key) from a [[minhashAgg]] frame:
+    * `bands` buckets of k/bands consecutive minhashes each, every row
+    * carrying its doc's shingle-set size `ns`. */
   private[graft] def bandKeysOf(mh: DataFrame, k: Int, bands: Int): DataFrame = {
     val rowsPerBand = k / bands
-    mh.select(col("doc_id"), posexplode(array(
+    mh.select(col("doc_id"), col("ns"), posexplode(array(
       (0 until bands).map { j =>
         val cols = (0 until rowsPerBand).map(r => col(s"mh${j * rowsPerBand + r}"))
         md5(concat_ws("|", cols: _*))
-      }: _*))).toDF("doc_id", "band", "key")
+      }: _*))).toDF("doc_id", "ns", "band", "key")
   }
 
   /** c2: MinHash + LSH near-duplicate pairs.
     *
     * k=8 md5 minhashes over word-3-shingles, banded 4×2: docs sharing any
     * band bucket become candidates, then candidates are verified with exact
-    * shingle-set Jaccard. The only shuffles are the band-bucket equi-join
-    * and two hash joins to re-attach shingle sets — nothing is O(n²).
-    * md5 (not xxhash) so the DuckDB oracle reproduces buckets bit-for-bit.
-    */
+    * shingle-set Jaccard. md5 (not xxhash) so the DuckDB oracle reproduces
+    * buckets bit-for-bit.
+    *
+    * Every intermediate is computed once per call, for every caller
+    * through the same code: the shingle input (the memoized table, or
+    * `shingleTable` — the survivors' own shingles in `Main pipeline`, a
+    * caller's shingle store at 100 TB) is cached for the call, and the
+    * signature aggregate, the band rows and both verify-join sides read
+    * that cache (a caller's already-cached frame is read as it is). The
+    * pairs are materialised before the call returns and the call's own
+    * cache is dropped in `finally`, so the returned frame pins nothing.
+    * Shuffles, none O(n²):
+    *  - the signature aggregate (k minhashes + `ns`, one pass) groups on
+    *    doc_id — no shuffle at all when the input is already
+    *    hash-partitioned on doc_id (`Main pipeline`'s is, at the session
+    *    width); one partial-aggregate exchange otherwise;
+    *  - candidates: ONE groupBy on the (band, key) bucket over the band
+    *    rows, which carry `ns`; each bucket's member list is paired with
+    *    itself, so the signatures have one consumer (a self-join on the
+    *    bucket plans the signature aggregate once per side), then one
+    *    distinct on (doc_a, doc_b, na, nb);
+    *  - verify: |A∩B| by two equi-joins back onto the cached shingles
+    *    (broadcast while they fit, one shuffle each beyond) and one count
+    *    per pair; |A| and |B| ride on the candidate rows, so no size join;
+    *  - the sort is planned over the materialised pairs: a consumer that
+    *    aggregates them (connected components' distinct) never runs it. */
   def c2DedupMinhash(spark: SparkSession, dir: String,
                      k: Int = 8, bands: Int = 4,
                      shingleTable: Option[DataFrame] = None): DataFrame = {
-    // the shingle subtree feeds three consumers (minhash agg + both sides
-    // of the verify join): read the materialized shingle table (see
-    // [[shingleTablePath]]) so each consumer scans a small parquet instead
-    // of recomputing scan+shingle+distinct. Callers with their own shingle
-    // store (the 100 TB shape) inject it via `shingleTable`.
-    val sh = shingleTable.getOrElse(
+    val input = shingleTable.getOrElse(
       spark.read.parquet(shingleTablePath(spark, dir)))
-
-    val mh = minhashAgg(sh, k)
-    val bandKeys = bandKeysOf(mh, k, bands)
-
-    val pairs = bandKeys.select(col("band"), col("key"), col("doc_id").as("doc_a"))
-      .join(bandKeys.select(col("band"), col("key"), col("doc_id").as("doc_b")),
-        Seq("band", "key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-
-    // exact verify on candidates only: |A∩B| via a shingle equi-join
-    // (bucket-collided pairs always share their min shingle, so the inner
-    // join never drops a candidate)
-    val sizes = mh.select(col("doc_id"), col("ns"))
-    val inter = pairs
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ni"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("ns").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("ns").as("nb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        jaccardCol(col("ni"), col("na"), col("nb")).as("jaccard"))
-      .orderBy("doc_a", "doc_b")
+    // a shingle frame the caller already caches is read as is, and stays
+    val owned = input.storageLevel == StorageLevel.NONE
+    val sh = if (owned) input.persist() else input
+    try {
+      val pairs = bandKeysOf(minhashAgg(sh, k), k, bands)
+        .groupBy("band", "key")
+        .agg(collect_list(struct(col("doc_id"), col("ns"))).as("m"))
+        .filter(size(col("m")) > 1)
+        .select(col("m"), explode(col("m")).as("a"))
+        .select(col("a"), explode(col("m")).as("b"))
+        .filter(col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+          col("a.ns").as("na"), col("b.ns").as("nb"))
+        .distinct()
+      // exact verify on candidates only: |A∩B| via a shingle equi-join
+      // (bucket-collided pairs always share their min shingle, so the
+      // inner join never drops a candidate)
+      pairs
+        .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
+        .join(sh.select(col("doc_id").as("doc_b"), col("shingle")),
+          Seq("doc_b", "shingle"))
+        .groupBy("doc_a", "doc_b", "na", "nb").agg(count(lit(1)).as("ni"))
+        .select(col("doc_a"), col("doc_b"),
+          jaccardCol(col("ni"), col("na"), col("nb")).as("jaccard"))
+        .localCheckpoint()
+        .orderBy("doc_a", "doc_b")
+    } finally if (owned) sh.unpersist()
   }
 
   /** Incremental dedup of an incoming batch against an existing corpus —

@@ -1780,4 +1780,64 @@ class CliSpec extends SparkSpec {
     assert(released2.select("doc_id")
       .exceptAll(released.select("doc_id")).count() == 0)
   }
+
+  test("pipeline drops its cached verdict table when the run fails") {
+    import graft.operators.Extract
+    val tmp = Files.createTempDirectory("graft-cli-pipeline-fail-").toString
+    Tables.documents(spark, sfDir)
+      .select(col("doc_id"), Extract.pipelineMarkup.as("html"))
+      .write.parquet(s"$tmp/raw_web")
+    // OUT is a regular file: the released write fails after the verdict
+    // table is cached and folded into the stats
+    Files.writeString(java.nio.file.Paths.get(s"$tmp/out"), "not a directory")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](Main.main(Array("pipeline", "--in", s"$tmp/raw_web",
+      "--out", s"$tmp/out")))
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"cached RDDs left behind: $left")
+  }
+
+  test("pipeline --near-dup pinned: released = c119 kept minus the " +
+    "non-minimum members of c2's jaccard >= 0.5 components; the stats " +
+    "line's attrition adds up") {
+    import graft.operators.{Dedup, Extract}
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-cli-pipeline-nd-").toString
+    Tables.documents(spark, sfDir)
+      .select(col("doc_id"), Extract.gateCorruption.as("text"))
+      .select(col("doc_id"), Extract.pipelineMarkup.as("html"))
+      .write.parquet(s"$tmp/raw_web")
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+      Main.main(Array("pipeline", "--in", s"$tmp/raw_web",
+        "--out", s"$tmp/rel", "--near-dup"))
+    }
+    val line = buf.toString("UTF-8").linesIterator.filter(_.startsWith("{"))
+      .toSeq.last
+    val stat = """"(\w+)":(\d+)[,}]""".r.findAllMatchIn(line)
+      .map(m => m.group(1) -> m.group(2).toLong).toMap
+    // reference: the c119 kept docs with their repaired text, c2's pairs
+    // over that text at the CLI's 0.5 threshold, min-label components
+    val keptIds = Extract.c119CrawlPipeline(spark, sfDir).filter(col("kept"))
+      .select("doc_id").as[Long].collect().toSet
+    val kept = Extract.crawlPipelineStaged(spark.read.parquet(s"$tmp/raw_web"))
+      .filter(col("kept")).select(col("doc_id"), col("repaired").as("text"))
+    assert(kept.select("doc_id").as[Long].collect().toSet == keptIds)
+    val edges = Dedup.c2DedupMinhash(spark, s"$tmp/raw_web",
+        shingleTable = Some(Dedup.shingleRows(kept)))
+      .filter(col("jaccard") >= 0.5)
+      .select(col("doc_a").as("u"), col("doc_b").as("v"))
+    val dropped = MinLabelCC(edges).collect { case (n, l) if n != l => n }.toSet
+    assert(dropped.nonEmpty, "the fixture must plant near duplicates")
+    val released = spark.read.parquet(s"$tmp/rel/released.parquet")
+      .select("doc_id").as[Long].collect().toSeq
+    assert(released.size == released.distinct.size)
+    assert(released.toSet == keptIds -- dropped)
+    assert(stat("near_dups") == dropped.size.toLong, line)
+    assert(stat("released") == released.size.toLong, line)
+    assert(stat("docs_in") == Seq("refused", "enc_flagged", "q_dropped",
+      "exact_dups", "near_dups", "released").map(stat).sum, line)
+    assert(stat("shards") ==
+      spark.read.parquet(s"$tmp/rel/manifest.parquet").count(), line)
+  }
 }

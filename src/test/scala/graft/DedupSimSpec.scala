@@ -37,6 +37,78 @@ class DedupSimSpec extends SparkSpec {
       "shingle reuse must not change c2 results")
   }
 
+  test("c2 computes each intermediate once: an injected lazy shingle frame " +
+    "is evaluated once and the signature aggregate runs once") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
+    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(action -> qe.executedPlan)
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val lazySh = Dedup.shingleRows(Tables.documents(spark, sfDir))
+      Dedup.c2DedupMinhash(spark, sfDir, shingleTable = Some(lazySh)).collect()
+      // listener events arrive asynchronously, in order: collect is last
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!plans.asScala.exists(_._1 == "collect") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.asScala.exists(_._1 == "collect"), "no collect plan recorded")
+    // every operator the executed plans evaluate: a cached relation's plan
+    // counts once however many scans read it, a reused exchange not at all
+    val helper = new AdaptiveSparkPlanHelper {}
+    val cached = scala.collection.mutable.Set[AnyRef]()
+    def evaluated(p: SparkPlan): Seq[SparkPlan] =
+      helper.collect(p) { case x => x }.flatMap {
+        case m: InMemoryTableScanExec if cached.add(m.relation.cacheBuilder) =>
+          m +: evaluated(m.relation.cacheBuilder.cachedPlan)
+        case x => Seq(x)
+      }
+    val ops = plans.asScala.toSeq.flatMap(p => evaluated(p._2))
+    val shingleEvals = ops.count {
+      case g: GenerateExec => g.generator.sql.contains("sequence")
+      case _ => false
+    }
+    val minhashAggs = ops.count {
+      case a: BaseAggregateExec => a.aggregateExpressions.exists(e =>
+        (e.mode == Final || e.mode == Complete) &&
+          e.aggregateFunction.sql.contains("md5"))
+      case _ => false
+    }
+    assert(shingleEvals == 1, s"shingle subtree evaluated $shingleEvals times")
+    assert(minhashAggs == 1, s"$minhashAggs minhash aggregations")
+  }
+
+  test("c2 drops its own shingle cache, on success and on failure, and " +
+    "leaves a caller's cache alone") {
+    import org.apache.spark.storage.StorageLevel
+    val live = Dedup.shingleRows(Tables.documents(spark, sfDir))
+    val want = Dedup.c2DedupMinhash(spark, sfDir, shingleTable = Some(live)).collect()
+    assert(live.storageLevel == StorageLevel.NONE,
+      "c2's cache outlived the call")
+    val cached = Dedup.shingleRows(Tables.documents(spark, sfDir)).persist()
+    try {
+      val got = Dedup.c2DedupMinhash(spark, sfDir, shingleTable = Some(cached))
+        .collect()
+      assert(cached.storageLevel != StorageLevel.NONE, "the caller's cache was dropped")
+      assert(got.toSeq == want.toSeq)
+    } finally { cached.unpersist(); () }
+    val bad = Dedup.shingleRows(Tables.documents(spark, sfDir))
+      .withColumn("shingle", when(col("doc_id") === 7L, raise_error(lit("boom")))
+        .otherwise(col("shingle")))
+    intercept[Exception](Dedup.c2DedupMinhash(spark, sfDir, shingleTable = Some(bad)))
+    assert(bad.storageLevel == StorageLevel.NONE,
+      "a failed call left its cache behind")
+  }
+
   test("c2 minhash jaccard is exact on a known pair") {
     import spark.implicits._
     // doc 1/2 share exactly 1 of their (3+3-1=5... ) shingles: verify value

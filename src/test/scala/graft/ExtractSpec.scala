@@ -119,6 +119,38 @@ class ExtractSpec extends SparkSpec {
         r.getString(4)))
   }
 
+  test("Tables.fanOut on and off give the same rows: c117, c118, c119 and " +
+    "the shingle table from the fanned and the unfanned documents frame") {
+    import graft.operators.Dedup
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def fannedPlan: Boolean = Tables.documentsFanned(spark, sfDir)
+      .queryExecution.executedPlan.toString.contains("REPARTITION_BY_NUM")
+    def gateRows(): Seq[Seq[String]] = Seq(
+      Extract.c117HtmlExtract(spark, sfDir),
+      Extract.c118EncodingFlag(spark, sfDir),
+      Extract.c119CrawlPipeline(spark, sfDir)).map(rows)
+    val on = gateRows()
+    val onFanned = fannedPlan
+    // the floor is off once the scan itself yields >= parallelism splits:
+    // cap the split size at a 1/N-th of the file
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.get(key)
+    val bytes = java.nio.file.Files.size(
+      java.nio.file.Paths.get(s"$sfDir/documents.parquet"))
+    spark.conf.set(key,
+      (bytes / spark.sessionState.conf.numShufflePartitions).toString)
+    val (off, offFanned) =
+      try (gateRows(), fannedPlan) finally spark.conf.set(key, prev)
+    assert(onFanned && !offFanned, "both branches of the floor must be taken")
+    Seq("c117", "c118", "c119").zip(on.zip(off)).foreach { case (row, (a, b)) =>
+      assert(a.nonEmpty && a == b, s"$row differs with the floor off")
+    }
+    // the memoized shingle table is built from the fanned frame
+    assert(rows(spark.read.parquet(Dedup.shingleTablePath(spark, sfDir))) ==
+      rows(Dedup.shingleRows(Tables.documents(spark, sfDir))))
+  }
+
   test("c118 clean text is ok and repairs to itself; \\t \\n \\r stay legal") {
     val Seq((f, c, m, ok, rep)) = flag("clean text\twith\nlegal\rcontrols")
     assert(f == 0 && c == 0 && m == 0 && ok)
