@@ -55,6 +55,10 @@ object GraftSession {
       // than hostage to the largest single sort.
       .config("spark.buffer.pageSize", "16m")
       .config("spark.ui.enabled", "false")
+      // streaming checkpoint logs on local paths through java.nio: no
+      // chmod/readlink child process per micro-batch log write
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

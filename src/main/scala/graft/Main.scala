@@ -2364,7 +2364,9 @@ object Main {
         val st = stageById.get(s.batchId)
         s"""{"batch_id":${s.batchId},"input_rows":${s.inputRows},""" +
         s""""add_batch_ms":${s.addBatchMs},"trigger_ms":${s.triggerMs},""" +
-        f""""rows_per_sec":${s.rowsPerSec}%.1f""" +
+        f""""rows_per_sec":${s.rowsPerSec}%.1f,""" +
+        s.phases.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }
+          .mkString(""""phases_ms":{""", ",", "}") +
         st.map(x =>
           f""","parse_ms":${x.parseMs}%.1f,"serialize_ms":${x.serializeMs}%.1f""" +
           f""","publish_ms":${x.publishMs}%.1f""").getOrElse("") + "}"

@@ -288,22 +288,19 @@ object Dedup {
     }
     val shEx = existingShingles.getOrElse(
       shingleRows(existing.select(col("doc_id"), col("text"))))
-    val mhIn = minhashAgg(shIn, k)
-    val mhEx = minhashAgg(shEx, k)
-    val pairs = bandKeysOf(mhIn, k, bands)
-      .select(col("band"), col("key"), col("doc_id").as("in_id"))
-      .join(bandKeysOf(mhEx, k, bands)
-        .select(col("band"), col("key"), col("doc_id").as("ex_id")),
+    // each side's band rows carry its docs' shingle-set sizes, so the
+    // verify reads |A| and |B| off the candidate rows: no size join
+    val pairs = bandKeysOf(minhashAgg(shIn, k), k, bands)
+      .select(col("band"), col("key"), col("doc_id").as("in_id"), col("ns").as("na"))
+      .join(bandKeysOf(minhashAgg(shEx, k), k, bands)
+        .select(col("band"), col("key"), col("doc_id").as("ex_id"), col("ns").as("nb")),
         Seq("band", "key"))
-      .select("in_id", "ex_id").distinct()
-    val inter = pairs
+      .select("in_id", "ex_id", "na", "nb").distinct()
+    val near = pairs
       .join(shIn.select(col("doc_id").as("in_id"), col("shingle")), "in_id")
       .join(shEx.select(col("doc_id").as("ex_id"), col("shingle")),
         Seq("ex_id", "shingle"))
-      .groupBy("in_id", "ex_id").agg(count(lit(1)).as("ni"))
-    val near = inter
-      .join(mhIn.select(col("doc_id").as("in_id"), col("ns").as("na")), "in_id")
-      .join(mhEx.select(col("doc_id").as("ex_id"), col("ns").as("nb")), "ex_id")
+      .groupBy("in_id", "ex_id", "na", "nb").agg(count(lit(1)).as("ni"))
       .filter(jaccardCol(col("ni"), col("na"), col("nb")) >= threshold)
       .groupBy("in_id").agg(min(col("ex_id")).as("near_of"))
       .withColumnRenamed("in_id", "doc_id")

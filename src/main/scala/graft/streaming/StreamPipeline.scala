@@ -19,7 +19,9 @@ import graft.sources.JsonConvert
   * In production the source is `readStream.format("socket")` (or Kafka);
   * checkpointing + foreachBatch give at-least-once publish. The
   * MemoryStream harness below exists so the driver's batch oracle can
-  * verify the exact same pipeline code deterministically.
+  * verify the exact same pipeline code deterministically. A checkpoint on
+  * a local path has its offset and commit logs written by
+  * [[LocalCheckpointFileManager]] (java.nio, fsync, no shell forks).
   */
 object StreamPipeline {
 

@@ -85,6 +85,12 @@ class CliSpec extends SparkSpec {
         s"batch execution time ($addBatchTotal ms)")
     assert(lat.contains("\"parse_ms\"") && lat.contains("\"serialize_ms\"") &&
       lat.contains("\"publish_ms\""), s"per-batch stage fields present: $lat")
+    // the engine's per-batch phases: per batch in the dump, averaged in
+    // the metrics
+    assert(lat.contains("\"phases_ms\":{") && lat.contains("\"walCommit\":"),
+      s"per-batch phases present: $lat")
+    assert(met.contains("\"phase_walCommit_ms_avg\"") &&
+      met.contains("\"phase_commitOffsets_ms_avg\""), s"phase averages: $met")
   }
 
   test("dedup subcommand: exact and minhash modes write canonical survivors") {

@@ -37,12 +37,12 @@ class DedupSimSpec extends SparkSpec {
       "shingle reuse must not change c2 results")
   }
 
-  test("c2 computes each intermediate once: an injected lazy shingle frame " +
-    "is evaluated once and the signature aggregate runs once") {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
-    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
+  /** Every operator the executed plans of `run`'s actions evaluate, up to
+    * and including its `collect`: a cached relation's plan counts once
+    * however many scans read it, a reused exchange not at all. */
+  private def evaluatedOps(run: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.util.QueryExecutionListener
     import scala.jdk.CollectionConverters._
@@ -54,16 +54,13 @@ class DedupSimSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      val lazySh = Dedup.shingleRows(Tables.documents(spark, sfDir))
-      Dedup.c2DedupMinhash(spark, sfDir, shingleTable = Some(lazySh)).collect()
+      run
       // listener events arrive asynchronously, in order: collect is last
       val deadline = System.nanoTime() + 30L * 1000000000L
       while (!plans.asScala.exists(_._1 == "collect") && System.nanoTime() < deadline)
         Thread.sleep(20)
     } finally spark.listenerManager.unregister(listener)
     assert(plans.asScala.exists(_._1 == "collect"), "no collect plan recorded")
-    // every operator the executed plans evaluate: a cached relation's plan
-    // counts once however many scans read it, a reused exchange not at all
     val helper = new AdaptiveSparkPlanHelper {}
     val cached = scala.collection.mutable.Set[AnyRef]()
     def evaluated(p: SparkPlan): Seq[SparkPlan] =
@@ -72,17 +69,36 @@ class DedupSimSpec extends SparkSpec {
           m +: evaluated(m.relation.cacheBuilder.cachedPlan)
         case x => Seq(x)
       }
-    val ops = plans.asScala.toSeq.flatMap(p => evaluated(p._2))
+    plans.asScala.toSeq.flatMap(p => evaluated(p._2))
+  }
+
+  /** Final (or complete) aggregates among `ops` whose grouping columns and
+    * aggregate functions (as SQL) satisfy `f`. */
+  private def finalAggs(ops: Seq[org.apache.spark.sql.execution.SparkPlan])(
+      f: (Seq[String], Seq[String]) => Boolean): Int = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    ops.count {
+      case a: BaseAggregateExec =>
+        val fs = a.aggregateExpressions.filter(e => e.mode == Final || e.mode == Complete)
+        fs.nonEmpty && f(a.groupingExpressions.map(_.sql), fs.map(_.aggregateFunction.sql))
+      case _ => false
+    }
+  }
+
+  test("c2 computes each intermediate once: an injected lazy shingle frame " +
+    "is evaluated once and the signature aggregate runs once") {
+    import org.apache.spark.sql.execution.GenerateExec
+    val ops = evaluatedOps {
+      val lazySh = Dedup.shingleRows(Tables.documents(spark, sfDir))
+      Dedup.c2DedupMinhash(spark, sfDir, shingleTable = Some(lazySh)).collect()
+      ()
+    }
     val shingleEvals = ops.count {
       case g: GenerateExec => g.generator.sql.contains("sequence")
       case _ => false
     }
-    val minhashAggs = ops.count {
-      case a: BaseAggregateExec => a.aggregateExpressions.exists(e =>
-        (e.mode == Final || e.mode == Complete) &&
-          e.aggregateFunction.sql.contains("md5"))
-      case _ => false
-    }
+    val minhashAggs = finalAggs(ops)((_, fs) => fs.exists(_.contains("md5")))
     assert(shingleEvals == 1, s"shingle subtree evaluated $shingleEvals times")
     assert(minhashAggs == 1, s"$minhashAggs minhash aggregations")
   }
@@ -369,6 +385,16 @@ class DedupSimSpec extends SparkSpec {
     assert(got(10L) == ("exact_dup", 1L))
     assert(got(11L) == ("near_dup", 1L))
     assert(got(12L) == ("new", -1L))
+  }
+
+  test("c37 reads each side's shingle-set size off its band rows: " +
+    "one minhash aggregate per side and no count-only per-doc aggregate") {
+    val ops = evaluatedOps { Dedup.c37IncrementalDedup(spark, sfDir).collect(); () }
+    val minhashAggs = finalAggs(ops)((_, fs) => fs.exists(_.contains("md5")))
+    val countOnlyPerDoc = finalAggs(ops)((g, fs) =>
+      g == Seq("doc_id") && fs.forall(_.startsWith("count(")))
+    assert(minhashAggs == 2, s"$minhashAggs minhash aggregations")
+    assert(countOnlyPerDoc == 0, s"$countOnlyPerDoc count-only per-doc aggregates")
   }
 
   test("c37 verdicts re-verify against raw text: exact matches, jaccard bounds, id domains") {

@@ -37,9 +37,20 @@ class MetricsSpec extends SparkSpec {
       val s = listener.samples.filter(_.inputRows > 0)
       assert(s.map(_.inputRows).sum == lines.length, "every row metered")
       assert(s.forall(b => b.triggerMs >= b.addBatchMs && b.triggerMs >= 0))
+      // the whole durationMs split: the two log commits sit inside the
+      // trigger, next to the source listing, planning and the batch itself
+      val phases = Seq("latestOffset", "walCommit", "commitOffsets",
+        "queryPlanning", "getBatch", "addBatch", "triggerExecution")
+      s.foreach { b =>
+        assert(phases.forall(b.phases.contains), s"phases missing: ${b.phases}")
+        assert(b.phases("walCommit") + b.phases("commitOffsets") <= b.triggerMs,
+          s"log commits exceed the trigger: ${b.phases}")
+        assert(b.phases("addBatch") == b.addBatchMs && b.phases("triggerExecution") == b.triggerMs)
+      }
       val sum = listener.summary
       assert(sum("rows_total") >= lines.length.toDouble)
       assert(sum("trigger_ms_max") >= sum("trigger_ms_avg"))
+      assert(phases.forall(k => sum.contains(s"phase_${k}_ms_avg")), s"phase averages: $sum")
     } finally spark.streams.removeListener(listener)
   }
 
