@@ -9,6 +9,19 @@ import org.apache.spark.sql.SparkSession
   * the confs below — AQE for runtime re-planning, a shuffle partition count
   * matched to the local core count (a real cluster would size this to
   * executors × cores), and skew-join handling on by default.
+  *
+  * Two confs exist for what the engine costs around the tasks, not in them:
+  *  - `spark.sql.artifact.isolation.enabled=false` gives every query's
+  *    tasks one class loader. Spark runs each streaming query in a clone
+  *    of the session, and each clone gets a fresh artifact UUID and, with
+  *    it, a fresh executor class loader. Spark's codegen cache is keyed on
+  *    (class loader, code), so under isolation every new query recompiles
+  *    the classes an earlier query of the JVM already compiled, and the
+  *    JIT warms them from scratch. graft adds no session artifacts (jars,
+  *    files, REPL classes), so there is nothing to isolate.
+  *  - `fs.file.impl` is [[NioLocalFileSystem]]: without Hadoop's native
+  *    library its local file system sets permissions by starting `chmod`,
+  *    once per directory, part file and checksum of every write.
   */
 object GraftSession {
 
@@ -59,6 +72,11 @@ object GraftSession {
       // chmod/readlink child process per micro-batch log write
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[graft.streaming.LocalCheckpointFileManager].getName)
+      // one class loader per JVM, so a query reuses the generated classes
+      // of an earlier query with the same plan (see above)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // local file writes set permissions through java.nio, not chmod
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

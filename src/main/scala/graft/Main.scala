@@ -35,8 +35,9 @@ import graft.streaming.{FilePublisher, StreamPipeline}
   *     [--batch] [--batch-max-messages N] [--batch-max-bytes B]
   *     [--batch-max-delay MS]   (≙ bolson --pulsar-batch*)
   *     [--latency FILE] [--metrics FILE]   (≙ bolson -l / --metrics:
-  *       per-batch latency samples / per-stage totals, dumped as JSON on
-  *       shutdown — reference: src/bolson/cli.cpp:62-66,92-94, latency.h)
+  *       per-batch latency samples / per-stage totals and the run's
+  *       codegen_compiles, dumped as JSON on shutdown — reference:
+  *       src/bolson/cli.cpp:62-66,92-94, latency.h)
   *   graft.Main bench     (delegates to graft.Bench)
   *   graft.Main verify SF_DIR OUT_DIR   (delegates to graft.Verify)
   */
@@ -2215,6 +2216,11 @@ object Main {
     }
 
     val spark = GraftSession.get()
+    // classes Janino compiles during the run (JVM-wide: every codegen
+    // cache miss); a plan already compiled in this JVM adds none
+    def codegenCompiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compilesAtStart = codegenCompiles
     // per-batch latency tracking (bolson --latency, src/bolson/latency.h):
     // attached whenever either dump file is requested
     val latencyListener = new graft.metrics.LatencyListener()
@@ -2384,7 +2390,8 @@ object Main {
         f""","publish_ms_total":${st.publishMs}%.1f""").getOrElse("")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(f),
         s"""{"messages_published":$totMsgs,"rows_published":$totRows,""" +
-        s""""bytes_published":$totBytes""" + stageJson +
+        s""""bytes_published":$totBytes,""" +
+        s""""codegen_compiles":${codegenCompiles - compilesAtStart}""" + stageJson +
         (if (latJson.nonEmpty) s",$latJson" else "") + "}"); ()
     }
     if (latencyFile.isDefined || metricsFile.isDefined)

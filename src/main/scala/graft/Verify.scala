@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,16 +17,12 @@ object Verify {
       case Array(s, o, f)               => (s, o, Some(f.split(',').toSet), false)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 65 queries compile >100 whole-stage classes; the default 100-entry
-      // codegen cache would recompile constantly (see GraftSession)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the session every graft entry point ships with (extensions, Kryo,
+    // page size, checkpoint manager, one class loader, ...), so the gate
+    // checks the engine as it runs; it also sets nanosAsLong, which
+    // events.parquet's TIMESTAMP(NANOS) needs
+    val spark = GraftSession.builder(master = s"local[$cpus]",
+      shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Output layout: the driver's compare reads the Spark-written DIRECTORY

@@ -13,7 +13,7 @@ import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit => ArrowT
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** One Arrow IPC stream message: a standalone byte payload holding the
@@ -40,6 +40,10 @@ case class IpcMessage(batch_id: Long, n_rows: Long, n_bytes: Long, bytes: Array[
   * (doc/src/schemas.md).
   */
 object ArrowIpc {
+
+  /** [[serialize]]'s output encoder, derived once: `spark.implicits` would
+    * derive it again on every call, that is on every micro-batch. */
+  private val ipcMessageEncoder: Encoder[IpcMessage] = Encoders.product[IpcMessage]
 
   def toArrowField(f: StructField): Field = f.dataType match {
     case LongType => primitive(f.name, new ArrowType.Int(64, true))
@@ -239,8 +243,6 @@ object ArrowIpc {
     require(maxRows > 0, s"maxRows must be positive (got $maxRows)")
     require(maxIpcBytes > 0, s"maxIpcBytes must be positive (got $maxIpcBytes)")
     codecType(codec) // validate eagerly, not inside tasks
-    val spark = df.sparkSession
-    import spark.implicits._
     val schema = df.schema
     val arrowSchemaJson = toArrowSchema(schema).toJson
     val rdd = df.queryExecution.toRdd.mapPartitions { it0 =>
@@ -285,7 +287,7 @@ object ArrowIpc {
         }
       }
     }
-    spark.createDataset(rdd)
+    df.sparkSession.createDataset(rdd)(ipcMessageEncoder)
   }
 
   /** Inverse of [[serialize]]: IPC messages → rows, per partition —

@@ -91,6 +91,9 @@ class CliSpec extends SparkSpec {
       s"per-batch phases present: $lat")
     assert(met.contains("\"phase_walCommit_ms_avg\"") &&
       met.contains("\"phase_commitOffsets_ms_avg\""), s"phase averages: $met")
+    // the run's codegen compile count: a recompile regression shows here
+    assert(met.matches(""".*"codegen_compiles":\d+[,}].*"""),
+      s"codegen_compiles is a whole count: $met")
   }
 
   test("dedup subcommand: exact and minhash modes write canonical survivors") {

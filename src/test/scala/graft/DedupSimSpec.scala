@@ -47,9 +47,13 @@ class DedupSimSpec extends SparkSpec {
     import org.apache.spark.sql.util.QueryExecutionListener
     import scala.jdk.CollectionConverters._
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    // query ids rise JVM-wide: a query planned before `run` (an earlier
+    // test's collect whose success event is still on the listener bus)
+    // is not run's, and must neither count nor end the wait below
+    val before = spark.range(1).queryExecution.id
     val listener = new QueryExecutionListener {
       def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(action -> qe.executedPlan)
+        if (qe.id > before) plans.add(action -> qe.executedPlan)
       def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
