@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
 /** Tuned SparkSession factory for the graft engine.
@@ -10,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   * matched to the local core count (a real cluster would size this to
   * executors × cores), and skew-join handling on by default.
   *
-  * Two confs exist for what the engine costs around the tasks, not in them:
+  * Three settings exist for what the engine costs around the tasks, not in
+  * them:
   *  - `spark.sql.artifact.isolation.enabled=false` gives every query's
   *    tasks one class loader. Spark runs each streaming query in a clone
   *    of the session, and each clone gets a fresh artifact UUID and, with
@@ -22,10 +24,18 @@ import org.apache.spark.sql.SparkSession
   *  - `fs.file.impl` is [[NioLocalFileSystem]]: without Hadoop's native
   *    library its local file system sets permissions by starting `chmod`,
   *    once per directory, part file and checksum of every write.
+  *  - [[start]] makes the driver plan on the task class loader in local
+  *    mode. The driver compiles each whole-stage class under its thread's
+  *    context class loader, and the local executor's tasks compile the
+  *    same code again under their own loader; with one loader on both
+  *    sides the tasks hit the driver's cache entry. Threads the session
+  *    thread starts later (stream execution, AQE and broadcast pools)
+  *    inherit the loader. A cluster's executors run in other JVMs and
+  *    keep their own.
   */
 object GraftSession {
 
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
+  def builder(master: String = defaultMaster,
               // r20: SPARK_GRAFT_SHUFFLE_PARTITIONS decouples the
               // partition count from the thread count — the sf1.0 spill
               // lever: the 139M-row pair-surface sorts spill at 16g heap
@@ -33,9 +43,7 @@ object GraftSession {
               // 4× the partitions quarters the per-task sort. On a real
               // cluster this is executors × cores × a spill headroom
               // factor, exactly the knob a site tunes first.
-              shufflePartitions: Int =
-                sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-                  sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).toInt)
+              shufflePartitions: Int = defaultPartitions)
       : SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -78,10 +86,38 @@ object GraftSession {
       // local file writes set permissions through java.nio, not chmod
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
 
-  def get(): SparkSession = {
-    val spark = builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def get(): SparkSession = start()
+
+  /** The session every graft entry point (CLI verbs, `Verify`, `Bench`,
+    * specs) runs on: [[builder]]'s session at `logLevel`, with the calling
+    * thread planning on the task class loader in local mode (see above). */
+  def start(master: String = defaultMaster, shufflePartitions: Int = defaultPartitions,
+            logLevel: String = "WARN"): SparkSession = {
+    val spark = builder(master, shufflePartitions).getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    if (spark.sparkContext.isLocal)
+      Thread.currentThread.setContextClassLoader(taskLoader(spark.sparkContext))
     spark
+  }
+
+  private def defaultMaster = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"
+
+  private def defaultPartitions =
+    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).toInt
+
+  // the context class loader of a task of `sc`, read once per SparkContext
+  // by a one-task job (local executors share the driver's JVM)
+  private var taskLoaderOf: Option[(SparkContext, ClassLoader)] = None
+  private val seenLoader = new java.util.concurrent.atomic.AtomicReference[ClassLoader]()
+
+  private def taskLoader(sc: SparkContext): ClassLoader = synchronized {
+    taskLoaderOf.collect { case (c, l) if c eq sc => l }.getOrElse {
+      sc.runJob(sc.parallelize(Seq(0), 1), (_: Iterator[Int]) =>
+        seenLoader.set(Thread.currentThread.getContextClassLoader))
+      taskLoaderOf = Some(sc -> seenLoader.get)
+      seenLoader.get
+    }
   }
 
   /** Per-JVM scratch directory under java.io.tmpdir, cleared on each call.

@@ -36,7 +36,8 @@ import graft.streaming.{FilePublisher, StreamPipeline}
   *     [--batch-max-delay MS]   (≙ bolson --pulsar-batch*)
   *     [--latency FILE] [--metrics FILE]   (≙ bolson -l / --metrics:
   *       per-batch latency samples / per-stage totals and the run's
-  *       codegen_compiles, dumped as JSON on shutdown — reference:
+  *       codegen_compiles and codegen_compile_ms, dumped as JSON on
+  *       shutdown — reference:
   *       src/bolson/cli.cpp:62-66,92-94, latency.h)
   *   graft.Main bench     (delegates to graft.Bench)
   *   graft.Main verify SF_DIR OUT_DIR   (delegates to graft.Verify)
@@ -2220,7 +2221,10 @@ object Main {
     // cache miss); a plan already compiled in this JVM adds none
     def codegenCompiles: Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def codegenCompileNs: Long =
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
     val compilesAtStart = codegenCompiles
+    val compileNsAtStart = codegenCompileNs
     // per-batch latency tracking (bolson --latency, src/bolson/latency.h):
     // attached whenever either dump file is requested
     val latencyListener = new graft.metrics.LatencyListener()
@@ -2391,7 +2395,9 @@ object Main {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(f),
         s"""{"messages_published":$totMsgs,"rows_published":$totRows,""" +
         s""""bytes_published":$totBytes,""" +
-        s""""codegen_compiles":${codegenCompiles - compilesAtStart}""" + stageJson +
+        s""""codegen_compiles":${codegenCompiles - compilesAtStart},""" +
+        f""""codegen_compile_ms":${(codegenCompileNs - compileNsAtStart) / 1e6}%.1f""" +
+        stageJson +
         (if (latJson.nonEmpty) s",$latJson" else "") + "}"); ()
     }
     if (latencyFile.isDefined || metricsFile.isDefined)

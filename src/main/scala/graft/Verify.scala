@@ -21,9 +21,8 @@ object Verify {
     // page size, checkpoint manager, one class loader, ...), so the gate
     // checks the engine as it runs; it also sets nanosAsLong, which
     // events.parquet's TIMESTAMP(NANOS) needs
-    val spark = GraftSession.builder(master = s"local[$cpus]",
-      shufflePartitions = cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(master = s"local[$cpus]",
+      shufflePartitions = cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // Output layout: the driver's compare reads the Spark-written DIRECTORY
     // at outDir/<name> (the exact layout the round-0 stub produced — see git

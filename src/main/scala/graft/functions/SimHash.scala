@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Shared eval for [[SimHash64]] — also the body the generated code calls.
   *
   * Token semantics reproduce the `functions._` formulation bit-for-bit:
-  * `split(lower(text), " ")` (UTF8String.toLowerCase + UTF8String.split,
+  * `split(lower(text), " ")` ([[TextCase.lower]] + UTF8String.split,
   * limit -1 — interior empty tokens survive, exactly like StringSplit),
   * distinct tokens, per-token `xxhash64` (XXH64.hashUTF8String, seed 42 —
   * the same call Spark's hash expression generates), ±1 vote per bit,
@@ -19,8 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
 object SimHashUtil {
   private val Space = UTF8String.fromString(" ")
 
-  def simhash64(s: UTF8String): Long = {
-    val toks = s.toLowerCase.split(Space, -1)
+  def simhash64(s: UTF8String, icu: Boolean): Long = {
+    val toks = TextCase.lower(s, icu).split(Space, -1)
     val seen = new java.util.HashSet[UTF8String](toks.length * 2)
     val votes = new Array[Int](64)
     var i = 0
@@ -58,9 +58,9 @@ object SimHash32Md5Util {
   private val Digest = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
 
-  def simhash32(s: UTF8String): Long = {
+  def simhash32(s: UTF8String, icu: Boolean): Long = {
     val md = Digest.get()
-    val toks = s.toLowerCase.split(Space, -1)
+    val toks = TextCase.lower(s, icu).split(Space, -1)
     val seen = new java.util.HashSet[UTF8String](toks.length * 2)
     val votes = new Array[Int](32)
     var i = 0
@@ -99,11 +99,14 @@ case class SimHash32Md5(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash32_md5"
 
+  // lowercases like lower() under the session's ICU conf
+  private lazy val icu = TextCase.icuCaseMappings
+
   override def nullSafeEval(input: Any): Any =
-    SimHash32Md5Util.simhash32(input.asInstanceOf[UTF8String])
+    SimHash32Md5Util.simhash32(input.asInstanceOf[UTF8String], icu)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHash32Md5Util.simhash32($c)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.SimHash32Md5Util.simhash32($c, $icu)")
 
   override protected def withNewChildInternal(newChild: Expression): SimHash32Md5 =
     copy(child = newChild)
@@ -123,11 +126,14 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash64"
 
+  // lowercases like lower() under the session's ICU conf
+  private lazy val icu = TextCase.icuCaseMappings
+
   override def nullSafeEval(input: Any): Any =
-    SimHashUtil.simhash64(input.asInstanceOf[UTF8String])
+    SimHashUtil.simhash64(input.asInstanceOf[UTF8String], icu)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHashUtil.simhash64($c)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.SimHashUtil.simhash64($c, $icu)")
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)

@@ -557,11 +557,14 @@ object VectorFunctions {
 }
 
 /** SparkSessionExtensions hook registering graft's native functions for
-  * SQL use (`SELECT graft_cosine(a, b)`). Install via
+  * SQL use (`SELECT graft_cosine(a, b)`) and graft's `lower()` rewrite
+  * ([[TextCase.RewriteLower]]). Install via
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
   * or `SparkSession.builder.withExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // lower() without ICU's title-case table (see TextCase)
+    ext.injectOptimizerRule(_ => TextCase.RewriteLower)
     ext.injectFunction((
       FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),

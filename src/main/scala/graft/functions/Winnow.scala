@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Reproduces the `functions._` reference formulation (TextOps.winnowGrams
   * ∘ winnowSelect) bit-for-bit: tokens = `split(lower(text), " ")`
-  * (UTF8String.toLowerCase + split limit −1, interior empties survive),
+  * ([[TextCase.lower]] + split limit −1, interior empties survive),
   * gram i = tokens i..i+k−1 joined by a single space, hashed to lowercase
   * md5 hex; each length-w hash window contributes its LEXICOGRAPHIC
   * minimum; the result is the sorted distinct selected set. md5 hex is
@@ -35,7 +35,7 @@ object WinnowUtil {
       java.util.Arrays.compareUnsigned(a, b)
   }
 
-  def fingerprints(s: UTF8String, k: Int, w: Int): ArrayData = {
+  def fingerprints(s: UTF8String, k: Int, w: Int, icu: Boolean): ArrayData = {
     // r20 byte-level pass (guide §1.2 per-task work): the first cut
     // converted every token to java.lang.String, built every gram
     // through a StringBuilder and re-encoded it to UTF-8 for the md5 —
@@ -46,7 +46,7 @@ object WinnowUtil {
     // empty tokens and all — so the md5 streams straight from the
     // lowered bytes with zero string churn. Values are bit-identical:
     // same bytes hashed, same order (hex ≡ digest byte order).
-    val bytes = s.toLowerCase.getBytes
+    val bytes = TextCase.lower(s, icu).getBytes
     // token start offsets: 0 and the byte after every space (spaces
     // never occur inside a multi-byte UTF-8 sequence)
     var nToks = 1
@@ -129,12 +129,15 @@ case class WinnowFps(child: Expression, k: Int, w: Int)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_winnow_fps"
 
+  // lowercases like lower() under the session's ICU conf
+  private lazy val icu = TextCase.icuCaseMappings
+
   override def nullSafeEval(input: Any): Any =
-    WinnowUtil.fingerprints(input.asInstanceOf[UTF8String], k, w)
+    WinnowUtil.fingerprints(input.asInstanceOf[UTF8String], k, w, icu)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      c => s"graft.functions.WinnowUtil.fingerprints($c, $k, $w)")
+      c => s"graft.functions.WinnowUtil.fingerprints($c, $k, $w, $icu)")
 
   override protected def withNewChildInternal(newChild: Expression): WinnowFps =
     copy(child = newChild)

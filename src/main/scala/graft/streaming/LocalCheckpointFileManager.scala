@@ -52,4 +52,12 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
 
   override def mkdirs(p: Path): Unit =
     local(p).fold(super.mkdirs(p)) { d => Files.createDirectories(d); () }
+
+  /** The checkpoint root, created once per query start. */
+  override def createCheckpointDirectory(): Path = {
+    val qualified = fc.makeQualified(path)
+    local(qualified).fold(super.createCheckpointDirectory()) { d =>
+      Files.createDirectories(d); qualified
+    }
+  }
 }

@@ -3,10 +3,11 @@ package graft
 import java.io.PrintWriter
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, Path}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -98,6 +99,25 @@ class CheckpointManagerSpec extends SparkSpec {
       .map(b => IpcMessage(0L, 0L, b.length.toLong, b))
     ArrowIpc.deserialize(spark, msgs, StructType.fromDDL("id BIGINT, v BIGINT"))
       .select("id").as[Long].collect().toSeq.sorted
+  }
+
+  test("createCheckpointDirectory makes the root and its parents with the modes " +
+    "FileContext.mkdir gives, and returns the qualified root") {
+    val tmp = tmpDir("graft-ckfm-root-")
+    val conf = spark.sessionState.newHadoopConf()
+    // scheme-less, as a query's checkpointLocation option usually is
+    def root(side: String) = new Path(tmp.resolve(side).resolve("query").toString)
+    val nio = new LocalCheckpointFileManager(root("nio"), conf).createCheckpointDirectory()
+    val stock = new FileContextBasedCheckpointFileManager(root("stock"), conf)
+      .createCheckpointDirectory()
+    assert(nio == FileContext.getFileContext(conf).makeQualified(root("nio")))
+    assert(nio.toUri.getScheme == "file" && stock.toUri.getScheme == "file")
+    def mode(p: java.nio.file.Path): String = PosixFilePermissions.toString(
+      Files.getPosixFilePermissions(p))
+    val (n, st) = (Paths.get(nio.toUri), Paths.get(stock.toUri))
+    assert(Files.isDirectory(n))
+    assert(mode(n) == mode(st) && mode(n.getParent) == mode(st.getParent),
+      s"${mode(n)} ${mode(n.getParent)} vs ${mode(st)} ${mode(st.getParent)}")
   }
 
   test("a two-batch file drain leaves no .crc and no .tmp file in its checkpoint") {

@@ -94,6 +94,9 @@ class CliSpec extends SparkSpec {
     // the run's codegen compile count: a recompile regression shows here
     assert(met.matches(""".*"codegen_compiles":\d+[,}].*"""),
       s"codegen_compiles is a whole count: $met")
+    // and the Janino time those compiles took
+    assert(met.matches(""".*"codegen_compile_ms":\d+\.\d[,}].*"""),
+      s"codegen_compile_ms is a millisecond figure: $met")
   }
 
   test("dedup subcommand: exact and minhash modes write canonical survivors") {

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Dataset, Row}
@@ -15,7 +15,9 @@ import graft.streaming.{FilePublisher, Publish, StreamPipeline}
   * compiled for the same plan. Spark runs each query in a session clone,
   * and under artifact isolation each clone's tasks get their own class
   * loader, which is part of the codegen cache key: every drain would then
-  * compile its whole-stage iterators and projections again. */
+  * compile its whole-stage iterators and projections again. The driver
+  * plans on the tasks' loader too, so a task reuses the class the driver
+  * compiled for its stage. */
 class CodegenReuseSpec extends SparkSpec {
 
   private val schema = StructType.fromDDL("id BIGINT, name STRING, voltage ARRAY<BIGINT>")
@@ -52,6 +54,27 @@ class CodegenReuseSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 
+  test("after the shared session start the driver plans on the task class loader") {
+    val sc = spark.sparkContext
+    sc.runJob(sc.parallelize(Seq(0), 1), (_: Iterator[Int]) =>
+      CodegenReuseSpec.taskLoader.set(Thread.currentThread.getContextClassLoader))
+    assert(Thread.currentThread.getContextClassLoader eq CodegenReuseSpec.taskLoader.get)
+  }
+
+  test("a fresh single-stage query compiles its class once, on the driver") {
+    // one partition: partial and final aggregate share one stage, so one
+    // whole-stage class; the literal makes its code new to the JVM
+    def aggregate(k: Long): Long = spark.range(0, 1000, 1, 1)
+      .selectExpr(s"sum(id * $k + ${k % 7}) AS s").head().getLong(0)
+    val seed = System.nanoTime() % 1000000L + 1000000L
+    assert(aggregate(seed) == seed * 499500L + 1000L * (seed % 7))
+    val before = compiles
+    val k = seed + 1
+    assert(aggregate(k) == k * 499500L + 1000L * (k % 7))
+    val added = compiles - before
+    assert(added == 1, s"a fresh single-stage query compiled $added classes")
+  }
+
   test("a second identical stream drain compiles no new classes") {
     val in = tmpDir("graft-cgr-in-")
     (0 until 3).foreach { f =>
@@ -66,4 +89,8 @@ class CodegenReuseSpec extends SparkSpec {
     val added = compiles - before
     assert(added == 0, s"the second drain compiled $added classes")
   }
+}
+
+object CodegenReuseSpec {
+  private val taskLoader = new AtomicReference[ClassLoader]()
 }

@@ -1127,7 +1127,9 @@ class OperatorsSpec extends SparkSpec {
       (9004L, "a b c d e f g h"), // exactly k+w-1 tokens: one window
       (9005L, "A B C a b c A B C a b c d e f"), // case folding + repeats
       (9006L, "x  y   z t t t t t t t t t t"), // interior empties survive
-      (9007L, "über ñandú 字 字 字 one two three four five six seven"))
+      (9007L, "über ñandú 字 字 字 one two three four five six seven"),
+      // capitals ICU lowercases and the JDK's older tables do not
+      (9008L, "\u2C2Fx \uA7C0 one \u2C2F two \uA7C0b three \u2C2F\uA7C0 four"))
       .toDF("doc_id", "text")
     val corpus = Tables.documents(spark, sfDir).select("doc_id", "text")
     for (docs <- Seq(edges, corpus)) {

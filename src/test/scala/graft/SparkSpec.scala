@@ -56,9 +56,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   private val sinks = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  lazy val session: SparkSession = {
-    val s = GraftSession.builder(master = "local[4]", shufflePartitions = 4).getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** Every suite starts the shared session the way the CLI does, so its
+    * thread plans on the task class loader too. */
+  def session: SparkSession =
+    GraftSession.start(master = "local[4]", shufflePartitions = 4, logLevel = "ERROR")
 }
