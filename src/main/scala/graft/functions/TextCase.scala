@@ -38,8 +38,11 @@ object TextCase {
 
   /** `Lower(c)` → [[TextLower]] for UTF8_BINARY strings while the ICU conf
     * is on; other collations and the JDK mapping stay Spark's. Injected by
-    * [[GraftExtensions]], so every `lower(...)` column and SQL `lower()`
-    * of a graft session plans without the title-case table. */
+    * [[GraftExtensions]] as a post-hoc resolution rule, so every
+    * `lower(...)` column and SQL `lower()` of a graft session leaves the
+    * analyzer as [[TextLower]]: the optimizer's constant folding (a
+    * literal, a CASE of constants, a local relation) then evaluates
+    * graft's lowercase, never the title-case table. */
   object RewriteLower extends Rule[LogicalPlan] {
     def apply(plan: LogicalPlan): LogicalPlan =
       if (!conf.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)) plan

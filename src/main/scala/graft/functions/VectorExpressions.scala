@@ -563,8 +563,9 @@ object VectorFunctions {
   * or `SparkSession.builder.withExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // lower() without ICU's title-case table (see TextCase)
-    ext.injectOptimizerRule(_ => TextCase.RewriteLower)
+    // lower() without ICU's title-case table (see TextCase); at analysis,
+    // so no optimizer rule folds a constant through Spark's Lower first
+    ext.injectPostHocResolutionRule(_ => TextCase.RewriteLower)
     ext.injectFunction((
       FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, StrictJsonFieldGuard, StrictJsonToStructs}
 import org.apache.spark.sql.types._
 
 import graft.Tables
@@ -94,43 +95,36 @@ object JsonConvert {
   }
 
   /** Strict parse: additionally errors when the JSON object carries any
-    * field outside the schema — bolson's UnexpectedFieldBehavior::Error
-    * (reference: src/bolson/parse/arrow.cpp:90-92). Key extraction uses
-    * json_object_keys — a pure tokenizer pass over the line that never
-    * materializes the VALUES (r21: the previous from_json to
-    * map<string,string> re-parsed and stringified every field, i.e. a
-    * second full parse per line — a3's top cpu row). Same verdict
-    * surface: top-level keys in document order, null on malformed input;
-    * assert_true raises task-side exactly like a malformed record does. */
-  def parseJsonStrict(c: Column, schema: StructType): Column = {
-    val keys = json_object_keys(c)
-    val unexpected = filter(keys, k => !k.isin(schema.fieldNames.toSeq: _*))
-    val check = assert_true(size(unexpected) <= 0,
-      concat(lit("unexpected JSON field(s): "), concat_ws(",", unexpected)))
-    when(check.isNull, parseJson(c, schema))
-  }
+    * top-level field outside the schema — bolson's
+    * UnexpectedFieldBehavior::Error (reference: src/bolson/parse/arrow.cpp:90-92).
+    * One native expression ([[StrictJsonToStructs]]) parses each line once,
+    * recording unexpected keys as the parse steps over them, and raises
+    * `unexpected JSON field(s): a,b` (keys in document order) like
+    * `assert_true` does. A line that is not one JSON object (truncated,
+    * a root array or scalar, `""`) is decided by the parse alone: FAILFAST
+    * `MALFORMED_RECORD_IN_PARSING`, or a null record for `""`. When the
+    * parse fails on a line that also has unexpected keys, the
+    * unexpected-field error wins. */
+  def parseJsonStrict(c: Column, schema: StructType): Column =
+    ColumnBridge.column(StrictJsonToStructs(schema, ColumnBridge.expression(c)))
 
   /** Scan-side companion of [[parseJsonStrict]] for paths that parse via
     * the native JSON scan (which cannot error on unexpected fields): runs
-    * the same map_keys check over the raw lines and returns an
-    * ALWAYS-EMPTY frame in the schema's shape — union it below the scan
-    * and the guard executes with the query, throwing on the first line
-    * with a field outside the schema, while contributing zero rows
-    * otherwise. */
+    * the same keys-only check over the raw lines
+    * ([[StrictJsonFieldGuard]]) and returns an ALWAYS-EMPTY frame in the
+    * schema's shape — union it below the scan and the guard executes with
+    * the query, throwing `unexpected JSON field(s) in: <line>` on the first
+    * line with a top-level field outside the schema, while contributing
+    * zero rows otherwise. Lines that are not one JSON object pass; the
+    * scan decides them. */
   private[graft] def strictFieldGuard(lines: DataFrame,
-                                      schema: StructType): DataFrame = {
-    // json_object_keys, not from_json-to-map: the keys-only tokenizer
-    // pass is the whole point of the guard — the map form re-parsed and
-    // stringified every value, doubling a3's parse cost (r21)
-    val keys = json_object_keys(col("value"))
-    val unexpected = filter(keys, k => !k.isin(schema.fieldNames.toSeq: _*))
+                                      schema: StructType): DataFrame =
     lines
-      .select(assert_true(size(unexpected) <= 0,
-        concat(lit("unexpected JSON field(s) in: "), col("value"))).as("ok"))
-      .filter(col("ok").isNotNull) // vacuous: assert_true is NULL when it passes
+      .select(ColumnBridge.column(
+        StrictJsonFieldGuard(schema, ColumnBridge.expression(col("value")))).as("ok"))
+      .filter(col("ok").isNotNull) // vacuous: the guard is NULL when it passes
       .select(schema.fieldNames.map(f =>
         lit(null).cast(schema(f).dataType).as(f)): _*)
-  }
 
   /** a1: schema-driven parse of the events.props JSON payload column, in
     * full strict mode (malformed AND unexpected-field errors). */
@@ -252,9 +246,9 @@ object JsonConvert {
     // extraction, which evaluates through the interpreted-fallback path.
     // Full bolson parity needs the unexpected-field error too
     // (parse/arrow.cpp:89): the scan can't check that, so a second pass
-    // guards the raw lines with the same map_keys check parseJsonStrict
-    // uses. assert_true returns NULL when the check passes, so the guard
-    // aggregate is zero rows of output and the scan stays the hot path.
+    // guards the raw lines with the keys-only scan parseJsonStrict falls
+    // back on. The guard is NULL when the check passes, so it adds zero
+    // rows of output and the scan stays the hot path.
     val corpus = tripJsonCorpusPath(spark, dir)
     val parsed = spark.read.schema(Schemas.trip).option("mode", "FAILFAST")
       .json(corpus)

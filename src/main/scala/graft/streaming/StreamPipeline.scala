@@ -28,10 +28,10 @@ object StreamPipeline {
   /** The conversion stage shared by every entry point: parse a line-stream
     * against an explicit schema, FAILFAST on malformed records. With
     * `strict` the parse also errors on unexpected fields — bolson's
-    * UnexpectedFieldBehavior::Error (parse/arrow.cpp:89), at the cost of a
-    * keys-only `json_object_keys` tokenizer pass over each line (no value
-    * is materialized); the relaxed default fits trusted/self-generated
-    * corpora where the check is provably vacuous. */
+    * UnexpectedFieldBehavior::Error (parse/arrow.cpp:89), checked inside
+    * the parse's own tokenization ([[JsonConvert.parseJsonStrict]]); the
+    * relaxed default fits trusted/self-generated corpora where the check
+    * is provably vacuous. */
   def convert(lines: DataFrame, schema: StructType, strict: Boolean = false): DataFrame = {
     val parse = if (strict) JsonConvert.parseJsonStrict _ else JsonConvert.parseJson _
     lines.select(parse(col("value"), schema).as("rec"))

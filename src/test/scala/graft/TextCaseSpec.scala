@@ -43,8 +43,8 @@ class TextCaseSpec extends SparkSpec {
 
   /** The plan of `lower(text)` as a Column and in SQL, optimized and run:
     * the expressions it holds and the values, on rows with a null. The
-    * text is no constant: the optimizer folds a constant's `lower()`
-    * before any injected rule sees it. */
+    * text is no constant, so the optimized plan still holds the
+    * expression. */
   private def lowered(): Seq[(LogicalPlan, Seq[Expression], Seq[String])] = {
     val docs = spark.range(0, 3, 1, 1).select(
       when(col("id") =!= 1, concat(lit("\u0391\u0392\u0393 Abc \u2C2F "), col("id")))
@@ -65,6 +65,26 @@ class TextCaseSpec extends SparkSpec {
       assert(exprs.map(_.getClass) == Seq(classOf[TextLower]), plan)
       val low = "\u03B1\u03B2\u03B3 abc \u2C5F"
       assert(rows == Seq(s"$low 0", null, s"$low 2"))
+    }
+  }
+
+  test("constants and local rows are lowercased by graft's lowercase too") {
+    import spark.implicits._
+    val text = "\u0391\u0392\u0393 Abc \u2C2F"
+    val low = "\u03B1\u03B2\u03B3 abc \u2C5F"
+    val shapes = Seq(
+      spark.range(1).select(lower(lit(text))) -> Seq(low),
+      spark.range(0, 2, 1, 1).select(
+        lower(when(col("id") === 0, lit(text)).otherwise(lit("XY")))) -> Seq(low, "xy"),
+      Seq(text, null).toDF("text").select(lower(col("text"))) -> Seq(low, null))
+    shapes.foreach { case (df, rows) =>
+      // rewritten at analysis, before any optimizer rule folds the value
+      val plan = df.queryExecution.analyzed
+      val exprs = plan.flatMap(_.expressions).flatMap(_.collect {
+        case e @ (_: Lower | _: TextLower) => e
+      })
+      assert(exprs.map(_.getClass) == Seq(classOf[TextLower]), plan)
+      assert(df.collect().map(_.getString(0)).toSeq == rows)
     }
   }
 
