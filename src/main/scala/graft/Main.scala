@@ -534,8 +534,8 @@ object Main {
     * checks every round), at per-crawl cost that scales with the batch
     * plus touched components, never the corpus. `--shingles` injects
     * the corpus's at-rest (doc_id, shingle) artifact — the production
-    * path; without it the corpus is shingled once per run (materialized
-    * to scratch, never scanned per consumer). One JSON stats line. */
+    * path; without it the corpus is shingled once per run (cached for
+    * the run, never re-shingled per consumer). One JSON stats line. */
   private def clusterUpdate(args: Array[String]): Unit = {
     import graft.operators.Dedup
     val newIn = opt(args, "--new").getOrElse(sys.error("--new required"))
@@ -1953,7 +1953,8 @@ object Main {
     * batch against the existing corpus (c37's generic entry point):
     * writes per-doc statuses (exact_dup/near_dup/new + dup_of) — or, with
     * `--new-only`, just the genuinely new incoming docs with their full
-    * columns — and prints one JSON counts line. */
+    * columns — and prints one JSON counts line. The incoming batch is
+    * shingled once per run and cached for it. */
   private def ingest(args: Array[String]): Unit = {
     val ex = opt(args, "--existing").getOrElse(sys.error("--existing required"))
     val inc = opt(args, "--incoming").getOrElse(sys.error("--incoming required"))

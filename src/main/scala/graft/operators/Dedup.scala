@@ -12,16 +12,14 @@ import graft.Tables
   * is `(md5(text), length)` so the shuffle carries 40-byte keys instead of
   * document bodies, and only colliding groups compare full text.
   *
-  * Near-dup detection uses banded LSH (MinHash and SimHash): candidate
-  * generation is an equi-join on band buckets — an O(n·bands) shuffle
-  * instead of an O(n²) cross join — and only bucket-collided pairs pay for
-  * exact verification. All hashing is md5-based where a DuckDB oracle must
+  * Near-dup detection uses banded LSH (MinHash and SimHash): candidates
+  * meet on band buckets (one group-by on the MinHash bucket, an equi-join
+  * on SimHash segments) — an O(n·bands) shuffle instead of an O(n²)
+  * cross join — and only bucket-collided pairs pay for exact
+  * verification. All hashing is md5-based where a DuckDB oracle must
   * reproduce it; xxhash64 (codegen'd, 10× faster) where it need not.
   */
 object Dedup {
-
-  /** Monotone id distinguishing [[incrementalDedup]] invocations' scratch. */
-  private val ingestRuns = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** c1: exact dedup — canonical (minimum) doc_id per distinct text, with
     * the duplicate count. */
@@ -43,6 +41,11 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
   }
 
+  /** Default gate tokenizer — the engine-exact ASCII split every oracled
+    * row uses (SURVEY §2 tokenizer note). */
+  private[graft] val asciiTokens: Column => Column =
+    t => split(lower(t), " ")
+
   /** The shared positional-shingle core: every n-shingle of lowercased
     * text as (doc_id, i, shingle) rows, i the 0-based start token index.
     * The hot-path shape: explode an index sequence and build each
@@ -52,11 +55,6 @@ object Dedup {
     * shuffles narrow at scale — no fat array columns move. ONE copy of
     * the scaffold: shingleRows (c2/c4/c37's distinct sets) and
     * positionalShingles (c62/c63/d26's positions) both project it. */
-  /** Default gate tokenizer — the engine-exact ASCII split every oracled
-    * row uses (SURVEY §2 tokenizer note). */
-  private[graft] val asciiTokens: Column => Column =
-    t => split(lower(t), " ")
-
   private def shingleCore(docs: DataFrame, n: Int,
                           tokens: Column => Column = asciiTokens): DataFrame = {
     require(n >= 1, s"shingle width must be >= 1, got $n")
@@ -159,28 +157,104 @@ object Dedup {
     }
   }
 
-  /** k md5 minhashes + the shingle-set size in ONE codegen'd
-    * hash-aggregate over (doc_id, shingle) rows (a separate sizes pass
-    * would recompute the shingle subtree). Shared by c2, c37 and d11's
-    * static side. */
+  /** The MinHash signature, defined once for batch and stream: minhash i
+    * of a shingle set is the least `shingleHash(i, s)` over its shingles
+    * (md5, so the DuckDB oracle reproduces every bucket), and
+    * [[bandKeyArray]] keys its bands. The batch side takes the least in a
+    * row aggregate ([[minhashAgg]]) because batch shingles arrive as
+    * rows; the stream side takes it row-locally, because a stream row
+    * carries its whole document. */
+  private[graft] def shingleHash(i: Int, shingle: Column): Column =
+    md5(concat(lit(s"$i:"), shingle))
+
+  /** The `bands` LSH band keys over minhash columns mh0..mh(k-1): band j
+    * is the md5 of its k/bands consecutive minhashes joined by '|'. */
+  private[graft] def bandKeyArray(k: Int, bands: Int): Column = {
+    val rowsPerBand = k / bands
+    array((0 until bands).map { j =>
+      val cols = (0 until rowsPerBand).map(r => col(s"mh${j * rowsPerBand + r}"))
+      md5(concat_ws("|", cols: _*))
+    }: _*)
+  }
+
+  /** k minhashes + the shingle-set size in ONE codegen'd hash-aggregate
+    * over (doc_id, shingle) rows (a separate sizes pass would recompute
+    * the shingle subtree). Shared by c2, c37, c95 and d11's static side. */
   private[graft] def minhashAgg(sh: DataFrame, k: Int): DataFrame = {
     val cols = (0 until k).map(i =>
-      min(md5(concat(lit(s"$i:"), col("shingle")))).as(s"mh$i")) :+
+      min(shingleHash(i, col("shingle"))).as(s"mh$i")) :+
       count(lit(1)).as("ns")
     sh.groupBy("doc_id").agg(cols.head, cols.tail: _*)
   }
 
-  /** LSH band keys (doc_id, ns, band, key) from a [[minhashAgg]] frame:
-    * `bands` buckets of k/bands consecutive minhashes each, every row
-    * carrying its doc's shingle-set size `ns`. */
-  private[graft] def bandKeysOf(mh: DataFrame, k: Int, bands: Int): DataFrame = {
-    val rowsPerBand = k / bands
-    mh.select(col("doc_id"), col("ns"), posexplode(array(
-      (0 until bands).map { j =>
-        val cols = (0 until rowsPerBand).map(r => col(s"mh${j * rowsPerBand + r}"))
-        md5(concat_ws("|", cols: _*))
-      }: _*))).toDF("doc_id", "ns", "band", "key")
+  /** LSH band keys (doc_id, ns, band, key) from a [[minhashAgg]] frame,
+    * every row carrying its doc's shingle-set size `ns`. */
+  private[graft] def bandKeysOf(mh: DataFrame, k: Int, bands: Int): DataFrame =
+    mh.select(col("doc_id"), col("ns"), posexplode(bandKeyArray(k, bands)))
+      .toDF("doc_id", "ns", "band", "key")
+
+  /** Band rows of one side of an incremental run, tagged `incoming`. */
+  private def sideBands(sh: DataFrame, incoming: Boolean,
+                        k: Int, bands: Int): DataFrame =
+    bandKeysOf(minhashAgg(sh, k), k, bands).withColumn("incoming", lit(incoming))
+
+  /** Near-dup candidates, for every caller: ONE groupBy on the (band, key)
+    * bucket over band rows (doc_id, ns, band, key and any side tag); each
+    * bucket's member list is paired with itself, `keep` admits a pair
+    * from its two members `a` and `b` (structs of every non-bucket
+    * column), and one distinct makes (doc_a, doc_b, na, nb). Pairing the
+    * bucket list (not a self-join on the bucket) gives the signatures one
+    * consumer; a conjunct of `keep` that reads `a` alone is applied
+    * before `b` is exploded. */
+  private def candidatePairs(bandRows: DataFrame,
+                             keep: (Column, Column) => Column): DataFrame = {
+    val member = bandRows.columns.filterNot(Set("band", "key")).map(col)
+    bandRows.groupBy("band", "key")
+      .agg(collect_list(struct(member: _*)).as("m"))
+      .filter(size(col("m")) > 1)
+      .select(col("m"), explode(col("m")).as("a"))
+      .select(col("a"), explode(col("m")).as("b"))
+      .filter(keep(col("a"), col("b")))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        col("a.ns").as("na"), col("b.ns").as("nb"))
+      .distinct()
   }
+
+  /** Exact verify of candidates (doc_a, doc_b, na, nb) as (doc_a, doc_b,
+    * jaccard): |A∩B| by two equi-joins, doc_a's shingles from `shA` and
+    * doc_b's from `shB` (one frame for both in a self-dedup), then one
+    * count per pair; |A| and |B| ride on the candidate rows, so no size
+    * join. The sides stay apart, so a doc_id present on both keeps its
+    * two sets. Bucket-collided pairs always share their min shingle, so
+    * the inner joins never drop a candidate. */
+  private def verifiedPairs(pairs: DataFrame, shA: DataFrame,
+                            shB: DataFrame): DataFrame =
+    pairs
+      .join(shA.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
+      .join(shB.select(col("doc_id").as("doc_b"), col("shingle")),
+        Seq("doc_b", "shingle"))
+      .groupBy("doc_a", "doc_b", "na", "nb").agg(count(lit(1)).as("ni"))
+      .select(col("doc_a"), col("doc_b"),
+        jaccardCol(col("ni"), col("na"), col("nb")).as("jaccard"))
+
+  /** `body` over `df` cached for the call: a frame the caller already
+    * caches is read as it is, and stays; the call's own cache is dropped
+    * in `finally`, so `body` materialises (localCheckpoint) whatever it
+    * hands back. */
+  private def cachedForCall[T](df: DataFrame)(body: DataFrame => T): T = {
+    val owned = df.storageLevel == StorageLevel.NONE
+    val cached = if (owned) df.persist() else df
+    try body(cached) finally if (owned) cached.unpersist()
+  }
+
+  /** `body` over one side's shingles in an incremental run: an injected
+    * frame (the corpus store's at-rest artifact) is read as it is, and
+    * the shingles of `docs` that the call computes itself are cached for
+    * the call. */
+  private def sideShingles[T](injected: Option[DataFrame], docs: DataFrame)(
+      body: DataFrame => T): T =
+    injected.fold(
+      cachedForCall(shingleRows(docs.select(col("doc_id"), col("text"))))(body))(body)
 
   /** c2: MinHash + LSH near-duplicate pairs.
     *
@@ -202,49 +276,21 @@ object Dedup {
     *    doc_id — no shuffle at all when the input is already
     *    hash-partitioned on doc_id (`Main pipeline`'s is, at the session
     *    width); one partial-aggregate exchange otherwise;
-    *  - candidates: ONE groupBy on the (band, key) bucket over the band
-    *    rows, which carry `ns`; each bucket's member list is paired with
-    *    itself, so the signatures have one consumer (a self-join on the
-    *    bucket plans the signature aggregate once per side), then one
-    *    distinct on (doc_a, doc_b, na, nb);
-    *  - verify: |A∩B| by two equi-joins back onto the cached shingles
-    *    (broadcast while they fit, one shuffle each beyond) and one count
-    *    per pair; |A| and |B| ride on the candidate rows, so no size join;
+    *  - candidates: [[candidatePairs]]' one groupBy on the (band, key)
+    *    bucket, pairs with doc_a < doc_b;
+    *  - verify: [[verifiedPairs]]' two equi-joins back onto the cached
+    *    shingles (broadcast while they fit, one shuffle each beyond);
     *  - the sort is planned over the materialised pairs: a consumer that
     *    aggregates them (connected components' distinct) never runs it. */
   def c2DedupMinhash(spark: SparkSession, dir: String,
                      k: Int = 8, bands: Int = 4,
-                     shingleTable: Option[DataFrame] = None): DataFrame = {
-    val input = shingleTable.getOrElse(
-      spark.read.parquet(shingleTablePath(spark, dir)))
-    // a shingle frame the caller already caches is read as is, and stays
-    val owned = input.storageLevel == StorageLevel.NONE
-    val sh = if (owned) input.persist() else input
-    try {
-      val pairs = bandKeysOf(minhashAgg(sh, k), k, bands)
-        .groupBy("band", "key")
-        .agg(collect_list(struct(col("doc_id"), col("ns"))).as("m"))
-        .filter(size(col("m")) > 1)
-        .select(col("m"), explode(col("m")).as("a"))
-        .select(col("a"), explode(col("m")).as("b"))
-        .filter(col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-          col("a.ns").as("na"), col("b.ns").as("nb"))
-        .distinct()
-      // exact verify on candidates only: |A∩B| via a shingle equi-join
-      // (bucket-collided pairs always share their min shingle, so the
-      // inner join never drops a candidate)
-      pairs
-        .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
-        .join(sh.select(col("doc_id").as("doc_b"), col("shingle")),
-          Seq("doc_b", "shingle"))
-        .groupBy("doc_a", "doc_b", "na", "nb").agg(count(lit(1)).as("ni"))
-        .select(col("doc_a"), col("doc_b"),
-          jaccardCol(col("ni"), col("na"), col("nb")).as("jaccard"))
-        .localCheckpoint()
-        .orderBy("doc_a", "doc_b")
-    } finally if (owned) sh.unpersist()
-  }
+                     shingleTable: Option[DataFrame] = None): DataFrame =
+    cachedForCall(shingleTable.getOrElse(
+        spark.read.parquet(shingleTablePath(spark, dir)))) { sh =>
+      val pairs = candidatePairs(bandKeysOf(minhashAgg(sh, k), k, bands),
+        (a, b) => a("doc_id") < b("doc_id"))
+      verifiedPairs(pairs, sh, sh).localCheckpoint()
+    }.orderBy("doc_a", "doc_b")
 
   /** Incremental dedup of an incoming batch against an existing corpus —
     * the form a production pipeline actually runs: the corpus is already
@@ -253,15 +299,19 @@ object Dedup {
     * status: `exact_dup` (byte-identical text exists, via an md5 equi-join
     * — the shuffle carries 32-byte keys, not bodies), `near_dup` (a banded
     * MinHash candidate in the existing corpus verifies at
-    * jaccard ≥ threshold — c2's machinery with the two sides split), or
-    * `new`; plus `dup_of`, the smallest matching existing doc_id (null for
-    * new docs). At 100 TB the existing side's shingles/minhashes/band keys
-    * are precomputed artifacts of the corpus store — inject them via
-    * `existingShingles` — and only the (small) incoming batch is shingled
-    * per run; every join is an equi-join on a hash key, so per-batch cost
-    * scales with the batch, not the corpus. Thresholding uses the ROUNDED
-    * jaccard (c2's 6-dp contract) so verdicts can't flip on a last-ulp
-    * disagreement. */
+    * jaccard ≥ threshold — c2's candidate step and verify, with the two
+    * sides tagged and kept apart, so an incoming doc_id that also names
+    * an existing doc is still compared text to text), or `new`; plus
+    * `dup_of`, the smallest matching existing doc_id (null for new docs).
+    * At 100 TB the existing side's shingles are a precomputed artifact of
+    * the corpus store — inject them via `existingShingles` — and only the
+    * (small) incoming batch is shingled per run; every join is an
+    * equi-join on a hash key, so per-batch cost scales with the batch,
+    * not the corpus. Each side's shingles feed its signature aggregate
+    * and the verify, so a side the call shingles itself is cached for the
+    * call, and the statuses are materialised before it returns.
+    * Thresholding uses the ROUNDED jaccard (c2's 6-dp contract) so
+    * verdicts can't flip on a last-ulp disagreement. */
   def incrementalDedup(incoming: DataFrame, existing: DataFrame,
                        threshold: Double = 0.7, k: Int = 8, bands: Int = 4,
                        existingShingles: Option[DataFrame] = None,
@@ -269,62 +319,41 @@ object Dedup {
     val exact = incoming.select(col("doc_id"), md5(col("text")).as("h"))
       .join(existing.select(md5(col("text")).as("h"), col("doc_id").as("ex_id")), "h")
       .groupBy("doc_id").agg(min(col("ex_id")).as("exact_of"))
-    // the incoming-side shingle subtree feeds two consumers (minhash agg +
-    // the verify join): materialize it to per-call scratch parquet — the
-    // decontaminate() seam — so the batch is shingled once per run, not
-    // once per consumer. Per-call run ids are deliberate (a reused name
-    // would invalidate the lazy frame a previous call returned); each
-    // dataset is bounded by its incoming batch and cleared at JVM exit.
-    // Long-lived services running many batches per JVM should manage the
-    // shingle store themselves and inject it via `incomingShingles`
-    // (which also keeps plan construction lazy — the scratch write is an
-    // eager job).
-    val shIn = incomingShingles.getOrElse {
-      val runId = ingestRuns.incrementAndGet()
-      val shInPath = graft.GraftSession.scratchDir(s"ingest-shingles-$runId").toString
-      shingleRows(incoming.select(col("doc_id"), col("text")))
-        .write.mode("overwrite").parquet(shInPath)
-      incoming.sparkSession.read.parquet(shInPath)
-    }
-    val shEx = existingShingles.getOrElse(
-      shingleRows(existing.select(col("doc_id"), col("text"))))
-    // each side's band rows carry its docs' shingle-set sizes, so the
-    // verify reads |A| and |B| off the candidate rows: no size join
-    val pairs = bandKeysOf(minhashAgg(shIn, k), k, bands)
-      .select(col("band"), col("key"), col("doc_id").as("in_id"), col("ns").as("na"))
-      .join(bandKeysOf(minhashAgg(shEx, k), k, bands)
-        .select(col("band"), col("key"), col("doc_id").as("ex_id"), col("ns").as("nb")),
-        Seq("band", "key"))
-      .select("in_id", "ex_id", "na", "nb").distinct()
-    val near = pairs
-      .join(shIn.select(col("doc_id").as("in_id"), col("shingle")), "in_id")
-      .join(shEx.select(col("doc_id").as("ex_id"), col("shingle")),
-        Seq("ex_id", "shingle"))
-      .groupBy("in_id", "ex_id", "na", "nb").agg(count(lit(1)).as("ni"))
-      .filter(jaccardCol(col("ni"), col("na"), col("nb")) >= threshold)
-      .groupBy("in_id").agg(min(col("ex_id")).as("near_of"))
-      .withColumnRenamed("in_id", "doc_id")
-    incoming.select(col("doc_id"))
-      .join(exact, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_of").isNotNull, "exact_dup")
-          .when(col("near_of").isNotNull, "near_dup")
-          .otherwise("new").as("status"),
-        coalesce(col("exact_of"), col("near_of")).as("dup_of"))
-      .orderBy("doc_id")
+    sideShingles(incomingShingles, incoming) { shIn =>
+      sideShingles(existingShingles, existing) { shEx =>
+        val pairs = candidatePairs(sideBands(shIn, incoming = true, k, bands)
+            .unionByName(sideBands(shEx, incoming = false, k, bands)),
+          (a, b) => a("incoming") && !b("incoming"))
+        val near = verifiedPairs(pairs, shIn, shEx)
+          .filter(col("jaccard") >= threshold)
+          .groupBy(col("doc_a").as("doc_id")).agg(min(col("doc_b")).as("near_of"))
+        incoming.select(col("doc_id"))
+          .join(exact, Seq("doc_id"), "left")
+          .join(near, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            when(col("exact_of").isNotNull, "exact_dup")
+              .when(col("near_of").isNotNull, "near_dup")
+              .otherwise("new").as("status"),
+            coalesce(col("exact_of"), col("near_of")).as("dup_of"))
+          .localCheckpoint()
+      }
+    }.orderBy("doc_id")
   }
 
-  /** c37: [[incrementalDedup]] over a deterministic batch split of the
-    * documents table: the existing corpus is doc_id % 7 != 3; the incoming
-    * batch is the % 7 == 3 slice (genuinely new docs plus their near-dups)
-    * UNION a "recrawl" slice — existing docs with doc_id % 11 == 5
-    * re-keyed as doc_id + 10^12, byte-identical replays of corpus
-    * content (the way recrawls actually arrive) — so all three statuses
-    * are exercised non-trivially and the oracle reproduces the exact
-    * batch. */
-  def c37IncrementalDedup(spark: SparkSession, dir: String,
-                          threshold: Double = 0.7): DataFrame = {
+  /** c37's deterministic batch split of the documents table, which c95
+    * maintains clusters over too: (existing, incoming, existing-side
+    * shingles). The existing corpus is doc_id % 7 != 3; the incoming
+    * batch is the % 7 == 3 slice (genuinely new docs plus their
+    * near-dups) UNION a "recrawl" slice — existing docs with
+    * doc_id % 11 == 5 re-keyed as doc_id + 10^12, byte-identical replays
+    * of corpus content (the way recrawls actually arrive) — so all three
+    * statuses are exercised non-trivially and the oracle reproduces the
+    * exact batch. The existing side's shingles come from the memoized
+    * corpus shingle table (the precomputed-artifact path the generic
+    * entry points are built for), so only the incoming batch is shingled
+    * per run. */
+  private def c37Split(spark: SparkSession,
+                       dir: String): (DataFrame, DataFrame, DataFrame) = {
     val docs = Tables.documents(spark, dir)
     val existing = docs.filter(col("doc_id") % 7 =!= 3)
       .select(col("doc_id"), col("text"))
@@ -335,11 +364,15 @@ object Dedup {
       .select(col("doc_id"), col("text"))
       .unionAll(docs.filter(col("doc_id") % 11 === 5 && col("doc_id") % 7 =!= 3)
         .select((col("doc_id") + 1000000000000L).as("doc_id"), col("text")))
-    // existing-side shingles come from the memoized corpus shingle table
-    // (the precomputed-artifact path the generic entry point is built
-    // for) — only the incoming batch is shingled per run
     val shEx = spark.read.parquet(shingleTablePath(spark, dir))
       .filter(col("doc_id") % 7 =!= 3)
+    (existing, incoming, shEx)
+  }
+
+  /** c37: [[incrementalDedup]] over [[c37Split]]. */
+  def c37IncrementalDedup(spark: SparkSession, dir: String,
+                          threshold: Double = 0.7): DataFrame = {
+    val (existing, incoming, shEx) = c37Split(spark, dir)
     incrementalDedup(incoming, existing, threshold, existingShingles = Some(shEx))
   }
 
@@ -350,9 +383,10 @@ object Dedup {
     * crawl's verified edges into the FROZEN label table and re-runs
     * connected components confined to TOUCHED components only:
     *
-    *  1. new-touching candidate pairs via the SAME banding as c2
-    *     (new-vs-new self-join + new-vs-corpus join against the at-rest
-    *     band keys), exact-jaccard verified at the 6-dp threshold;
+    *  1. candidate pairs with at least one new doc from c2's candidate
+    *     step over both sides' tagged band rows (the new doc as doc_a),
+    *     exact-jaccard verified at the 6-dp threshold and written as
+    *     (least, greatest) edges;
     *  2. touched components = existing clusters containing any endpoint
     *     of a new edge (one equi-join against the label table);
     *  3. CC (large-star/small-star) over {new edges} ∪ {touched
@@ -368,81 +402,36 @@ object Dedup {
     * that were singletons (absent from the label table) are handled by
     * construction: a new edge reaching one carries it into the confined
     * CC directly. Per-crawl cost scales with the batch + touched
-    * components, never the corpus: the corpus-side shingles/band keys
-    * are at-rest artifacts (inject via `existingShingles`), the label
-    * joins are O(labels) equi-joins on bigints, and the CC input is the
-    * touched-star + new-edge set. New doc_ids must be disjoint from the
-    * corpus (a clash would corrupt the shingle union) — checked, loud. */
+    * components, never the corpus: the corpus-side shingles are an
+    * at-rest artifact (inject via `existingShingles`), the label joins
+    * are O(labels) equi-joins on bigints, and the CC input is the
+    * touched-star + new-edge set. A side the call shingles itself is
+    * cached for the call (each feeds its signature aggregate and the
+    * verify). New
+    * doc_ids must be disjoint from the corpus (a node id names one doc
+    * in the label table) — checked, loud. */
   def incrementalClusters(newDocs: DataFrame, existing: DataFrame,
                           existingLabels: DataFrame, threshold: Double = 0.5,
                           k: Int = 8, bands: Int = 4,
                           existingShingles: Option[DataFrame] = None,
                           newShingles: Option[DataFrame] = None): DataFrame = {
-    val spark = newDocs.sparkSession
     val clash = newDocs.select("doc_id")
       .join(existing.select("doc_id"), "doc_id").limit(1).count()
     require(clash == 0L,
       "incrementalClusters: new doc_ids overlap the existing corpus — " +
         "re-key the crawl (recrawl replays arrive re-keyed, c37's rule)")
-    val runId = ingestRuns.incrementAndGet()
-    val shNew = newShingles.getOrElse {
-      val p = graft.GraftSession
-        .scratchDir(s"incr-cluster-shingles-$runId").toString
-      shingleRows(newDocs.select(col("doc_id"), col("text")))
-        .write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
+    sideShingles(newShingles, newDocs) { shNew =>
+      sideShingles(existingShingles, existing) { shEx =>
+        val pairs = candidatePairs(sideBands(shNew, incoming = true, k, bands)
+            .unionByName(sideBands(shEx, incoming = false, k, bands)),
+          (a, b) => a("incoming") && (!b("incoming") || a("doc_id") < b("doc_id")))
+        val edges = verifiedPairs(pairs, shNew, shNew.unionByName(shEx))
+          .filter(col("jaccard") >= threshold)
+          .select(least(col("doc_a"), col("doc_b")).as("u"),
+            greatest(col("doc_a"), col("doc_b")).as("v"))
+        maintainLabels(edges, existingLabels)
+      }
     }
-    // the corpus-side fallback materializes too (r16 review): shEx feeds
-    // TWO consumers (the minhash/band branch and the exact-verify union),
-    // so a lazy frame would scan+shingle the whole corpus twice per
-    // crawl — against this operator's own cost contract. Production
-    // injects the at-rest shingle artifact via `existingShingles` and
-    // skips this entirely.
-    val shEx = existingShingles.getOrElse {
-      val p = graft.GraftSession
-        .scratchDir(s"incr-cluster-ex-shingles-$runId").toString
-      shingleRows(existing.select(col("doc_id"), col("text")))
-        .write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
-    val mhNew = minhashAgg(shNew, k)
-    val mhEx = minhashAgg(shEx, k)
-    val bkNew = bandKeysOf(mhNew, k, bands)
-    val bkEx = bandKeysOf(mhEx, k, bands)
-    // candidates touching ≥ 1 new doc; (doc_a, doc_b) normalized to
-    // (min, max) so the union dedups and the verify join stays canonical
-    val candNN = bkNew.select(col("band"), col("key"), col("doc_id").as("doc_a"))
-      .join(bkNew.select(col("band"), col("key"), col("doc_id").as("doc_b")),
-        Seq("band", "key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-    val candNE = bkNew.select(col("band"), col("key"), col("doc_id").as("n"))
-      .join(bkEx.select(col("band"), col("key"), col("doc_id").as("e")),
-        Seq("band", "key"))
-      .select(least(col("n"), col("e")).as("doc_a"),
-        greatest(col("n"), col("e")).as("doc_b"))
-    val cand = candNN.unionAll(candNE).distinct()
-    // exact-jaccard verify over the union shingle store (c2's contract:
-    // the 6-dp ROUNDED value thresholds, so engines agree on membership)
-    val sh = shNew.unionByName(shEx)
-    val sizes = mhNew.select(col("doc_id"), col("ns"))
-      .unionByName(mhEx.select(col("doc_id"), col("ns")))
-    val inter = cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingle")),
-        Seq("doc_b", "shingle"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ni"))
-    val newEdgesDf = inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("ns").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("ns").as("nb")), "doc_b")
-      .filter(jaccardCol(col("ni"), col("na"), col("nb")) >= threshold)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-    // the edge set feeds two consumers (touched-component lookup + the
-    // CC input) — materialize it once, like the shingle seam above
-    val edgePath = graft.GraftSession
-      .scratchDir(s"incr-cluster-edges-$runId").toString
-    newEdgesDf.write.mode("overwrite").parquet(edgePath)
-    maintainLabels(spark.read.parquet(edgePath), existingLabels)
   }
 
   /** The GENERIC incremental-maintenance core (r16, factored out of
@@ -453,24 +442,26 @@ object Dedup {
     * verbatim, and because labels are canonical component minima the
     * result EQUALS a full re-cluster of the merged graph row for row
     * (c95's theorem; the media twin's gate row engine-checks it too).
-    * Callers materialize `newEdges` first (it feeds the touched-root
-    * lookup AND the CC input). Edge-less new nodes stay absent, exactly
-    * like singletons in a from-scratch CC (consumers coalesce to own
-    * id). */
+    * The edges feed the touched-root lookup AND the CC input, so they
+    * are cached for the call, and the maintained table is materialised
+    * before it returns. Edge-less new nodes stay absent, exactly like
+    * singletons in a from-scratch CC (consumers coalesce to own id). */
   private[graft] def maintainLabels(newEdges: DataFrame,
-                                    existingLabels: DataFrame): DataFrame = {
-    val lbl = existingLabels.select(col("node"), col("cluster_id"))
-    val touchedRoots = newEdges
-      .select(explode(array(col("u"), col("v"))).as("node"))
-      .join(lbl, "node").select("cluster_id").distinct()
-    val touchedStars = lbl.join(touchedRoots, "cluster_id")
-      .select(col("node").as("u"), col("cluster_id").as("v"))
-    val (relabels, _) =
-      connectedComponentsAlternating(newEdges.unionAll(touchedStars))
-    lbl.join(touchedRoots, Seq("cluster_id"), "left_anti")
-      .select(col("node"), col("cluster_id"))
-      .unionByName(relabels.select(col("node"), col("cluster_id")))
-  }
+                                    existingLabels: DataFrame): DataFrame =
+    cachedForCall(newEdges) { edges =>
+      val lbl = existingLabels.select(col("node"), col("cluster_id"))
+      val touchedRoots = edges
+        .select(explode(array(col("u"), col("v"))).as("node"))
+        .join(lbl, "node").select("cluster_id").distinct()
+      val touchedStars = lbl.join(touchedRoots, "cluster_id")
+        .select(col("node").as("u"), col("cluster_id").as("v"))
+      val (relabels, _) =
+        connectedComponentsAlternating(edges.unionAll(touchedStars))
+      lbl.join(touchedRoots, Seq("cluster_id"), "left_anti")
+        .select(col("node"), col("cluster_id"))
+        .unionByName(relabels.select(col("node"), col("cluster_id")))
+        .localCheckpoint()
+    }
 
   /** Per-JVM memoized FROZEN label table of the c37 split's existing
     * corpus (doc_id % 7 ≠ 3): c2 pairs confined to the slice fed through
@@ -481,8 +472,7 @@ object Dedup {
   private[graft] def incrBaseLabelsPath(spark: SparkSession, dir: String,
                                         threshold: Double = 0.5): String =
     graft.Memo.table("incr-base-labels", Seq(dir), threshold) { p =>
-      val shEx = spark.read.parquet(shingleTablePath(spark, dir))
-        .filter(col("doc_id") % 7 =!= 3)
+      val (_, _, shEx) = c37Split(spark, dir)
       val pairs = c2DedupMinhash(spark, dir, shingleTable = Some(shEx))
         .filter(col("jaccard") >= threshold)
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
@@ -491,15 +481,6 @@ object Dedup {
         .write.parquet(p)
     }
 
-  /** c95 gate row (r16): [[incrementalClusters]] over c37's split —
-    * existing corpus = doc_id % 7 ≠ 3 with its frozen label table;
-    * incoming = the % 7 = 3 slice plus re-keyed byte-identical recrawls
-    * (jaccard-1 bridges that force real cluster merges) — surfaced in
-    * c19's shape over the MERGED corpus (every doc labeled, singletons
-    * self-labeled). The ORACLE is the full re-cluster of the merged
-    * corpus (c19's cluster CTEs over documents ∪ recrawls): the gate
-    * therefore engine-checks the add-then-maintain ≡ full-re-cluster
-    * equivalence itself, every round. */
   /** Per-JVM memoized MAINTAINED label table (c19's one-CC-pass rule,
     * applied to the incremental pass): the add-then-maintain run
     * executes once per (dir, threshold) and the gate row reads its
@@ -508,22 +489,22 @@ object Dedup {
   private[graft] def incrClustersTablePath(spark: SparkSession, dir: String,
                                            threshold: Double = 0.5): String =
     graft.Memo.table("incr-clusters", Seq(dir), threshold) { p =>
-      val docs = Tables.documents(spark, dir)
-      val existing = docs.filter(col("doc_id") % 7 =!= 3)
-        .select(col("doc_id"), col("text"))
-      val incoming = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"), col("text"))
-        .unionAll(docs
-          .filter(col("doc_id") % 11 === 5 && col("doc_id") % 7 =!= 3)
-          .select((col("doc_id") + 1000000000000L).as("doc_id"), col("text")))
+      val (existing, incoming, shEx) = c37Split(spark, dir)
       val lbl = spark.read.parquet(incrBaseLabelsPath(spark, dir, threshold))
-      val shEx = spark.read.parquet(shingleTablePath(spark, dir))
-        .filter(col("doc_id") % 7 =!= 3)
       incrementalClusters(incoming, existing, lbl, threshold,
         existingShingles = Some(shEx))
         .write.parquet(p)
     }
 
+  /** c95 gate row (r16): [[incrementalClusters]] over [[c37Split]] —
+    * existing corpus = doc_id % 7 ≠ 3 with its frozen label table;
+    * incoming = the % 7 = 3 slice plus re-keyed byte-identical recrawls
+    * (jaccard-1 bridges that force real cluster merges) — surfaced in
+    * c19's shape over the MERGED corpus (every doc labeled, singletons
+    * self-labeled). The ORACLE is the full re-cluster of the merged
+    * corpus (c19's cluster CTEs over documents ∪ recrawls): the gate
+    * therefore engine-checks the add-then-maintain ≡ full-re-cluster
+    * equivalence itself, every round. */
   def c95IncrClusters(spark: SparkSession, dir: String,
                       threshold: Double = 0.5): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -960,24 +941,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** c83: banded-MinHash recall gate for the TEXT near-dup family —
-    * c72's eval-as-operator rule applied to c2: the dedup pipeline's
-    * tunable (k minhashes × bands) needs a measured recall number, not a
-    * hope. TRUTH = every pair verifying at exact jaccard ≥ threshold
-    * over pairs sharing ≥ 1 shingle — and pairs sharing NO shingle have
-    * jaccard 0 < any threshold, so the shingle equi-join IS the complete
-    * truth, no cross join anywhere (stronger than c72's embedding side,
-    * where truth genuinely needs the cross join). BANDED = c2's
-    * collided candidates verifying at the same threshold. Folds to ONE
-    * row (n_exact, n_banded, n_hit, recall_r) — c2 verifies its
-    * candidates exactly, so banded ⊆ truth and n_hit = n_banded: the
-    * gate measures RECALL, precision is 1.0 by construction.
-    *
-    * Eval-confined (c72's documented rule): the truth side's
-    * shared-shingle pair expansion is quadratic in per-shingle document
-    * frequency — right for an eval corpus/sample, never the production
-    * path (which stays c2's banding). Thresholds compare the ROUNDED
-    * 6-dp jaccard on both sides (c37's threshold rule). */
   /** Ceiling on per-shingle document frequency before c83's truth side
     * may expand pairs (r15: the eval contract became a runtime refusal).
     * The shared-shingle expansion is Σ df² over shingles — one
@@ -1008,6 +971,24 @@ object Dedup {
         "recall gate on an eval corpus/sample, never a production corpus")
   }
 
+  /** c83: banded-MinHash recall gate for the TEXT near-dup family —
+    * c72's eval-as-operator rule applied to c2: the dedup pipeline's
+    * tunable (k minhashes × bands) needs a measured recall number, not a
+    * hope. TRUTH = every pair verifying at exact jaccard ≥ threshold
+    * over pairs sharing ≥ 1 shingle — and pairs sharing NO shingle have
+    * jaccard 0 < any threshold, so the shingle equi-join IS the complete
+    * truth, no cross join anywhere (stronger than c72's embedding side,
+    * where truth genuinely needs the cross join). BANDED = c2's
+    * collided candidates verifying at the same threshold. Folds to ONE
+    * row (n_exact, n_banded, n_hit, recall_r) — c2 verifies its
+    * candidates exactly, so banded ⊆ truth and n_hit = n_banded: the
+    * gate measures RECALL, precision is 1.0 by construction.
+    *
+    * Eval-confined (c72's documented rule): the truth side's
+    * shared-shingle pair expansion is quadratic in per-shingle document
+    * frequency — right for an eval corpus/sample, never the production
+    * path (which stays c2's banding). Thresholds compare the ROUNDED
+    * 6-dp jaccard on both sides (c37's threshold rule). */
   def c83MinhashRecall(spark: SparkSession, dir: String,
                        threshold: Double = 0.5): DataFrame = {
     val p = shingleTablePath(spark, dir)

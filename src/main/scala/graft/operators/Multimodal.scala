@@ -1184,7 +1184,6 @@ object Multimodal {
                                frozenLabels: DataFrame,
                                maxHamming: Int = 3,
                                keyCols: Seq[String] = Nil): DataFrame = {
-    val spark = newHashes.sparkSession
     // persist both inputs for the run (the materialize-once cost
     // contract, incrementalClusters' rule): the crawl side feeds the
     // clash check + both band sides, the corpus side the clash check +
@@ -1202,16 +1201,10 @@ object Multimodal {
       require(clash == 0L,
         "incrementalMediaClusters: new doc_ids overlap the corpus — " +
           "re-key the crawl (recrawl replays arrive re-keyed, c37's rule)")
-      // materialize the edges once (they feed the touched-root lookup
-      // AND the CC input — incrementalClusters' seam rule)
-      val p = graft.GraftSession.scratchDir(
-        s"incr-media-edges-${mediaIngestRuns.incrementAndGet()}").toString
-      phashCandidatesSplit(nh, ch, maxHamming, keyCols)
-        .write.mode("overwrite").parquet(p)
-      graft.operators.Dedup.maintainLabels(spark.read.parquet(p), frozenLabels)
+      graft.operators.Dedup.maintainLabels(
+        phashCandidatesSplit(nh, ch, maxHamming, keyCols), frozenLabels)
     } finally { nh.unpersist(); ch.unpersist(); () }
   }
-  private val mediaIngestRuns = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** r21 (§2.5) — the banded-pair doc-attach with an optional EXPANSION
     * SPREAD. The two attach joins multiply each hash-pair row by
@@ -2418,7 +2411,6 @@ object Multimodal {
   def incrementalVideoClusters(crawlFrames: DataFrame,
                                corpusFrames: DataFrame,
                                frozenLabels: DataFrame): DataFrame = {
-    val spark = crawlFrames.sparkSession
     // same projection rule as incrementalMediaClusters (r20)
     val nh = crawlFrames.select("doc_id", "phash").persist()
     val ch = corpusFrames.select("doc_id", "phash").persist()
@@ -2429,11 +2421,9 @@ object Multimodal {
       require(clash == 0L,
         "incrementalVideoClusters: crawl video ids overlap the corpus — " +
           "re-key the crawl (recrawl replays arrive re-keyed, c37's rule)")
-      val p = graft.GraftSession.scratchDir(
-        s"incr-video-edges-${mediaIngestRuns.incrementAndGet()}").toString
-      videoEdgesOf(phashCandidatesSplit(nh, ch, 3), nh.unionByName(ch))
-        .write.mode("overwrite").parquet(p)
-      graft.operators.Dedup.maintainLabels(spark.read.parquet(p), frozenLabels)
+      graft.operators.Dedup.maintainLabels(
+        videoEdgesOf(phashCandidatesSplit(nh, ch, 3), nh.unionByName(ch)),
+        frozenLabels)
     } finally { nh.unpersist(); ch.unpersist(); () }
   }
 

@@ -416,23 +416,6 @@ object StreamOps {
       .withColumn("pred", graft.operators.Distill.treeVerdict(tree))
   }
 
-  /** d11: streaming ingest routing — classify an arriving doc stream
-    * against a STATIC existing corpus (the zero-state streaming twin of
-    * c37, and the inventory's stream-static-join surface). The batch
-    * side's artifacts arrive as [[IngestStatics]] — built once by
-    * [[ingestStatics]] and persisted by the caller (d8's
-    * precomputed-eval-shingles pattern). The STREAM side needs no
-    * aggregation at all — a doc's
-    * shingle set, its k min-hashes and its band keys are all row-local
-    * array expressions (c2's groupBy formulation exists because batch
-    * shingles arrive as rows; a stream row carries its whole document) —
-    * so every match is a stream-static equi-join, stateless in Spark,
-    * and the jaccard verify is a row-local `array_intersect` against the
-    * candidate's attached shingle set. Like d8, the operator emits HIT
-    * rows — (doc_id, kind exact|near, ex_id, jaccard_r), possibly one
-    * per colliding band — and callers fold statuses downstream; the
-    * parity spec derives c37's exact statuses AND dup_of from this
-    * sink. Zero state, no watermark, any stream length. */
   /** The static-side artifacts [[streamIngest]] joins against: an md5
     * table for exact matches and a (band, key → ex_id, shingle set,
     * size) table for near-dup candidates. Build these ONCE per corpus
@@ -450,32 +433,43 @@ object StreamOps {
     import graft.operators.Dedup
     val exTable = existing.select(md5(col("text")).as("h"), col("doc_id").as("ex_id"))
     val shEx = Dedup.shingleRows(existing)
-    val setsEx = shEx.groupBy("doc_id")
-      .agg(collect_list(col("shingle")).as("ex_sl"), count(lit(1)).as("ex_ns"))
+    val setsEx = shEx.groupBy("doc_id").agg(collect_list(col("shingle")).as("ex_sl"))
     val bandEx = Dedup.bandKeysOf(Dedup.minhashAgg(shEx, k), k, bands)
       .join(setsEx, "doc_id")
       .select(col("band"), col("key"), col("doc_id").as("ex_id"),
-        col("ex_sl"), col("ex_ns"))
+        col("ex_sl"), col("ns").as("ex_ns"))
     IngestStatics(exTable, bandEx)
   }
 
+  /** d11: streaming ingest routing — classify an arriving doc stream
+    * against a STATIC existing corpus (the zero-state streaming twin of
+    * c37, and the inventory's stream-static-join surface). The batch
+    * side's artifacts arrive as [[IngestStatics]] — built once by
+    * [[ingestStatics]] and persisted by the caller (d8's
+    * precomputed-eval-shingles pattern). The STREAM side needs no
+    * aggregation at all — a doc's
+    * shingle set, its k min-hashes and its band keys are all row-local
+    * array expressions (c2's groupBy formulation exists because batch
+    * shingles arrive as rows; a stream row carries its whole document) —
+    * so every match is a stream-static equi-join, stateless in Spark,
+    * and the jaccard verify is a row-local `array_intersect` against the
+    * candidate's attached shingle set. Like d8, the operator emits HIT
+    * rows — (doc_id, kind exact|near, ex_id, jaccard_r), possibly one
+    * per colliding band — and callers fold statuses downstream; the
+    * parity spec derives c37's exact statuses AND dup_of from this
+    * sink. Zero state, no watermark, any stream length. */
   def streamIngest(docs: DataFrame, statics: IngestStatics,
                    threshold: Double = 0.7,
                    k: Int = 8, bands: Int = 4): DataFrame = {
     import graft.operators.Dedup
-    val rowsPerBand = k / bands
     val exTable = statics.exact
     val bandEx = statics.bands
-    // stream side: everything row-local. The shingle array is staged in
-    // its own projection so the (interpreted-HOF) shingling runs once per
-    // row — referencing the expression from each minhash column would
-    // re-evaluate it k+1 times
+    // stream side: everything row-local, over batch's signature
+    // definition. The shingle array is staged in its own projection so
+    // the (interpreted-HOF) shingling runs once per row — referencing the
+    // expression from each minhash column would re-evaluate it k+1 times
     val mh = (0 until k).map(i =>
-      array_min(transform(col("sl"), x => md5(concat(lit(s"$i:"), x)))).as(s"mh$i"))
-    val bandArr = array((0 until bands).map { j =>
-      val cols = (0 until rowsPerBand).map(r => col(s"mh${j * rowsPerBand + r}"))
-      md5(concat_ws("|", cols: _*))
-    }: _*)
+      array_min(transform(col("sl"), x => Dedup.shingleHash(i, x))).as(s"mh$i"))
     val exact = docs
       .select(col("doc_id"), md5(col("text")).as("h"))
       .join(exTable, "h")
@@ -485,7 +479,8 @@ object StreamOps {
       .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sl"))
       .filter(size(col("sl")) >= 1)
       .select(Seq(col("doc_id"), col("sl")) ++ mh: _*)
-      .select(col("doc_id"), col("sl"), posexplode(bandArr).as(Seq("band", "key")))
+      .select(col("doc_id"), col("sl"),
+        posexplode(Dedup.bandKeyArray(k, bands)).as(Seq("band", "key")))
       .join(bandEx, Seq("band", "key"))
       .withColumn("ni", size(array_intersect(col("sl"), col("ex_sl"))))
       // r20: share batch's EXACT integer render (Dedup.jaccardCol) so a

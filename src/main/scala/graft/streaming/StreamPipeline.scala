@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -17,9 +16,7 @@ import graft.sources.JsonConvert
   * shutdown logic.
   *
   * In production the source is `readStream.format("socket")` (or Kafka);
-  * checkpointing + foreachBatch give at-least-once publish. The
-  * MemoryStream harness below exists so the driver's batch oracle can
-  * verify the exact same pipeline code deterministically. A checkpoint on
+  * checkpointing + foreachBatch give at-least-once publish. A checkpoint on
   * a local path has its offset and commit logs written by
   * [[LocalCheckpointFileManager]] (java.nio, fsync, no shell forks).
   */
@@ -51,38 +48,6 @@ object StreamPipeline {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         Publish.run(ArrowIpc.serialize(batch.toDF(), maxRows), () => mkPublisher(epoch)); ()
       }
-
-  /** Harness: run the full pipeline over in-memory ND-JSON lines in
-    * `chunks` micro-batches, publish to the collecting publisher, and
-    * return the published rows deserialized from the IPC payloads. The
-    * driver-side line feed mirrors bolson's TCP client buffers and is
-    * harness-only — production sources stream per-partition. */
-  def runMemoryPipeline(spark: SparkSession, jsonLines: Seq[String],
-                        schema: StructType, chunks: Int = 4,
-                        maxRows: Int = 4096): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val stream = MemoryStream[String]
-    CollectingPublisher.clear()
-    val query = publishStream(stream.toDF(), schema, maxRows,
-      _ => new CollectingPublisher).start()
-    try {
-      val chunkSize = math.max(1, (jsonLines.length + chunks - 1) / chunks)
-      jsonLines.grouped(chunkSize).foreach { chunk =>
-        stream.addData(chunk)
-        query.processAllAvailable()
-      }
-    } finally query.stop()
-    // drop the references the harness no longer needs: the terminated
-    // query (StreamingQueryManager retains it, pinning the MemoryStream's
-    // buffered corpus) and the publisher's message buffer (createDataset
-    // has already copied it into the plan's LocalRelation) — without
-    // these, repeated runs bloat the driver heap by a corpus each
-    spark.streams.resetTerminated()
-    val published = spark.createDataset(CollectingPublisher.messages)
-    CollectingPublisher.clear()
-    ArrowIpc.deserialize(spark, published, schema)
-  }
 
   /** Per-JVM memoized events ND-JSON corpus (micros timestamps: the IPC
     * unit) — the wire-format input a8 streams from files, materialized once

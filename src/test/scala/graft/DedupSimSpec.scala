@@ -404,6 +404,91 @@ class DedupSimSpec extends SparkSpec {
     assert(countOnlyPerDoc == 0, s"$countOnlyPerDoc count-only per-doc aggregates")
   }
 
+  test("c37 compares text to text when an incoming doc reuses an existing doc_id") {
+    val base = (1 to 30).map(i => s"w$i").mkString(" ")
+    val other = (1 to 30).map(i => s"v$i").mkString(" ")
+    val existing = docsDf(Seq(1L -> base, 2L -> other,
+      3L -> "zz yy xx ww vv uu tt ss rr qq"))
+    val incoming = docsDf(Seq(
+      // id 1 again, a near-dup of existing 1's text (27 of 29 shingles)
+      1L -> ((1 to 29).map(i => s"w$i").mkString(" ") + " CHANGED"),
+      // id 3 again, a near-dup of existing 2 and unlike existing 3
+      3L -> ("CHANGED " + (2 to 30).map(i => s"v$i").mkString(" ")),
+      // id 2 again, unlike anything in the corpus
+      2L -> "fresh words here that no existing document has ever used"))
+    val got = Dedup.incrementalDedup(incoming, existing).collect()
+      .map(r => r.getAs[Long]("doc_id") ->
+        (r.getAs[String]("status"), if (r.isNullAt(2)) -1L else r.getAs[Long]("dup_of")))
+      .toMap
+    assert(got == Map(1L -> ("near_dup", 1L), 3L -> ("near_dup", 2L), 2L -> ("new", -1L)))
+  }
+
+  test("c37 and c95 leave no cache and no per-call scratch dir behind, on " +
+    "success and on failure, and leave a caller's cache alone") {
+    import org.apache.spark.storage.StorageLevel
+    // a cached frame's blocks are a persisted RDD; the checkpoint a call
+    // returns is the only kind it may leave
+    def caches = spark.sparkContext.getPersistentRDDs.values.count(!_.isCheckpointed)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratch: Set[String] = tmp.list().toSet
+      .filter(n => n.startsWith("graft-ingest-") || n.startsWith("graft-incr-"))
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val existing = docs.filter(col("doc_id") % 7 =!= 3)
+    val incoming = docs.filter(col("doc_id") % 7 === 3)
+    // the memo tables the calls read exist before the snapshot
+    val labels = spark.read.parquet(Dedup.incrBaseLabelsPath(spark, sfDir))
+    Dedup.shingleTablePath(spark, sfDir)
+    val bad = incoming.withColumn("text",
+      when(col("doc_id") === 3L, raise_error(lit("boom"))).otherwise(col("text")))
+    val (caches0, dirs0) = (caches, scratch)
+    Dedup.c37IncrementalDedup(spark, sfDir).collect()
+    Dedup.incrementalClusters(incoming, existing, labels).collect()
+    intercept[Exception](Dedup.incrementalDedup(bad, existing).collect())
+    intercept[Exception](Dedup.incrementalClusters(bad, existing, labels).collect())
+    assert(caches == caches0, "a call left its cache behind")
+    assert((scratch -- dirs0).isEmpty, s"a call wrote scratch dirs ${scratch -- dirs0}")
+    val shIn = Dedup.shingleRows(incoming).persist()
+    try {
+      Dedup.incrementalDedup(incoming, existing, incomingShingles = Some(shIn)).collect()
+      Dedup.incrementalClusters(incoming, existing, labels, newShingles = Some(shIn))
+        .collect()
+      assert(shIn.storageLevel != StorageLevel.NONE, "the caller's cache was dropped")
+    } finally { shIn.unpersist(); () }
+  }
+
+  test("c95 reads each side's shingle-set size off its band rows: one minhash " +
+    "aggregate per side, no join against a (doc_id, ns) frame, equi-joins only") {
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec,
+      CartesianProductExec}
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val existing = docs.filter(col("doc_id") % 7 =!= 3)
+    val incoming = docs.filter(col("doc_id") % 7 === 3)
+      .unionAll(docs.filter(col("doc_id") % 11 === 5 && col("doc_id") % 7 =!= 3)
+        .select((col("doc_id") + 1000000000000L).as("doc_id"), col("text")))
+    val labels = spark.read.parquet(Dedup.incrBaseLabelsPath(spark, sfDir))
+    val shEx = spark.read.parquet(Dedup.shingleTablePath(spark, sfDir))
+      .filter(col("doc_id") % 7 =!= 3)
+    val ops = evaluatedOps {
+      Dedup.incrementalClusters(incoming, existing, labels,
+        existingShingles = Some(shEx)).collect()
+      ()
+    }
+    val minhashAggs = finalAggs(ops)((_, fs) => fs.exists(_.contains("md5")))
+    val sizeJoins = ops.collect { case j: BaseJoinExec => j }.filter { j =>
+      Seq(j.left, j.right).exists { side =>
+        val names = side.output.map(_.name)
+        names.size == 2 && names.exists(Set("ns", "na", "nb"))
+      }
+    }
+    assert(minhashAggs == 2, s"$minhashAggs minhash aggregations")
+    assert(sizeJoins.isEmpty, s"joins against a sizes frame:\n${sizeJoins.mkString("\n")}")
+    val c37Ops = evaluatedOps { Dedup.c37IncrementalDedup(spark, sfDir).collect(); () }
+    val crossJoins = (ops ++ c37Ops).collect {
+      case j @ (_: CartesianProductExec | _: BroadcastNestedLoopJoinExec) => j
+    }
+    assert(crossJoins.isEmpty, s"non-equi joins:\n${crossJoins.mkString("\n")}")
+  }
+
   test("c37 verdicts re-verify against raw text: exact matches, jaccard bounds, id domains") {
     val docs = Tables.documents(spark, sfDir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap

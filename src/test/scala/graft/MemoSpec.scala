@@ -11,8 +11,9 @@ import graft.metrics.MemoClock
 import graft.operators.Dedup
 
 /** The memo contract ([[Memo]]): entries follow their inputs, publish
-  * atomically, nest, and build once per key under concurrency — plus a
-  * source audit that keeps every build cache behind the one mechanism. */
+  * atomically, nest, and build once per key under concurrency — plus
+  * source audits that keep every build cache behind the one mechanism
+  * and the near-dup logic in one place. */
 class MemoSpec extends SparkSpec {
   import spark.implicits._
 
@@ -151,6 +152,39 @@ class MemoSpec extends SparkSpec {
       }
       timed ++ caches
     }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("source audit: one near-dup core — no per-call scratch counter, one " +
+    "candidate site, the stream's band keys from Dedup") {
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the project root: $root")
+    def source(rel: String) = new String(Files.readAllBytes(root.resolve(rel)), "UTF-8")
+    // a per-call scratch counter: an atomic counter in a file that writes
+    // scratch dirs (connected components' label checkpoint keeps its
+    // own), or a scratch dir named for an incremental run
+    val counterDecl = """val (\w+) = new java\.util\.concurrent\.atomic\.Atomic\w+""".r
+    val counters = Seq("operators/Dedup.scala", "operators/Multimodal.scala").flatMap { f =>
+      val text = source(f)
+      val named = counterDecl.findAllMatchIn(text).map(_.group(1)).toSeq
+        .filter(c => c != "ccScratchSeq" && text.contains("scratchDir("))
+      val dirs = """scratchDir\(\s*s?"(ingest|incr)-""".r.findAllIn(text).toSeq
+      (named ++ dirs).map(c => s"$f: per-call scratch counter $c")
+    }
+    // candidates come from one bucket list, never a join on the bucket
+    val dedup = source("operators/Dedup.scala")
+    val bucketLists = """groupBy\("band", "key"\)\s*\.agg\(collect_list\(struct\(""".r
+      .findAllIn(dedup).size
+    val candidates =
+      (if (bucketLists > 1) Seq(s"Dedup.scala: $bucketLists band-bucket candidate sites")
+       else Nil) ++
+        (if (dedup.contains("""Seq("band", "key")""")) Seq("Dedup.scala: a band-key join")
+         else Nil)
+    val inlineKeys =
+      if (source("streaming/StreamOps.scala").contains("""concat_ws("|""""))
+        Seq("StreamOps.scala: a band key built inline, not by Dedup.bandKeyArray")
+      else Nil
+    val offenders = counters ++ candidates ++ inlineKeys
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
