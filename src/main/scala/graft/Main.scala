@@ -24,9 +24,11 @@ import graft.streaming.{FilePublisher, StreamPipeline}
   *     [--seq-col] [--idle-timeout-ms T] [--no-strict]
   *     — the parse is strict by default: a top-level field outside the
   *       schema fails the run, as in bolson. --no-strict ignores such
-  *       fields; it saves little, since the strict check runs inside the
-  *       parse's own tokenization (14,400 trip_report lines on 4 cores:
-  *       0.12–0.13 task core-s strict against 0.11–0.125 relaxed)
+  *       fields; it saves nothing measurable, since both modes run one
+  *       schema-compiled converter that checks each key as it reads it
+  *       (14,400 trip_report lines read from 24 text files on 4 cores,
+  *       quartiles of 10 interleaved runs: 0.19–0.23 task core-s strict
+  *       against 0.20–0.22 relaxed)
   *     — or RESTARTABLE file mode (r12): --in-dir DIR --checkpoint CKPT
   *       in place of --host/--port: drains every unprocessed ND-JSON
   *       file under DIR (Trigger.AvailableNow) and exits; re-running
@@ -2308,8 +2310,8 @@ object Main {
     @volatile var lastProgress = System.currentTimeMillis()
     // bolson parses with UnexpectedFieldBehavior::Error unconditionally
     // (parse/arrow.cpp:89); strict is therefore the CLI default, with
-    // --no-strict ignoring unexpected fields. The check rides in the
-    // parse's tokenizer, so both cost about the same (see the usage)
+    // --no-strict ignoring unexpected fields. Both modes run one
+    // converter with the check inline, so they cost the same (see the usage)
     val strict = !args.contains("--no-strict")
     val query = StreamPipeline.convert(lines, schema, strict).writeStream
       .outputMode("append")

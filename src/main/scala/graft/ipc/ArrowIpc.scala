@@ -93,36 +93,31 @@ object ArrowIpc {
       if (r.isNullAt(c)) x.setNull(i) else x.setSafe(i, r.getUTF8String(c).getBytes)
     case (x: VarBinaryVector, BinaryType) => (r, c, i) =>
       if (r.isNullAt(c)) x.setNull(i) else x.setSafe(i, r.getBinary(c))
-    case (x: ListVector, ArrayType(LongType, _)) => (r, c, i) =>
-      if (r.isNullAt(c)) x.setNull(i)
-      else {
-        val arr = r.getArray(c)
-        val w = x.getWriter
-        w.setPosition(i); w.startList()
-        var j = 0
-        while (j < arr.numElements()) {
-          if (arr.isNullAt(j)) w.bigInt().writeNull()
-          else w.bigInt().writeBigInt(arr.getLong(j))
-          j += 1
-        }
-        w.endList()
-      }
-    case (x: ListVector, ArrayType(DoubleType, _)) => (r, c, i) =>
-      if (r.isNullAt(c)) x.setNull(i)
-      else {
-        val arr = r.getArray(c)
-        val w = x.getWriter
-        w.setPosition(i); w.startList()
-        var j = 0
-        while (j < arr.numElements()) {
-          if (arr.isNullAt(j)) w.float8().writeNull()
-          else w.float8().writeFloat8(arr.getDouble(j))
-          j += 1
-        }
-        w.endList()
-      }
+    case (x: ListVector, ArrayType(LongType, _)) =>
+      val data = x.getDataVector.asInstanceOf[BigIntVector]
+      listWriter(x) { (a, j, k) => if (a.isNullAt(j)) data.setNull(k) else data.setSafe(k, a.getLong(j)) }
+    case (x: ListVector, ArrayType(DoubleType, _)) =>
+      val data = x.getDataVector.asInstanceOf[Float8Vector]
+      listWriter(x) { (a, j, k) => if (a.isNullAt(j)) data.setNull(k) else data.setSafe(k, a.getDouble(j)) }
     case (v, t) => throw new IllegalArgumentException(s"unsupported for IPC: $t / ${v.getClass}")
   }
+
+  /** Writes row `r`'s array column `c` as list `i` of `x`, each element
+    * straight into the list's data vector through `put(array, element,
+    * slot)`; the data vector's value count is set once, when the batch's
+    * row count is. */
+  private def listWriter(x: ListVector)(
+      put: (org.apache.spark.sql.catalyst.util.ArrayData, Int, Int) => Unit)
+      : (org.apache.spark.sql.catalyst.InternalRow, Int, Int) => Unit = (r, c, i) =>
+    if (r.isNullAt(c)) x.setNull(i)
+    else {
+      val a = r.getArray(c)
+      val n = a.numElements()
+      val start = x.startNewValue(i)
+      var j = 0
+      while (j < n) { put(a, j, start + j); j += 1 }
+      x.endValue(i, n)
+    }
 
   /** Per-column Arrow→Catalyst reader, resolved once per batch (the read
     * twin of [[internalWriter]]): UTF8String from bytes, raw epoch-micros,
@@ -196,7 +191,13 @@ object ArrowIpc {
     * bolson's max_ipc enforcement (serializer.cpp), done per split. */
   private def serializeRoot(root: VectorSchemaRoot, maxIpcBytes: Long,
                             codec: String): Seq[(Array[Byte], Int)] = {
-    val out = new ByteArrayOutputStream()
+    // sized for the message up front (its buffers, plus room for the
+    // schema and framing): grown by doubling, the stream would allocate
+    // every power of two below it, arrays a few MB large that the
+    // collector keeps in their own regions until the next young collection
+    val vectors = root.getFieldVectors.asScala
+    val size = vectors.map(_.getBufferSize.toLong).sum + 4096L + 512L * vectors.size
+    val out = new ByteArrayOutputStream(math.min(size, Int.MaxValue - 8L).toInt)
     val writer = codecType(codec) match {
       case None => new ArrowStreamWriter(root, null, out)
       case Some(ct) => new ArrowStreamWriter(root, null,

@@ -9,7 +9,10 @@ import org.apache.spark.util.LongAccumulator
   * those stages into one task pipeline, so graft decomposes the fused task
   * from the inside with accumulator sums of task-side nanos:
   *  - parse: upstream iterator pull observed by the serialize task (source
-  *    scan + schema-driven JSON parse feeding Arrow),
+  *    scan + schema-driven JSON parse feeding Arrow); for the preset and
+  *    other flat schemas that parse is mostly the schema-compiled
+  *    converter of `StrictJsonToStructs`, Spark's own parser running only
+  *    for the lines it declines,
   *  - serialize: Arrow vector writes + IPC encoding + max-ipc resizing,
   *  - publish: Publisher.publish calls.
   * Values are CORE-nanos (summed over parallel tasks): for a

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, StrictJsonFieldGuard, StrictJsonToStructs}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, StrictJsonToStructs}
 import org.apache.spark.sql.types._
 
 import graft.Tables
@@ -56,11 +56,14 @@ object JsonConvert {
   }
 
   /** Parse a JSON string column against an explicit schema, erroring on
-    * malformed records (FAILFAST). Extra fields are silently ignored —
-    * for bolson's full UnexpectedFieldBehavior::Error semantics use
-    * [[parseJsonStrict]]. */
+    * malformed records: `from_json` in FAILFAST mode, with the same rows
+    * and errors. Extra top-level fields are ignored; for bolson's full
+    * UnexpectedFieldBehavior::Error semantics use [[parseJsonStrict]]. It
+    * is [[parseJsonStrict]]'s expression with the key check off, so both
+    * modes share one schema-compiled converter and one fallback to
+    * Spark's parser. */
   def parseJson(c: Column, schema: StructType): Column =
-    from_json(c, schema, Map("mode" -> "FAILFAST"))
+    ColumnBridge.column(StrictJsonToStructs(schema, ColumnBridge.expression(c), strict = false))
 
   /** a13: PERMISSIVE conversion with corrupt-record accounting — the
     * production counterpart of bolson's fail-on-first-error mode: one bad
@@ -97,8 +100,13 @@ object JsonConvert {
   /** Strict parse: additionally errors when the JSON object carries any
     * top-level field outside the schema — bolson's
     * UnexpectedFieldBehavior::Error (reference: src/bolson/parse/arrow.cpp:90-92).
-    * One native expression ([[StrictJsonToStructs]]) parses each line once,
-    * recording unexpected keys as the parse steps over them, and raises
+    * One native expression ([[StrictJsonToStructs]]) parses each line once.
+    * For a flat schema of long, double, boolean and string fields and
+    * arrays of long or double, a schema-compiled converter writes each
+    * clean line straight into an `UnsafeRow`; any line it declines (an
+    * unexpected or repeated key, a value of another type or `null`,
+    * invalid UTF-8, not one JSON object) goes to Spark's own parser, which
+    * records unexpected keys as it steps over them and raises
     * `unexpected JSON field(s): a,b` (keys in document order) like
     * `assert_true` does. A line that is not one JSON object (truncated,
     * a root array or scalar, `""`) is decided by the parse alone: FAILFAST
@@ -107,24 +115,6 @@ object JsonConvert {
     * unexpected-field error wins. */
   def parseJsonStrict(c: Column, schema: StructType): Column =
     ColumnBridge.column(StrictJsonToStructs(schema, ColumnBridge.expression(c)))
-
-  /** Scan-side companion of [[parseJsonStrict]] for paths that parse via
-    * the native JSON scan (which cannot error on unexpected fields): runs
-    * the same keys-only check over the raw lines
-    * ([[StrictJsonFieldGuard]]) and returns an ALWAYS-EMPTY frame in the
-    * schema's shape — union it below the scan and the guard executes with
-    * the query, throwing `unexpected JSON field(s) in: <line>` on the first
-    * line with a top-level field outside the schema, while contributing
-    * zero rows otherwise. Lines that are not one JSON object pass; the
-    * scan decides them. */
-  private[graft] def strictFieldGuard(lines: DataFrame,
-                                      schema: StructType): DataFrame =
-    lines
-      .select(ColumnBridge.column(
-        StrictJsonFieldGuard(schema, ColumnBridge.expression(col("value")))).as("ok"))
-      .filter(col("ok").isNotNull) // vacuous: the guard is NULL when it passes
-      .select(schema.fieldNames.map(f =>
-        lit(null).cast(schema(f).dataType).as(f)): _*)
 
   /** a1: schema-driven parse of the events.props JSON payload column, in
     * full strict mode (malformed AND unexpected-field errors). */
@@ -240,21 +230,12 @@ object JsonConvert {
   def a3JsonTrip(spark: SparkSession, dir: String): DataFrame = {
     def sumFixed(c: Column, n: Int): Column =
       (1 to n).map(i => element_at(c, i)).reduce(_ + _)
-    // scan-based ND-JSON read (JsonScan): one native parse per line straight
-    // into columns — the exact converter shape of the reference (text stream
-    // in, columnar batch out), and ~2× faster than from_json + struct
-    // extraction, which evaluates through the interpreted-fallback path.
-    // Full bolson parity needs the unexpected-field error too
-    // (parse/arrow.cpp:89): the scan can't check that, so a second pass
-    // guards the raw lines with the keys-only scan parseJsonStrict falls
-    // back on. The guard is NULL when the check passes, so it adds zero
-    // rows of output and the scan stays the hot path.
-    val corpus = tripJsonCorpusPath(spark, dir)
-    val parsed = spark.read.schema(Schemas.trip).option("mode", "FAILFAST")
-      .json(corpus)
-    parsed.unionByName(
-      strictFieldGuard(spark.read.text(corpus), Schemas.trip),
-      allowMissingColumns = false)
+    // the corpus's lines through the strict parse, with bolson's
+    // unexpected-field error (parse/arrow.cpp:89): one tokenization per
+    // line, by the schema-compiled converter
+    spark.read.text(tripJsonCorpusPath(spark, dir))
+      .select(parseJsonStrict(col("value"), Schemas.trip).as("rec"))
+      .select("rec.*")
       .select(
         col("vin"),
         col("timestamp").as("trip_date"),

@@ -27,7 +27,8 @@ object StreamPipeline {
     * `strict` the parse also errors on unexpected fields — bolson's
     * UnexpectedFieldBehavior::Error (parse/arrow.cpp:89), checked inside
     * the parse's own tokenization ([[JsonConvert.parseJsonStrict]]); the
-    * relaxed default fits trusted/self-generated corpora where the check
+    * relaxed default ([[JsonConvert.parseJson]], the same expression with
+    * the check off) fits trusted/self-generated corpora where the check
     * is provably vacuous. */
   def convert(lines: DataFrame, schema: StructType, strict: Boolean = false): DataFrame = {
     val parse = if (strict) JsonConvert.parseJsonStrict _ else JsonConvert.parseJson _

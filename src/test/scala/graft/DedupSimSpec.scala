@@ -37,45 +37,6 @@ class DedupSimSpec extends SparkSpec {
       "shingle reuse must not change c2 results")
   }
 
-  /** Every operator the executed plans of `run`'s actions evaluate, up to
-    * and including its `collect`: a cached relation's plan counts once
-    * however many scans read it, a reused exchange not at all. */
-  private def evaluatedOps(run: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.util.QueryExecutionListener
-    import scala.jdk.CollectionConverters._
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
-    // query ids rise JVM-wide: a query planned before `run` (an earlier
-    // test's collect whose success event is still on the listener bus)
-    // is not run's, and must neither count nor end the wait below
-    val before = spark.range(1).queryExecution.id
-    val listener = new QueryExecutionListener {
-      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.id > before) plans.add(action -> qe.executedPlan)
-      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      run
-      // listener events arrive asynchronously, in order: collect is last
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!plans.asScala.exists(_._1 == "collect") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-    } finally spark.listenerManager.unregister(listener)
-    assert(plans.asScala.exists(_._1 == "collect"), "no collect plan recorded")
-    val helper = new AdaptiveSparkPlanHelper {}
-    val cached = scala.collection.mutable.Set[AnyRef]()
-    def evaluated(p: SparkPlan): Seq[SparkPlan] =
-      helper.collect(p) { case x => x }.flatMap {
-        case m: InMemoryTableScanExec if cached.add(m.relation.cacheBuilder) =>
-          m +: evaluated(m.relation.cacheBuilder.cachedPlan)
-        case x => Seq(x)
-      }
-    plans.asScala.toSeq.flatMap(p => evaluated(p._2))
-  }
-
   /** Final (or complete) aggregates among `ops` whose grouping columns and
     * aggregate functions (as SQL) satisfy `f`. */
   private def finalAggs(ops: Seq[org.apache.spark.sql.execution.SparkPlan])(

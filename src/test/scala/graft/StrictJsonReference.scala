@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -22,11 +22,4 @@ object StrictJsonReference {
       concat(lit("unexpected JSON field(s): "), concat_ws(",", keys)))
     when(check.isNull, from_json(line, schema, Map("mode" -> "FAILFAST")))
   }
-
-  /** The scan-side guard: zero rows, or the error naming the line. */
-  def strictFieldGuard(lines: DataFrame, schema: StructType): DataFrame =
-    lines
-      .select(assert_true(coalesce(size(unexpected(col("value"), schema)), lit(0)) <= 0,
-        concat(lit("unexpected JSON field(s) in: "), col("value"))).as("ok"))
-      .filter(col("ok").isNotNull)
 }
